@@ -1,5 +1,6 @@
 package graft
 import org.apache.spark.sql.SparkSession
+import graft.core.SharedStages
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -33,12 +34,11 @@ object Bench {
     // queries whose two runs still disagree by >20% get a tie-break third
     // run within a bounded budget — one contended pass can no longer
     // poison the headline number.
-    // The LD-family queries (q108/q126/q130/q135) share a session-scoped
-    // materialized pair-stats stage (LdWindow.stats — the cross-query
-    // CTE fusion): whichever runs first prices the banded pair set, the
-    // rest ride it, so their minima are warm-stage numbers BY DESIGN.
-    // ScaleProbe clears that cache per run and keeps the cold compute
-    // ratios.
+    // Query families share session-scoped stages (graft.core.SharedStages
+    // — the cross-query CTE fusion): whichever runs first prices the
+    // stage, the rest ride it, so their minima are warm-stage numbers BY
+    // DESIGN. ScaleProbe clears every stage per run and keeps the cold
+    // compute ratios.
     // Optional local-iteration filter (the driver never sets it): run
     // only the named queries, e.g. SPARK_GRAFT_ONLY=q126_ld_prune.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -62,9 +62,9 @@ object Bench {
     // vs 85 s quiet-host — per-stage overhead at local-bench data
     // sizes, amplified to 511 s vs 186 s under the driver's host
     // contention). Four in flight backfill each other's stragglers;
-    // the shared-stage getters are synchronized (plan construction
-    // only — materialization runs outside the lock), and Spark's FIFO
-    // scheduler interleaves the jobs. warmup_sec is the WALL time of
+    // each shared stage has its own lock, so owners of different
+    // stages build side by side, and Spark's FIFO scheduler interleaves
+    // the jobs. warmup_sec is the WALL time of
     // the pool (the real cost a board pass pays), where it was the
     // sum of sequential owner times before — disclosed in
     // OPTIMIZATION_r12.md.
@@ -119,22 +119,11 @@ object Bench {
       .mkString("{", ",", "}")
     // Failed queries (negative sentinel) are excluded from the headline.
     val total = results.values.filter(_ >= 0).sum
-    // Shared-stage telemetry: LD-family minima that rode the session-
-    // scoped materialized pair-stats stage are warm numbers BY DESIGN —
-    // the artifact says so instead of leaving readers to infer it.
-    val (ldHits, ldMisses) =
-      graft.operators.LdWindow.sharedTelemetry
-    val (saHits, saMisses) =
-      graft.queries.TextDedup.saSharedTelemetry
-    val (ehHits, ehMisses) =
-      graft.operators.PopGen.ehhSharedTelemetry
-    val (sbHits, sbMisses) =
-      graft.operators.SuffixArray.sharedTelemetry
-    val (ddHits, ddMisses) =
-      graft.pipeline.TrainingData.dedupSharedTelemetry
-    // Per-key breakdowns: a key with misses > 1 in one board pass was
-    // FIFO-evicted mid-board — the direct undersized-cache signal the
-    // aggregate counters can only hint at.
+    // Shared-stage telemetry: minima that rode a warm shared stage are
+    // warm numbers BY DESIGN — the artifact says so instead of leaving
+    // readers to infer it. Per-key breakdowns: a key with misses > 1 in
+    // one board pass was FIFO-evicted mid-board — the direct
+    // undersized-cache signal the aggregate counters can only hint at.
     def keyJson(rows: Seq[(String, Long, Long)]): String =
       rows.map { case (k, h, m) =>
         // labels embed carry/id/text column names — escape so an
@@ -142,46 +131,18 @@ object Bench {
         val esc = k.replace("\\", "\\\\").replace("\"", "\\\"")
         s""""$esc":{"hits":$h,"misses":$m}"""
       }.mkString("{", ",", "}")
-    val ldKeys = keyJson(graft.operators.LdWindow.sharedTelemetryByKey)
-    val ddKeys = keyJson(
-      graft.pipeline.TrainingData.dedupSharedTelemetryByKey)
-    val (kmHits, kmMisses) =
-      graft.pipeline.TrainingData.kmeansSharedTelemetry
-    val (bpHits, bpMisses) =
-      graft.pipeline.TrainingData.bpeSharedTelemetry
-    val (ceuHits, ceuMisses) =
-      graft.queries.VcfQ.ceuSharedTelemetry
-    val (rohHits, rohMisses) =
-      graft.operators.PopGen.rohSharedTelemetry
-    val (sjHits, sjMisses) =
-      graft.pipeline.TrainingData.simjoinSharedTelemetry
-    val (siHits, siMisses) =
-      graft.operators.PopGen.siteSharedTelemetry
-    val (lshHits, lshMisses) =
-      graft.queries.TextDedup.lshSharedTelemetry
-    val (mgHits, mgMisses) =
-      graft.queries.Merge.mergeSharedTelemetry
-    val (cdHits, cdMisses) =
-      graft.pipeline.TrainingData.candSharedTelemetry
+    val stages = SharedStages.all.map { st =>
+      val (h, m) = st.telemetry
+      s""""${st.name}":{"hits":$h,"misses":$m},"""
+    }.mkString
+    val ldKeys = keyJson(SharedStages.ld.telemetryByKey)
+    val ddKeys = keyJson(SharedStages.dedup.telemetryByKey)
     val json =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
         s""""warmup_sec":$warmupSec,""" +
-        s""""ld_shared_stage":{"hits":$ldHits,"misses":$ldMisses},""" +
+        stages +
         s""""ld_shared_keys":$ldKeys,""" +
         s""""dedup_shared_keys":$ddKeys,""" +
-        s""""sa_shared_stage":{"hits":$saHits,"misses":$saMisses},""" +
-        s""""ehh_shared_stage":{"hits":$ehHits,"misses":$ehMisses},""" +
-        s""""sa_build_stage":{"hits":$sbHits,"misses":$sbMisses},""" +
-        s""""dedup_shared_stage":{"hits":$ddHits,"misses":$ddMisses},""" +
-        s""""kmeans_shared_stage":{"hits":$kmHits,"misses":$kmMisses},""" +
-        s""""bpe_shared_stage":{"hits":$bpHits,"misses":$bpMisses},""" +
-        s""""ceu_shared_stage":{"hits":$ceuHits,"misses":$ceuMisses},""" +
-        s""""roh_shared_stage":{"hits":$rohHits,"misses":$rohMisses},""" +
-        s""""simjoin_shared_stage":{"hits":$sjHits,"misses":$sjMisses},""" +
-        s""""site_shared_stage":{"hits":$siHits,"misses":$siMisses},""" +
-        s""""lsh_shared_stage":{"hits":$lshHits,"misses":$lshMisses},""" +
-        s""""merge_shared_stage":{"hits":$mgHits,"misses":$mgMisses},""" +
-        s""""cand_shared_stage":{"hits":$cdHits,"misses":$cdMisses},""" +
         s""""sf":"$sfDir"}"""
     // The full artifact (380-query map + shared-stage telemetry, ~14 KB)
     // goes to a file: the driver's stdout tail-capture keeps only the last

@@ -515,23 +515,10 @@ object ScaleProbe {
       }, Docs))
 
     def time(fn: => DataFrame): Double = {
-      // the LD family and the suffix-array span consumers share
-      // session-scoped materialized stages (deliberate cross-query
-      // fusion); this probe measures COMPUTE linearity, so every timed
-      // run starts cold
-      graft.operators.LdWindow.clearShared()
-      graft.queries.TextDedup.clearSaShared()
-      graft.operators.SuffixArray.clearShared()
-      graft.operators.PopGen.clearEhhShared()
-      TrainingData.clearDedupShared()
-      TrainingData.clearKmeansShared()
-      TrainingData.clearBpeShared()
-      TrainingData.clearSimjoinShared()
-      graft.operators.PopGen.clearRohShared()
-      graft.operators.PopGen.clearSiteShared()
-      graft.queries.TextDedup.clearLshShared()
-      graft.queries.Merge.clearMergeShared()
-      TrainingData.clearCandShared()
+      // shared stages carry work across queries (deliberate
+      // cross-query fusion); this probe measures COMPUTE linearity, so
+      // every timed run starts cold
+      graft.core.SharedStages.clearAll()
       val t0 = System.nanoTime()
       fn.write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9

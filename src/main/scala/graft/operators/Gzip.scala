@@ -37,8 +37,6 @@ object Gzip {
     if (payload == null || payload.length < 18) return None
     def u8(i: Int) = payload(i) & 0xff
     def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
     val out = new java.io.ByteArrayOutputStream()
     var pos = 0
     var members = 0
@@ -62,31 +60,49 @@ object Gzip {
       if ((flg & 0x10) != 0 && !skipZeroTerm()) return None // FCOMMENT
       if ((flg & 0x02) != 0) { p += 2 } // FHCRC (header crc skipped)
       if (p > payload.length) return None
-      val inf = new java.util.zip.Inflater(true)
-      inf.setInput(payload, p, payload.length - p)
-      val crc = new java.util.zip.CRC32()
-      val buf = new Array[Byte](8192)
-      var isize = 0L
-      try {
-        while (!inf.finished()) {
-          val n =
-            try inf.inflate(buf)
-            catch { case _: java.util.zip.DataFormatException => return None }
-          if (n == 0 && !inf.finished()) return None // truncated body
-          out.write(buf, 0, n)
-          crc.update(buf, 0, n)
-          isize += n
-        }
-        val consumed = inf.getBytesRead.toInt
-        val tr = p + consumed
-        if (tr + 8 > payload.length) return None // truncated trailer
-        if (u32(tr) != crc.getValue) return None // CRC32 mismatch
-        if (u32(tr + 4) != (isize & 0xffffffffL)) return None // ISIZE
-        pos = tr + 8
-        members += 1
-      } finally inf.end()
+      val (data, next) =
+        inflateMember(payload, p, payload.length).getOrElse(return None)
+      out.write(data)
+      pos = next
+      members += 1
     }
     if (members == 0) None
     else Some(GzipStream(members, out.size().toLong, out.toByteArray))
+  }
+
+  /** Inflates the raw-DEFLATE body of one member starting at
+    * `src(off)` and verifies the 8-byte trailer that follows it (CRC32,
+    * ISIZE), reading nothing at or past `end`. Returns the inflated
+    * bytes and the offset just past the trailer, or the defect: a
+    * corrupt or truncated body, a truncated trailer, a CRC32 or an
+    * ISIZE mismatch. `sizeHint` presizes the output. Shared by
+    * [[decode]] and the BGZF block reader. */
+  def inflateMember(src: Array[Byte], off: Int, end: Int,
+      sizeHint: Int = 8192): Either[String, (Array[Byte], Int)] = {
+    def u32(i: Int) = (src(i) & 0xffL) | ((src(i + 1) & 0xffL) << 8) |
+      ((src(i + 2) & 0xffL) << 16) | ((src(i + 3) & 0xffL) << 24)
+    val inf = new java.util.zip.Inflater(true)
+    try {
+      inf.setInput(src, off, end - off)
+      var out = new Array[Byte](math.max(sizeHint, 64))
+      var n = 0
+      while (!inf.finished()) {
+        if (n == out.length) out = java.util.Arrays.copyOf(out, n * 2)
+        val k =
+          try inf.inflate(out, n, out.length - n)
+          catch { case e: java.util.zip.DataFormatException =>
+            return Left(s"corrupt deflate data (${e.getMessage})") }
+        if (k == 0 && !inf.finished()) return Left("truncated deflate data")
+        n += k
+      }
+      val tr = off + inf.getBytesRead.toInt
+      if (tr + 8 > end) return Left("truncated trailer")
+      val crc = new java.util.zip.CRC32()
+      crc.update(out, 0, n)
+      if (u32(tr) != crc.getValue) return Left("CRC32 mismatch")
+      if (u32(tr + 4) != (n & 0xffffffffL)) return Left("ISIZE mismatch")
+      Right((if (n == out.length) out else java.util.Arrays.copyOf(out, n),
+        tr + 8))
+    } finally inf.end()
   }
 }

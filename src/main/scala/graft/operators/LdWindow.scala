@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
 import graft.functions.vectorfns.ldPairStats
 
 /** Windowed linkage-disequilibrium r² (the snpgdsLDMat shape of
@@ -34,76 +35,22 @@ object LdWindow {
     * (n, sx, sy, sxy, sxx, syy) — the shared substrate for r² and for
     * haplotype-count statistics like D′. Same contract as [[r2]].
     *
-    * Session-scoped shared materialization: several LD consumers (r²,
-    * the partner profile, pruning) enumerate the SAME (input, window,
+    * A [[graft.core.SharedStages]] stage: several LD consumers (r², the
+    * partner profile, pruning) enumerate the SAME (input, window,
     * carry) pair set, and the pair-stats kernel is the expensive stage
-    * in all of them — so the first caller prices it and persists the
-    * stage, later semantically-identical callers reuse it (the
-    * DataFrame analog of a materialized CTE across queries). Keyed on
-    * the CANONICALIZED logical plan, so only true same-result inputs
-    * share; bounded to [[MaxShared]] entries, FIFO-evicted and
-    * unpersisted. [[clearShared]] drops everything (e.g. when the
-    * underlying files changed mid-session). */
+    * in all of them. The round-8 board held 12 distinct keys live, so
+    * the stage holds 24. */
   def stats(variants: DataFrame, window: Long,
-      carry: Seq[String] = Nil): DataFrame = synchronized {
-    val key = (variants.queryExecution.analyzed.canonicalized, window,
-      carry.toList)
-    val label = s"w=$window/c=${carry.mkString("+")}/p=" +
-      Integer.toHexString(key._1.hashCode)
-    shared.get(key) match {
-      case Some(df) =>
-        sharedHits += 1; bump(label, hit = true); df
-      case None =>
-        sharedMisses += 1; bump(label, hit = false)
-        val df = statsPlan(variants, window, carry)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (shared.size >= MaxShared) {
-          val k0 = shared.head._1
-          shared(k0).unpersist(blocking = false)
-          shared.remove(k0)
-        }
-        shared(key) = df
-        df
+      carry: Seq[String] = Nil): DataFrame =
+    SharedStages.ld.get((
+      variants.queryExecution.analyzed.canonicalized, window,
+      carry.toList)) {
+      statsPlan(variants, window, carry)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
-  /** Cache capacity, sized ABOVE the bench board's working set: the
-    * round-8 board held 12 distinct (input, window, carry) keys live
-    * (q108/q126/q130/q135/q150/q335…), so the previous cap of 8 FIFO-
-    * evicted between Bench's two passes and stages silently rebuilt
-    * (12 misses vs 11 hits in the r8 artifact — round-8 verdict
-    * "What's missing #3"). 24 = 2× the observed set; per-key telemetry
-    * below makes the next undersizing visible instead of silent. */
-  private val MaxShared = 24
-  private val shared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Long, List[String]), DataFrame]
-
-  // Session-scoped telemetry: Bench emits these into target/bench.json
-  // so round-over-round LD-family timings stay interpretable (a query
-  // whose minimum rode a warm shared stage says so in the artifact).
-  private var sharedHits = 0L
-  private var sharedMisses = 0L
-  private val perKey = scala.collection.mutable.LinkedHashMap
-    .empty[String, (Long, Long)]
-  private def bump(label: String, hit: Boolean): Unit = {
-    val (h, m) = perKey.getOrElse(label, (0L, 0L))
-    perKey(label) = if (hit) (h + 1, m) else (h, m + 1)
-  }
-  def sharedTelemetry: (Long, Long) = synchronized {
-    (sharedHits, sharedMisses)
-  }
-  /** Per-key (label → hits/misses): a key whose misses exceed 1 in one
-    * board pass was FIFO-evicted mid-board — the cache is undersized. */
-  def sharedTelemetryByKey: Seq[(String, Long, Long)] = synchronized {
-    perKey.toSeq.map { case (k, (h, m)) => (k, h, m) }
-  }
-
-  /** Drop every shared pair-stats materialization. */
-  def clearShared(): Unit = synchronized {
-    shared.values.foreach(_.unpersist(blocking = false))
-    shared.clear()
-  }
+  /** (hits, misses) of the shared pair-stats stage. */
+  def sharedTelemetry: (Long, Long) = SharedStages.ld.telemetry
 
   private def statsPlan(variants: DataFrame, window: Long,
       carry: Seq[String]): DataFrame = {

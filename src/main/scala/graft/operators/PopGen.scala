@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
+
 /** Population-genetics statistics over the two-table variant model — the
   * SNPRelate/GCTA/PLINK workloads a SeqArray handle feeds (reference link
   * layer /root/reference/src/LinkSNPRelate.cpp:1-410): Hudson Fst, the
@@ -567,28 +569,14 @@ object PopGen {
     * aggregate exactly these rows; q201 consumes them twice more for
     * its call-rate denominator).
     *
-    * Session-scoped shared materialization (the `LdWindow.stats`
-    * discipline): keyed on the canonicalized input plan; telemetry in
-    * `target/bench.json` as `roh_shared_stage`; `ScaleProbe` clears per
-    * timed run so probes price cold compute. `v` must carry (chrom,
-    * pos, vid, d ARRAY<BIGINT>). */
-  def homRunRows(v: DataFrame): DataFrame = synchronized {
-    val key = v.queryExecution.analyzed.canonicalized
-    rohShared.get(key) match {
-      case Some(df) => rohHits += 1; df
-      case None =>
-        rohMisses += 1
-        val df = homRunRowsPlan(v).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (rohShared.size >= 4) {
-          val k0 = rohShared.head._1
-          rohShared(k0).unpersist(blocking = false)
-          rohShared.remove(k0)
-        }
-        rohShared(key) = df
-        df
+    * A [[graft.core.SharedStages]] stage, so the one window pass runs
+    * once per input. `v` must carry (chrom, pos, vid, d
+    * ARRAY<BIGINT>). */
+  def homRunRows(v: DataFrame): DataFrame =
+    SharedStages.roh.get(v.queryExecution.analyzed.canonicalized) {
+      homRunRowsPlan(v).persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   private def homRunRowsPlan(v: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -607,12 +595,6 @@ object PopGen {
         sum(when(col("strt"), 1L).otherwise(0L)).over(w))
   }
 
-  private val rohShared = scala.collection.mutable.LinkedHashMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      DataFrame]
-  private var rohHits = 0L
-  private var rohMisses = 0L
-
   /** Per-cell (sample, locus) FLAG substrate for the gaps-and-islands
     * family (q312 allele-equality ROH runs, q332 phase blocks): the
     * genotype cube exploded ONCE to (s, chrom, pos, vid, called, hom,
@@ -620,28 +602,15 @@ object PopGen {
     * pos, vid) before the persist — a cached InMemoryTableScan reports
     * the cached plan's partitioning AND ordering, so every consumer's
     * locus-collapse/rank windows (all requiring exactly that sort) ride
-    * the cache with ZERO further exchanges or sorts. Same session-scoped
-    * shared-stage discipline as [[homRunRows]] (canonicalized-plan key,
-    * FIFO cap, telemetry, ScaleProbe clears per timed run). `v` must
-    * carry (chrom, pos, vid, geno ARRAY<ARRAY<BIGINT>>,
-    * phased ARRAY<BOOLEAN>). */
-  def siteFlagRows(v: DataFrame): DataFrame = synchronized {
-    val key = v.queryExecution.analyzed.canonicalized
-    siteShared.get(key) match {
-      case Some(df) => siteHits += 1; df
-      case None =>
-        siteMisses += 1
-        val df = siteFlagRowsPlan(v).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (siteShared.size >= 2) {
-          val k0 = siteShared.head._1
-          siteShared(k0).unpersist(blocking = false)
-          siteShared.remove(k0)
-        }
-        siteShared(key) = df
-        df
+    * the cache with ZERO further exchanges or sorts. A
+    * [[graft.core.SharedStages]] stage: the explode and the sort are
+    * the expensive part of every consumer. `v` must carry (chrom, pos,
+    * vid, geno ARRAY<ARRAY<BIGINT>>, phased ARRAY<BOOLEAN>). */
+  def siteFlagRows(v: DataFrame): DataFrame =
+    SharedStages.site.get(v.queryExecution.analyzed.canonicalized) {
+      siteFlagRowsPlan(v).persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
 
   private def siteFlagRowsPlan(v: DataFrame): DataFrame = {
     val nPart = v.sparkSession.conf
@@ -663,32 +632,11 @@ object PopGen {
         col("vid"))
   }
 
-  private val siteShared = scala.collection.mutable.LinkedHashMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      DataFrame]
-  private var siteHits = 0L
-  private var siteMisses = 0L
-
-  def siteSharedTelemetry: (Long, Long) = synchronized {
-    (siteHits, siteMisses)
-  }
-
-  def clearSiteShared(): Unit = synchronized {
-    siteShared.values.foreach(_.unpersist(blocking = false))
-    siteShared.clear()
-  }
+  /** (hits, misses) of the shared site-flag substrate. */
+  def siteSharedTelemetry: (Long, Long) = SharedStages.site.telemetry
 
   /** (hits, misses) of the shared homozygosity-run substrate. */
-  def rohSharedTelemetry: (Long, Long) = synchronized {
-    (rohHits, rohMisses)
-  }
-
-  /** Drop the shared ROH substrate (scale probes measure cold
-    * compute). */
-  def clearRohShared(): Unit = synchronized {
-    rohShared.values.foreach(_.unpersist(blocking = false))
-    rohShared.clear()
-  }
+  def rohSharedTelemetry: (Long, Long) = SharedStages.roh.telemetry
 
   def frohFromDosage(v: DataFrame, minRun: Long): DataFrame = {
     val rows = homRunRows(v)
@@ -2731,48 +2679,17 @@ object PopGen {
     * allele VECTORS. */
   private def ehhHapVectors(variants: DataFrame, nSamples: Int,
       coreEvery: Long, maxExt: Int, exts: Seq[Int]): DataFrame =
-    synchronized {
-      // session-scoped shared materialization (the LdWindow.stats
-      // pattern): the EHH-decay and iHS consumers read the SAME
-      // per-(core, sample, hap) vector stage — the expensive part of
-      // both — so the first caller prices it; telemetry surfaces in
-      // target/bench.json as ehh_shared_stage
-      val key = (variants.queryExecution.analyzed.canonicalized,
-        nSamples, coreEvery, maxExt)
-      ehhShared.get(key) match {
-        case Some(df) => ehhHits += 1; df
-        case None =>
-          ehhMisses += 1
-          val df = ehhHapVectorsPlan(variants, nSamples, coreEvery,
-            maxExt, exts).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if (ehhShared.size >= 4) {
-            val k0 = ehhShared.head._1
-            ehhShared(k0).unpersist(blocking = false)
-            ehhShared.remove(k0)
-          }
-          ehhShared(key) = df
-          df
-      }
+    // a SharedStages stage: the EHH-decay and iHS consumers read the
+    // SAME per-(core, sample, hap) vector stage, the expensive part of
+    // both
+    SharedStages.ehh.get((variants.queryExecution.analyzed.canonicalized,
+      nSamples, coreEvery, maxExt)) {
+      ehhHapVectorsPlan(variants, nSamples, coreEvery, maxExt, exts)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
 
-  private val ehhShared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Long, Int), DataFrame]
-  private var ehhHits = 0L
-  private var ehhMisses = 0L
-
   /** (hits, misses) of the shared EHH hap-vector stage. */
-  def ehhSharedTelemetry: (Long, Long) = synchronized {
-    (ehhHits, ehhMisses)
-  }
-
-  /** Drop the shared EHH materializations (scale probes measure cold
-    * compute). */
-  def clearEhhShared(): Unit = synchronized {
-    ehhShared.values.foreach(_.unpersist(blocking = false))
-    ehhShared.clear()
-  }
+  def ehhSharedTelemetry: (Long, Long) = SharedStages.ehh.telemetry
 
   private def ehhHapVectorsPlan(variants: DataFrame, nSamples: Int,
       coreEvery: Long, maxExt: Int, exts: Seq[Int]): DataFrame = {

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
+
 /** Distributed suffix array over a tokenized corpus by PREFIX DOUBLING
   * (Manber–Myers 1990 lifted onto DataFrames) — the index structure
   * exact-substring dedup literature builds on (Lee et al. 2022 §3 uses
@@ -98,47 +100,18 @@ object SuffixArray {
     * `cap` tokens) and the unrolled SQL oracle replays round-for-round.
     * Default [[Cap]] = 32 serves the 4-gram/LRS consumers; the Lee et
     * al. 2022 exact-substring threshold (50 tokens) needs cap = 64. */
-  def build(docs: DataFrame, cap: Int = Cap): DataFrame = synchronized {
-    // session-scoped shared materialization (the LdWindow.stats
-    // pattern): a corpus suffix array is built ONCE and every
-    // exact-substring consumer (LRS audit, gram blocks, span dedup,
-    // removal rebuild) reads the same index — the first caller prices
-    // the doubling rounds, later same-(corpus, cap) callers ride them.
-    // Telemetry surfaces in target/bench.json as sa_build_stage;
-    // ScaleProbe clears for cold-compute ratios.
-    val key = (docs.queryExecution.analyzed.canonicalized, cap)
-    shared.get(key) match {
-      case Some(df) => sharedHits += 1; df
-      case None =>
-        sharedMisses += 1
-        val df = buildPlan(docs, cap)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (shared.size >= 4) {
-          val k0 = shared.head._1
-          shared(k0).unpersist(blocking = false)
-          shared.remove(k0)
-        }
-        shared(key) = df
-        df
+  def build(docs: DataFrame, cap: Int = Cap): DataFrame =
+    // a SharedStages stage: every exact-substring consumer (LRS audit,
+    // gram blocks, span dedup, removal rebuild) reads the same index,
+    // and the doubling rounds are the expensive part of each
+    SharedStages.saBuild.get((docs.queryExecution.analyzed.canonicalized,
+      cap)) {
+      buildPlan(docs, cap)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val shared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int), DataFrame]
-  private var sharedHits = 0L
-  private var sharedMisses = 0L
 
   /** (hits, misses) of the shared suffix-array build. */
-  def sharedTelemetry: (Long, Long) = synchronized {
-    (sharedHits, sharedMisses)
-  }
-
-  /** Drop the shared builds (scale probes measure cold compute). */
-  def clearShared(): Unit = synchronized {
-    shared.values.foreach(_.unpersist(blocking = false))
-    shared.clear()
-  }
+  def sharedTelemetry: (Long, Long) = SharedStages.saBuild.telemetry
 
   private def buildPlan(docs: DataFrame, cap: Int): DataFrame = {
     require(cap >= 2 && (cap & (cap - 1)) == 0,

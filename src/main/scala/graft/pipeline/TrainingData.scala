@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
 import graft.functions.textfns._
 import graft.functions.vectorfns._
 
@@ -95,64 +96,34 @@ object TrainingData {
   }
 
   /** The deduplicated LSH candidate-pair table (doc_a, doc_b) behind
-    * [[candidateTextPairs]], as a session-scoped shared
-    * materialization (the `LdWindow.stats` pattern): the band-key
-    * self-join + pair dedup is the expensive stage of every direct
-    * near-dup lane that does not already ride the cluster-label cache
-    * — the q149 recall audit's `found` side, the q146 containment
+    * [[candidateTextPairs]], as a [[graft.core.SharedStages]] stage: the
+    * band-key self-join + pair dedup is the expensive stage of every
+    * direct near-dup lane that does not already ride the cluster-label
+    * cache — the q149 recall audit's `found` side, the q146 containment
     * pass, the q67-style drop lists — and the cluster-label build
     * itself populates it on the way, so one warmup build serves all.
-    * Keyed on the canonicalized docs plan + every banding parameter;
-    * telemetry in `target/bench.json` as `cand_shared_stage`;
-    * `ScaleProbe` clears per timed run. The per-pair TEXT joins stay
-    * in the consumer (row-sized; shingle verification re-derives from
-    * raw text on candidate rows only — the house discipline). */
+    * The per-pair TEXT joins stay in the consumer (row-sized; shingle
+    * verification re-derives from raw text on candidate rows only —
+    * the house discipline). */
   private def candPairsShared(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, minhashK: Int, bands: Int,
-      rowsPerBand: Int): DataFrame = synchronized {
-    val key = (docs.queryExecution.analyzed.canonicalized, idCol,
-      textCol, shingleN, minhashK, bands, rowsPerBand)
-    candShared.get(key) match {
-      case Some(df) => candHits += 1; df
-      case None =>
-        candMisses += 1
-        val bnd = bandKeys(docs, idCol, textCol, shingleN, minhashK,
-          bands, rowsPerBand)
-        val df = bnd.as("a").join(bnd.as("b"),
-            col(s"a.band") === col(s"b.band") &&
-              col(s"a.bkey") === col(s"b.bkey") &&
-              col(s"a.$idCol") < col(s"b.$idCol"))
-          .select(col(s"a.$idCol").as("doc_a"),
-            col(s"b.$idCol").as("doc_b"))
-          .dropDuplicates("doc_a", "doc_b")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (candShared.size >= 4) {
-          val k0 = candShared.head._1
-          candShared(k0).unpersist(blocking = false)
-          candShared.remove(k0)
-        }
-        candShared(key) = df
-        df
+      rowsPerBand: Int): DataFrame =
+    SharedStages.cand.get((docs.queryExecution.analyzed.canonicalized,
+      idCol, textCol, shingleN, minhashK, bands, rowsPerBand)) {
+      val bnd = bandKeys(docs, idCol, textCol, shingleN, minhashK,
+        bands, rowsPerBand)
+      bnd.as("a").join(bnd.as("b"),
+          col(s"a.band") === col(s"b.band") &&
+            col(s"a.bkey") === col(s"b.bkey") &&
+            col(s"a.$idCol") < col(s"b.$idCol"))
+        .select(col(s"a.$idCol").as("doc_a"),
+          col(s"b.$idCol").as("doc_b"))
+        .dropDuplicates("doc_a", "doc_b")
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val candShared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, String, Int, Int, Int, Int), DataFrame]
-  private var candHits = 0L
-  private var candMisses = 0L
 
   /** (hits, misses) of the shared LSH candidate-pair stage. */
-  def candSharedTelemetry: (Long, Long) = synchronized {
-    (candHits, candMisses)
-  }
-
-  /** Drop the shared candidate-pair materializations (scale probes
-    * measure cold compute). */
-  def clearCandShared(): Unit = synchronized {
-    candShared.values.foreach(_.unpersist(blocking = false))
-    candShared.clear()
-  }
+  def candSharedTelemetry: (Long, Long) = SharedStages.cand.telemetry
 
   def nearDupPairs(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 3, minhashK: Int = 12,
@@ -239,75 +210,26 @@ object TrainingData {
   /** (id, cluster) labels of the verified near-dup component graph —
     * [[dedupClusters]] without the size aggregation.
     *
-    * Session-scoped shared materialization (the `LdWindow.stats`
-    * pattern): the cluster labels are the substrate of MANY consumers
-    * (cluster report, impact accounting, source-flow matrix,
-    * leakage-safe folds, dup×quality interaction, keep-one clean) and
-    * the LSH + connected-components chain is the expensive stage in
-    * all of them — a real pipeline labels its corpus ONCE. Keyed on
-    * the canonicalized docs plan + every parameter; telemetry
-    * surfaces in `target/bench.json` as `dedup_shared_stage`;
-    * `ScaleProbe` clears per timed run. */
+    * A [[graft.core.SharedStages]] stage: the cluster labels are the
+    * substrate of MANY consumers (cluster report, impact accounting,
+    * source-flow matrix, leakage-safe folds, dup×quality interaction,
+    * keep-one clean) and the LSH + connected-components chain is the
+    * expensive stage in all of them — a real pipeline labels its
+    * corpus ONCE. */
   private def clusterLabels(docs: DataFrame, idCol: String,
       textCol: String, shingleN: Int, minhashK: Int, bands: Int,
-      rowsPerBand: Int, threshold: Double): DataFrame = synchronized {
-    val key = (docs.queryExecution.analyzed.canonicalized, idCol,
-      textCol, shingleN, minhashK, bands, rowsPerBand, threshold)
-    val label = s"$idCol/$textCol/$shingleN/$minhashK/$bands/" +
-      s"$rowsPerBand/$threshold/p=" + Integer.toHexString(key._1.hashCode)
-    dedupShared.get(key) match {
-      case Some(df) =>
-        dedupHits += 1; dedupBump(label, hit = true); df
-      case None =>
-        dedupMisses += 1; dedupBump(label, hit = false)
-        val pairs = nearDupPairs(docs, idCol, textCol, shingleN,
-          minhashK, bands, rowsPerBand, threshold)
-        val df = connectedComponents(pairs, docs.select(col(idCol)),
-          idCol).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // capacity sized above the board's working set (was 4 — the
-        // round-8 verdict's undersized-cache note); per-key telemetry
-        // makes the next undersizing visible
-        if (dedupShared.size >= 12) {
-          val k0 = dedupShared.head._1
-          dedupShared(k0).unpersist(blocking = false)
-          dedupShared.remove(k0)
-        }
-        dedupShared(key) = df
-        df
+      rowsPerBand: Int, threshold: Double): DataFrame =
+    SharedStages.dedup.get((docs.queryExecution.analyzed.canonicalized,
+      idCol, textCol, shingleN, minhashK, bands, rowsPerBand,
+      threshold)) {
+      val pairs = nearDupPairs(docs, idCol, textCol, shingleN,
+        minhashK, bands, rowsPerBand, threshold)
+      connectedComponents(pairs, docs.select(col(idCol)), idCol)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val dedupShared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, String, Int, Int, Int, Int, Double), DataFrame]
-  private var dedupHits = 0L
-  private var dedupMisses = 0L
-  private val dedupPerKey = scala.collection.mutable.LinkedHashMap
-    .empty[String, (Long, Long)]
-  private def dedupBump(label: String, hit: Boolean): Unit = {
-    val (h, m) = dedupPerKey.getOrElse(label, (0L, 0L))
-    dedupPerKey(label) = if (hit) (h + 1, m) else (h, m + 1)
-  }
 
   /** (hits, misses) of the shared cluster-label stage. */
-  def dedupSharedTelemetry: (Long, Long) = synchronized {
-    (dedupHits, dedupMisses)
-  }
-
-  /** Per-key hit/miss — a key missing twice in one board pass was
-    * evicted mid-board (cache undersized). */
-  def dedupSharedTelemetryByKey: Seq[(String, Long, Long)] =
-    synchronized {
-      dedupPerKey.toSeq.map { case (k, (h, m)) => (k, h, m) }
-    }
-
-  /** Drop the shared cluster-label materializations (scale probes
-    * measure cold compute). */
-  def clearDedupShared(): Unit = synchronized {
-    dedupShared.values.foreach(_.unpersist(blocking = false))
-    dedupShared.clear()
-  }
+  def dedupSharedTelemetry: (Long, Long) = SharedStages.dedup.telemetry
 
   /** Near-duplicate CLUSTERS: connected components over the verified
     * [[nearDupPairs]] graph, for every document (a doc with no near-dup
@@ -683,53 +605,22 @@ object TrainingData {
     * Scale (100 TB): the exact join IS the expensive operator (priced
     * honestly, prefix-filtered); the report adds one pair-keyed left
     * join and a ≤ 10-row aggregate on top. */
-  /** [[similarityJoin]] behind a session-scoped shared materialization
-    * (the `LdWindow.stats` discipline): the exact prefix-filter join is
-    * the expensive stage of BOTH the n-gram Jaccard report and the LSH
-    * recall audit (which compares the LSH candidates against exactly
-    * this pair set) — a real pipeline computes its ground-truth pairs
-    * once. Keyed on the canonicalized docs plan + every parameter;
-    * telemetry in `target/bench.json` as `simjoin_shared_stage`;
-    * `ScaleProbe` clears per timed run. */
+  /** [[similarityJoin]] as a [[graft.core.SharedStages]] stage: the
+    * exact prefix-filter join is the expensive stage of BOTH the n-gram
+    * Jaccard report and the LSH recall audit (which compares the LSH
+    * candidates against exactly this pair set) — a real pipeline
+    * computes its ground-truth pairs once. */
   def similarityJoinShared(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 3,
-      threshold: Double = 0.6): DataFrame = synchronized {
-    val key = (docs.queryExecution.analyzed.canonicalized, idCol,
-      textCol, shingleN, threshold)
-    simjoinShared.get(key) match {
-      case Some(df) => simjoinHits += 1; df
-      case None =>
-        simjoinMisses += 1
-        val df = similarityJoin(docs, idCol, textCol, shingleN,
-          threshold).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (simjoinShared.size >= 4) {
-          val k0 = simjoinShared.head._1
-          simjoinShared(k0).unpersist(blocking = false)
-          simjoinShared.remove(k0)
-        }
-        simjoinShared(key) = df
-        df
+      threshold: Double = 0.6): DataFrame =
+    SharedStages.simjoin.get((docs.queryExecution.analyzed.canonicalized,
+      idCol, textCol, shingleN, threshold)) {
+      similarityJoin(docs, idCol, textCol, shingleN, threshold)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val simjoinShared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      String, String, Int, Double), DataFrame]
-  private var simjoinHits = 0L
-  private var simjoinMisses = 0L
 
   /** (hits, misses) of the shared exact similarity-join stage. */
-  def simjoinSharedTelemetry: (Long, Long) = synchronized {
-    (simjoinHits, simjoinMisses)
-  }
-
-  /** Drop the shared similarity-join materializations (scale probes
-    * measure cold compute). */
-  def clearSimjoinShared(): Unit = synchronized {
-    simjoinShared.values.foreach(_.unpersist(blocking = false))
-    simjoinShared.clear()
-  }
+  def simjoinSharedTelemetry: (Long, Long) = SharedStages.simjoin.telemetry
 
   def lshRecallReport(docs: DataFrame, idCol: String = "doc_id",
       textCol: String = "text", shingleN: Int = 3, minhashK: Int = 12,
@@ -1420,68 +1311,22 @@ object TrainingData {
     * (never divided), so the computation replays bit-for-bit in SQL.
     * Per iteration: one k·dims-row shuffle + one broadcast assign; the
     * corpus is scanned iters+1 times and never shuffled. */
-  /** [[kmeansTrain]] behind a session-scoped shared materialization
-    * (the `LdWindow.stats` / [[clusterLabels]] pattern): the trained
-    * coarse quantizer is the substrate of the whole ANN ladder — IVF
-    * search, IVF-PQ, the nprobe curve, SemDeDup — and the iterative
-    * Lloyd chain (one k·dims shuffle + one broadcast assign per round)
-    * is the expensive stage in all of them. A real pipeline trains the
-    * index ONCE and serves every search from it; this is that artifact
-    * as a DataFrame. Keyed on the canonicalized input plan + (k,
-    * iters); telemetry surfaces in `target/bench.json` as
-    * `kmeans_shared_stage`; `ScaleProbe` clears per timed run. */
+  /** [[kmeansTrain]] as a [[graft.core.SharedStages]] stage: the
+    * trained coarse quantizer is the substrate of the whole ANN ladder
+    * — IVF search, IVF-PQ, the nprobe curve, SemDeDup — and the
+    * iterative Lloyd chain (one k·dims shuffle + one broadcast assign
+    * per round) is the expensive stage in all of them. A real pipeline
+    * trains the index ONCE and serves every search from it; this is
+    * that artifact as a DataFrame. */
   def kmeansShared(vecs: DataFrame, k: Int, iters: Int): DataFrame =
-    synchronized {
-      val key = (vecs.queryExecution.analyzed.canonicalized, k, iters)
-      val label = s"k=$k/it=$iters/p=" +
-        Integer.toHexString(key._1.hashCode)
-      kmeansSharedMap.get(key) match {
-        case Some(df) =>
-          kmeansHits += 1; kmeansBump(label, hit = true); df
-        case None =>
-          kmeansMisses += 1; kmeansBump(label, hit = false)
-          val df = kmeansTrain(vecs, k, iters).persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          if (kmeansSharedMap.size >= 4) {
-            val k0 = kmeansSharedMap.head._1
-            kmeansSharedMap(k0).unpersist(blocking = false)
-            kmeansSharedMap.remove(k0)
-          }
-          kmeansSharedMap(key) = df
-          df
-      }
+    SharedStages.kmeans.get((vecs.queryExecution.analyzed.canonicalized,
+      k, iters)) {
+      kmeansTrain(vecs, k, iters)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-
-  private val kmeansSharedMap = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, Int), DataFrame]
-  private var kmeansHits = 0L
-  private var kmeansMisses = 0L
-  private val kmeansPerKey = scala.collection.mutable.LinkedHashMap
-    .empty[String, (Long, Long)]
-  private def kmeansBump(label: String, hit: Boolean): Unit = {
-    val (h, m) = kmeansPerKey.getOrElse(label, (0L, 0L))
-    kmeansPerKey(label) = if (hit) (h + 1, m) else (h, m + 1)
-  }
 
   /** (hits, misses) of the shared trained-quantizer stage. */
-  def kmeansSharedTelemetry: (Long, Long) = synchronized {
-    (kmeansHits, kmeansMisses)
-  }
-
-  /** Per-key hit/miss — a key missing twice in one board pass was
-    * evicted mid-board (cache undersized). */
-  def kmeansSharedTelemetryByKey: Seq[(String, Long, Long)] =
-    synchronized {
-      kmeansPerKey.toSeq.map { case (k, (h, m)) => (k, h, m) }
-    }
-
-  /** Drop the shared trained-quantizer materializations (scale probes
-    * measure cold compute). */
-  def clearKmeansShared(): Unit = synchronized {
-    kmeansSharedMap.values.foreach(_.unpersist(blocking = false))
-    kmeansSharedMap.clear()
-  }
+  def kmeansSharedTelemetry: (Long, Long) = SharedStages.kmeans.telemetry
 
   def kmeansTrain(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
     val e = vecs.select(col("vec_id"), col("qv"))
@@ -1859,59 +1704,26 @@ object TrainingData {
     * vocabulary-sized (millions, not billions) regardless of corpus
     * size; the driver collects one row per round. This is the standard
     * structure of distributed BPE trainers. */
-  /** The learned [[bpeTrain]] merge trajectory as a driver value,
-    * behind a session-scoped shared cache (the `LdWindow.stats`
-    * discipline, driver-value flavored): the training loop is
+  /** The learned [[bpeTrain]] merge trajectory as a driver value, in a
+    * [[graft.core.SharedStages]] stage: the training loop is
     * driver-paced — one pair-count aggregate + argmax collect per
     * round — and THREE board queries (train, encode, fertility) need
     * the identical trajectory; a real pipeline trains its tokenizer
-    * once. Keyed on the canonicalized docs plan + (nMerges, textCol);
-    * telemetry in `target/bench.json` as `bpe_shared_stage`;
-    * `ScaleProbe` clears per timed run. Rows are (round, lhs, rhs,
-    * merged, cnt) in training order. */
+    * once. Rows are (round, lhs, rhs, merged, cnt) in training order. */
   def bpeMergesShared(docs: DataFrame, nMerges: Int,
       textCol: String = "text")
-      : Seq[(Int, String, String, String, Long)] = synchronized {
-    val key = (docs.queryExecution.analyzed.canonicalized, nMerges,
-      textCol)
-    val label = s"m=$nMerges/c=$textCol/p=" +
-      Integer.toHexString(key._1.hashCode)
-    bpeShared.get(key) match {
-      case Some(m) =>
-        bpeHits += 1; bpeBump(label, hit = true); m
-      case None =>
-        bpeMisses += 1; bpeBump(label, hit = false)
-        val m = bpeTrain(docs, nMerges, textCol)
-          .orderBy("round").collect()
-          .map(r => (r.getAs[Int]("round"), r.getAs[String]("lhs"),
-            r.getAs[String]("rhs"), r.getAs[String]("merged"),
-            r.getAs[Long]("cnt"))).toSeq
-        if (bpeShared.size >= 4) bpeShared.remove(bpeShared.head._1)
-        bpeShared(key) = m
-        m
+      : Seq[(Int, String, String, String, Long)] =
+    SharedStages.bpe.get((docs.queryExecution.analyzed.canonicalized,
+      nMerges, textCol)) {
+      bpeTrain(docs, nMerges, textCol)
+        .orderBy("round").collect()
+        .map(r => (r.getAs[Int]("round"), r.getAs[String]("lhs"),
+          r.getAs[String]("rhs"), r.getAs[String]("merged"),
+          r.getAs[Long]("cnt"))).toSeq
     }
-  }
-
-  private val bpeShared = scala.collection.mutable.LinkedHashMap
-    .empty[(org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Int, String), Seq[(Int, String, String, String, Long)]]
-  private var bpeHits = 0L
-  private var bpeMisses = 0L
-  private val bpePerKey = scala.collection.mutable.LinkedHashMap
-    .empty[String, (Long, Long)]
-  private def bpeBump(label: String, hit: Boolean): Unit = {
-    val (h, m) = bpePerKey.getOrElse(label, (0L, 0L))
-    bpePerKey(label) = if (hit) (h + 1, m) else (h, m + 1)
-  }
 
   /** (hits, misses) of the shared BPE merge-trajectory stage. */
-  def bpeSharedTelemetry: (Long, Long) = synchronized {
-    (bpeHits, bpeMisses)
-  }
-
-  /** Drop the shared BPE merge trajectories (scale probes measure cold
-    * compute). */
-  def clearBpeShared(): Unit = synchronized { bpeShared.clear() }
+  def bpeSharedTelemetry: (Long, Long) = SharedStages.bpe.telemetry
 
   def bpeTrain(docs: DataFrame, nMerges: Int, textCol: String = "text")
       : DataFrame = {

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
 import graft.operators.MergeVariants._
@@ -187,55 +188,24 @@ object Merge extends QueryModule {
         genoDec.as("geno"), phasedDec.as("phased"))
   }
 
-  /** [[dedupedVariants]] behind a session-scoped shared
-    * materialization (the LdWindow.stats pattern): q298 and q307 both
-    * consume the SAME deduped variant table, and the dedup — the cube
-    * build, the serialization kernel on 600 k rows, and the
-    * SortAggregate argmax — is the expensive stage in each (a real
-    * merge pipeline dedupes its callset ONCE and runs every export off
-    * it). Keyed on the canonicalized cube plan; telemetry surfaces in
-    * `target/bench.json` as `merge_shared_stage`; `ScaleProbe` clears
-    * per timed run (its merge_nway op probes the operator directly and
-    * never touches this cache). q298's vid carve filter now applies
-    * ABOVE the shared table — it no longer pays 11/15 of a private
-    * dedup, it reads 11/15 of a shared one. */
+  /** [[dedupedVariants]] as a [[graft.core.SharedStages]] stage: q298
+    * and q307 both consume the SAME deduped variant table, and the
+    * dedup — the cube build, the serialization kernel on 600 k rows,
+    * and the SortAggregate argmax — is the expensive stage in each (a
+    * real merge pipeline dedupes its callset ONCE and runs every export
+    * off it). ScaleProbe's merge_nway op probes the operator directly
+    * and never touches this stage. q298's vid carve filter applies
+    * ABOVE the shared table: it reads 11/15 of a shared dedup. */
   private def dedupedVariantsShared(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = synchronized {
-    val key = SynthGeno.variants(s, dir)
-      .queryExecution.analyzed.canonicalized
-    mergeShared.get(key) match {
-      case Some(df) => mergeHits += 1; df
-      case None =>
-        mergeMisses += 1
-        val df = dedupedVariants(s, dir).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (mergeShared.size >= 4) {
-          val k0 = mergeShared.head._1
-          mergeShared(k0).unpersist(blocking = false)
-          mergeShared.remove(k0)
-        }
-        mergeShared(key) = df
-        df
+      dir: String): org.apache.spark.sql.DataFrame =
+    SharedStages.merge.get(
+      SynthGeno.variants(s, dir).queryExecution.analyzed.canonicalized) {
+      dedupedVariants(s, dir).persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val mergeShared = scala.collection.mutable.LinkedHashMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      org.apache.spark.sql.DataFrame]
-  private var mergeHits = 0L
-  private var mergeMisses = 0L
 
   /** (hits, misses) of the shared deduped-variants stage. */
-  def mergeSharedTelemetry: (Long, Long) = synchronized {
-    (mergeHits, mergeMisses)
-  }
-
-  /** Drop the shared deduped-variants materializations (scale probes
-    * measure cold compute). */
-  def clearMergeShared(): Unit = synchronized {
-    mergeShared.values.foreach(_.unpersist(blocking = false))
-    mergeShared.clear()
-  }
+  def mergeSharedTelemetry: (Long, Long) = SharedStages.merge.telemetry
 
   private val dedupSqlCte =
     s"""variants0 AS (${SynthGeno.sqlCte}),

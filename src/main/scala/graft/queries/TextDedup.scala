@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{SharedStages, Tables}
 import graft.functions.textfns._
 
 /** Text-analysis + deduplication queries over the `documents` table — the
@@ -197,85 +197,52 @@ object TextDedup extends QueryModule {
     * self-join, pair dedup, per lane (round-12 baseline: 9.7 s across
     * the four at sf0.1/32c).
     *
-    * Session-scoped shared materialization (the `LdWindow.stats`
-    * pattern, guide §2.4): a real dedup pipeline signs and banks its
-    * corpus ONCE and runs every audit off the candidate set. First
-    * caller prices the build, the rest ride it; keyed on the
-    * canonicalized docs plan; telemetry surfaces in
-    * `target/bench.json` as `lsh_shared_stage` (warm minima are
-    * labeled in the artifact); `ScaleProbe` clears per timed run so
-    * cold ratios stay honest. Both tables persist MEMORY_AND_DISK —
-    * O(corpus) rows each, orders below the band join they replace. */
+    * A [[graft.core.SharedStages]] stage: a real dedup pipeline signs
+    * and banks its corpus ONCE and runs every audit off the candidate
+    * set. Both tables persist MEMORY_AND_DISK — O(corpus) rows each,
+    * orders below the band join they replace. */
   private def lshSigsAndCand(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = synchronized {
+      : (DataFrame, DataFrame) = {
     val d = Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val key = d.queryExecution.analyzed.canonicalized
-    lshShared.get(key) match {
-      case Some(p) => lshHits += 1; p
-      case None =>
-        lshMisses += 1
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        // sigs persists WITHOUT the shingle arrays: (doc_id, 12 hashes)
-        // is corpus-sized-small, where the sh column (every 3-gram
-        // string per doc) dominated the build's serialization cost —
-        // consumers that need exact shingle sets re-derive them from
-        // raw text on CANDIDATE rows only (the q33 discipline).
-        // repartition first: the testdata parquet is single-row-group
-        // (1-task scan), and the shingle+minhash kernel chain would
-        // otherwise fuse into that one task — the whole cold build ran
-        // on one core at any SPARK_GRAFT_CPUS
-        val sigs = d
-          .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
-          .select(col("doc_id"), shingles(col("text"), SHINGLE_N).as("sh"))
-          .filter(size(col("sh")) > 0)
-          .select(col("doc_id"),
-            minhashSignature(col("sh"), MINHASH_K).as("sig"))
-          .persist(lvl)
-        // _outer: bands of a k-signature are never empty; a plain
-        // posexplode's inferred size>0 filter would re-run the band
-        // chain below the Generate (the q124/q263 lesson)
-        val bands = sigs.select(col("doc_id"),
-          posexplode_outer(lshBands(col("sig"), BANDS, ROWS_PER_BAND))
-            .as(Seq("band", "bkey")))
-        val cand = bands.as("a").join(bands.as("b"),
-            col("a.band") === col("b.band")
-              && col("a.bkey") === col("b.bkey")
-              && col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("doc_a"),
-            col("b.doc_id").as("doc_b"))
-          .dropDuplicates("doc_a", "doc_b")
-          .persist(lvl)
-        if (lshShared.size >= 4) {
-          val k0 = lshShared.head._1
-          lshShared(k0)._1.unpersist(blocking = false)
-          lshShared(k0)._2.unpersist(blocking = false)
-          lshShared.remove(k0)
-        }
-        lshShared(key) = (sigs, cand)
-        (sigs, cand)
+    SharedStages.lsh.get(d.queryExecution.analyzed.canonicalized) {
+      val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+      // sigs persists WITHOUT the shingle arrays: (doc_id, 12 hashes)
+      // is corpus-sized-small, where the sh column (every 3-gram
+      // string per doc) dominated the build's serialization cost —
+      // consumers that need exact shingle sets re-derive them from
+      // raw text on CANDIDATE rows only (the q33 discipline).
+      // repartition first: the testdata parquet is single-row-group
+      // (1-task scan), and the shingle+minhash kernel chain would
+      // otherwise fuse into that one task — the whole cold build ran
+      // on one core at any SPARK_GRAFT_CPUS
+      val sigs = d
+        .repartition(s.conf.get("spark.sql.shuffle.partitions").toInt)
+        .select(col("doc_id"), shingles(col("text"), SHINGLE_N).as("sh"))
+        .filter(size(col("sh")) > 0)
+        .select(col("doc_id"),
+          minhashSignature(col("sh"), MINHASH_K).as("sig"))
+        .persist(lvl)
+      // _outer: bands of a k-signature are never empty; a plain
+      // posexplode's inferred size>0 filter would re-run the band
+      // chain below the Generate (the q124/q263 lesson)
+      val bands = sigs.select(col("doc_id"),
+        posexplode_outer(lshBands(col("sig"), BANDS, ROWS_PER_BAND))
+          .as(Seq("band", "bkey")))
+      val cand = bands.as("a").join(bands.as("b"),
+          col("a.band") === col("b.band")
+            && col("a.bkey") === col("b.bkey")
+            && col("a.doc_id") < col("b.doc_id"))
+        .select(col("a.doc_id").as("doc_a"),
+          col("b.doc_id").as("doc_b"))
+        .dropDuplicates("doc_a", "doc_b")
+        .persist(lvl)
+      (sigs, cand)
     }
   }
-
-  private val lshShared = scala.collection.mutable.LinkedHashMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      (DataFrame, DataFrame)]
-  private var lshHits = 0L
-  private var lshMisses = 0L
 
   /** (hits, misses) of the shared LSH signature/candidate stage. */
-  def lshSharedTelemetry: (Long, Long) = synchronized {
-    (lshHits, lshMisses)
-  }
-
-  /** Drop the shared LSH materializations (scale probes measure cold
-    * compute). */
-  def clearLshShared(): Unit = synchronized {
-    lshShared.values.foreach { case (a, b) =>
-      a.unpersist(blocking = false); b.unpersist(blocking = false)
-    }
-    lshShared.clear()
-  }
+  def lshSharedTelemetry: (Long, Long) = SharedStages.lsh.telemetry
 
   // --- MinHash + LSH near-dup pairs (brief: "MinHash+LSH
   // (shingle→minhash→band→bucket-join)"). The only shuffle that scales with
@@ -2861,52 +2828,22 @@ object TextDedup extends QueryModule {
     * finder and the q281 removal rebuild; both are gated by
     * INDEPENDENT direct-counting oracles.
     *
-    * Session-scoped shared materialization (the `LdWindow.stats`
-    * pattern): both consumers need the SAME cap-64 suffix-array
-    * occurrence table — the expensive stage in each — so the first
-    * caller prices it and persists it, the second rides it (a real
-    * release pipeline builds the corpus suffix array ONCE and runs
-    * every exact-substring audit off it). Keyed on the canonicalized
-    * docs plan; telemetry surfaces in `target/bench.json` as
-    * `sa_shared_stage` so warm minima are labeled in the artifact. */
+    * A [[graft.core.SharedStages]] stage: both consumers need the SAME
+    * cap-64 suffix-array occurrence table — the expensive stage in
+    * each (a real release pipeline builds the corpus suffix array ONCE
+    * and runs every exact-substring audit off it). */
   private def saSpanOccurrences(s: SparkSession, dir: String)
-      : DataFrame = synchronized {
+      : DataFrame = {
     val docsIn = Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"))
-    val key = docsIn.queryExecution.analyzed.canonicalized
-    saShared.get(key) match {
-      case Some(df) => saHits += 1; df
-      case None =>
-        saMisses += 1
-        val df = saSpanOccurrencesPlan(s, dir)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (saShared.size >= 4) {
-          val k0 = saShared.head._1
-          saShared(k0).unpersist(blocking = false)
-          saShared.remove(k0)
-        }
-        saShared(key) = df
-        df
+    SharedStages.sa.get(docsIn.queryExecution.analyzed.canonicalized) {
+      saSpanOccurrencesPlan(s, dir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
   }
 
-  private val saShared = scala.collection.mutable.LinkedHashMap
-    .empty[org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      DataFrame]
-  private var saHits = 0L
-  private var saMisses = 0L
-
   /** (hits, misses) of the shared suffix-array occurrence stage. */
-  def saSharedTelemetry: (Long, Long) = synchronized {
-    (saHits, saMisses)
-  }
-
-  /** Drop the shared suffix-array materializations (scale probes
-    * measure cold compute). */
-  def clearSaShared(): Unit = synchronized {
-    saShared.values.foreach(_.unpersist(blocking = false))
-    saShared.clear()
-  }
+  def saSharedTelemetry: (Long, Long) = SharedStages.sa.telemetry
 
   private def saSpanOccurrencesPlan(s: SparkSession, dir: String)
       : DataFrame = {

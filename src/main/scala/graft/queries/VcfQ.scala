@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.SharedStages
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
 import graft.sources.Vcf
@@ -921,48 +922,21 @@ object VcfQ extends QueryModule {
   /** Shared CEU pair stage for q227/q268/q271: exact per-pair KING
     * counter sums joined to both members' family labels.
     *
-    * Session-scoped shared materialization (the `LdWindow.stats`
-    * discipline): the 4005-pair fan over the real CEU exon cube is the
-    * expensive stage of all three consumers — and q271 additionally
-    * consumes it twice inside one plan (the within-family pooled
-    * threshold AND the edge filter) — so the first caller prices it and
-    * persists ~4005 counter rows; telemetry lands in `target/bench.json`
-    * as `ceu_shared_stage`. Keyed per session (the input is one fixed
-    * reference file; a SparkSession swap mid-suite must not leak a
-    * stale handle). */
+    * A [[graft.core.SharedStages]] stage: the 4005-pair fan over the
+    * real CEU exon cube is the expensive stage of all three consumers —
+    * and q271 additionally consumes it twice inside one plan (the
+    * within-family pooled threshold AND the edge filter). Keyed per
+    * session (the input is one fixed reference file; a SparkSession
+    * swap mid-suite must not leak a stale handle). */
   private def ceuKinPairs(s: SparkSession)
-      : org.apache.spark.sql.DataFrame = synchronized {
-    ceuShared.get(s) match {
-      case Some(df) => ceuHits += 1; df
-      case None =>
-        ceuMisses += 1
-        val df = ceuKinPairsPlan(s).persist(
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (ceuShared.size >= 2) {
-          val k0 = ceuShared.head._1
-          ceuShared(k0).unpersist(blocking = false)
-          ceuShared.remove(k0)
-        }
-        ceuShared(s) = df
-        df
+      : org.apache.spark.sql.DataFrame =
+    SharedStages.ceu.get(s) {
+      ceuKinPairsPlan(s).persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
-  }
-
-  private val ceuShared = scala.collection.mutable.LinkedHashMap
-    .empty[SparkSession, org.apache.spark.sql.DataFrame]
-  private var ceuHits = 0L
-  private var ceuMisses = 0L
 
   /** (hits, misses) of the shared CEU pair stage. */
-  def ceuSharedTelemetry: (Long, Long) = synchronized {
-    (ceuHits, ceuMisses)
-  }
-
-  /** Drop the shared CEU pair materializations. */
-  def clearCeuShared(): Unit = synchronized {
-    ceuShared.values.foreach(_.unpersist(blocking = false))
-    ceuShared.clear()
-  }
+  def ceuSharedTelemetry: (Long, Long) = SharedStages.ceu.telemetry
 
   private def ceuKinPairsPlan(s: SparkSession)
       : org.apache.spark.sql.DataFrame = {

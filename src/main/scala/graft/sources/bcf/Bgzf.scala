@@ -1,9 +1,11 @@
 package graft.sources.bcf
 
 import java.io.OutputStream
-import java.util.zip.{CRC32, Deflater, Inflater}
+import java.util.zip.{CRC32, Deflater, ZipException}
 
 import scala.collection.mutable.ArrayBuffer
+
+import graft.operators.Gzip
 
 /** BGZF block writer (the blocked-gzip framing BCF requires — public
   * htslib/SAM spec §4.1): each ≤64 KiB payload becomes an independent
@@ -226,7 +228,9 @@ object Bgzf {
   /** Inflates BGZF members sequentially from compressed offset
     * `startOffset` (which must be a member boundary). `virtualPos` is the
     * htslib virtual offset of the next unread byte; empty members (incl.
-    * the EOF marker) are skipped transparently. */
+    * the EOF marker) are skipped transparently. A truncated or corrupt
+    * member raises a `ZipException` naming the file and the member's
+    * compressed offset. */
   final class BlockStream(path: String, startOffset: Long)
       extends java.io.InputStream {
     private val ch =
@@ -241,20 +245,24 @@ object Bgzf {
     def virtualPos: Long =
       if (pos < buf.length) (curBlock << 16) | pos else nextBlock << 16
 
+    private def fail(why: String, at: Long): Nothing =
+      throw new ZipException(s"$why in bgzf member at offset $at of $path")
+
     private def readFully(b: Array[Byte], o: Int, n: Int): Unit = {
       val bb = java.nio.ByteBuffer.wrap(b, o, n)
       while (bb.hasRemaining)
-        require(ch.read(bb) >= 0, s"truncated bgzf member in $path")
+        if (ch.read(bb) < 0) fail("truncated file", nextBlock)
     }
 
-    /** Loads the next non-empty member; false at EOF. */
+    /** Loads the next non-empty member; false at EOF. Every member's
+      * body is inflated and checked against its CRC32 and ISIZE. */
     private def advance(): Boolean = {
       while (nextBlock < fileLen) {
         ch.position(nextBlock)
         val hdr = new Array[Byte](18)
         readFully(hdr, 0, math.min(18, (fileLen - nextBlock).toInt))
         val memberLen = headerBsize(hdr, 0, 18)
-        require(memberLen > 0, s"bad bgzf member at $nextBlock in $path")
+        if (memberLen < 26) fail("bad header", nextBlock)
         val xlen = (hdr(10) & 0xff) | ((hdr(11) & 0xff) << 8)
         val rest = new Array[Byte](memberLen - 18)
         readFully(rest, 0, rest.length)
@@ -263,19 +271,14 @@ object Bgzf {
           (rest(o) & 0xff) | ((rest(o + 1) & 0xff) << 8) |
             ((rest(o + 2) & 0xff) << 16) | ((rest(o + 3) & 0xff) << 24)
         }
-        val cstart = 12 + xlen - 18 // offset of deflate data within `rest`
-        val clen = rest.length - cstart - 8
         curBlock = nextBlock
         nextBlock += memberLen
-        if (isize > 0) {
-          val out = new Array[Byte](isize)
-          val inf = new Inflater(true)
-          inf.setInput(rest, cstart, clen)
-          var n = 0
-          while (n < isize && !inf.finished())
-            n += inf.inflate(out, n, isize - n)
-          inf.end()
-          require(n == isize, s"short inflate at $curBlock in $path")
+        // deflate data starts after the 12 + xlen header bytes
+        val (out, end) = Gzip.inflateMember(rest, 12 + xlen - 18,
+          rest.length, sizeHint = math.min(isize, 1 << 16))
+          .fold(fail(_, curBlock), identity)
+        if (end != rest.length) fail("BSIZE mismatch", curBlock)
+        if (out.nonEmpty) {
           buf = out
           pos = 0
           return true

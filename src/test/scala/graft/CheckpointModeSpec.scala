@@ -63,9 +63,9 @@ class CheckpointModeSpec extends AnyFunSuite {
       .collect().map(_.toSeq.map(String.valueOf)).sortBy(_.mkString(","))
       .toSeq
     val local = run()
-    graft.operators.SuffixArray.clearShared()
+    graft.core.SharedStages.saBuild.clear()
     val reliable = withReliable { run() }
-    graft.operators.SuffixArray.clearShared()
+    graft.core.SharedStages.saBuild.clear()
     assert(local == reliable)
   }
 

@@ -157,7 +157,7 @@ class PlanSpec extends AnyFunSuite {
     // clear the shared trained-quantizer stage: this test pins the
     // BUILD plan's shape, not the cached InMemoryRelation a warm
     // session would substitute
-    graft.pipeline.TrainingData.clearKmeansShared()
+    graft.core.SharedStages.kmeans.clear()
     for (q <- Seq("q61_ivf_search", "q63_kmeans_train")) {
       val p = plan(q)
       assert(!p.contains("SortMergeJoin"), q)
@@ -351,7 +351,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("q114: IVF-PQ joins ride broadcasts — corpus never shuffled to join") {
-    graft.pipeline.TrainingData.clearKmeansShared()
+    graft.core.SharedStages.kmeans.clear()
     val p = plan("q114_ivf_pq")
     assert(p.contains("BroadcastExchange"), p)
     assert(!p.contains("SortMergeJoin"), p)

@@ -292,7 +292,7 @@ class PopGenSpec extends AnyFunSuite {
   test("LdWindow.stats shares one materialized stage across consumers") {
     import spark.implicits._
     import graft.operators.LdWindow
-    LdWindow.clearShared()
+    graft.core.SharedStages.ld.clear()
     val base = Seq(
       (1L, "c1", 10L, Seq[java.lang.Long](0L, 1L, 2L, 0L)),
       (2L, "c1", 20L, Seq[java.lang.Long](0L, 1L, 2L, 1L)),
@@ -312,7 +312,7 @@ class PopGenSpec extends AnyFunSuite {
       .select("vid_a", "vid_b", "n").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(got == Set((1L, 2L, 4L)))
-    LdWindow.clearShared()
+    graft.core.SharedStages.ld.clear()
   }
 
   test("pcaFromGrmDistributed matches the dense driver-side eigenpairs") {

@@ -4,12 +4,16 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.storage.StorageLevel
+
+import graft.core.SharedStages
 import graft.pipeline.TrainingData
 
-/** Round-11 shared-stage specs: the session-scoped materializations the
-  * optimization round added (trained k-means quantizer, BPE merge list,
-  * ROH run substrate, CEU pair stage) must (a) return byte-identical
-  * results to the uncached builders and (b) actually share — second
+/** Shared-stage specs: the [[SharedStages]] registry itself (names,
+  * caps, FIFO eviction, clearAll, one build under concurrent callers),
+  * and the stage owners (trained k-means quantizer, BPE merge list, ROH
+  * run substrate) must (a) return byte-identical results to the
+  * uncached builders and (b) actually share — second
   * semantically-identical call is a telemetry hit, different key a miss.
   */
 class SharedStagesSpec extends AnyFunSuite {
@@ -20,12 +24,97 @@ class SharedStagesSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
+  test("SharedStages declares the 14 stages Bench emits, with their caps") {
+    assert(SharedStages.all.map(_.name) == Seq("ld_shared_stage",
+      "sa_shared_stage", "ehh_shared_stage", "sa_build_stage",
+      "dedup_shared_stage", "kmeans_shared_stage", "bpe_shared_stage",
+      "ceu_shared_stage", "roh_shared_stage", "simjoin_shared_stage",
+      "site_shared_stage", "lsh_shared_stage", "merge_shared_stage",
+      "cand_shared_stage"))
+    val caps = Map("ld_shared_stage" -> 24, "dedup_shared_stage" -> 12,
+      "site_shared_stage" -> 2, "ceu_shared_stage" -> 2)
+    for (st <- SharedStages.all)
+      assert(st.cap == caps.getOrElse(st.name, 4), st.name)
+  }
+
+  test("a stage past its cap evicts FIFO: the oldest value is " +
+      "unpersisted and its next lookup is a miss") {
+    val st = SharedStages.site // cap 2
+    st.clear()
+    val dfs = (0 until 3).map(i => spark.range(1000L + i).toDF())
+    def lookup(i: Int) = st.get(s"fifo-$i")(dfs(i).persist())
+    val (h0, m0) = st.telemetry
+    (0 until 3).foreach(lookup)
+    assert(st.size == 2)
+    assert(dfs(0).storageLevel == StorageLevel.NONE)
+    assert(dfs(1).storageLevel != StorageLevel.NONE)
+    assert(dfs(2).storageLevel != StorageLevel.NONE)
+    // entries 1 and 2 are still cached: hits
+    assert((lookup(1) eq dfs(1)) && (lookup(2) eq dfs(2)))
+    val (h1, m1) = st.telemetry
+    assert(h1 - h0 == 2 && m1 - m0 == 3)
+    lookup(0)
+    val (h2, m2) = st.telemetry
+    assert(h2 == h1 && m2 - m1 == 1, "an evicted key must miss")
+    assert(st.telemetryByKey.find(_._1 == "fifo-0").map(r => (r._2, r._3))
+      == Some((0L, 2L)))
+    assert(dfs(1).storageLevel == StorageLevel.NONE,
+      "re-adding key 0 evicts key 1, the oldest left")
+    st.clear()
+    assert(dfs.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("clearAll empties and unpersists every stage, ceu included") {
+    import SharedStages._
+    clearAll()
+    var i = 0
+    def fresh() = { i += 1; spark.range(2000L + i).toDF().persist() }
+    val frameStages = Seq(ld, sa, ehh, saBuild, dedup, kmeans, roh,
+      simjoin, site, merge, cand)
+    val held = frameStages.map(st => st.get(("clearAll", st.name))(fresh()))
+    val c = ceu.get(spark)(fresh())
+    val (sigs, cand2) = lsh.get("clearAll")((fresh(), fresh()))
+    bpe.get("clearAll")(Seq((1, "a", "b", "ab", 2L)))
+    val frames = held ++ Seq(c, sigs, cand2)
+    assert(frames.forall(_.storageLevel != StorageLevel.NONE))
+    assert(all.forall(_.size >= 1))
+    clearAll()
+    assert(all.forall(_.size == 0))
+    assert(frames.forall(_.storageLevel == StorageLevel.NONE))
+  }
+
+  test("four concurrent callers of one key build it once") {
+    val st = SharedStages.kmeans
+    st.clear()
+    val builds = new java.util.concurrent.atomic.AtomicInteger()
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val (h0, m0) = st.telemetry
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[AnyRef]()
+    val threads = (0 until 4).map(_ => new Thread(() => {
+      start.await()
+      got.add(st.get("concurrent") {
+        builds.incrementAndGet()
+        Thread.sleep(200)
+        spark.range(3000L).toDF().persist()
+      })
+    }))
+    threads.foreach(_.start())
+    start.countDown()
+    threads.foreach(_.join(60000))
+    val (h1, m1) = st.telemetry
+    assert(builds.get == 1)
+    assert(m1 - m0 == 1 && h1 - h0 == 3,
+      s"expected 1 miss / 3 hits, got ${m1 - m0} / ${h1 - h0}")
+    assert(got.size == 4 && got.toArray.forall(_ eq got.peek()))
+    st.clear()
+  }
+
   test("kmeansShared == kmeansTrain, and same-key callers share") {
     import spark.implicits._
     val vecs = (0 until 64).map(i =>
       (i.toLong, Seq.tabulate(4)(j => ((i * 7 + j * 3) % 11).toLong)))
       .toDF("vec_id", "qv")
-    TrainingData.clearKmeansShared()
+    SharedStages.kmeans.clear()
     val (h0, m0) = TrainingData.kmeansSharedTelemetry
     val direct = TrainingData.kmeansTrain(vecs, 4, 2)
       .orderBy("vec_id").collect().map(_.toString).toSeq
@@ -48,7 +137,7 @@ class SharedStagesSpec extends AnyFunSuite {
     assert(!(shared3 eq shared1))
     val (h2, m2) = TrainingData.kmeansSharedTelemetry
     assert(h2 == h1 && m2 - m1 == 1)
-    TrainingData.clearKmeansShared()
+    SharedStages.kmeans.clear()
   }
 
   test("bpeMergesShared == bpeTrain trajectory, and same-key callers " +
@@ -57,7 +146,7 @@ class SharedStagesSpec extends AnyFunSuite {
     val docs = Seq((1L, "the cat sat on the mat"),
       (2L, "the cat ate the rat"), (3L, "a cat and a mat"))
       .toDF("doc_id", "text")
-    TrainingData.clearBpeShared()
+    SharedStages.bpe.clear()
     val direct = TrainingData.bpeTrain(docs, nMerges = 3)
       .orderBy("round").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2),
@@ -73,7 +162,7 @@ class SharedStagesSpec extends AnyFunSuite {
     assert(again == shared)
     val (h1, m1) = TrainingData.bpeSharedTelemetry
     assert(h1 - h0 == 1 && m1 == m0, "second caller must be a hit")
-    TrainingData.clearBpeShared()
+    SharedStages.bpe.clear()
   }
 
   test("homRunRows shared substrate: run ids match a hand-checked " +
@@ -88,7 +177,7 @@ class SharedStagesSpec extends AnyFunSuite {
       (3L, "c0", 30L, Seq(Some(1L), Some(2L))),
       (4L, "c0", 40L, Seq(Some(0L), Some(2L))))
       .toDF("vid", "chrom", "pos", "d")
-    PopGen.clearRohShared()
+    SharedStages.roh.clear()
     val rows = PopGen.homRunRows(v)
       .select("s", "pos", "hom", "rid")
       .collect().map(r => (r.getInt(0), r.getLong(1),
@@ -109,7 +198,7 @@ class SharedStagesSpec extends AnyFunSuite {
     val (h1, m1) = PopGen.rohSharedTelemetry
     assert(h1 - h0 == 1 && m1 == m0,
       "semantically identical input must be a cache hit")
-    PopGen.clearRohShared()
+    SharedStages.roh.clear()
   }
 
   test("TokensExpr == filter(split) twin on adversarial whitespace, " +
