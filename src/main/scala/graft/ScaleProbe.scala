@@ -21,8 +21,8 @@ import graft.pipeline.TrainingData
   * which is a data change, not a scale change). Embeddings perturb one
   * coordinate per shard for the same reason.
   *
-  * Run: SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 sbt "runMain
-  * graft.ScaleProbe"; one JSON line on stdout + target/scaleprobe.json.
+  * Run: SPARK_GRAFT_SF_DIR=<sfDir> sbt "runMain graft.Bench scale"; one
+  * JSON line on stdout + target/scaleprobe.json.
   */
 object ScaleProbe {
   /** Expansion factor (SPARK_GRAFT_SCALE_FACTOR, default 10); the
@@ -46,20 +46,11 @@ object ScaleProbe {
           (x, i) => x + (col("__r") * (i % 7 - 3)).cast("float") * 0.01f)
           .as("embedding"))
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    // SPARK_GRAFT_SHUFFLE_PARTITIONS: probe at a CLUSTER-like partition
-    // count (clusters run thousands) — catches plan-size/driver-side
-    // per-partition costs that local core-count partitioning hides
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
+  /** Times every op (filtered by SPARK_GRAFT_SCALE_OPS) at base and
+    * expanded scale, prints one JSON line, writes target/scaleprobe.json;
+    * false when an op failed or came back superlinear. Inputs are split
+    * into the session's shuffle-partition count. */
+  def run(spark: SparkSession, sfDir: String): Boolean = {
     val docs1 = graft.core.Tables(spark, sfDir, "documents")
       .select("doc_id", "text")
     val docsN = expandDocs(docs1, Factor)
@@ -73,7 +64,7 @@ object ScaleProbe {
     // projection chain would fuse into a single task and the probe
     // could never show core scaling regardless of SPARK_GRAFT_CPUS
     // (round-12 fix; a real multi-file corpus scan is already parallel)
-    val probeParts = shufP.toInt
+    val probeParts = spark.conf.get("spark.sql.shuffle.partitions").toInt
     def par(df: DataFrame): DataFrame = df.repartition(probeParts)
     val Seq(d1, dN, v1, vN) =
       Seq(docs1, docsN, vecs1, vecsN).map(par)
@@ -514,16 +505,9 @@ object ScaleProbe {
         graft.operators.Multimodal.archiveMembersAll(media).toDF()
       }, Docs))
 
-    def time(fn: => DataFrame): Double = {
-      // shared stages carry work across queries (deliberate
-      // cross-query fusion); this probe measures COMPUTE linearity, so
-      // every timed run starts cold
-      graft.core.SharedStages.clearAll()
-      val t0 = System.nanoTime()
-      fn.write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
-
+    // linear = ratio ≈ Factor; the red line leaves 1.5× headroom for
+    // fixed overheads — an O(n²) op would come back at ~Factor²
+    val redLine = Factor * 1.5
     val opFilter = sys.env.get("SPARK_GRAFT_SCALE_OPS")
       .map(_.split(",").map(_.trim).toSet)
     val results = ops.filter(o => opFilter.forall(_.contains(o._1)))
@@ -533,29 +517,29 @@ object ScaleProbe {
         case Vecs => (v1, vN)
         case Vars => (vars1, varsN)
       }
-      // min-of-2: first run pays Janino/JIT compile
-      val t1 = math.min(time(fn(small)), time(fn(small)))
-      val tN = math.min(time(fn(big)), time(fn(big)))
+      // min-of-2: first run pays Janino/JIT compile. Shared stages carry
+      // work across queries (deliberate cross-query fusion); this probe
+      // measures COMPUTE linearity, so every timed run starts cold. A
+      // failed run times negative and fails the op.
+      val runs = Seq(small, small, big, big).map(d =>
+        Bench.timeNoop(s"scale:$name", fn(d), cold = true))
+      val t1 = math.min(runs(0), runs(1))
+      val tN = math.min(runs(2), runs(3))
       val ratio = tN / math.max(t1, 1e-9)
-      (name, t1, tN, ratio)
+      (name, t1, tN, ratio, runs.forall(_ >= 0) && ratio < redLine)
     }
-    // linear = ratio ≈ Factor; the red line leaves 1.5× headroom for
-    // fixed overheads — an O(n²) op would come back at ~Factor²
-    val redLine = Factor * 1.5
-    val json = results.map { case (n, t1, tN, r) =>
-      f""""$n":{"base_s":$t1%.2f,"x${Factor}_s":$tN%.2f,"ratio":$r%.2f,"ok":${r < redLine}}"""
-    }.mkString("{\"factor\":" + Factor + ",\"sf\":\"" + sfDir + "\",", ",", "}")
+    val json = results.map { case (n, t1, tN, r, ok) =>
+      f""""$n":{"base_s":$t1%.2f,"x${Factor}_s":$tN%.2f,"ratio":$r%.2f,"ok":$ok}"""
+    }.mkString(s"""{"factor":$Factor,"sf":${Bench.jsonString(sfDir)},""", ",", "}")
     println(json)
     val out = java.nio.file.Paths.get("target",
       if (Factor == 10) "scaleprobe.json" else s"scaleprobe_x$Factor.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out,
       json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    val bad = results.filter(_._4 >= redLine)
-    if (bad.nonEmpty) {
-      System.err.println(s"SUPERLINEAR: ${bad.map(_._1).mkString(",")}")
-      spark.stop(); sys.exit(1)
-    }
-    spark.stop()
+    val bad = results.filterNot(_._5)
+    if (bad.nonEmpty)
+      System.err.println(s"SUPERLINEAR or failed: ${bad.map(_._1).mkString(",")}")
+    bad.isEmpty
   }
 }

@@ -16,8 +16,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * boilerplate). Survivors re-join with `\n`. Document-level C4 rules
   * (lorem ipsum, curly braces, minimum surviving lines) stay declarative
   * in [[graft.pipeline.TrainingData.c4Clean]] — they need the RAW text,
-  * not the per-line scan. Bit-identical to
-  * [[graft.functions.textfns.c4CleanLinesHof]], the differential oracle;
+  * not the per-line scan. Bit-identical to `c4CleanLinesHof` in
+  * src/test/scala/graft/HofTwins.scala, the differential oracle;
   * the whitespace set is java-regex `\s` (space, tab, \x0B, \f, \r —
   * \n cannot occur inside a split line), NOT `Character.isWhitespace`,
   * so kernel, HOF twin, and an RE2-based SQL oracle agree on every

@@ -23,8 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * than K is one whole-document chunk; the empty document has no chunks.
   *
   * Shares the Rabin–Karp base/modulus/powers table with
-  * [[WinnowFpExpr]] — kernel, declarative twin
-  * ([[graft.functions.textfns.cdcChunksHof]]) and the DuckDB oracle must
+  * [[WinnowFpExpr]] — kernel, declarative twin (`cdcChunksHof` in
+  * src/test/scala/graft/HofTwins.scala) and the DuckDB oracle must
   * all derive weights from [[WinnowFpExpr.pows]] or they silently diverge.
   */
 case class CdcChunksExpr(child: Expression, k: Int, d: Int)

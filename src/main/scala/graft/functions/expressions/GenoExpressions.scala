@@ -20,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * bottleneck at bench scale. These expressions fuse each kernel into one
   * generated loop, the same motivation as the reference's SIMD kernels
   * (/root/reference/src/vectorization.h:304-438, src/Methods.cpp:122-801);
-  * the declarative versions remain in [[graft.functions.genetics]] as
+  * the declarative versions remain in src/test/scala/graft/HofTwins.scala as
   * `*Hof` reference implementations for differential testing.
   *
   * Null conventions (reference 0xFF/NA, src/Index.h:56): a null allele is a

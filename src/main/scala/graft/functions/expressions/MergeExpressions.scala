@@ -12,7 +12,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * genotype index remap as fused per-row loops. The declarative versions
   * (split + filter/transform + array_position chains) are interpreted
   * (HOFs are CodegenFallback) and dominated the merge bench; they remain in
-  * [[graft.operators.MergeVariants]] as `*Hof` differential oracles. */
+  * src/test/scala/graft/HofTwins.scala as `*Hof` differential oracles. */
 
 /** "REF,ALT1,…" ∪ "REF,ALT1,…": left order preserved, right-only alleles
   * appended in right order. */

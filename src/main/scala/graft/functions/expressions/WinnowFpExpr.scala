@@ -17,7 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * `textfns.fingerprint`).
   *
   * O(n) per document: the rolling-hash update plus a monotonic-deque window
-  * minimum (the declarative twin [[graft.functions.textfns.winnowFpsHof]]
+  * minimum (the declarative twin `winnowFpsHof` in
+  * src/test/scala/graft/HofTwins.scala
   * recomputes each gram in full, O(n·K), and each window minimum O(n·W) —
   * it stays as the differential oracle, and the DuckDB replay uses the same
   * Σ c·B^j mod M arithmetic, which never leaves the BIGINT range because

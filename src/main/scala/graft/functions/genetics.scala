@@ -16,8 +16,9 @@ import graft.functions.expressions.{DosageAltExpr, GenoStats, GtStringsJoined, M
   * Hot kernels are custom codegen Catalyst expressions
   * ([[graft.functions.expressions]]) — Spark's higher-order functions are
   * CodegenFallback (interpreted), which benchmarked ~10× slower at sf0.1.
-  * The `*Hof` variants keep the declarative formulations as differential
-  * oracles for the custom expressions.
+  * The `*Hof` twins in src/test/scala/graft/HofTwins.scala keep the
+  * declarative formulations as differential oracles for the custom
+  * expressions.
   */
 object genetics {
 
@@ -235,22 +236,6 @@ object genetics {
   def unpack2b(bin: Column, nSamples: Column): Column =
     Bridge.column(Unpack2bDosage(Bridge.expression(bin),
       Bridge.expression(nSamples)))
-
-  // ---- declarative reference implementations (differential oracles) ------
-
-  def nCalledAllelesHof(geno: Column): Column =
-    size(filter(flatten(geno), a => a.isNotNull))
-
-  def alleleCountHof(geno: Column, k: Column): Column =
-    size(filter(flatten(geno), a => a === k))
-
-  def dosageAltHof(geno: Column): Column =
-    transform(geno, sa =>
-      when(exists(sa, a => a.isNull), lit(null))
-        .otherwise(size(filter(sa, a => a =!= 0))))
-
-  def gtStringsHof(geno: Column, phased: Column, sep: String): Column =
-    array_join(zip_with(geno, phased, (sa, p) => gtString(sa, p)), sep)
 
   // ---- allele-string parsing ($num_allele/$ref/$alt) ----------------------
 

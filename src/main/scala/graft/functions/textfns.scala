@@ -22,17 +22,13 @@ object textfns {
         org.apache.spark.sql.graft.Bridge.expression(text)))
 
   /** Whitespace tokens, empty strings dropped — ONE generated loop
-    * (the `filter` in the declarative twin below is a CodegenFallback
+    * (the `filter` in the declarative twin `tokensHof` in
+    * src/test/scala/graft/HofTwins.scala is a CodegenFallback
     * HOF, interpreted per row on every text lane). */
   def tokens(text: Column): Column =
     org.apache.spark.sql.graft.Bridge.column(
       graft.functions.expressions.TokensExpr(
         org.apache.spark.sql.graft.Bridge.expression(text)))
-
-  /** Declarative [[tokens]] twin (differential oracle for the codegen
-    * expression). */
-  def tokensHof(text: Column): Column =
-    filter(split(text, "\\s+"), t => t =!= "")
 
   def tokenCount(text: Column): Column = size(tokens(text))
 
@@ -90,13 +86,6 @@ object textfns {
       graft.functions.expressions.MinhashSig(
         org.apache.spark.sql.graft.Bridge.expression(shingles), k))
 
-  /** Reference implementation of [[minhashSignature]] as built-in HOFs —
-    * the differential oracle for the fused expression. */
-  def minhashSignatureHof(shingles: Column, k: Int): Column =
-    transform(sequence(lit(1), lit(k)), i =>
-      array_min(transform(shingles,
-        s => md5(concat(i.cast("string"), lit(":"), s)))))
-
   /** LSH band keys for a MinHash signature: bands of `rowsPerBand`
     * consecutive components, each hashed to one bucket id. */
   def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
@@ -142,7 +131,8 @@ object textfns {
 
   /** Winnowed rolling-hash fingerprints straight from text — fused codegen
     * expression (O(n) rolling update + monotonic-deque window minimum).
-    * Bit-identical to [[winnowFpsHof]], which stays as the differential
+    * Bit-identical to `winnowFpsHof` in
+    * src/test/scala/graft/HofTwins.scala, which stays as the differential
     * oracle. */
   def winnowFps(text: Column, k: Int, w: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
@@ -150,84 +140,26 @@ object textfns {
       Bridge.expression(text), k, w))
   }
 
-  /** Declarative twin of [[winnowFps]]: every k-gram hash recomputed in
-    * full as Σ codepoint·(B^(k-1-j) mod M) mod M — each power pre-reduced,
-    * so no intermediate exceeds ~8·10^15 and any BIGINT SQL engine replays
-    * it exactly — then min per w-window, distinct, sorted. */
-  def winnowFpsHof(text: Column, k: Int, w: Int): Column = {
-    import graft.functions.expressions.WinnowFpExpr.M
-    val pows = graft.functions.expressions.WinnowFpExpr.pows(k)
-    val cps = transform(sequence(lit(1), length(text)),
-      i => ascii(text.substr(i, lit(1))))
-    val grams = size(cps) - (k - 1)
-    val hashes = transform(sequence(lit(1), grams), i =>
-      pows.zipWithIndex.map { case (p, j) =>
-        element_at(cps, i + j).cast("long") * p % M
-      }.reduce(_ + _) % M)
-    val mins = transform(sequence(lit(1), grams - (w - 1)), s =>
-      array_min(slice(hashes, s, lit(w))))
-    when(length(text) >= k + w - 1,
-        array_sort(array_distinct(mins)))
-      .otherwise(array().cast("array<long>"))
-  }
-
   /** Content-defined chunk fingerprints (md5 per chunk, document order) —
     * fused codegen kernel (O(n) rolling hash, cut where the trailing
-    * K-gram hash ≡ 0 mod D). Bit-identical to [[cdcChunksHof]], the
-    * differential oracle. */
+    * K-gram hash ≡ 0 mod D). Bit-identical to `cdcChunksHof` in
+    * src/test/scala/graft/HofTwins.scala, the differential oracle. */
   def cdcChunks(text: Column, k: Int, d: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.expressions.CdcChunksExpr(
       Bridge.expression(text), k, d))
   }
 
-  /** Declarative twin of [[cdcChunks]]: every k-gram hash recomputed in
-    * full from the shared powers table; interior cut ends = gram ends
-    * whose hash ≡ 0 mod D (a cut at the last codepoint is suppressed);
-    * chunks = md5 of the text between consecutive cuts. ASCII-parity like
-    * [[winnowFpsHof]] (`ascii` vs the kernel's codepoints). */
-  def cdcChunksHof(text: Column, k: Int, d: Int): Column = {
-    import graft.functions.expressions.WinnowFpExpr.M
-    val pows = graft.functions.expressions.WinnowFpExpr.pows(k)
-    val n = length(text)
-    val cps = transform(sequence(lit(1), n), i => ascii(text.substr(i, lit(1))))
-    val grams = n - (k - 1)
-    val hashes = transform(sequence(lit(1), grams), i =>
-      pows.zipWithIndex.map { case (p, j) =>
-        element_at(cps, i + j).cast("long") * p % M
-      }.reduce(_ + _) % M)
-    val cutEnds = transform(
-      filter(sequence(lit(1), grams), i =>
-        element_at(hashes, i) % d === 0 && (i + lit(k - 1)) < n),
-      i => i + (k - 1))
-    val starts = concat(array(lit(1)), transform(cutEnds, e => e + 1))
-    val ends = concat(cutEnds, array(n))
-    val chunks = transform(sequence(lit(1), size(starts)), j =>
-      md5(encode(text.substr(element_at(starts, j),
-        element_at(ends, j) - element_at(starts, j) + 1), "utf-8")))
-    when(n === 0, array().cast("array<string>"))
-      .when(grams < 1, array(md5(encode(text, "utf-8"))))
-      .otherwise(chunks)
-  }
-
   /** C4-style line filter fused into one codegen pass: keep lines whose
     * last non-space char is terminal punctuation, with ≥ `minWords`
     * words, not mentioning "javascript"; survivors re-join with `\n`.
-    * Bit-identical to [[c4CleanLinesHof]], the differential oracle. */
+    * Bit-identical to `c4CleanLinesHof` in
+    * src/test/scala/graft/HofTwins.scala, the differential oracle. */
   def c4CleanLines(text: Column, minWords: Int): Column = {
     import org.apache.spark.sql.graft.Bridge
     Bridge.column(graft.functions.expressions.C4CleanExpr(
       Bridge.expression(text), minWords))
   }
-
-  /** Declarative twin of [[c4CleanLines]] (interpreted HOF path). */
-  def c4CleanLinesHof(text: Column, minWords: Int): Column =
-    array_join(
-      filter(split(text, "\n"), l =>
-        l.rlike("[.!?\"]\\s*$") &&
-          size(filter(split(l, "\\s+"), w => w =!= "")) >= minWords &&
-          !contains(lower(l), lit("javascript"))),
-      "\n")
 
   /** Hamming distance between two small non-negative long sketches (e.g.
     * [[simhash16]] values) via bit_count(xor). */

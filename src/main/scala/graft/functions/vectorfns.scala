@@ -26,22 +26,11 @@ object vectorfns {
   def dotLong(a: Column, b: Column): Column =
     Bridge.column(DotProductLong(Bridge.expression(a), Bridge.expression(b)))
 
-  /** Reference implementation of [[dotLong]] as built-in higher-order
-    * functions — kept for differential testing of the custom expression. */
-  def dotLongHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
-
   /** Integer squared-L2 distance — fused codegen loop
     * ([[graft.functions.expressions.L2DistLong]]). */
   def l2Long(a: Column, b: Column): Column =
     Bridge.column(graft.functions.expressions.L2DistLong(
       Bridge.expression(a), Bridge.expression(b)))
-
-  /** Reference implementation of [[l2Long]] as built-in higher-order
-    * functions — the differential-test twin. */
-  def l2LongHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
 
   /** PQ encode: per-subspace argmin codeword indices (first minimum) —
     * fused codegen loop ([[graft.functions.expressions.PqEncode]]). */
@@ -49,59 +38,17 @@ object vectorfns {
     Bridge.column(graft.functions.expressions.PqEncode(
       Bridge.expression(qv), Bridge.expression(cbs), m, dsub))
 
-  /** Reference implementation of [[pqEncode]] as built-in higher-order
-    * functions — the differential-test twin (same first-min tie rule via
-    * array_position-of-min). */
-  def pqEncodeHof(qv: Column, cbs: Column, m: Int, dsub: Int): Column =
-    transform(sequence(lit(0), lit(m - 1)), sub => {
-      val dl = transform(sequence(lit(0), size(cbs) - 1), k =>
-        aggregate(sequence(lit(1), lit(dsub)), lit(0L), (acc, i) => {
-          val idx = (sub * dsub + i).cast("int")
-          val x = coalesce(element_at(qv, idx), lit(0L))
-          val y = coalesce(element_at(element_at(cbs, (k + 1).cast("int")),
-            idx), lit(0L))
-          acc + (x - y) * (x - y)
-        }))
-      (array_position(dl, array_min(dl)) - 1).cast("int")
-    })
-
   /** ADC lookup-sum Σ_sub dtab[sub][codes[sub]] — fused codegen loop
     * ([[graft.functions.expressions.PqAdcLookup]]). */
   def pqAdc(dtab: Column, codes: Column): Column =
     Bridge.column(graft.functions.expressions.PqAdcLookup(
       Bridge.expression(dtab), Bridge.expression(codes)))
 
-  /** Reference implementation of [[pqAdc]] as built-in higher-order
-    * functions — the differential-test twin. */
-  def pqAdcHof(dtab: Column, codes: Column): Column =
-    aggregate(sequence(lit(1), size(codes)), lit(0L), (acc, m) =>
-      acc + coalesce(element_at(element_at(dtab, m.cast("int")),
-        (element_at(codes, m.cast("int")) + 1).cast("int")), lit(0L)))
-
   /** One-pass pairwise-complete LD sums [n, sx, sy, sxy, sxx, syy] —
     * fused codegen loop ([[graft.functions.expressions.LdPairStats]]). */
   def ldPairStats(a: Column, b: Column): Column =
     Bridge.column(graft.functions.expressions.LdPairStats(
       Bridge.expression(a), Bridge.expression(b)))
-
-  /** Reference implementation of [[ldPairStats]] as built-in higher-order
-    * functions — the differential-test twin. */
-  def ldPairStatsHof(a: Column, b: Column): Column = {
-    val obs = filter(zip_with(a, b, (x, y) =>
-        when(x.isNotNull && y.isNotNull,
-          struct(x.as("x"), y.as("y")))),
-      p => p.isNotNull)
-    array(
-      size(obs).cast("long"),
-      aggregate(obs, lit(0L), (acc, p) => acc + p.getField("x")),
-      aggregate(obs, lit(0L), (acc, p) => acc + p.getField("y")),
-      aggregate(obs, lit(0L),
-        (acc, p) => acc + p.getField("x") * p.getField("y")),
-      aggregate(obs, lit(0L),
-        (acc, p) => acc + p.getField("x") * p.getField("x")),
-      aggregate(obs, lit(0L),
-        (acc, p) => acc + p.getField("y") * p.getField("y")))
-  }
 
   /** Cosine similarity from exact integer dot/norms; null when either norm
     * is 0 (the quantized zero vector has no direction). */
@@ -124,28 +71,6 @@ object vectorfns {
   def srpBucket(qv: Column, bits: Int, table: Int = 0): Column =
     Bridge.column(graft.functions.expressions.SrpBucket(
       Bridge.expression(qv), bits, table))
-
-  /** Reference implementation of [[srpBucket]] as built-in higher-order
-    * functions — kept as the differential oracle for the expression. */
-  def srpBucketHof(qv: Column, bits: Int, table: Int = 0): Column = {
-    require(bits > 0 && bits < 31, "bits must be in [1,30]")
-    require(table >= 0 && table <= 128, "table must be in [0,128]")
-    (0 until bits).map { j =>
-      val key = table * 131L + j + 1
-      val proj = aggregate(
-        transform(sequence(lit(1), size(qv)), i => {
-          val h1 = (lit(key * 131071L) + i) * lit(2654435761L) %
-            lit(2147483647L)
-          val h1x = h1.bitwiseXOR(shiftright(h1, 15))
-          val h2 = h1x * lit(40503L) % lit(2147483647L)
-          val h2x = h2.bitwiseXOR(shiftright(h2, 13))
-          element_at(qv, i) *
-            when(h2x.bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))
-        }),
-        lit(0L), (acc, x) => acc + x)
-      when(proj >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ + _)
-  }
 
   /** DuckDB SQL fragment computing the identical [[srpBucket]] over a list
     * column named `expr` — kept next to the Scala so the two stay in sync. */

@@ -22,14 +22,16 @@ object MergeVariants {
   /** Union of two "REF,ALT1,…" strings: left order preserved, right-only
     * alleles appended in right order. Assumes equal REF (the reference
     * requires it — merge keys include the allele string otherwise).
-    * Codegen expression; see [[alleleUnionHof]] for the declarative form. */
+    * Codegen expression; the declarative form is `alleleUnionHof` in
+    * src/test/scala/graft/HofTwins.scala. */
   def alleleUnion(a: Column, b: Column): Column =
     Bridge.column(AlleleUnionExpr(Bridge.expression(a), Bridge.expression(b)))
 
   /** Re-code a genotype cube (ARRAY<ARRAY<allele idx>>) from `oldAlleles`
     * ("REF,ALT…" of its source file) into `newAlleles` (merged). Null
     * allele (missing call) stays null; 0-based indices. Codegen expression;
-    * see [[remapGenoHof]]. */
+    * the declarative form is `remapGenoHof` in
+    * src/test/scala/graft/HofTwins.scala. */
   def remapGeno(geno: Column, oldAlleles: Column, newAlleles: Column): Column =
     Bridge.column(RemapGenoExpr(Bridge.expression(geno),
       Bridge.expression(oldAlleles), Bridge.expression(newAlleles)))
@@ -129,22 +131,5 @@ object MergeVariants {
       coalesce(slot(i).getField("phased"),
         noPhase(samplesPerFile(i)))): _*)
     grouped.select(col("vid"), geno.as("geno"), phased.as("phased"))
-  }
-
-  // ---- declarative reference implementations (differential oracles) ------
-
-  def alleleUnionHof(a: Column, b: Column): Column = {
-    val as = split(a, ",")
-    val bs = split(b, ",")
-    array_join(concat(as, filter(bs, x => !array_contains(as, x))), ",")
-  }
-
-  def remapGenoHof(geno: Column, oldAlleles: Column, newAlleles: Column): Column = {
-    val os = split(oldAlleles, ",")
-    val ns = split(newAlleles, ",")
-    transform(geno, sa =>
-      transform(sa, x =>
-        (array_position(ns, element_at(os, (x + 1).cast("int"))) - 1)
-          .cast("long")))
   }
 }

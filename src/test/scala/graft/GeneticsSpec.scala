@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.HofTwins._
 import graft.functions.genetics._
 
 /** Hand-computed golden values for the genetics kernels, mirroring the

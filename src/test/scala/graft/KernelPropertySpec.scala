@@ -7,6 +7,7 @@ import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.genetics._
+import graft.HofTwins._
 import graft.functions.textfns._
 
 /** Property-based differential tests: random genotype cubes and documents
@@ -97,7 +98,7 @@ class KernelPropertySpec extends AnyFunSuite {
 
   test("round-4 kernels agree with HOF oracles on random inputs") {
     import spark.implicits._
-    import graft.functions.vectorfns.{srpBucket, srpBucketHof}
+    import graft.functions.vectorfns.srpBucket
     // sample_cells: arbitrary ragged cubes + a per-sample field column
     for (round <- 1 to 4) {
       val cubes = (1 to 40).map(i =>

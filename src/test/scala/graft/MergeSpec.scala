@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.HofTwins._
 import graft.operators.MergeVariants._
 
 /** Golden + differential tests for the merge kernels (allele-set union and

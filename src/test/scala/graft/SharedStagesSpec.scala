@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.SharedStages
+import graft.HofTwins._
 import graft.pipeline.TrainingData
 
 /** Shared-stage specs: the [[SharedStages]] registry itself (names,

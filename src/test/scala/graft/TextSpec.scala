@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.HofTwins._
 import graft.functions.textfns._
 
 /** Differential + golden tests for the text kernels: the codegen shingle
