@@ -61,17 +61,27 @@ final case class SeqVarData(variants: DataFrame,
     copy(variants = kept.drop("p_chrom", "p_pos"))
   }
 
-  /** seqSetFilterCond: by computed per-variant aggregates. */
+  /** seqSetFilterCond: by computed per-variant aggregates; a variant with
+    * no called allele never passes. The stats are bound once through a
+    * one-row `explode_outer`: FilterExec has no subexpression
+    * elimination, and the optimizer inlines a projected stats column into
+    * the predicate, which left 8 kernel evaluations per row. Filters on
+    * the variant columns still push below the generator into the scan.
+    * `try_divide` keeps ANSI mode from raising DIVIDE_BY_ZERO on such a
+    * variant: Spark does not promise to evaluate `called > 0` first, and
+    * the unguarded division raised on an in-memory frame. */
   def setFilterCond(minMaf: Double = 0.0, maxMissing: Double = 1.0): SeqVarData = {
-    val st = genoStats(col("geno"), lit(0))
+    val st = col("__st")
     val total = element_at(st, 1)
     val called = element_at(st, 2)
-    val ac = element_at(st, 3)
-    val af = ac.cast("double") / called
+    val af = try_divide(element_at(st, 3), called)
     val maf = least(af, lit(1.0) - af)
-    val miss = (total - called).cast("double") / total
-    copy(variants = variants.filter(called > 0 && maf >= minMaf &&
-      miss <= maxMissing))
+    val miss = try_divide(total - called, total)
+    copy(variants = variants
+      .select(col("*"), explode_outer(array(genoStats(col("geno"), lit(0))))
+        .as("__st"))
+      .filter(called > 0 && maf >= minMaf && miss <= maxMissing)
+      .drop("__st"))
   }
 
   /** seqSetFilter(sample.sel=): restrict the sample axis to the given

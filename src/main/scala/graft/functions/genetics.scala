@@ -93,19 +93,24 @@ object genetics {
     element_at(genoStats(geno, k), 3)
 
   /** Frequency of allele `k` among called alleles; null when nothing called
-    * (reference `seqAlleleFreq(ref.allele=k)`, `R/Methods.R:905-1021`). */
+    * (reference `seqAlleleFreq(ref.allele=k)`, `R/Methods.R:905-1021`).
+    * `try_divide` yields the null on a zero divisor and, unlike a
+    * `when(called > 0, …)` guard, uses the stats unconditionally, so
+    * whole-stage codegen shares one [[genoStats]] evaluation per row (a
+    * CASE branch gets its own copy). */
   def alleleFreq(geno: Column, k: Column): Column = {
     val st = genoStats(geno, k)
-    val called = element_at(st, 2)
-    when(called > 0, element_at(st, 3).cast("double") / called)
+    try_divide(element_at(st, 3), element_at(st, 2))
   }
 
-  /** Fraction of missing allele calls over ploidy×samples (reference
-    * `seqMissing(per.variant=TRUE)`, `src/Methods.cpp:122-293`). */
+  /** Fraction of missing allele calls over ploidy×samples; null for an
+    * empty row (reference `seqMissing(per.variant=TRUE)`,
+    * `src/Methods.cpp:122-293`). One kernel evaluation, as in
+    * [[alleleFreq]]. */
   def missingRate(geno: Column): Column = {
     val st = genoStats(geno, lit(0))
     val total = element_at(st, 1)
-    when(total > 0, (total - element_at(st, 2)).cast("double") / total)
+    try_divide(total - element_at(st, 2), total)
   }
 
   /** Per-sample missing-allele counts (ARRAY<INT>; -1 = null sample array).

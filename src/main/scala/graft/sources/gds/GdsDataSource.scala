@@ -22,14 +22,13 @@ import GdsCore._
   * info_*, geno, phased, fmt_*`) so a SeqArray user's `.gds` opens
   * directly into the engine's query surface.
   *
-  * Scale design: one input partition per file — .gds cohorts ship as
-  * per-chromosome shards, which is the reference's own parallelism unit
-  * — and REAL column pruning: the scan decodes only the CoreArray nodes
-  * backing the required columns (a position/chrom query never inflates
-  * the genotype bit-planes; `.explain` shows the pruned ReadSchema). The
-  * `*_ra` coders' 128 KiB random-access chunks support finer
-  * variant-range splits for fixed-stride nodes; that refinement is
-  * documented in COVERAGE.md as the scale path for single-file use.
+  * Scale design: each file splits into variant-range input partitions
+  * (see [[GdsScan]]), and a directory of per-chromosome shards scans
+  * every shard — and REAL column pruning: the scan decodes only the
+  * CoreArray nodes backing the required columns (a position/chrom query
+  * never inflates the genotype bit-planes; `.explain` shows the pruned
+  * ReadSchema). The `*_ra` coders' 128 KiB random-access chunks let a
+  * range decode only the chunks that cover it.
   */
 class GdsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "gds"
@@ -38,10 +37,9 @@ class GdsDataSource extends TableProvider with DataSourceRegister {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     GdsSchema.forPath(GdsSchema.paths(options).head, packed(options))
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: java.util.Map[String, String]): Table = {
-    val opts = new CaseInsensitiveStringMap(properties)
-    new GdsTable(GdsSchema.paths(opts), packed(opts))
-  }
+      properties: java.util.Map[String, String]): Table =
+    new GdsTable(GdsSchema.paths(new CaseInsensitiveStringMap(properties)),
+      schema)
 }
 
 object GdsSchema {
@@ -113,6 +111,25 @@ object GdsSchema {
   def variantCount(root: Node): Int =
     (if (isSnpTree(root)) root("snp.id") else root("variant.id")).dims.head
 
+  /** SNP-GDS genotype layout: snp-major is fixed-stride per snp, so a
+    * variant range decodes only its slice; sample-major strides across
+    * the whole matrix, so every range decodes all of it. */
+  def snpMajor(root: Node): Boolean = {
+    val g = root("genotype")
+    if (g.attrs.contains("snp.order")) true
+    else if (g.attrs.contains("sample.order")) false
+    else g.dims.headOption.contains(root("snp.id").dims.head)
+  }
+
+  /** Genotype calls per variant (samples × ploidy) of a genotype node that
+    * decodes by variant range; 0 when there is none (a sites-only file,
+    * or a sample-major SNP-GDS, where splitting only repeats the decode). */
+  def rangedCallsPerVariant(root: Node): Long =
+    if (isSnpTree(root)) {
+      if (snpMajor(root)) root("sample.id").dims.head * 2L else 0L
+    } else root.child("genotype").flatMap(_.child("data"))
+      .map(d => d.dims(1).toLong * d.dims(2)).getOrElse(0L)
+
   /** Input byte (two diploid single-plane calls, 2 bits/allele) → two
     * engine REF-dosage codes packed in the low nibble. Allele code 3 =
     * missing (np=1), any-missing folds the call to 3. */
@@ -162,16 +179,11 @@ object GdsSchema {
       val g = root("genotype")
       val nSnp = root("snp.id").dims.head
       val nSample = root("sample.id").dims.head
-      val snpMajor =
-        if (g.attrs.contains("snp.order")) true
-        else if (g.attrs.contains("sample.order")) false
-        else g.dims.headOption.contains(nSnp)
-      // snp-major is fixed-stride per snp → ranged decode; sample-major
-      // strides across the whole matrix → whole decode
+      val byVariant = snpMajor(root)
       val (bytes, base) =
-        if (snpMajor) bit2Range(f, g, v0.toLong * nSample, v1.toLong * nSample)
+        if (byVariant) bit2Range(f, g, v0.toLong * nSample, v1.toLong * nSample)
         else (bits(f, g), 0L)
-      (bytes, base, nSnp, nSample, snpMajor)
+      (bytes, base, nSnp, nSample, byVariant)
     }
     // shared immutable pair cells: the four codes map to constant pairs
     val homAlt = Array[Any](java.lang.Long.valueOf(1L), java.lang.Long.valueOf(1L))
@@ -208,33 +220,30 @@ object GdsSchema {
           val g = root("genotype")
           val nSnp = root("snp.id").dims.head
           val nSample = root("sample.id").dims.head
-          val snpMajor =
-            if (g.attrs.contains("snp.order")) true
-            else if (g.attrs.contains("sample.order")) false
-            else g.dims.headOption.contains(nSnp)
+          val byVariant = snpMajor(root)
           val (vals, base) =
-            if (snpMajor)
+            if (byVariant)
               (floatsRange(f, g, v0.toLong * nSample,
                 (v1 - v0) * nSample), v0.toLong * nSample)
             else (floats(f, g), 0L)
           val (outN, smap) = selOf(nSample)
           (v: Int) => new GenericArrayData(Array.tabulate[Any](outN) { si =>
             val s = smap(si)
-            val idx = if (snpMajor) v.toLong * nSample + s - base
+            val idx = if (byVariant) v.toLong * nSample + s - base
               else s.toLong * nSnp + v
             val x = vals(idx.toInt)
             if (x.isNaN) null else java.lang.Float.valueOf(x)
           })
         case "pg" =>
           // SNP-GDS codes ARE engine REF-dosage codes — repack verbatim
-          val (bytes, base, nSnp, nSample, snpMajor) = geno
+          val (bytes, base, nSnp, nSample, byVariant) = geno
           val (outN, smap) = selOf(nSample)
           (v: Int) => {
             val out = new Array[Byte]((outN + 3) / 4)
             var si = 0
             while (si < outN) {
               val s = smap(si)
-              val idx = if (snpMajor) v.toLong * nSample + s - base
+              val idx = if (byVariant) v.toLong * nSample + s - base
                 else s.toLong * nSnp + v
               out(si >> 2) = (out(si >> 2) |
                 (bit2(bytes, idx) << ((si & 3) << 1))).toByte
@@ -243,11 +252,11 @@ object GdsSchema {
             out
           }
         case "geno" =>
-          val (bytes, base, nSnp, nSample, snpMajor) = geno
+          val (bytes, base, nSnp, nSample, byVariant) = geno
           val (outN, smap) = selOf(nSample)
           (v: Int) => new GenericArrayData(Array.tabulate[Any](outN) { si =>
             val s = smap(si)
-            val idx = if (snpMajor) v.toLong * nSample + s - base
+            val idx = if (byVariant) v.toLong * nSample + s - base
               else s.toLong * nSnp + v
             new GenericArrayData((bit2(bytes, idx): @annotation.switch) match {
               case 0 => homAlt
@@ -654,14 +663,16 @@ object GdsSchema {
   }
 }
 
-class GdsTable(paths: Seq[String], packed: Boolean = false)
+/** `tableSchema` is the schema [[GdsDataSource.inferSchema]] read from
+  * the first path. */
+class GdsTable(paths: Seq[String], tableSchema: StructType)
     extends Table with SupportsRead {
   override def name(): String = s"gds(${paths.mkString(",")})"
-  override def schema(): StructType = GdsSchema.forPath(paths.head, packed)
+  override def schema(): StructType = tableSchema
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new GdsScanBuilder(paths, schema(), options)
+    new GdsScanBuilder(paths, tableSchema, options)
 }
 
 class GdsScanBuilder(paths: Seq[String], full: StructType,
@@ -707,7 +718,18 @@ class GdsScanBuilder(paths: Seq[String], full: StructType,
   * variant ranges — fixed-stride nodes (genotype/phase bit-planes,
   * position, dosage matrices) decode only their slice via the XZ_RA
   * 128 KiB random-access chunks, so a single big shard no longer pins
-  * one core. `splitVariants` overrides the auto range size. */
+  * one core.
+  *
+  * A file splits into `defaultParallelism` ranges, but no range is
+  * shorter than a floor measured in genotype calls: min(8192,
+  * ⌈131,072 / calls per variant⌉) variants, calls = samples × ploidy
+  * from the genotype node's dims. 131,072 = 8,192 variants × 8 samples
+  * × 2 alleles, so a file of up to 8 diploid samples (and a file
+  * without a ranged genotype node) keeps the plain 8,192-variant floor,
+  * and no file splits more coarsely than under it; at cohort width
+  * (2,504 samples) the floor is 27 variants and a scan of a few thousand
+  * variants uses every core instead of one task. `splitVariants`
+  * overrides the range size. */
 class GdsScan(paths: Seq[String], required: StructType,
     splitVariants: Option[Int],
     filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty,
@@ -774,25 +796,30 @@ class GdsScan(paths: Seq[String], required: StructType,
       .sparkContext.defaultParallelism, 1)
     paths.flatMap { p =>
       val f = new GdsFile(p)
-      val (n, keep) =
-        try (GdsSchema.variantCount(f.root), keepFn(f)) finally f.close()
+      val (n, calls, keep) =
+        try (GdsSchema.variantCount(f.root),
+          GdsSchema.rangedCallsPerVariant(f.root), keepFn(f))
+        finally f.close()
+      val floor =
+        if (calls == 0) 8192
+        else math.min(8192L, (131072L + calls - 1) / calls).toInt
       val step = splitVariants.getOrElse(
-        math.max(8192, (n + par - 1) / par))
+        math.max(floor, (n + par - 1) / par))
       val ranges = keep match {
-        case None => Seq((0, n))
+        case None => (0 until n by step).map(v0 => (v0, math.min(v0 + step, n)))
         case Some(k) =>
-          // contiguous matching intervals, gaps below step/4 bridged so
-          // scattered hits don't explode the partition count
+          // a range opens at a hit and ends after the last hit within
+          // `step` variants: range starts lie at least `step` apart, so
+          // scattered hits never plan more partitions than the full scan
           val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
           var v = 0
           while (v < n) {
             if (k(v)) {
               val start = v
               var last = v
-              var gap = 0
               v += 1
-              while (v < n && gap <= step / 4) {
-                if (k(v)) { last = v; gap = 0 } else gap += 1
+              while (v < n && v - start < step) {
+                if (k(v)) last = v
                 v += 1
               }
               out += ((start, last + 1))
@@ -800,10 +827,7 @@ class GdsScan(paths: Seq[String], required: StructType,
           }
           out.toSeq
       }
-      ranges.flatMap { case (r0, r1) =>
-        (r0 until r1 by step).map(v0 =>
-          GdsInputPartition(p, v0, math.min(v0 + step, r1)): InputPartition)
-      }
+      ranges.map { case (v0, v1) => GdsInputPartition(p, v0, v1): InputPartition }
     }.toArray
   }
   override def createReaderFactory(): PartitionReaderFactory =
