@@ -22,13 +22,13 @@ import GdsCore._
   * info_*, geno, phased, fmt_*`) so a SeqArray user's `.gds` opens
   * directly into the engine's query surface.
   *
-  * Scale design: each file splits into variant-range input partitions
-  * (see [[GdsScan]]), and a directory of per-chromosome shards scans
-  * every shard — and REAL column pruning: the scan decodes only the
-  * CoreArray nodes backing the required columns (a position/chrom query
-  * never inflates the genotype bit-planes; `.explain` shows the pruned
-  * ReadSchema). The `*_ra` coders' 128 KiB random-access chunks let a
-  * range decode only the chunks that cover it.
+  * Scale design: variant-range input partitions within each file (see
+  * [[GdsScan]]; a directory of per-chromosome shards scans every shard)
+  * and REAL column pruning: the scan decodes only the CoreArray nodes
+  * backing the required columns (a position/chrom query never inflates
+  * the genotype bit-planes; `.explain` shows the pruned ReadSchema). The
+  * `*_ra` coders' 128 KiB random-access chunks let a range decode only
+  * the chunks that cover it.
   */
 class GdsDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "gds"
