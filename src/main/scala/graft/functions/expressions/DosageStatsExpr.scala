@@ -18,7 +18,8 @@ import org.apache.spark.sql.types._
   * "unrolled-reduce class"; same failure mode the S²-literal pair fans
   * had before `graft.functions.pairs`). Each kernel is O(1) plan nodes
   * at ANY sample count: the weights are a single `Literal(ArrayData)`
-  * child and the per-sample loop lives in generated code, exactly like
+  * child and the per-sample loop is one Scala kernel on the expression's
+  * companion, called once per row by generated code, exactly like
   * the reference's per-variant C kernels (SeqArray src/Methods.cpp:
   * 122-801 iterate samples inside one native loop; the cohort width
   * never appears in the call graph).
@@ -55,9 +56,23 @@ case class DosageWeightedStats(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dosage_weighted_stats"
 
-  override protected def nullSafeEval(dAny: Any, wAny: Any): Any = {
-    val d = dAny.asInstanceOf[ArrayData]
-    val w = wAny.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(d: Any, w: Any): Any =
+    DosageWeightedStats.eval(d.asInstanceOf[ArrayData],
+      w.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (d, w) =>
+      s"""${ev.value} = graft.functions.expressions.DosageWeightedStats$$
+         |  .MODULE$$.eval($d, $w);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      l: Expression, r: Expression): DosageWeightedStats =
+    copy(left = l, right = r)
+}
+
+object DosageWeightedStats {
+  def eval(d: ArrayData, w: ArrayData): ArrayData = {
     var n = 0L; var sx = 0L; var sxx = 0L
     var sw = 0L; var swx = 0L; var sww = 0L
     val m = math.min(d.numElements(), w.numElements())
@@ -72,32 +87,6 @@ case class DosageWeightedStats(left: Expression, right: Expression)
     }
     UnsafeArrayData.fromPrimitiveArray(Array(n, sx, sxx, sw, swx, sww))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, w) => {
-      val i = ctx.freshName("i"); val m = ctx.freshName("m")
-      val x = ctx.freshName("x"); val wi = ctx.freshName("wi")
-      val n = ctx.freshName("n"); val sx = ctx.freshName("sx")
-      val sxx = ctx.freshName("sxx"); val sw = ctx.freshName("sw")
-      val swx = ctx.freshName("swx"); val sww = ctx.freshName("sww")
-      s"""
-         |long $n = 0L, $sx = 0L, $sxx = 0L, $sw = 0L, $swx = 0L, $sww = 0L;
-         |int $m = Math.min($d.numElements(), $w.numElements());
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($d.isNullAt($i) || $w.isNullAt($i)) continue;
-         |  long $x = $d.getLong($i); long $wi = $w.getLong($i);
-         |  $n++; $sx += $x; $sxx += $x * $x;
-         |  $sw += $wi; $swx += $wi * $x; $sww += $wi * $wi;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(
-         |    new long[] {$n, $sx, $sxx, $sw, $swx, $sww});
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): DosageWeightedStats =
-    copy(left = l, right = r)
 }
 
 /** Two-weight sufficient statistics `[n, sx, sxx, s1, sx1, s11, s2,
@@ -118,10 +107,23 @@ case class DosageTwoWeightStats(first: Expression, second: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dosage_two_weight_stats"
 
-  override protected def nullSafeEval(dAny: Any, aAny: Any, bAny: Any): Any = {
-    val d = dAny.asInstanceOf[ArrayData]
-    val w1 = aAny.asInstanceOf[ArrayData]
-    val w2 = bAny.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(d: Any, w1: Any, w2: Any): Any =
+    DosageTwoWeightStats.eval(d.asInstanceOf[ArrayData],
+      w1.asInstanceOf[ArrayData], w2.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (d, w1, w2) =>
+      s"""${ev.value} = graft.functions.expressions.DosageTwoWeightStats$$
+         |  .MODULE$$.eval($d, $w1, $w2);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(f: Expression,
+      s: Expression, t: Expression): DosageTwoWeightStats =
+    copy(first = f, second = s, third = t)
+}
+
+object DosageTwoWeightStats {
+  def eval(d: ArrayData, w1: ArrayData, w2: ArrayData): ArrayData = {
     var n = 0L; var sx = 0L; var sxx = 0L
     var s1 = 0L; var sx1 = 0L; var s11 = 0L
     var s2 = 0L; var sx2 = 0L; var s22 = 0L; var s12 = 0L
@@ -140,35 +142,6 @@ case class DosageTwoWeightStats(first: Expression, second: Expression,
     UnsafeArrayData.fromPrimitiveArray(
       Array(n, sx, sxx, s1, sx1, s11, s2, sx2, s22, s12))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, w1, w2) => {
-      val i = ctx.freshName("i"); val m = ctx.freshName("m")
-      val x = ctx.freshName("x"); val a = ctx.freshName("a")
-      val b = ctx.freshName("b")
-      val acc = ctx.freshName("acc")
-      s"""
-         |long[] $acc = new long[10];
-         |int $m = Math.min($d.numElements(),
-         |  Math.min($w1.numElements(), $w2.numElements()));
-         |for (int $i = 0; $i < $m; $i++) {
-         |  if ($d.isNullAt($i) || $w1.isNullAt($i) || $w2.isNullAt($i))
-         |    continue;
-         |  long $x = $d.getLong($i);
-         |  long $a = $w1.getLong($i); long $b = $w2.getLong($i);
-         |  $acc[0]++; $acc[1] += $x; $acc[2] += $x * $x;
-         |  $acc[3] += $a; $acc[4] += $a * $x; $acc[5] += $a * $a;
-         |  $acc[6] += $b; $acc[7] += $b * $x; $acc[8] += $b * $b;
-         |  $acc[9] += $a * $b;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray($acc);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(f: Expression,
-      s: Expression, t: Expression): DosageTwoWeightStats =
-    copy(first = f, second = s, third = t)
 }
 
 /** Per-mask weighted sums `out[m] = Σ_s masks[m][s] · coalesce(d[s], 0)`

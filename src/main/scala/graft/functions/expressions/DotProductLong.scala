@@ -10,11 +10,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * The declarative equivalent — `aggregate(zip_with(a, b, _ * _), 0L, _ + _)`
   * — allocates an intermediate array and walks two lambda layers per row;
-  * this expression is a single fused loop inside whole-stage codegen, the
-  * hot kernel of the brute-force and LSH similarity-search paths (builder
-  * brief: ANN over embeddings; reference analog: the SIMD dosage/count
-  * kernels, /root/reference/src/vectorization.h:304-438, which SeqArray
-  * hand-vectorizes for the same reason).
+  * this expression is a single fused loop that whole-stage codegen calls
+  * once per row, the hot kernel of the brute-force and LSH
+  * similarity-search paths (ANN over embeddings; reference analog: the
+  * SIMD dosage/count kernels, the reference's
+  * src/vectorization.h:304-438, which SeqArray hand-vectorizes for the
+  * same reason).
   *
   * Null semantics: null array → null result; null *elements* are treated as
   * 0 (skipped), matching how the quantized-embedding pipeline produces
@@ -39,9 +40,22 @@ case class DotProductLong(left: Expression, right: Expression)
 
   override def prettyName: String = "dot_i64"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    DotProductLong.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.expressions.DotProductLong$$.MODULE$$
+         |  .eval($a, $b);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): DotProductLong =
+    copy(left = newLeft, right = newRight)
+}
+
+object DotProductLong {
+  def eval(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -51,25 +65,4 @@ case class DotProductLong(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $s += $a.getLong($i) * $b.getLong($i);
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DotProductLong =
-    copy(left = newLeft, right = newRight)
 }

@@ -17,11 +17,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * per-variant aggregate. Spark's higher-order functions (transform /
   * filter / aggregate) are CodegenFallback — interpreted per row with
   * per-lambda variable binding — which made the declarative kernels the
-  * bottleneck at bench scale. These expressions fuse each kernel into one
-  * generated loop, the same motivation as the reference's SIMD kernels
-  * (/root/reference/src/vectorization.h:304-438, src/Methods.cpp:122-801);
-  * the declarative versions remain in src/test/scala/graft/HofTwins.scala as
-  * `*Hof` reference implementations for differential testing.
+  * bottleneck at bench scale. Each expression here keeps its kernel as one
+  * Scala loop on its companion object, called by both the interpreted
+  * `eval` and the generated code, the same motivation as the reference's
+  * SIMD kernels (src/vectorization.h:304-438,
+  * src/Methods.cpp:122-801); the declarative versions remain in
+  * src/test/scala/graft/HofTwins.scala as `*Hof` reference implementations
+  * for differential testing.
   *
   * Null conventions (reference 0xFF/NA, src/Index.h:56): a null allele is a
   * missing call; a null inner array counts as one missing call contributing
@@ -56,9 +58,23 @@ case class GenoStats(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "geno_stats"
 
-  override protected def nullSafeEval(g: Any, kAny: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
-    val k = kAny.asInstanceOf[Number].longValue()
+  override protected def nullSafeEval(g: Any, k: Any): Any =
+    GenoStats.eval(g.asInstanceOf[ArrayData],
+      k.asInstanceOf[Number].longValue())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (g, k) =>
+      s"""${ev.value} = graft.functions.expressions.GenoStats$$.MODULE$$
+         |  .eval($g, (long) $k);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): GenoStats =
+    copy(left = newLeft, right = newRight)
+}
+
+object GenoStats {
+  def eval(geno: ArrayData, k: Long): ArrayData = {
     var total = 0L; var called = 0L; var ack = 0L
     var missCalls = 0L; var missAlleles = 0L
     var i = 0
@@ -83,35 +99,6 @@ case class GenoStats(left: Expression, right: Expression)
     UnsafeArrayData.fromPrimitiveArray(
       Array(total, called, ack, missCalls, missAlleles))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, k) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val sa = ctx.freshName("sa"); val anyNull = ctx.freshName("anyNull")
-      val t = ctx.freshName("t"); val c = ctx.freshName("c")
-      val a = ctx.freshName("a"); val mc = ctx.freshName("mc")
-      val ma = ctx.freshName("ma")
-      s"""
-         |long $t = 0L, $c = 0L, $a = 0L, $mc = 0L, $ma = 0L;
-         |for (int $i = 0; $i < $g.numElements(); $i++) {
-         |  if ($g.isNullAt($i)) { $mc++; continue; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  boolean $anyNull = false;
-         |  for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |    $t++;
-         |    if ($sa.isNullAt($j)) { $anyNull = true; $ma++; }
-         |    else { $c++; if ($sa.getLong($j) == (long) $k) $a++; }
-         |  }
-         |  if ($anyNull) $mc++;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(new long[]{$t, $c, $a, $mc, $ma});
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): GenoStats =
-    copy(left = newLeft, right = newRight)
 }
 
 /** Per-sample missing-allele counts: ARRAY<INT>, one entry per sample
@@ -129,8 +116,21 @@ case class MissAllelesPerSample(child: Expression)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "miss_per_sample"
 
-  override protected def nullSafeEval(g: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(g: Any): Any =
+    MissAllelesPerSample.eval(g.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, g =>
+      s"""${ev.value} = graft.functions.expressions.MissAllelesPerSample$$
+         |  .MODULE$$.eval($g);
+       """.stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): MissAllelesPerSample =
+    copy(child = c)
+}
+
+object MissAllelesPerSample {
+  def eval(geno: ArrayData): ArrayData = {
     val out = new Array[Int](geno.numElements())
     var i = 0
     while (i < out.length) {
@@ -145,30 +145,6 @@ case class MissAllelesPerSample(child: Expression)
     }
     UnsafeArrayData.fromPrimitiveArray(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val sa = ctx.freshName("sa"); val c = ctx.freshName("c")
-      val out = ctx.freshName("out")
-      s"""
-         |int[] $out = new int[$g.numElements()];
-         |for (int $i = 0; $i < $out.length; $i++) {
-         |  if ($g.isNullAt($i)) { $out[$i] = -1; continue; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  int $c = 0;
-         |  for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |    if ($sa.isNullAt($j)) $c++;
-         |  }
-         |  $out[$i] = $c;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): MissAllelesPerSample =
-    copy(child = c)
 }
 
 /** Per-sample alt-allele dosage: ARRAY<BIGINT> with null for samples having
@@ -184,8 +160,21 @@ case class DosageAltExpr(child: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "dosage_alt"
 
-  override protected def nullSafeEval(g: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(g: Any): Any =
+    DosageAltExpr.eval(g.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, g =>
+      s"""${ev.value} = graft.functions.expressions.DosageAltExpr$$.MODULE$$
+         |  .eval($g);
+       """.stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): DosageAltExpr =
+    copy(child = c)
+}
+
+object DosageAltExpr {
+  def eval(geno: ArrayData): ArrayData = {
     val out = new Array[Any](geno.numElements())
     var i = 0
     while (i < out.length) {
@@ -204,31 +193,6 @@ case class DosageAltExpr(child: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val sa = ctx.freshName("sa"); val d = ctx.freshName("d")
-      val miss = ctx.freshName("miss"); val out = ctx.freshName("out")
-      s"""
-         |Object[] $out = new Object[$g.numElements()];
-         |for (int $i = 0; $i < $out.length; $i++) {
-         |  if ($g.isNullAt($i)) { $out[$i] = null; continue; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  long $d = 0L; boolean $miss = false;
-         |  for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |    if ($sa.isNullAt($j)) $miss = true;
-         |    else if ($sa.getLong($j) != 0L) $d++;
-         |  }
-         |  $out[$i] = $miss ? null : (Object) java.lang.Long.valueOf($d);
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): DosageAltExpr =
-    copy(child = c)
 }
 
 /** `$dosage_alt2` — alt dosage COUNTING through partial missingness
@@ -313,14 +277,26 @@ case class GroupGenoCounts(first: Expression, second: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "group_geno_counts"
 
-  override protected def nullSafeEval(g: Any, loAny: Any, hiAny: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
-    val lo = loAny.asInstanceOf[Number].intValue()
-    val hi = math.min(hiAny.asInstanceOf[Number].intValue(),
-      geno.numElements())
+  override protected def nullSafeEval(g: Any, lo: Any, hi: Any): Any =
+    GroupGenoCounts.eval(g.asInstanceOf[ArrayData],
+      lo.asInstanceOf[Number].intValue(), hi.asInstanceOf[Number].intValue())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (g, lo, hi) =>
+      s"""${ev.value} = graft.functions.expressions.GroupGenoCounts$$.MODULE$$
+         |  .eval($g, (int) $lo, (int) $hi);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression,
+      t: Expression): GroupGenoCounts = copy(first = f, second = s, third = t)
+}
+
+object GroupGenoCounts {
+  def eval(geno: ArrayData, lo: Int, hi: Int): ArrayData = {
+    val end = math.min(hi, geno.numElements())
     var c = 0L; var x = 0L; var h = 0L
     var i = math.max(lo, 0)
-    while (i < hi) {
+    while (i < end) {
       if (!geno.isNullAt(i)) {
         val sa = geno.getArray(i)
         if (sa.numElements() >= 2 && !sa.isNullAt(0) && !sa.isNullAt(1)) {
@@ -335,34 +311,6 @@ case class GroupGenoCounts(first: Expression, second: Expression,
     }
     UnsafeArrayData.fromPrimitiveArray(Array(c, x, h))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, lo, hi) => {
-      val i = ctx.freshName("i"); val sa = ctx.freshName("sa")
-      val c = ctx.freshName("c"); val x = ctx.freshName("x")
-      val h = ctx.freshName("h"); val alt = ctx.freshName("alt")
-      val end = ctx.freshName("end")
-      s"""
-         |long $c = 0L, $x = 0L, $h = 0L;
-         |int $end = java.lang.Math.min((int) $hi, $g.numElements());
-         |for (int $i = java.lang.Math.max((int) $lo, 0); $i < $end; $i++) {
-         |  if ($g.isNullAt($i)) continue;
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  if ($sa.numElements() < 2 || $sa.isNullAt(0) || $sa.isNullAt(1))
-         |    continue;
-         |  $c++;
-         |  long $alt = ($sa.getLong(0) != 0L ? 1L : 0L)
-         |    + ($sa.getLong(1) != 0L ? 1L : 0L);
-         |  $x += $alt;
-         |  if ($alt == 1L) $h++;
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(new long[]{$c, $x, $h});
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): GroupGenoCounts = copy(first = f, second = s, third = t)
 }
 
 /** Allele-level group-count pair [n_called_alleles, n_alt_alleles]
@@ -388,14 +336,26 @@ case class GroupAlleleCounts(first: Expression, second: Expression,
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "group_allele_counts"
 
-  override protected def nullSafeEval(g: Any, loAny: Any, hiAny: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
-    val lo = math.max(loAny.asInstanceOf[Number].intValue(), 0)
-    val hi = math.min(hiAny.asInstanceOf[Number].intValue(),
-      geno.numElements())
+  override protected def nullSafeEval(g: Any, lo: Any, hi: Any): Any =
+    GroupAlleleCounts.eval(g.asInstanceOf[ArrayData],
+      lo.asInstanceOf[Number].intValue(), hi.asInstanceOf[Number].intValue())
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (g, lo, hi) =>
+      s"""${ev.value} = graft.functions.expressions.GroupAlleleCounts$$
+         |  .MODULE$$.eval($g, (int) $lo, (int) $hi);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(f: Expression, s: Expression,
+      t: Expression): GroupAlleleCounts = copy(first = f, second = s, third = t)
+}
+
+object GroupAlleleCounts {
+  def eval(geno: ArrayData, lo: Int, hi: Int): ArrayData = {
+    val end = math.min(hi, geno.numElements())
     var c = 0L; var a = 0L
-    var i = lo
-    while (i < hi) {
+    var i = math.max(lo, 0)
+    while (i < end) {
       if (!geno.isNullAt(i)) {
         val sa = geno.getArray(i)
         var j = 0
@@ -412,37 +372,13 @@ case class GroupAlleleCounts(first: Expression, second: Expression,
     }
     UnsafeArrayData.fromPrimitiveArray(Array(c, a))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, lo, hi) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val sa = ctx.freshName("sa"); val c = ctx.freshName("c")
-      val a = ctx.freshName("a"); val end = ctx.freshName("end")
-      s"""
-         |long $c = 0L, $a = 0L;
-         |int $end = java.lang.Math.min((int) $hi, $g.numElements());
-         |for (int $i = java.lang.Math.max((int) $lo, 0); $i < $end; $i++) {
-         |  if ($g.isNullAt($i)) continue;
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |    if ($sa.isNullAt($j)) continue;
-         |    $c++;
-         |    if ($sa.getLong($j) != 0L) $a++;
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-         |  .fromPrimitiveArray(new long[]{$c, $a});
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-      t: Expression): GroupAlleleCounts = copy(first = f, second = s, third = t)
 }
 
 /** All samples' VCF GT strings joined with `sep` in one fused loop:
   * "0/1;1|2;./." (the seqGDS2VCF formatters, src/ConvGDS2VCF.cpp:571-989,
   * collapsed to a single pass). Missing allele → "."; null sample array →
-  * "."; null/absent phase → "/". */
+  * "."; null/absent phase → "/". [[SampleCellsJoined]] with no FORMAT
+  * fields. */
 case class GtStringsJoined(first: Expression, second: Expression,
     third: Expression) extends TernaryExpression with GenoInput {
 
@@ -461,69 +397,35 @@ case class GtStringsJoined(first: Expression, second: Expression,
   override def dataType: DataType = StringType
   override def prettyName: String = "gt_strings"
 
-  override protected def nullSafeEval(g: Any, p: Any, s: Any): Any = {
-    val geno = g.asInstanceOf[ArrayData]
-    val phased = p.asInstanceOf[ArrayData]
-    val sep = s.toString
-    val sb = new java.lang.StringBuilder()
-    var i = 0
-    val n = geno.numElements()
-    while (i < n) {
-      if (i > 0) sb.append(sep)
-      if (geno.isNullAt(i)) sb.append('.')
-      else {
-        val sa = geno.getArray(i)
-        val ph = i < phased.numElements() && !phased.isNullAt(i) &&
-          phased.getBoolean(i)
-        var j = 0
-        val m = sa.numElements()
-        while (j < m) {
-          if (j > 0) sb.append(if (ph) '|' else '/')
-          if (sa.isNullAt(j)) sb.append('.') else sb.append(sa.getLong(j))
-          j += 1
-        }
-      }
-      i += 1
-    }
-    UTF8String.fromString(sb.toString)
-  }
+  override protected def nullSafeEval(g: Any, p: Any, s: Any): Any =
+    GtStringsJoined.eval(g.asInstanceOf[ArrayData],
+      p.asInstanceOf[ArrayData], s.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, p, s) => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val sa = ctx.freshName("sa"); val ph = ctx.freshName("ph")
-      val sb = ctx.freshName("sb"); val sepStr = ctx.freshName("sepStr")
-      s"""
-         |java.lang.StringBuilder $sb = new java.lang.StringBuilder();
-         |String $sepStr = $s.toString();
-         |for (int $i = 0; $i < $g.numElements(); $i++) {
-         |  if ($i > 0) $sb.append($sepStr);
-         |  if ($g.isNullAt($i)) { $sb.append('.'); continue; }
-         |  org.apache.spark.sql.catalyst.util.ArrayData $sa = $g.getArray($i);
-         |  boolean $ph = $i < $p.numElements() && !$p.isNullAt($i)
-         |    && $p.getBoolean($i);
-         |  for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |    if ($j > 0) $sb.append($ph ? '|' : '/');
-         |    if ($sa.isNullAt($j)) $sb.append('.');
-         |    else $sb.append($sa.getLong($j));
-         |  }
-         |}
-         |${ev.value} = org.apache.spark.unsafe.types.UTF8String
-         |  .fromString($sb.toString());
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, (g, p, s) =>
+      s"""${ev.value} = graft.functions.expressions.GtStringsJoined$$.MODULE$$
+         |  .eval($g, $p, $s);
+       """.stripMargin)
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): GtStringsJoined = copy(first = f, second = s, third = t)
+}
+
+object GtStringsJoined {
+  private val NoFields = new Array[ArrayData](0)
+
+  def eval(geno: ArrayData, phased: ArrayData, sep: UTF8String): UTF8String =
+    SampleCellsJoined.eval(geno, phased, sep, NoFields)
 }
 
 /** Per-sample VCF cells `GT[:f1][:f2]…` joined by `sep` — the FORMAT
   * export kernel (seqGDS2VCF with annotation/format fields, reference
   * `src/ConvGDS2VCF.cpp:571-989`). Children: geno, phased, sep, then one
   * ARRAY<STRING> per FORMAT field carrying each sample's cell text (a
-  * null element or null column renders "."). One generated loop per
-  * row; the plan grows with the FIELD count, never the sample count —
-  * biobank-width safe where per-sample expression unrolling is not. */
+  * null element or null column renders "."). One kernel call per row
+  * with the field columns passed as one array; the plan grows with the
+  * FIELD count, never the sample count — biobank-width safe where
+  * per-sample expression unrolling is not. */
 case class SampleCellsJoined(children: Seq[Expression])
     extends Expression with GenoInput {
 
@@ -559,19 +461,56 @@ case class SampleCellsJoined(children: Seq[Expression])
     val g = geno.eval(input)
     val p = phased.eval(input)
     val s = sep.eval(input)
-    if (g == null || p == null || s == null) return null
-    val ga = g.asInstanceOf[ArrayData]
-    val pa = p.asInstanceOf[ArrayData]
-    val fa = fields.map(_.eval(input).asInstanceOf[ArrayData]).toArray
+    if (g == null || p == null || s == null) null
+    else SampleCellsJoined.eval(g.asInstanceOf[ArrayData],
+      p.asInstanceOf[ArrayData], s.asInstanceOf[UTF8String],
+      fields.map(_.eval(input).asInstanceOf[ArrayData]).toArray)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
+      : ExprCode = {
+    val gEv = geno.genCode(ctx)
+    val pEv = phased.genCode(ctx)
+    val sEv = sep.genCode(ctx)
+    val fEvs = fields.map(_.genCode(ctx))
+    val fieldValues = fEvs.map(f => s"${f.isNull} ? null : ${f.value}")
+      .mkString(", ")
+    val fieldChildCode = fEvs.map(_.code)
+      .foldLeft(code"")((acc, c) => code"$acc\n$c")
+    ev.copy(code = code"""
+      |${gEv.code}
+      |${pEv.code}
+      |${sEv.code}
+      |$fieldChildCode
+      |boolean ${ev.isNull} = ${gEv.isNull} || ${pEv.isNull} || ${sEv.isNull};
+      |org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
+      |if (!${ev.isNull}) {
+      |  ${ev.value} = graft.functions.expressions.SampleCellsJoined$$.MODULE$$
+      |    .eval(${gEv.value}, ${pEv.value}, ${sEv.value},
+      |      new org.apache.spark.sql.catalyst.util.ArrayData[] {$fieldValues});
+      |}
+     """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newChildren: IndexedSeq[Expression]): SampleCellsJoined =
+    copy(children = newChildren)
+}
+
+object SampleCellsJoined {
+  def eval(geno: ArrayData, phased: ArrayData, sep: UTF8String,
+      fields: Array[ArrayData]): UTF8String = {
+    val sepStr = sep.toString
     val sb = new java.lang.StringBuilder()
     var i = 0
-    val n = ga.numElements()
+    val n = geno.numElements()
     while (i < n) {
-      if (i > 0) sb.append(s.toString)
-      if (ga.isNullAt(i)) sb.append('.')
+      if (i > 0) sb.append(sepStr)
+      if (geno.isNullAt(i)) sb.append('.')
       else {
-        val sa = ga.getArray(i)
-        val ph = i < pa.numElements() && !pa.isNullAt(i) && pa.getBoolean(i)
+        val sa = geno.getArray(i)
+        val ph = i < phased.numElements() && !phased.isNullAt(i) &&
+          phased.getBoolean(i)
         var j = 0
         val m = sa.numElements()
         while (j < m) {
@@ -581,9 +520,9 @@ case class SampleCellsJoined(children: Seq[Expression])
         }
       }
       var k = 0
-      while (k < fa.length) {
+      while (k < fields.length) {
         sb.append(':')
-        val arr = fa(k)
+        val arr = fields(k)
         if (arr == null || i >= arr.numElements() || arr.isNullAt(i))
           sb.append('.')
         else sb.append(arr.getUTF8String(i).toString)
@@ -593,73 +532,6 @@ case class SampleCellsJoined(children: Seq[Expression])
     }
     UTF8String.fromString(sb.toString)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val gEv = geno.genCode(ctx)
-    val pEv = phased.genCode(ctx)
-    val sEv = sep.genCode(ctx)
-    val fEvs = fields.map(_.genCode(ctx))
-    val sb = ctx.freshName("sb")
-    val i = ctx.freshName("i")
-    val j = ctx.freshName("j")
-    val sa = ctx.freshName("sa")
-    val ph = ctx.freshName("ph")
-    val sepStr = ctx.freshName("sepStr")
-    // NOTE: this fragment is folded into the outer code block's static
-    // parts, so the outer .stripMargin processes it a SECOND time — a
-    // line-leading "||" would be eaten as a margin character (round-4
-    // codegen bug: `if (a || b\n|| c)` compiled to `if (a || b\nc)`).
-    // Keep boolean operators at line ENDS and use no margins here.
-    val fieldAppends = fEvs.map { f =>
-      s"""$sb.append(':');
-if (${f.isNull} || $i >= ${f.value}.numElements() ||
-    ${f.value}.isNullAt($i)) $sb.append('.');
-else $sb.append(${f.value}.getUTF8String($i).toString());"""
-    }.mkString("\n")
-    // child code must stay Block ARGS (a mkString'd String would fold
-    // into the static parts and face the second stripMargin too)
-    val fieldChildCode = fEvs.map(_.code)
-      .foldLeft(code"")((acc, c) => code"$acc\n$c")
-    val code =
-      code"""
-         |${gEv.code}
-         |${pEv.code}
-         |${sEv.code}
-         |$fieldChildCode
-         |boolean ${ev.isNull} = ${gEv.isNull} || ${pEv.isNull} ||
-         |  ${sEv.isNull};
-         |org.apache.spark.unsafe.types.UTF8String ${ev.value} = null;
-         |if (!${ev.isNull}) {
-         |  java.lang.StringBuilder $sb = new java.lang.StringBuilder();
-         |  String $sepStr = ${sEv.value}.toString();
-         |  for (int $i = 0; $i < ${gEv.value}.numElements(); $i++) {
-         |    if ($i > 0) $sb.append($sepStr);
-         |    if (${gEv.value}.isNullAt($i)) $sb.append('.');
-         |    else {
-         |      org.apache.spark.sql.catalyst.util.ArrayData $sa =
-         |        ${gEv.value}.getArray($i);
-         |      boolean $ph = $i < ${pEv.value}.numElements()
-         |        && !${pEv.value}.isNullAt($i)
-         |        && ${pEv.value}.getBoolean($i);
-         |      for (int $j = 0; $j < $sa.numElements(); $j++) {
-         |        if ($j > 0) $sb.append($ph ? '|' : '/');
-         |        if ($sa.isNullAt($j)) $sb.append('.');
-         |        else $sb.append($sa.getLong($j));
-         |      }
-         |    }
-         |    $fieldAppends
-         |  }
-         |  ${ev.value} = org.apache.spark.unsafe.types.UTF8String
-         |    .fromString($sb.toString());
-         |}
-       """.stripMargin
-    ev.copy(code = code)
-  }
-
-  override protected def withNewChildrenInternal(
-      newChildren: IndexedSeq[Expression]): SampleCellsJoined =
-    copy(children = newChildren)
 }
 
 /** f2-sharing carrier kernel: [sum_alt, min_carrier, max_carrier] over a
@@ -682,8 +554,21 @@ case class F2Carriers(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "f2_carriers"
 
-  override protected def nullSafeEval(dAny: Any): Any = {
-    val d = dAny.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(d: Any): Any =
+    F2Carriers.eval(d.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, d =>
+      s"""${ev.value} = graft.functions.expressions.F2Carriers$$.MODULE$$
+         |  .eval($d);
+       """.stripMargin)
+
+  override protected def withNewChildInternal(c: Expression): F2Carriers =
+    copy(child = c)
+}
+
+object F2Carriers {
+  def eval(d: ArrayData): ArrayData = {
     var a = 0L; var mn = -1L; var mx = -1L
     var i = 0
     val n = d.numElements()
@@ -697,25 +582,4 @@ case class F2Carriers(child: Expression) extends UnaryExpression {
     }
     UnsafeArrayData.fromPrimitiveArray(Array(a, mn, mx))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d => {
-      val i = ctx.freshName("i"); val v = ctx.freshName("v")
-      val a = ctx.freshName("a"); val mn = ctx.freshName("mn")
-      val mx = ctx.freshName("mx")
-      s"""
-         |long $a = 0L, $mn = -1L, $mx = -1L;
-         |for (int $i = 0; $i < $d.numElements(); $i++) {
-         |  if ($d.isNullAt($i)) continue;
-         |  long $v = $d.getLong($i);
-         |  $a += $v;
-         |  if ($v > 0L) { if ($mn < 0L) $mn = $i; $mx = $i; }
-         |}
-         |${ev.value} = org.apache.spark.sql.catalyst.expressions
-         |  .UnsafeArrayData.fromPrimitiveArray(new long[] {$a, $mn, $mx});
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(c: Expression): F2Carriers =
-    copy(child = c)
 }

@@ -8,11 +8,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 
 /** Codegen kernels for the product-quantization path (q105) and the
   * windowed-LD path (q108). The declarative HOF twins (kept in
-  * [[graft.functions.vectorfns]] / the query oracles) are interpreted
+  * src/test/scala/graft/HofTwins.scala and the query oracles) are interpreted
   * per row — CodegenFallback — and dominated both queries at sf0.1
   * (encode: M·K·DSUB multiply-subtracts per corpus row; scan: a 64-dim
-  * L2 per (corpus, probe) pair). Each kernel is one fused loop inside
-  * whole-stage codegen.
+  * L2 per (corpus, probe) pair). Each kernel is one fused Scala loop on
+  * the expression's companion, which the interpreted path and
+  * whole-stage codegen both call.
   *
   * Reference analog: the hand-SIMD count/dosage kernels the reference
   * keeps for exactly this reason (/root/reference/src/vectorization.h:
@@ -38,9 +39,22 @@ case class L2DistLong(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "l2_i64"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    L2DistLong.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.expressions.L2DistLong$$.MODULE$$
+         |  .eval($a, $b);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): L2DistLong =
+    copy(left = newLeft, right = newRight)
+}
+
+object L2DistLong {
+  def eval(x: ArrayData, y: ArrayData): Long = {
     val n = math.min(x.numElements(), y.numElements())
     var s = 0L
     var i = 0
@@ -53,29 +67,6 @@ case class L2DistLong(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    final long $d = $a.getLong($i) - $b.getLong($i);
-         |    $s += $d * $d;
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): L2DistLong =
-    copy(left = newLeft, right = newRight)
 }
 
 /** PQ encoder: `qv` (ARRAY<BIGINT>, the full vector) against codebook
@@ -102,9 +93,22 @@ case class PqEncode(left: Expression, right: Expression, m: Int, dsub: Int)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val v = a.asInstanceOf[ArrayData]
-    val cb = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PqEncode.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], m, dsub)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.expressions.PqEncode$$.MODULE$$
+         |  .eval($a, $b, $m, $dsub);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqEncode =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqEncode {
+  def eval(v: ArrayData, cb: ArrayData, m: Int, dsub: Int): ArrayData = {
     val k = cb.numElements()
     val out = new Array[Int](m)
     var sub = 0
@@ -134,55 +138,6 @@ case class PqEncode(left: Expression, right: Expression, m: Int, dsub: Int)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val out = ctx.freshName("out")
-      val sub = ctx.freshName("sub")
-      val c = ctx.freshName("c")
-      val i = ctx.freshName("i")
-      val end = ctx.freshName("end")
-      val s = ctx.freshName("s")
-      val d = ctx.freshName("d")
-      val x = ctx.freshName("x")
-      val y = ctx.freshName("y")
-      val k = ctx.freshName("k")
-      val cw = ctx.freshName("cw")
-      val best = ctx.freshName("best")
-      val bestD = ctx.freshName("bestD")
-      s"""
-         |final int $k = $b.numElements();
-         |final int[] $out = new int[$m];
-         |for (int $sub = 0; $sub < $m; $sub++) {
-         |  int $best = 0;
-         |  long $bestD = Long.MAX_VALUE;
-         |  for (int $c = 0; $c < $k; $c++) {
-         |    final org.apache.spark.sql.catalyst.util.ArrayData $cw =
-         |      $b.getArray($c);
-         |    long $s = 0L;
-         |    final int $end = ($sub + 1) * $dsub;
-         |    for (int $i = $sub * $dsub; $i < $end; $i++) {
-         |      final long $x =
-         |        ($i < $a.numElements() && !$a.isNullAt($i))
-         |          ? $a.getLong($i) : 0L;
-         |      final long $y =
-         |        ($i < $cw.numElements() && !$cw.isNullAt($i))
-         |          ? $cw.getLong($i) : 0L;
-         |      final long $d = $x - $y;
-         |      $s += $d * $d;
-         |    }
-         |    if ($s < $bestD) { $bestD = $s; $best = $c; }
-         |  }
-         |  $out[$sub] = $best;
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqEncode =
-    copy(left = newLeft, right = newRight)
 }
 
 /** ADC lookup-sum: `dtab` (ARRAY<ARRAY<BIGINT>>, per-subspace distance
@@ -203,9 +158,22 @@ case class PqAdcLookup(left: Expression, right: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_adc"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val dtab = a.asInstanceOf[ArrayData]
-    val codes = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    PqAdcLookup.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.expressions.PqAdcLookup$$.MODULE$$
+         |  .eval($a, $b);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PqAdcLookup =
+    copy(left = newLeft, right = newRight)
+}
+
+object PqAdcLookup {
+  def eval(dtab: ArrayData, codes: ArrayData): Long = {
     val n = math.min(dtab.numElements(), codes.numElements())
     var s = 0L
     var i = 0
@@ -220,34 +188,6 @@ case class PqAdcLookup(left: Expression, right: Expression)
     }
     s
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val s = ctx.freshName("s")
-      val row = ctx.freshName("row")
-      val c = ctx.freshName("c")
-      s"""
-         |final int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $s = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    final org.apache.spark.sql.catalyst.util.ArrayData $row =
-         |      $a.getArray($i);
-         |    final int $c = $b.getInt($i);
-         |    if ($c >= 0 && $c < $row.numElements() && !$row.isNullAt($c)) {
-         |      $s += $row.getLong($c);
-         |    }
-         |  }
-         |}
-         |${ev.value} = $s;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PqAdcLookup =
-    copy(left = newLeft, right = newRight)
 }
 
 /** One-pass paired-dosage sums for LD: two nullable ARRAY<BIGINT> dosage
@@ -272,9 +212,22 @@ case class LdPairStats(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "ld_pair_stats"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    LdPairStats.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"""${ev.value} = graft.functions.expressions.LdPairStats$$.MODULE$$
+         |  .eval($a, $b);
+       """.stripMargin)
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): LdPairStats =
+    copy(left = newLeft, right = newRight)
+}
+
+object LdPairStats {
+  def eval(x: ArrayData, y: ArrayData): ArrayData = {
     val len = math.min(x.numElements(), y.numElements())
     var n = 0L; var sx = 0L; var sy = 0L
     var sxy = 0L; var sxx = 0L; var syy = 0L
@@ -289,37 +242,4 @@ case class LdPairStats(left: Expression, right: Expression)
     }
     new GenericArrayData(Array(n, sx, sy, sxy, sxx, syy))
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val len = ctx.freshName("len")
-      val n = ctx.freshName("n")
-      val sx = ctx.freshName("sx")
-      val sy = ctx.freshName("sy")
-      val sxy = ctx.freshName("sxy")
-      val sxx = ctx.freshName("sxx")
-      val syy = ctx.freshName("syy")
-      val u = ctx.freshName("u")
-      val v = ctx.freshName("v")
-      s"""
-         |final int $len = java.lang.Math.min($a.numElements(), $b.numElements());
-         |long $n = 0L, $sx = 0L, $sy = 0L, $sxy = 0L, $sxx = 0L, $syy = 0L;
-         |for (int $i = 0; $i < $len; $i++) {
-         |  if (!$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    final long $u = $a.getLong($i);
-         |    final long $v = $b.getLong($i);
-         |    $n++; $sx += $u; $sy += $v;
-         |    $sxy += $u * $v; $sxx += $u * $u; $syy += $v * $v;
-         |  }
-         |}
-         |${ev.value} =
-         |  new org.apache.spark.sql.catalyst.util.GenericArrayData(
-         |    new long[] {$n, $sx, $sy, $sxy, $sxx, $syy});
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): LdPairStats =
-    copy(left = newLeft, right = newRight)
 }

@@ -24,10 +24,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   *
   * The declarative form runs one interpreted `aggregate(transform(...))`
   * HOF pair PER BIT; this expression computes every bit in one fused
-  * loop over the vector inside whole-stage codegen, reading the ±1 signs
-  * from a lazily-built per-operator cache (signs depend only on (table,
-  * bits, i), never on the row). Null array → null; null elements
-  * contribute 0.
+  * loop over the vector, reading the ±1 signs from a sign table built
+  * once per operator and grown only for a longer vector (signs depend
+  * only on (table, bits, i), never on the row). Null array → null; null
+  * elements contribute 0.
   */
 case class SrpBucket(child: Expression, bits: Int, table: Int)
     extends UnaryExpression {
@@ -46,85 +46,26 @@ case class SrpBucket(child: Expression, bits: Int, table: Int)
   override def dataType: DataType = LongType
   override def prettyName: String = "srp_bucket"
 
+  // the interpreted path's sign table (codegen keeps its own per operator)
+  @transient private var signs: Array[Byte] = _
+
   override protected def nullSafeEval(a: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    val acc = new Array[Long](bits)
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i)) {
-        val v = x.getLong(i)
-        var j = 0
-        while (j < bits) {
-          acc(j) += (if (SrpBucket.signBit(table, j, i + 1L)) v else -v)
-          j += 1
-        }
-      }
-      i += 1
-    }
-    var bucket = 0L
-    var j = 0
-    while (j < bits) {
-      if (acc(j) >= 0) bucket |= 1L << j
-      j += 1
-    }
-    bucket
+    val s = SrpBucket.signTable(signs, table, bits, x.numElements())
+    signs = s
+    SrpBucket.eval(x, bits, s)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val n = ctx.freshName("n")
-      val v = ctx.freshName("v")
-      val h = ctx.freshName("h")
-      val acc = ctx.freshName("acc")
-      val bkt = ctx.freshName("bkt")
-      val keys = ctx.freshName("keys")
-      // sign cache: signs[i*bits + j] for component i < cached length.
-      // Signs are constants of (table, bits, i) — computed once per
-      // operator instance, reused for every row.
-      val signs = ctx.addMutableState("byte[]", "srpSigns")
-      val signN = ctx.addMutableState("int", "srpSignN")
-      // hyperplane keys are compile-time constants of (table, bits);
-      // the L suffix is required — Janino rejects bare int literals
-      // that overflow (round-4 codegen bug)
-      val keyInit =
-        (0 until bits).map(j => s"${table * 131L + j + 1}L").mkString(", ")
-      s"""
-         |final long[] $keys = new long[] { $keyInit };
-         |final int $n = $a.numElements();
-         |if ($n > $signN) {
-         |  $signs = new byte[$n * $bits];
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    for (int $j = 0; $j < $bits; $j++) {
-         |      long $h = (($keys[$j] * 131071L + ($i + 1L)) * 2654435761L)
-         |        % 2147483647L;
-         |      $h ^= $h >>> 15;
-         |      $h = ($h * 40503L) % 2147483647L;
-         |      $h ^= $h >>> 13;
-         |      $signs[$i * $bits + $j] =
-         |        (($h & 1L) == 1L) ? (byte) 1 : (byte) -1;
-         |    }
-         |  }
-         |  $signN = $n;
-         |}
-         |final long[] $acc = new long[$bits];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i)) continue;
-         |  final long $v = $a.getLong($i);
-         |  for (int $j = 0; $j < $bits; $j++) {
-         |    $acc[$j] += ($signs[$i * $bits + $j] > 0) ? $v : -$v;
-         |  }
-         |}
-         |long $bkt = 0L;
-         |for (int $j = 0; $j < $bits; $j++) {
-         |  if ($acc[$j] >= 0) $bkt |= 1L << $j;
-         |}
-         |${ev.value} = $bkt;
-       """.stripMargin
-    })
+      : ExprCode = {
+    val tab = ctx.addMutableState("byte[]", "srpSigns")
+    nullSafeCodeGen(ctx, ev, a =>
+      s"""$tab = graft.functions.expressions.SrpBucket$$.MODULE$$
+         |  .signTable($tab, $table, $bits, $a.numElements());
+         |${ev.value} = graft.functions.expressions.SrpBucket$$.MODULE$$
+         |  .eval($a, $bits, $tab);
+       """.stripMargin)
+  }
 
   override protected def withNewChildInternal(newChild: Expression)
       : SrpBucket = copy(child = newChild)
@@ -141,5 +82,38 @@ object SrpBucket {
     h = (h * 40503L) % 2147483647L
     h ^= h >>> 13
     (h & 1L) == 1L
+  }
+
+  /** Signs of components 1..n, `signs(i·bits + j)` = ±1 for bit j of
+    * component i+1; `cached` is returned when it already covers n. */
+  def signTable(cached: Array[Byte], table: Int, bits: Int, n: Int)
+      : Array[Byte] =
+    if (cached != null && cached.length >= n * bits) cached
+    else Array.tabulate[Byte](n * bits)(k =>
+      if (signBit(table, k % bits, k / bits + 1L)) 1 else -1)
+
+  /** Bucket id of `x` over a [[signTable]] that covers its length. */
+  def eval(x: ArrayData, bits: Int, signs: Array[Byte]): Long = {
+    val n = x.numElements()
+    val acc = new Array[Long](bits)
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i)) {
+        val v = x.getLong(i)
+        var j = 0
+        while (j < bits) {
+          acc(j) += (if (signs(i * bits + j) > 0) v else -v)
+          j += 1
+        }
+      }
+      i += 1
+    }
+    var bucket = 0L
+    var j = 0
+    while (j < bits) {
+      if (acc(j) >= 0) bucket |= 1L << j
+      j += 1
+    }
+    bucket
   }
 }

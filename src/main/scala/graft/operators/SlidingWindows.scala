@@ -26,9 +26,10 @@ object SlidingWindows {
     *
     * `memberFlag`: when given, only flagged variants are counted/collected
     * — but windows are still generated from every variant. Evaluating the
-    * flag inside the pre-explode projection (one codegen pass, CSE'd)
-    * instead of a separate Filter matters: predicate pushdown would inline
-    * a heavy flag expression into the filter condition multiple times. */
+    * flag in a projection before the explode (one codegen pass, CSE'd,
+    * once per variant) instead of a separate Filter matters: predicate
+    * pushdown would inline a heavy flag expression into the filter
+    * condition multiple times. */
   def windows(
       variants: DataFrame, chrom: Column, pos: Column, id: Column,
       winSize: Long, winShift: Long, dupRm: Boolean = false,
@@ -37,9 +38,14 @@ object SlidingWindows {
     val kMin = greatest(lit(0L),
       floor((pos - winSize).cast("double") / winShift).cast("long") + 1L)
     val kMax = floor(pos.cast("double") / winShift).cast("long")
+    // the flag gets a projection of its own BELOW the explode: a column
+    // selected next to a generator is evaluated above it, once per
+    // (variant, window) row instead of once per variant
     val exploded = variants.select(chrom.as("chrom"), id.as("__id"),
         memberFlag.getOrElse(lit(true)).as("__f"),
-        explode(sequence(kMin, kMax)).as("__k"))
+        kMin.as("__kMin"), kMax.as("__kMax"))
+      .select(col("chrom"), col("__id"), col("__f"),
+        explode(sequence(col("__kMin"), col("__kMax"))).as("__k"))
       .select(col("chrom"), (col("__k") * winShift).as("win_start"),
         col("__id"), col("__f"))
     val grouped = exploded.groupBy(col("chrom"), col("win_start"))

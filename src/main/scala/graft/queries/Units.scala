@@ -180,9 +180,13 @@ object Units extends QueryModule {
       // shipped 8× the rows through the Generate and cost ~5× as much.
       // (At biobank width the unroll flips back to a posexplode or the
       // packed-BINARY kernels: the plan must stay O(1) in n_samples.)
+      // the kernels get a projection of their own below the explode, so
+      // they run once per variant, not once per (variant, window) row
       val rows = v.select(col("chrom"), rare.as("rare"),
-        minorIsAlt.as("mia"), dosageAlt(col("geno")).as("d"),
-        explode(sequence(kMin, kMax)).as("k"))
+          minorIsAlt.as("mia"), dosageAlt(col("geno")).as("d"),
+          kMin.as("kMin"), kMax.as("kMax"))
+        .select(col("chrom"), col("rare"), col("mia"), col("d"),
+          explode(sequence(col("kMin"), col("kMax"))).as("k"))
       def dosS(s: Int) = when(col("mia"), col("d")(s))
         .otherwise(lit(SynthGeno.ploidy.toLong) - col("d")(s))
       val aggs =

@@ -487,18 +487,35 @@ object GdsCore {
     def nChunks: Int = offs.length
   }
 
-  private val chunkTableCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.ref.SoftReference[ChunkTable]]()
+  /** Per-JVM cache of what is parsed once per (file, data stream), held
+    * under SoftReferences so memory pressure can drop it. */
+  private type SoftCache[V] =
+    java.util.concurrent.ConcurrentHashMap[String, java.lang.ref.SoftReference[V]]
+
+  /** `cache`'s value for node `n` of `f`, built and stored on a miss. */
+  private def cached[V <: AnyRef](cache: SoftCache[V], f: GdsFile, n: Node)(
+      build: => V): V = {
+    val key = f.cacheToken + "#" + n.dataId
+    val ref = cache.get(key)
+    val hit = if (ref != null) ref.get else null.asInstanceOf[V]
+    if (hit != null) hit
+    else {
+      val v = build
+      cache.put(key, new java.lang.ref.SoftReference(v))
+      v
+    }
+  }
+
+  private val chunkTableCache = new SoftCache[Option[ChunkTable]]()
 
   /** Detect + parse the `*_ra` framing of a node's data stream; None for
     * uncompressed streams. Cached per (file, stream) — the header walk
     * touches only the ~6 bytes of each chunk header. */
-  def chunkTable(f: GdsFile, node: Node): Option[ChunkTable] = {
-    if (node.dataId == 0) return None
-    val key = f.cacheToken + "#" + node.dataId
-    val ref = chunkTableCache.get(key)
-    val hit = if (ref != null) ref.get else null
-    if (hit != null) return Some(hit)
+  def chunkTable(f: GdsFile, node: Node): Option[ChunkTable] =
+    if (node.dataId == 0) None
+    else cached(chunkTableCache, f, node)(parseChunkTable(f, node))
+
+  private def parseChunkTable(f: GdsFile, node: Node): Option[ChunkTable] = {
     val v = f.view(node.dataId)
     if (v.length < 12) return None
     val head = v.read(6, math.min(8L, v.length - 6).toInt)
@@ -538,7 +555,6 @@ object GdsCore {
       }
       val ct = new ChunkTable(c, v11, offs, sizes)
       if (rawStarts != null) ct.rawStarts = rawStarts
-      chunkTableCache.put(key, new java.lang.ref.SoftReference(ct))
       ct
     }
   }
@@ -898,12 +914,16 @@ object GdsCore {
         n.rawSize)
     require(n.cls.contains("dStr8"),
       s"gds string decode for class ${n.cls} at ${n.path}")
-    val b = nodeBytes(f, n)
-    val count = n.dims.headOption.getOrElse(0)
-    val out = new Array[String](count)
+    decodeStrs(nodeBytes(f, n), 0, n.dims.headOption.getOrElse(0))
+  }
+
+  /** Elements [skip, skip + n) of a dStr8 byte run starting at element
+    * 0 (LEB128 length, then the UTF-8 payload). */
+  private def decodeStrs(b: Array[Byte], skip: Int, n: Int): Array[String] = {
+    val out = new Array[String](n)
     var p = 0
-    var i = 0
-    while (i < count) {
+    var e = 0
+    while (e < skip + n) {
       var l = 0
       var s = 0
       var more = true
@@ -914,9 +934,9 @@ object GdsCore {
         s += 7
         more = (v & 0x80) != 0
       }
-      out(i) = new String(b, p, l, "UTF-8")
+      if (e >= skip) out(e - skip) = new String(b, p, l, "UTF-8")
       p += l
-      i += 1
+      e += 1
     }
     out
   }
@@ -925,11 +945,17 @@ object GdsCore {
   def varints(f: GdsFile, n: Node, count: Long): Array[Long] = {
     require(n.cls.contains("dVL_Int"),
       s"gds varint decode for class ${n.cls} at ${n.path}")
-    val b = nodeBytes(f, n)
-    val out = new Array[Long](count.toInt)
+    decodeVarints(nodeBytes(f, n), 0, count.toInt)
+  }
+
+  /** Elements [skip, skip + n) of a zig-zag LEB128 byte run starting at
+    * element 0. */
+  private def decodeVarints(b: Array[Byte], skip: Int, n: Int)
+      : Array[Long] = {
+    val out = new Array[Long](n)
     var p = 0
-    var i = 0
-    while (i < count) {
+    var e = 0
+    while (e < skip + n) {
       var x = 0L
       var s = 0
       var more = true
@@ -940,8 +966,8 @@ object GdsCore {
         s += 7
         more = (v & 0x80) != 0
       }
-      out(i) = (x >>> 1) ^ -(x & 1)
-      i += 1
+      if (e >= skip) out(e - skip) = (x >>> 1) ^ -(x & 1)
+      e += 1
     }
     out
   }
@@ -979,31 +1005,7 @@ object GdsCore {
       val elemIdx: Array[Int],
       val elemOff: Array[Long])
 
-  private val varIdxCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.ref.SoftReference[VarIndex]]()
-
-  /** Position after one dStr8 element (LEB128 length + payload). */
-  @inline private def skipStr(b: Array[Byte], p0: Int): Int = {
-    var p = p0
-    var l = 0
-    var s = 0
-    var more = true
-    while (more) {
-      val v = b(p) & 0xff
-      p += 1
-      l |= (v & 0x7f) << s
-      s += 7
-      more = (v & 0x80) != 0
-    }
-    p + l
-  }
-
-  /** Position after one dVL_Int element (LEB128 continuation bytes). */
-  @inline private def skipVarint(b: Array[Byte], p0: Int): Int = {
-    var p = p0
-    while ((b(p) & 0x80) != 0) p += 1
-    p + 1
-  }
+  private val varIdxCache = new SoftCache[VarIndex]()
 
   /** Position after one dStr8 element, or -1 if it extends past `end`. */
   private def skipStrSafe(b: Array[Byte], p0: Int, end: Int): Int = {
@@ -1087,36 +1089,31 @@ object GdsCore {
   /** Build (or fetch) the element index of a variable-stride node. As a
     * by-product the node's exact chunk boundaries land on its cached
     * [[ChunkTable]], making every later ranged read exact. */
-  def varIndex(f: GdsFile, n: Node, count: Int): VarIndex = {
-    val key = f.cacheToken + "#" + n.dataId
-    val ref = varIdxCache.get(key)
-    val hit = if (ref != null) ref.get else null
-    if (hit != null) return hit
-    val safe = elemSkipperSafe(n)
-    val idx = chunkTable(f, n) match {
-      case Some(ct) =>
-        val v = f.view(n.dataId)
-        val built = buildVarIndex(
-          Iterator.range(0, ct.nChunks).map(decodeChunk(v, ct, _)),
-          ct.nChunks, safe, count)
-        ct.rawStarts = built.rawStarts // exact boundaries learned for free
-        built
-      case None =>
-        // uncompressed: direct-sliceable; synthetic 256 KiB boundaries
-        val v = f.view(n.dataId)
-        val total = if (v.length < 6) 0L else v.u48At(0)
-        val step = 256 * 1024
-        val nB = math.max(((total + step - 1) / step).toInt, 1)
-        buildVarIndex(
-          Iterator.range(0, nB).map { i =>
-            val off = i.toLong * step
-            v.read(6 + off, math.min(step.toLong, total - off).toInt)
-          },
-          nB, safe, count)
+  def varIndex(f: GdsFile, n: Node, count: Int): VarIndex =
+    cached(varIdxCache, f, n) {
+      val safe = elemSkipperSafe(n)
+      chunkTable(f, n) match {
+        case Some(ct) =>
+          val v = f.view(n.dataId)
+          val built = buildVarIndex(
+            Iterator.range(0, ct.nChunks).map(decodeChunk(v, ct, _)),
+            ct.nChunks, safe, count)
+          ct.rawStarts = built.rawStarts // exact boundaries learned for free
+          built
+        case None =>
+          // uncompressed: direct-sliceable; synthetic 256 KiB boundaries
+          val v = f.view(n.dataId)
+          val total = if (v.length < 6) 0L else v.u48At(0)
+          val step = 256 * 1024
+          val nB = math.max(((total + step - 1) / step).toInt, 1)
+          buildVarIndex(
+            Iterator.range(0, nB).map { i =>
+              val off = i.toLong * step
+              v.read(6 + off, math.min(step.toLong, total - off).toInt)
+            },
+            nB, safe, count)
+      }
     }
-    varIdxCache.put(key, new java.lang.ref.SoftReference(idx))
-    idx
-  }
 
   /** Raw bytes guaranteed to contain elements [e0, e1) plus the index of
     * the first element that starts at byte 0 of the returned slice. */
@@ -1164,27 +1161,7 @@ object GdsCore {
     if (e1 <= e0) return Array.empty
     val count = n.dims.headOption.getOrElse(0)
     val (b, startElem) = varRangeBytes(f, n, count, e0, e1)
-    var p = 0
-    var e = startElem
-    while (e < e0) { p = skipStr(b, p); e += 1 }
-    val out = new Array[String](e1 - e0)
-    var i = 0
-    while (i < out.length) {
-      var l = 0
-      var s = 0
-      var more = true
-      while (more) {
-        val v = b(p) & 0xff
-        p += 1
-        l |= (v & 0x7f) << s
-        s += 7
-        more = (v & 0x80) != 0
-      }
-      out(i) = new String(b, p, l, "UTF-8")
-      p += l
-      i += 1
-    }
-    out
+    decodeStrs(b, e0 - startElem, e1 - e0)
   }
 
   /** dVL_Int elements [e0, e1), locally indexed; zig-zag decoded. */
@@ -1194,26 +1171,7 @@ object GdsCore {
       s"gds varint decode for class ${n.cls} at ${n.path}")
     if (e1 <= e0) return Array.empty
     val (b, startElem) = varRangeBytes(f, n, count.toInt, e0, e1)
-    var p = 0
-    var e = startElem
-    while (e < e0) { p = skipVarint(b, p); e += 1 }
-    val out = new Array[Long](e1 - e0)
-    var i = 0
-    while (i < out.length) {
-      var x = 0L
-      var s = 0
-      var more = true
-      while (more) {
-        val v = b(p) & 0xff
-        p += 1
-        x |= (v & 0x7fL) << s
-        s += 7
-        more = (v & 0x80) != 0
-      }
-      out(i) = (x >>> 1) ^ -(x & 1)
-      i += 1
-    }
-    out
+    decodeVarints(b, e0 - startElem, e1 - e0)
   }
 
   // ---- cached prefix sums of @len / @data count vectors ---------------
@@ -1225,26 +1183,20 @@ object GdsCore {
   // vector once, caches (lens, clamped starts), and every partition
   // indexes it globally.
 
-  private val prefixCache = new java.util.concurrent.ConcurrentHashMap[
-    String, java.lang.ref.SoftReference[(Array[Int], Array[Int])]]()
+  private val prefixCache = new SoftCache[(Array[Int], Array[Int])]()
 
   /** Whole count vector + clamped cumulative starts, cached per JVM. */
-  def lensWithStarts(f: GdsFile, n: Node): (Array[Int], Array[Int]) = {
-    val key = f.cacheToken + "#" + n.dataId
-    val ref = prefixCache.get(key)
-    val hit = if (ref != null) ref.get else null
-    if (hit != null) return hit
-    val lens = ints(f, n)
-    val starts = new Array[Int](lens.length)
-    var acc = 0
-    var i = 0
-    while (i < lens.length) {
-      starts(i) = acc
-      acc += math.max(lens(i), 0)
-      i += 1
+  def lensWithStarts(f: GdsFile, n: Node): (Array[Int], Array[Int]) =
+    cached(prefixCache, f, n) {
+      val lens = ints(f, n)
+      val starts = new Array[Int](lens.length)
+      var acc = 0
+      var i = 0
+      while (i < lens.length) {
+        starts(i) = acc
+        acc += math.max(lens(i), 0)
+        i += 1
+      }
+      (lens, starts)
     }
-    val pair = (lens, starts)
-    prefixCache.put(key, new java.lang.ref.SoftReference(pair))
-    pair
-  }
 }

@@ -12,14 +12,15 @@ import graft.functions.expressions._
 
 /** Every custom kernel must COMPILE under Janino, not just plan into a
   * WholeStageCodegen node. A codegen compile error at runtime degrades
-  * silently to interpreted eval (correct answers, 10-100× slower) — the
-  * round-4 verify run hit exactly that twice: SrpBucket emitted long
-  * seed constants without the `L` suffix, and SampleCellsJoined's
-  * field fragment lost a line-leading `||` to a second stripMargin
-  * pass. `GenerateUnsafeProjection.generate` THROWS on compile errors
-  * (no fallback), so each kernel here fails the suite if its generated
-  * Java is unparseable; the result is then checked against the
-  * interpreted `eval` of the same expression on the same row.
+  * silently to interpreted eval (correct answers, 10-100× slower).
+  * Each expression's `doGenCode` calls the same companion kernel as its
+  * interpreted `eval`, so what this spec guards is the generated call
+  * itself: `GenerateUnsafeProjection.generate` THROWS on compile errors
+  * (no fallback), so each kernel here fails the suite if the Java around
+  * its call is unparseable; the result is then checked against the
+  * interpreted `eval` of the same expression on the same row, which
+  * also holds the codegen and interpreted result containers (Unsafe vs
+  * Generic arrays, boxed nulls) to the same contents.
   */
 class CodegenCompileSpec extends AnyFunSuite {
 
@@ -48,11 +49,20 @@ class CodegenCompileSpec extends AnyFunSuite {
   private val cbs: ArrayData =
     arr(arr(1L, 2L, 0L, 1L, 5L), arr(3L, -1L, 4L, null, 0L))
   private val codes: ArrayData = arr(1, 0)
+  /** a window's (pos, vid, per-slot alleles) list, h = 3 slots */
+  private def hapT(t: DataType) = ArrayType(StructType(Seq(
+    StructField("pos", LongType), StructField("vid", LongType),
+    StructField("a", ArrayType(t)))))
+  private def haps(tok: Long => Any): ArrayData = arr(
+    InternalRow(100L, 1L, arr(tok(0L), tok(1L), tok(0L))),
+    InternalRow(200L, 2L, arr(tok(1L), tok(1L), tok(1L))),
+    InternalRow(300L, 3L, arr(tok(0L), tok(1L), tok(0L))))
 
   /** input row layout shared by all cases below */
   private val row = InternalRow(
     geno, phased, cells, vecA, vecB, utf("the quick brown fox"),
-    packed, words, utf("A,C"), utf("A,C,T"), cbs, codes)
+    packed, words, utf("A,C"), utf("A,C,T"), cbs, codes,
+    haps(identity), haps(t => utf(t.toString)))
   private def ref(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
 
   private val kernels: Seq[(String, Expression)] = Seq(
@@ -110,7 +120,22 @@ class CodegenCompileSpec extends AnyFunSuite {
     "allele_union" ->
       AlleleUnionExpr(ref(8, StringType), ref(9, StringType)),
     "remap_geno" -> // src alleles cover geno's max index (2), dst permutes
-      RemapGenoExpr(ref(0, genoT), ref(9, StringType), Literal("T,A,C")))
+      RemapGenoExpr(ref(0, genoT), ref(9, StringType), Literal("T,A,C")),
+    "dosage_weighted_stats" ->
+      DosageWeightedStats(ref(3, longArrT), ref(4, longArrT)),
+    "dosage_two_weight_stats" -> DosageTwoWeightStats(ref(3, longArrT),
+      ref(4, longArrT), ref(3, longArrT)),
+    "dosage_masked_sums" ->
+      DosageMaskedSums(ref(3, longArrT), ref(10, genoT)),
+    "hap_alt" -> HapAltExpr(ref(0, genoT), ref(1, phasedT), Literal(2)),
+    "dup_pair_stats" -> DupPairStatsExpr(ref(0, genoT), ref(10, genoT)),
+    "hap_counts/long" -> HapCountsExpr(ref(12, hapT(LongType)), Literal(3)),
+    "hap_counts/str" ->
+      HapCountsExpr(ref(13, hapT(StringType)), Literal(3)),
+    "sample_qc" -> SampleQcExpr(ref(0, genoT)),
+    "tokens" -> TokensExpr(ref(5, StringType)),
+    "span_grams" -> SpanGramsExpr(TokensExpr(ref(5, StringType)), Literal(2)),
+    "geno_key" -> GenoKeyExpr(ref(0, genoT)))
 
   for ((name, expr) <- kernels) {
     test(s"$name compiles under Janino and matches interpreted eval") {

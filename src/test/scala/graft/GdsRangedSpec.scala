@@ -71,6 +71,55 @@ class GdsRangedSpec extends AnyFunSuite {
     checkFile(s"$extdata/Imputed_dosages.gds")
   }
 
+  test("written container: ranged == whole for dStr8 and dVL_Int nodes") {
+    // fixture-free: both nodes span several 128 KiB ZIP_ra chunks, one
+    // string is longer than a chunk, and the varints take 1 to 10 bytes
+    val rnd = new scala.util.Random(20261018L)
+    val strs = (0 until 30000).map(i =>
+      if (i == 12345) "A" * 300000
+      else rnd.alphanumeric.take(rnd.nextInt(12)).mkString)
+    val longs = (0 until 200000).map(_ => rnd.nextLong() >> rnd.nextInt(64))
+    val vl = new java.io.ByteArrayOutputStream()
+    longs.foreach { x =>
+      var z = (x << 1) ^ (x >> 63) // zig-zag, then LEB128
+      while ((z & ~0x7fL) != 0) { vl.write(((z & 0x7f) | 0x80).toInt); z >>>= 7 }
+      vl.write(z.toInt)
+    }
+    val dir = java.nio.file.Files.createTempDirectory("graft_var").toString
+    val c = new graft.sources.gds.GdsWrite.Container("ZIP_ra")
+    val rootId = c.allocId()
+    val sNode = c.node("dStr8", Seq(strs.length),
+      graft.sources.gds.GdsWrite.strPayload(strs))
+    val vNode = c.node("dVL_Int", Seq(longs.length), vl.toByteArray)
+    c.folderAt(rootId, Seq((sNode, "s", 0), (vNode, "v", 0)))
+    c.save(s"$dir/var.gds", rootId)
+    val f = new GdsFile(s"$dir/var.gds")
+    try {
+      val s = f.root("s")
+      val v = f.root("v")
+      for (n <- Seq(s, v))
+        assert(GdsCore.chunkTable(f, n).exists(_.nChunks >= 3), n.path)
+      val wholeS = GdsCore.strings(f, s).toSeq
+      val wholeV = GdsCore.varints(f, v, longs.length.toLong).toSeq
+      assert(wholeS == strs)
+      assert(wholeV == longs)
+      def ranges(count: Int): Seq[(Int, Int)] =
+        Seq((0, count), (count - 1, count), (12345, 12346), (7, 7)) ++
+          (1 to 40).map { _ =>
+            val e0 = rnd.nextInt(count)
+            (e0, e0 + rnd.nextInt(math.min(count - e0, 20000) + 1))
+          }
+      ranges(strs.length).foreach { case (e0, e1) =>
+        assert(GdsCore.stringsRange(f, s, e0, e1).toSeq ==
+          wholeS.slice(e0, e1), s"s[$e0,$e1)")
+      }
+      ranges(longs.length).foreach { case (e0, e1) =>
+        assert(GdsCore.varintsRange(f, v, longs.length.toLong, e0, e1).toSeq ==
+          wholeV.slice(e0, e1), s"v[$e0,$e1)")
+      }
+    } finally f.close()
+  }
+
   test("fixed-width dFStr8 nodes decode whole and ranged") {
     // SNPRelate's default string storage is fixed-width NUL-padded
     // (stride = rawSize / count) — no element index needed, ranged

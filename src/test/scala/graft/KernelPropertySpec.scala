@@ -11,7 +11,8 @@ import graft.HofTwins._
 import graft.functions.textfns._
 
 /** Property-based differential tests: random genotype cubes and documents
-  * through BOTH the codegen kernels and their declarative HOF oracles —
+  * through BOTH the codegen kernels and their declarative HOF oracles (or,
+  * for kernels without a HOF twin, plain Scala over the generated `Seq`) —
   * the randomized differential strategy of the reference's test suite
   * (inst/unitTests/test_func.R:92-283) aimed at the custom expressions.
   * Deterministic seeds keep failures reproducible. */
@@ -57,6 +58,67 @@ class KernelPropertySpec extends AnyFunSuite {
           !(col("a3") === col("b3")) || col("a4") =!= col("b4"))
         .count()
       assert(bad == 0, s"round=$round")
+    }
+  }
+
+  test("group counts and f2 carriers agree with Seq references on random " +
+      "cubes") {
+    import spark.implicits._
+    // null calls and short (haploid) calls next to diploid/triploid ones
+    val callGen: Gen[Seq[java.lang.Long]] = Gen.frequency(
+      (6, Gen.choose(1, 3).flatMap(p => Gen.listOfN(p, alleleGen))
+        .map(_.toSeq)),
+      (1, Gen.const(null.asInstanceOf[Seq[java.lang.Long]])))
+    val rowGen = for {
+      n <- Gen.choose(0, 8)
+      g <- Gen.listOfN(n, callGen)
+      d <- Gen.listOfN(n, Gen.frequency(
+        (5, Gen.choose(0L, 2L).map(java.lang.Long.valueOf)),
+        (2, Gen.const(null.asInstanceOf[java.lang.Long]))))
+    } yield (g.toSeq, d.toSeq)
+    type Call = Seq[java.lang.Long]
+    // [lo, hi) inside, across either end of, beyond and empty on the cube
+    val bounds = Seq((0, 8), (-2, 3), (2, 20), (-5, -1), (9, 12), (3, 2))
+    def slice(g: Seq[Call], lo: Int, hi: Int): Seq[Call] =
+      (math.max(lo, 0) until math.min(hi, g.size)).map(g)
+    def groupGeno(g: Seq[Call], lo: Int, hi: Int): Seq[Long] = {
+      val alts = slice(g, lo, hi)
+        .filter(c => c != null && c.size >= 2 && c(0) != null && c(1) != null)
+        .map(c => c.take(2).count(_ != 0L).toLong)
+      Seq(alts.size.toLong, alts.sum, alts.count(_ == 1L).toLong)
+    }
+    def groupAllele(g: Seq[Call], lo: Int, hi: Int): Seq[Long] = {
+      val al = slice(g, lo, hi).filter(_ != null).flatten.filter(_ != null)
+      Seq(al.size.toLong, al.count(_ != 0L).toLong)
+    }
+    def f2(d: Seq[java.lang.Long]): Seq[Long] = {
+      val carriers = d.indices.filter(i => d(i) != null && d(i) > 0L)
+      Seq(d.filter(_ != null).map(_.longValue).sum,
+        carriers.headOption.fold(-1L)(_.toLong),
+        carriers.lastOption.fold(-1L)(_.toLong))
+    }
+    val cols = col("vid") +: f2Carriers(col("d")) +:
+      bounds.flatMap { case (lo, hi) =>
+        Seq(groupGenoCounts(col("geno"), lo, hi),
+          groupAlleleCounts(col("geno"), lo, hi))
+      }
+    for (round <- 1 to 6) {
+      val rows = (1 to 50).map(i => draw(rowGen, 8100L * round + i))
+      val data = rows.zipWithIndex.map { case ((g, d), i) => (i.toLong, g, d) }
+      // a local frame's projection is evaluated interpreted; an RDD's
+      // runs in generated code
+      for ((mode, df) <- Seq(
+          "interpreted" -> data.toDF("vid", "geno", "d"),
+          "codegen" -> spark.sparkContext.parallelize(data, 2)
+            .toDF("vid", "geno", "d"))) {
+        df.select(cols: _*).collect().foreach { r =>
+          val (g, d) = rows(r.getLong(0).toInt)
+          val got = (1 until r.length).map(r.getSeq[Long](_))
+          val want = f2(d) +: bounds.flatMap { case (lo, hi) =>
+            Seq(groupGeno(g, lo, hi), groupAllele(g, lo, hi)) }
+          assert(got == want, s"$mode round=$round geno=$g d=$d")
+        }
+      }
     }
   }
 

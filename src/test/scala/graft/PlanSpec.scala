@@ -446,6 +446,40 @@ class PlanSpec extends AnyFunSuite {
     assert("HashAggregate".r.findAllIn(p).size >= 2, p)
   }
 
+  test("q26/q110: genotype kernels evaluate below the window-key explode") {
+    // a kernel in the projection above the Generate runs once per
+    // (variant, window) row, about twice per variant
+    import org.apache.spark.sql.catalyst.expressions.{Explode, Sequence}
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import graft.functions.expressions.{DosageAltExpr, GenoStats}
+    def kernels(nodes: Seq[SparkPlan]): Set[String] =
+      nodes.flatMap(_.expressions).flatMap(_.collect {
+        case e: GenoStats => e.prettyName
+        case e: DosageAltExpr => e.prettyName
+      }).toSet
+    for ((q, want) <- Seq("q26_unit_filter_cond" -> Set("geno_stats"),
+        "q110_burden" -> Set("geno_stats", "dosage_alt"))) {
+      val exec = SparkEntry.queries(q)(spark, dir).queryExecution
+        .executedPlan match {
+          case a: AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+      val keyGens = exec.collect {
+        case g @ GenerateExec(Explode(_: Sequence), _, _, _, _) => g
+      }
+      assert(keyGens.size == 1, s"$q\n$exec")
+      val key = keyGens.head
+      // the plan nodes on the path from the root down to the key explode
+      def above(p: SparkPlan): Seq[SparkPlan] =
+        if (p eq key) Nil
+        else p +: p.children.filter(_.exists(_ eq key)).flatMap(above)
+      assert(kernels(above(exec)).isEmpty, s"$q\n$exec")
+      assert(kernels(key.child.collect { case n => n }) == want, s"$q\n$exec")
+    }
+  }
+
+
   test("q111: span corruption is a pure projection — no exchange, no join") {
     val p = plan("q111_span_corrupt")
     assert(!p.contains("Join"), p)
