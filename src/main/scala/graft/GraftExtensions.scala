@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.{SparkSessionExtensions, SparkSessionExtensionsProvider}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
@@ -9,13 +9,16 @@ import graft.functions.expressions._
 /** SparkSessionExtensions hook (SURVEY.md §7.4): registers every custom
   * codegen kernel as a SQL function, so the engine's operators are usable
   * from plain `spark.sql(...)` — including from SQL-only clients — not just
-  * the Scala Column API.
+  * the Scala Column API; and injects the
+  * [[graft.sources.gds.GenoStatsFromPlanes]] optimizer rule, which counts
+  * `geno_stats` over a gds relation on the stored genotype planes.
   *
-  * Activate with
-  * `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * Every session whose classpath holds the engine gets it: the class is
+  * listed in
+  * `META-INF/services/org.apache.spark.sql.SparkSessionExtensionsProvider`,
+  * which `SparkSession.builder` loads through `ServiceLoader`.
   */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
+class GraftExtensions extends SparkSessionExtensionsProvider {
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, "")
@@ -30,6 +33,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    ext.injectPreCBORule(_ => graft.sources.gds.GenoStatsFromPlanes)
     def litInt(e: Expression, fn: String): Int = e match {
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
       case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) =>

@@ -3,13 +3,15 @@ package graft.sources.gds
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+
+import graft.functions.expressions.GenoStatsRaw
 
 import GdsCore._
 
@@ -147,6 +149,21 @@ object GdsSchema {
     * pack_2b/BED). */
   private def pgField: StructField =
     StructField("pg", BinaryType, nullable = false)
+
+  /** The hidden metadata column [[GdsTable]] declares: each variant's
+    * genotype planes, as stored, of the selected samples, in the
+    * [[GenoStatsRaw]] layout. `select *` and `.columns` never show it;
+    * [[GenoStatsFromPlanes]] reads it in place of `geno`. */
+  val PlanesCol = "_geno_planes"
+
+  /** Whether a tree's genotype calls all live in its 2-bit planes: a
+    * SeqArray tree with a genotype node and no ploidy-overflow entries in
+    * `genotype/extra.index`. SNP-GDS codes are not allele codes. */
+  def rawPlanes(root: Node): Boolean =
+    !isSnpTree(root) && root.child("genotype").exists { g =>
+      g.child("data").isDefined &&
+        g.child("extra.index").forall(_.dims.headOption.forall(_ == 0))
+    }
 
   /** Dosage-typed SNP-GDS (FC_Dosage2GDS source data): genotype node is
     * REAL-valued REF-allele dosage, surfaced as `ds ARRAY<FLOAT>`. */
@@ -644,6 +661,42 @@ object GdsSchema {
               }
             })
           }
+        case PlanesCol =>
+          // the row's planes copied whole when byte-aligned, else gathered
+          // slot by slot (odd rows of an odd-width diploid file, sample
+          // selections)
+          val (data, unitBase, planes, starts, nS, ploidy) = genoData.get
+          val (outN, smap) = selOf(nS)
+          val stride = GenoStatsRaw.planeBytes(ploidy, outN)
+          val planeUnits = nS.toLong * ploidy
+          (v: Int) => {
+            val np = planes(v)
+            val out = new Array[Byte](GenoStatsRaw.Header + np * stride)
+            GenoStatsRaw.writeHeader(out, np, ploidy, outN)
+            var k = 0
+            while (k < np) {
+              val src = (starts(v) + k) * planeUnits - unitBase
+              val dst = GenoStatsRaw.Header + k * stride
+              if (sampleSel.isEmpty && (src & 3) == 0)
+                System.arraycopy(data, (src >> 2).toInt, out, dst, stride)
+              else {
+                var si = 0
+                while (si < outN) {
+                  val from = src + smap(si).toLong * ploidy
+                  var a = 0
+                  while (a < ploidy) {
+                    val u = si * ploidy + a
+                    out(dst + (u >> 2)) = (out(dst + (u >> 2)) |
+                      (bit2(data, from + a) << ((u & 3) << 1))).toByte
+                    a += 1
+                  }
+                  si += 1
+                }
+              }
+              k += 1
+            }
+            out
+          }
         case "phased" =>
           val (data, unitBase, nS) = phaseData.get
           val (outN, smap) = selOf(nS)
@@ -664,15 +717,30 @@ object GdsSchema {
 }
 
 /** `tableSchema` is the schema [[GdsDataSource.inferSchema]] read from
-  * the first path. */
+  * the first path. The planes column ([[GdsSchema.PlanesCol]]) is
+  * declared only when every path passes [[GdsSchema.rawPlanes]]. */
 class GdsTable(paths: Seq[String], tableSchema: StructType)
-    extends Table with SupportsRead {
+    extends Table with SupportsRead with SupportsMetadataColumns {
   override def name(): String = s"gds(${paths.mkString(",")})"
   override def schema(): StructType = tableSchema
+  private lazy val planes: Array[MetadataColumn] =
+    if (paths.forall { p =>
+      val f = new GdsFile(p)
+      try GdsSchema.rawPlanes(f.root) finally f.close()
+    }) Array(GdsTable.PlanesColumn) else Array.empty
+  override def metadataColumns(): Array[MetadataColumn] = planes
   override def capabilities(): java.util.Set[TableCapability] =
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new GdsScanBuilder(paths, tableSchema, options)
+}
+
+object GdsTable {
+  object PlanesColumn extends MetadataColumn {
+    override def name(): String = GdsSchema.PlanesCol
+    override def dataType(): DataType = BinaryType
+    override def isNullable(): Boolean = false
+  }
 }
 
 class GdsScanBuilder(paths: Seq[String], full: StructType,

@@ -46,6 +46,13 @@ class CodegenCompileSpec extends AnyFunSuite {
     Pack2bRefDosage.pack(geno).asInstanceOf[Array[Byte]]
   }
 
+  /** GenoStatsRaw planes values: three diploid single-plane calls
+    * (0/1), (./1), (0/0); two haploid two-plane calls 4 and missing */
+  private val planes1: Array[Byte] =
+    Array[Byte](1, 2, 3, 0, 0, 0, (1 << 2 | 3 << 4 | 1 << 6).toByte, 0)
+  private val planes2: Array[Byte] =
+    Array[Byte](2, 1, 2, 0, 0, 0, 3 << 2, 1 | 3 << 2)
+
   private val cbs: ArrayData =
     arr(arr(1L, 2L, 0L, 1L, 5L), arr(3L, -1L, 4L, null, 0L))
   private val codes: ArrayData = arr(1, 0)
@@ -62,7 +69,7 @@ class CodegenCompileSpec extends AnyFunSuite {
   private val row = InternalRow(
     geno, phased, cells, vecA, vecB, utf("the quick brown fox"),
     packed, words, utf("A,C"), utf("A,C,T"), cbs, codes,
-    haps(identity), haps(t => utf(t.toString)))
+    haps(identity), haps(t => utf(t.toString)), planes1, planes2)
   private def ref(i: Int, t: DataType) = BoundReference(i, t, nullable = true)
 
   private val kernels: Seq[(String, Expression)] = Seq(
@@ -102,6 +109,9 @@ class CodegenCompileSpec extends AnyFunSuite {
     "pack_2b" -> Pack2bRefDosage(ref(0, genoT)),
     "unpack_2b" -> Unpack2bDosage(ref(6, BinaryType), Literal(4)),
     "geno_stats_packed" -> GenoStatsPacked(ref(6, BinaryType), Literal(4)),
+    "geno_stats_raw/table" -> GenoStatsRaw(ref(14, BinaryType), Literal(1)),
+    "geno_stats_raw/planes2" ->
+      GenoStatsRaw(ref(15, BinaryType), Literal(4L)),
     "code_count_packed/het" ->
       CodeCountPacked(ref(6, BinaryType), Literal(4), 1),
     "code_count_packed/miss" ->

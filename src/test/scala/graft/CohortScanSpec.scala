@@ -11,7 +11,8 @@ import graft.sources.gds.GdsWrite
 
 /** Cohort-width scans without fixtures: the gds source's genotype-call
   * split floor, the partition bound of a pushed-filter scan, and one
-  * GenoStats kernel per row in the AF, missing-rate and filter plans.
+  * GenoStats kernel per row in the AF, missing-rate and filter plans (the
+  * planes kernel, GenoStatsRaw, over a gds relation).
   * Containers are written with [[GdsWrite]]. */
 class CohortScanSpec extends AnyFunSuite {
 
@@ -87,11 +88,21 @@ class CohortScanSpec extends AnyFunSuite {
       expect)
   }
 
-  /** GenoStats kernel call sites in the generated code (the `$` after
-    * the name keeps GenoStatsPacked out). */
-  private def kernels(df: DataFrame): Int =
-    "GenoStats\\$\\.MODULE\\$".r
+  /** Call sites of a kernel in the generated code (the `$` after the
+    * name keeps GenoStatsPacked and GenoStatsRaw out of GenoStats). */
+  private def calls(kernel: String, df: DataFrame): Int =
+    (kernel + "\\$\\.MODULE\\$").r
       .findAllIn(codegenString(df.queryExecution.executedPlan)).size
+  private def kernels(df: DataFrame): Int = calls("GenoStats", df)
+  private def rawKernels(df: DataFrame): Int = calls("GenoStatsRaw", df)
+
+  /** The relation's rows copied into an RDD-backed frame: no gds relation
+    * is left under its `geno`, so GenoStats over it is never rewritten
+    * to the planes kernel and serves as the independent oracle. */
+  private def copied(path: String): DataFrame = {
+    val df = gds(path)
+    spark.createDataFrame(df.rdd, df.schema)
+  }
 
   /** The formulation the scans used before: `when`-guarded divisions and
     * an inline filter predicate. */
@@ -121,14 +132,17 @@ class CohortScanSpec extends AnyFunSuite {
     val af = sv.alleleFreq(0)
     val miss = sv.missing()
     val cond = sv.setFilterCond(minMaf = 0.05, maxMissing = 0.1).variants
-    assert(kernels(af) == 1)
-    assert(kernels(miss) == 1)
-    assert(kernels(cond) == 1)
-    // the former formulations, for contrast and as the value oracle
-    assert(kernels(gds(wide).select(guardedAf(col("geno")))) == 3)
-    assert(kernels(inlineCond(gds(wide), 0.05, 0.1)) == 8)
+    // over a gds relation the one kernel is the planes kernel
+    for (df <- Seq(af, miss, cond)) {
+      assert(rawKernels(df) == 1)
+      assert(kernels(df) == 0)
+    }
+    // the former formulations, for contrast and as the value oracle, over
+    // rows copied out of the relation
+    val geno = copied(wide)
+    assert(kernels(geno.select(guardedAf(col("geno")))) == 3)
+    assert(kernels(inlineCond(geno, 0.05, 0.1)) == 8)
 
-    val geno = gds(wide)
     assert(sameRows(af, geno.select(col("variant_id"),
       guardedAf(col("geno")).as("af"))))
     assert(sameRows(miss, geno.select(col("variant_id"),

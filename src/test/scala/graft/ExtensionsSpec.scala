@@ -22,6 +22,38 @@ class ExtensionsSpec extends AnyFunSuite {
       .getOrCreate()
   }
 
+  test("a session built without withExtensions loads the extensions " +
+      "through ServiceLoader") {
+    import org.apache.spark.sql.functions.col
+    // a fresh session, configured with neither withExtensions nor
+    // spark.sql.extensions
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    val plain = SparkSession.builder()
+      .master("local[2]")
+      .appName("graft-plain")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    assert(plain.conf.getOption("spark.sql.extensions").isEmpty)
+    val st = plain.sql("SELECT geno_stats(array(array(0L, 1L)), 0) AS st")
+      .collect()(0).getSeq[Long](0)
+    assert(st == Seq(2L, 2L, 1L, 0L, 0L))
+    import plain.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_ext")
+      .toString + "/c.gds"
+    graft.sources.gds.GdsWrite.write(
+      Seq((1L, "1", 100, "A,G", Seq(Seq(0L, 1L), Seq(1L, 1L))))
+        .toDF("variant_id", "chrom", "pos", "allele", "geno"),
+      Seq("S0", "S1"), path, "ZIP_ra")
+    plain.read.format("gds").load(path).createOrReplaceTempView("cohort")
+    val q = plain.sql("SELECT variant_id, geno_stats(geno, 0) AS st FROM cohort")
+    val optimized = q.queryExecution.optimizedPlan
+    assert(optimized.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.functions.expressions.GenoStatsRaw]))), optimized)
+    assert(q.select(col("st")).collect()(0).getSeq[Long](0) ==
+      Seq(4L, 4L, 1L, 0L, 0L))
+  }
+
   test("custom kernels callable from SQL") {
     val r = spark.sql(
       """SELECT

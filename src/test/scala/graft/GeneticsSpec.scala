@@ -21,67 +21,71 @@ class GeneticsSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  // 3 samples, diploid: (0/1), (./1), (0/0)
-  private def genoDf = {
-    import spark.implicits._
-    Seq(
+  // 3 samples, diploid: (0/1), (./1), (0/0); as a local and an
+  // RDD-backed frame, so both the interpreted and the generated kernel
+  // produce the golden values
+  private def genoDfs = FrameModes.frames(spark, Seq(
       (1L, Seq(Seq[java.lang.Long](0L, 1L), Seq[java.lang.Long](null, 1L),
         Seq[java.lang.Long](0L, 0L)), Seq(false, false, true)),
       (2L, Seq(Seq[java.lang.Long](null, null), Seq[java.lang.Long](2L, 1L),
-        Seq[java.lang.Long](1L, 1L)), Seq(true, false, false))
-    ).toDF("vid", "geno", "phased")
-  }
+        Seq[java.lang.Long](1L, 1L)), Seq(true, false, false))),
+    "vid", "geno", "phased")
 
   test("allele freq / count / missing golden values") {
-    val r = genoDf.select(col("vid"),
-        nCalledAlleles(col("geno")).as("called"),
-        alleleCount(col("geno"), lit(0)).as("ac0"),
-        alleleFreq(col("geno"), lit(0)).as("af0"),
-        missingRate(col("geno")).as("miss"))
-      .orderBy("vid").collect()
-    assert(r(0).getLong(1) == 5)
-    assert(r(0).getLong(2) == 3)
-    assert(math.abs(r(0).getDouble(3) - 3.0 / 5) < 1e-12)
-    assert(math.abs(r(0).getDouble(4) - 1.0 / 6) < 1e-12)
-    assert(r(1).getLong(1) == 4)
-    assert(r(1).getLong(2) == 0)
-    assert(r(1).getDouble(3) == 0.0)
-    assert(math.abs(r(1).getDouble(4) - 2.0 / 6) < 1e-12)
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"),
+          nCalledAlleles(col("geno")).as("called"),
+          alleleCount(col("geno"), lit(0)).as("ac0"),
+          alleleFreq(col("geno"), lit(0)).as("af0"),
+          missingRate(col("geno")).as("miss"))
+        .orderBy("vid").collect()
+      assert(r(0).getLong(1) == 5, mode)
+      assert(r(0).getLong(2) == 3, mode)
+      assert(math.abs(r(0).getDouble(3) - 3.0 / 5) < 1e-12, mode)
+      assert(math.abs(r(0).getDouble(4) - 1.0 / 6) < 1e-12, mode)
+      assert(r(1).getLong(1) == 4, mode)
+      assert(r(1).getLong(2) == 0, mode)
+      assert(r(1).getDouble(3) == 0.0, mode)
+      assert(math.abs(r(1).getDouble(4) - 2.0 / 6) < 1e-12, mode)
+    }
   }
 
   test("dosage alt with missing → null") {
-    val r = genoDf.select(col("vid"), dosageAlt(col("geno")).as("dos"))
-      .orderBy("vid").collect()
-    assert(r(0).getSeq[Any](1) == Seq(1L, null, 0L))
-    assert(r(1).getSeq[Any](1) == Seq(null, 2L, 2L))
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"), dosageAlt(col("geno")).as("dos"))
+        .orderBy("vid").collect()
+      assert(r(0).getSeq[Any](1) == Seq(1L, null, 0L), mode)
+      assert(r(1).getSeq[Any](1) == Seq(null, 2L, 2L), mode)
+    }
   }
 
   test("dosage_alt2 counts through partial missingness") {
     // (./1) contributes its known alt; only (./.) is null
-    for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
-      spark.conf.set("spark.sql.codegen.factoryMode", mode)
-      try {
-        val r = genoDf.select(col("vid"), dosageAlt2(col("geno")).as("dos"))
-          .orderBy("vid").collect()
-        assert(r(0).getSeq[Any](1) == Seq(1L, 1L, 0L), mode)
-        assert(r(1).getSeq[Any](1) == Seq(null, 2L, 2L), mode)
-      } finally spark.conf.unset("spark.sql.codegen.factoryMode")
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"), dosageAlt2(col("geno")).as("dos"))
+        .orderBy("vid").collect()
+      assert(r(0).getSeq[Any](1) == Seq(1L, 1L, 0L), mode)
+      assert(r(1).getSeq[Any](1) == Seq(null, 2L, 2L), mode)
     }
   }
 
   test("per-sample missing counts") {
-    val r = genoDf.select(col("vid"), missPerSample(col("geno")).as("mc"))
-      .orderBy("vid").collect()
-    assert(r(0).getSeq[Int](1) == Seq(0, 1, 0))
-    assert(r(1).getSeq[Int](1) == Seq(2, 0, 0))
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"), missPerSample(col("geno")).as("mc"))
+        .orderBy("vid").collect()
+      assert(r(0).getSeq[Int](1) == Seq(0, 1, 0), mode)
+      assert(r(1).getSeq[Int](1) == Seq(2, 0, 0), mode)
+    }
   }
 
   test("GT strings honor phase and missing") {
-    val r = genoDf.select(col("vid"),
-        gtStrings(col("geno"), col("phased"), ";").as("gts"))
-      .orderBy("vid").collect()
-    assert(r(0).getString(1) == "0/1;./1;0|0")
-    assert(r(1).getString(1) == ".|.;2/1;1/1")
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"),
+          gtStrings(col("geno"), col("phased"), ";").as("gts"))
+        .orderBy("vid").collect()
+      assert(r(0).getString(1) == "0/1;./1;0|0", mode)
+      assert(r(1).getString(1) == ".|.;2/1;1/1", mode)
+    }
   }
 
   test("codegen kernels == declarative HOF reference, both execution modes") {
@@ -107,29 +111,35 @@ class GeneticsSpec extends AnyFunSuite {
   }
 
   test("null sample arrays: stats count a missing call, gt renders dot") {
-    import spark.implicits._
-    val df = Seq(
-      (1L, Seq(Seq[java.lang.Long](0L, 1L), null), Seq(false, false))
-    ).toDF("vid", "geno", "phased")
-    val r = df.select(
-      genoStats(col("geno"), lit(0)).as("st"),
-      missPerSample(col("geno")).as("mc"),
-      gtStrings(col("geno"), col("phased"), ";").as("gts")).collect()(0)
-    assert(r.getSeq[Long](0) == Seq(2L, 2L, 1L, 1L, 0L))
-    assert(r.getSeq[Int](1) == Seq(0, -1))
-    assert(r.getString(2) == "0/1;.")
+    for ((mode, df) <- FrameModes.frames(spark, Seq(
+        (1L, Seq(Seq[java.lang.Long](0L, 1L), null), Seq(false, false)),
+        (2L, null, null)),
+        "vid", "geno", "phased")) {
+      val rs = df.orderBy("vid").select(
+        genoStats(col("geno"), lit(0)).as("st"),
+        missPerSample(col("geno")).as("mc"),
+        gtStrings(col("geno"), col("phased"), ";").as("gts")).collect()
+      val r = rs(0)
+      assert(r.getSeq[Long](0) == Seq(2L, 2L, 1L, 1L, 0L), mode)
+      assert(r.getSeq[Int](1) == Seq(0, -1), mode)
+      assert(r.getString(2) == "0/1;.", mode)
+      // a null genotype row stays null through every kernel
+      assert((0 until 3).forall(rs(1).isNullAt), mode)
+    }
   }
 
   test("2-bit codec round-trips and packs 4 samples per byte") {
-    val r = genoDf.select(col("vid"),
-        unpack2b(pack2b(col("geno")), lit(3)).as("d"),
-        octet_length(pack2b(col("geno"))).as("nb"))
-      .orderBy("vid").collect()
-    // (0/1), (./1), (0/0) → ref dosages 1, null, 2
-    assert(r(0).getSeq[Any](1) == Seq(1, null, 2))
-    // (./.), (2/1), (1/1) → null, 0, 0
-    assert(r(1).getSeq[Any](1) == Seq(null, 0, 0))
-    assert(r.forall(_.getInt(2) == 1))
+    for ((mode, genoDf) <- genoDfs) {
+      val r = genoDf.select(col("vid"),
+          unpack2b(pack2b(col("geno")), lit(3)).as("d"),
+          octet_length(pack2b(col("geno"))).as("nb"))
+        .orderBy("vid").collect()
+      // (0/1), (./1), (0/0) → ref dosages 1, null, 2
+      assert(r(0).getSeq[Any](1) == Seq(1, null, 2), mode)
+      // (./.), (2/1), (1/1) → null, 0, 0
+      assert(r(1).getSeq[Any](1) == Seq(null, 0, 0), mode)
+      assert(r.forall(_.getInt(2) == 1), mode)
+    }
   }
 
   test("allele string parsing") {

@@ -9,6 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.genetics._
 import graft.HofTwins._
 import graft.functions.textfns._
+import graft.FrameModes.frames
 
 /** Property-based differential tests: random genotype cubes and documents
   * through BOTH the codegen kernels and their declarative HOF oracles (or,
@@ -38,32 +39,31 @@ class KernelPropertySpec extends AnyFunSuite {
   } yield cube.map(_.toSeq).toSeq
 
   test("genotype kernels agree with HOF oracles on random cubes") {
-    import spark.implicits._
     for (round <- 1 to 6) {
       val cubes = (1 to 50).map(i =>
         draw(cubeGen(Gen.choose(1, 3)), round * 1000L + i))
-      val df = cubes.zipWithIndex.map { case (g, i) =>
+      val rows = cubes.zipWithIndex.map { case (g, i) =>
         (i.toLong, g, g.indices.map(_ % 2 == 0)) }
-        .toDF("vid", "geno", "phased")
-      val bad = df.select(
-          nCalledAlleles(col("geno")).as("a1"),
-          nCalledAllelesHof(col("geno")).cast("long").as("b1"),
-          alleleCount(col("geno"), lit(1)).as("a2"),
-          alleleCountHof(col("geno"), lit(1)).cast("long").as("b2"),
-          dosageAlt(col("geno")).as("a3"),
-          dosageAltHof(col("geno")).cast("array<long>").as("b3"),
-          gtStrings(col("geno"), col("phased"), ";").as("a4"),
-          gtStringsHof(col("geno"), col("phased"), ";").as("b4"))
-        .filter(col("a1") =!= col("b1") || col("a2") =!= col("b2") ||
-          !(col("a3") === col("b3")) || col("a4") =!= col("b4"))
-        .count()
-      assert(bad == 0, s"round=$round")
+      for ((mode, df) <- frames(spark, rows, "vid", "geno", "phased")) {
+        val bad = df.select(
+            nCalledAlleles(col("geno")).as("a1"),
+            nCalledAllelesHof(col("geno")).cast("long").as("b1"),
+            alleleCount(col("geno"), lit(1)).as("a2"),
+            alleleCountHof(col("geno"), lit(1)).cast("long").as("b2"),
+            dosageAlt(col("geno")).as("a3"),
+            dosageAltHof(col("geno")).cast("array<long>").as("b3"),
+            gtStrings(col("geno"), col("phased"), ";").as("a4"),
+            gtStringsHof(col("geno"), col("phased"), ";").as("b4"))
+          .filter(col("a1") =!= col("b1") || col("a2") =!= col("b2") ||
+            !(col("a3") === col("b3")) || col("a4") =!= col("b4"))
+          .count()
+        assert(bad == 0, s"$mode round=$round")
+      }
     }
   }
 
   test("group counts and f2 carriers agree with Seq references on random " +
       "cubes") {
-    import spark.implicits._
     // null calls and short (haploid) calls next to diploid/triploid ones
     val callGen: Gen[Seq[java.lang.Long]] = Gen.frequency(
       (6, Gen.choose(1, 3).flatMap(p => Gen.listOfN(p, alleleGen))
@@ -105,12 +105,7 @@ class KernelPropertySpec extends AnyFunSuite {
     for (round <- 1 to 6) {
       val rows = (1 to 50).map(i => draw(rowGen, 8100L * round + i))
       val data = rows.zipWithIndex.map { case ((g, d), i) => (i.toLong, g, d) }
-      // a local frame's projection is evaluated interpreted; an RDD's
-      // runs in generated code
-      for ((mode, df) <- Seq(
-          "interpreted" -> data.toDF("vid", "geno", "d"),
-          "codegen" -> spark.sparkContext.parallelize(data, 2)
-            .toDF("vid", "geno", "d"))) {
+      for ((mode, df) <- frames(spark, data, "vid", "geno", "d")) {
         df.select(cols: _*).collect().foreach { r =>
           val (g, d) = rows(r.getLong(0).toInt)
           val got = (1 until r.length).map(r.getSeq[Long](_))
@@ -122,64 +117,140 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
-  test("2-bit codec: unpack∘pack == ref dosage on random diploid cubes") {
+  test("geno_stats over stored gds planes == GenoStats over the copied " +
+      "rows, random containers, both execution modes") {
     import spark.implicits._
+    import graft.functions.expressions.GenoStatsRaw
+    val nullCode = null.asInstanceOf[java.lang.Long]
+    // `len` alleles with codes 0..maxCode and partial missingness; a call
+    // shorter than the file's ploidy is padded missing (haploid calls in a
+    // diploid file), and a code of 3 or 4 puts a site on two planes
+    def callGen(len: Gen[Int], maxCode: Long): Gen[Seq[java.lang.Long]] =
+      len.flatMap(n => Gen.listOfN(n, Gen.frequency(
+        (6, Gen.choose(0L, maxCode).map(java.lang.Long.valueOf)),
+        (1, Gen.const(nullCode)))).map(_.toSeq))
+    def siteGen(nS: Int, ploidy: Int, full: Boolean) = for {
+      maxCode <- Gen.oneOf(1L, 2L, 4L)
+      len = if (full) Gen.const(ploidy)
+        else Gen.frequency((8, Gen.const(ploidy)), (1, Gen.choose(1, ploidy)))
+      row <- Gen.listOfN(nS, callGen(len, maxCode))
+    } yield (maxCode, row.toSeq)
+    val fileGen = for {
+      nS <- Gen.frequency((4, Gen.choose(1, 9)), (1, Gen.choose(30, 70)))
+      ploidy <- Gen.frequency((4, Gen.const(2)), (1, Gen.const(1)),
+        (1, Gen.const(3)))
+      nVar <- Gen.choose(5, 30)
+      // the first site fixes the container ploidy, so its calls are full
+      first <- siteGen(nS, ploidy, full = true)
+      rest <- Gen.listOfN(nVar - 1, siteGen(nS, ploidy, full = false))
+      n <- Gen.choose(1, nS)
+      sel <- Gen.pick(n, 0 until nS)
+    } yield (nS, first +: rest, new scala.util.Random(nS).shuffle(sel.toSeq))
+    def planes(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.optimizedPlan.exists(
+        _.expressions.exists(_.exists(_.isInstanceOf[GenoStatsRaw])))
+    val ks = -1 to 5
+    def stats(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("variant_id") +:
+        ks.map(k => genoStats(col("geno"), lit(k))): _*)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) ->
+        (1 to ks.size).map(r.getSeq[Long](_))).toMap
+    val alleles = Map(1L -> "A,G", 2L -> "A,C,G", 4L -> "A,C,G,T,AT")
+    for (round <- 1 to 10) {
+      val (nS, sites, sel) = draw(fileGen, 51000L + round)
+      val path = java.nio.file.Files.createTempDirectory("graft_planes")
+        .toString + "/r.gds"
+      graft.sources.gds.GdsWrite.write(
+        sites.zipWithIndex.map { case ((maxCode, row), v) =>
+          (v + 1L, "1", (v + 1) * 10, alleles(maxCode), row)
+        }.toDF("variant_id", "chrom", "pos", "allele", "geno"),
+        (0 until nS).map(i => s"S$i"), path, "ZIP_ra")
+      for ((what, rel) <- Seq(
+          "all" -> spark.read.format("gds").load(path),
+          s"samples=${sel.mkString(",")}" -> spark.read.format("gds")
+            .option("samples", sel.mkString(",")).load(path))) {
+        val copy = spark.createDataFrame(rel.rdd, rel.schema)
+        for ((mode, wholeStage, factory) <- Seq(
+            ("interpreted", "false", "NO_CODEGEN"),
+            ("codegen", "true", "CODEGEN_ONLY"))) {
+          spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+          spark.conf.set("spark.sql.codegen.factoryMode", factory)
+          try {
+            val got = stats(rel)
+            val want = stats(copy)
+            val ctx = s"$mode round=$round nS=$nS $what"
+            assert(planes(got) && !planes(want), ctx)
+            assert(rows(got) == rows(want), ctx)
+          } finally {
+            spark.conf.unset("spark.sql.codegen.wholeStage")
+            spark.conf.unset("spark.sql.codegen.factoryMode")
+          }
+        }
+      }
+    }
+  }
+
+  test("2-bit codec: unpack∘pack == ref dosage on random diploid cubes") {
     for (round <- 1 to 6) {
       val cubes = (1 to 50).map(i =>
         draw(cubeGen(Gen.const(2)), 7000L * round + i))
-      val df = cubes.zipWithIndex.map { case (g, i) => (i.toLong, g) }
-        .toDF("vid", "geno")
-      val bad = df.select(
-          unpack2b(pack2b(col("geno")), size(col("geno"))).as("up"),
-          dosageRef(col("geno")).cast("array<int>").as("dr"))
-        .filter(!(col("up") === col("dr"))).count()
-      assert(bad == 0, s"round=$round")
+      val rows = cubes.zipWithIndex.map { case (g, i) => (i.toLong, g) }
+      for ((mode, df) <- frames(spark, rows, "vid", "geno")) {
+        val bad = df.select(
+            unpack2b(pack2b(col("geno")), size(col("geno"))).as("up"),
+            dosageRef(col("geno")).cast("array<int>").as("dr"))
+          .filter(!(col("up") === col("dr"))).count()
+        assert(bad == 0, s"$mode round=$round")
+      }
     }
   }
 
   test("code_count_packed == unpack-and-count on random diploid cubes") {
-    import spark.implicits._
     for (round <- 1 to 4) {
       val cubes = (1 to 50).map(i =>
         draw(cubeGen(Gen.const(2)), 9100L * round + i))
-      val df = cubes.zipWithIndex.map { case (g, i) => (i.toLong, g) }
-        .toDF("vid", "geno")
-        .select(pack2b(col("geno")).as("pg"), size(col("geno")).as("n"))
-      // the kernel's 4 class counts vs counting the HOF-unpacked codes
-      // (null = missing = code 3); widths here exercise the partial-byte
-      // tail path the per-byte tables skip
-      val bad = df.select((0 to 3).map { c =>
-          (codeCountPacked(col("pg"), col("n"), c) =!=
-            size(filter(unpack2b(col("pg"), col("n")), x =>
-              if (c == 3) x.isNull else x === c))).as(s"bad$c")
-        }: _*)
-        .filter((0 to 3).map(c => col(s"bad$c")).reduce(_ || _)).count()
-      assert(bad == 0, s"round=$round")
+      val rows = cubes.zipWithIndex.map { case (g, i) => (i.toLong, g) }
+      for ((mode, in) <- frames(spark, rows, "vid", "geno")) {
+        val df = in
+          .select(pack2b(col("geno")).as("pg"), size(col("geno")).as("n"))
+        // the kernel's 4 class counts vs counting the HOF-unpacked codes
+        // (null = missing = code 3); widths here exercise the partial-byte
+        // tail path the per-byte tables skip
+        val bad = df.select((0 to 3).map { c =>
+            (codeCountPacked(col("pg"), col("n"), c) =!=
+              size(filter(unpack2b(col("pg"), col("n")), x =>
+                if (c == 3) x.isNull else x === c))).as(s"bad$c")
+          }: _*)
+          .filter((0 to 3).map(c => col(s"bad$c")).reduce(_ || _)).count()
+        assert(bad == 0, s"$mode round=$round")
+      }
     }
   }
 
   test("round-4 kernels agree with HOF oracles on random inputs") {
-    import spark.implicits._
     import graft.functions.vectorfns.srpBucket
     // sample_cells: arbitrary ragged cubes + a per-sample field column
     for (round <- 1 to 4) {
       val cubes = (1 to 40).map(i =>
         draw(cubeGen(Gen.choose(1, 3)), 11000L * round + i))
-      val df = cubes.zipWithIndex.map { case (g, i) =>
+      val rows = cubes.zipWithIndex.map { case (g, i) =>
         (i.toLong, g, g.indices.map(_ % 2 == 0),
           g.indices.map(s => if ((i + s) % 4 == 0) null else s"f$s"))
-      }.toDF("vid", "geno", "phased", "fld")
+      }
       val gtArr = split(gtStrings(col("geno"), col("phased"), "\t"), "\t")
       val oracle = array_join(
         transform(sequence(lit(1), size(col("geno"))), i =>
           concat(element_at(gtArr, i), lit(":"),
             coalesce(element_at(col("fld"), i), lit(".")))), "\t")
-      val bad = df.select(
-          sampleCells(col("geno"), col("phased"), "\t",
-            Seq(col("fld"))).as("a"),
-          oracle.as("b"))
-        .filter(col("a") =!= col("b")).count()
-      assert(bad == 0, s"sample_cells round=$round")
+      for ((mode, df) <- frames(spark, rows, "vid", "geno", "phased", "fld")) {
+        val bad = df.select(
+            sampleCells(col("geno"), col("phased"), "\t",
+              Seq(col("fld"))).as("a"),
+            oracle.as("b"))
+          .filter(col("a") =!= col("b")).count()
+        assert(bad == 0, s"sample_cells $mode round=$round")
+      }
     }
     // srp_bucket: random null-free quantized vectors (non-empty — the
     // HOF oracle's sequence(1, size) steps backwards on size 0), all 4
@@ -188,46 +259,48 @@ class KernelPropertySpec extends AnyFunSuite {
       Gen.listOfN(n, Gen.choose(-1000L, 1000L)))
     for (round <- 1 to 4) {
       val vecs = (1 to 60).map(i => draw(vecGen, 13000L * round + i))
-      val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
-        .toDF("id", "qv")
-      val bad = df.select(
-          (0 until 4).map(t => (srpBucket(col("qv"), 16, t) =!=
-            srpBucketHof(col("qv"), 16, t)).as(s"d$t")): _*)
-        .filter((0 until 4).map(t => col(s"d$t")).reduce(_ || _)).count()
-      assert(bad == 0, s"srp round=$round")
+      val rows = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      for ((mode, df) <- frames(spark, rows, "id", "qv")) {
+        val bad = df.select(
+            (0 until 4).map(t => (srpBucket(col("qv"), 16, t) =!=
+              srpBucketHof(col("qv"), 16, t)).as(s"d$t")): _*)
+          .filter((0 until 4).map(t => col(s"d$t")).reduce(_ || _)).count()
+        assert(bad == 0, s"srp $mode round=$round")
+      }
     }
     // minhash_sig: random shingle sets incl. empty
     val shingleGen = Gen.choose(0, 25).flatMap(n => Gen.listOfN(n,
       Gen.oneOf("a b c", "b c d", "x y z", "q w e", "spark sql x")))
     for (round <- 1 to 4) {
       val sets = (1 to 60).map(i => draw(shingleGen, 17000L * round + i))
-      val df = sets.zipWithIndex.map { case (s, i) => (i.toLong, s) }
-        .toDF("id", "sh")
-      val bad = df.select(
-          minhashSignature(col("sh"), 8).as("a"),
-          minhashSignatureHof(col("sh"), 8).as("b"))
-        .filter(!(col("a") === col("b"))).count()
-      assert(bad == 0, s"minhash round=$round")
+      val rows = sets.zipWithIndex.map { case (s, i) => (i.toLong, s) }
+      for ((mode, df) <- frames(spark, rows, "id", "sh")) {
+        val bad = df.select(
+            minhashSignature(col("sh"), 8).as("a"),
+            minhashSignatureHof(col("sh"), 8).as("b"))
+          .filter(!(col("a") === col("b"))).count()
+        assert(bad == 0, s"minhash $mode round=$round")
+      }
     }
   }
 
   test("text kernels agree with HOF oracles on random token soup") {
-    import spark.implicits._
     val word = Gen.oneOf("spark", "sort", "a", "b", "xy", "zq", "data")
     val textGen = Gen.choose(0, 30)
       .flatMap(n => Gen.listOfN(n, word).map(_.mkString(" ")))
     for (round <- 1 to 6) {
       val texts = (1 to 60).map(i => draw(textGen, 9000L * round + i))
-      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("id", "text")
-      val bad = df.select(
-          shingles(col("text"), 3).as("a1"),
-          wordShingles(tokens(col("text")), 3).as("b1"),
-          simhash16Text(col("text")).as("a2"),
-          simhash16(tokens(col("text"))).as("b2"))
-        .filter(!(col("a1") === col("b1")) || col("a2") =!= col("b2"))
-        .count()
-      assert(bad == 0, s"round=$round")
+      val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      for ((mode, df) <- frames(spark, rows, "id", "text")) {
+        val bad = df.select(
+            shingles(col("text"), 3).as("a1"),
+            wordShingles(tokens(col("text")), 3).as("b1"),
+            simhash16Text(col("text")).as("a2"),
+            simhash16(tokens(col("text"))).as("b2"))
+          .filter(!(col("a1") === col("b1")) || col("a2") =!= col("b2"))
+          .count()
+        assert(bad == 0, s"$mode round=$round")
+      }
     }
   }
 
@@ -288,7 +361,6 @@ class KernelPropertySpec extends AnyFunSuite {
   }
 
   test("PQ/LD kernels agree with HOF oracles on random vectors") {
-    import spark.implicits._
     import graft.functions.vectorfns._
     // l2 + pq: null-free vectors (the pipeline never produces null
     // components; the HOF twins propagate nulls differently by design)
@@ -302,15 +374,16 @@ class KernelPropertySpec extends AnyFunSuite {
           draw(vecGen, 22000L * round + i),
           draw(cbGen, 23000L * round + i))
       }
-      val df = rows.toDF("id", "va", "vb", "cbs")
-      val bad = df.select(
-          l2Long(col("va"), col("vb")).as("a1"),
-          l2LongHof(col("va"), col("vb")).as("b1"),
-          pqEncode(col("va"), col("cbs"), m, dsub).as("a2"),
-          pqEncodeHof(col("va"), col("cbs"), m, dsub).as("b2"))
-        .filter(col("a1") =!= col("b1") || !(col("a2") === col("b2")))
-        .count()
-      assert(bad == 0, s"pq round=$round")
+      for ((mode, df) <- frames(spark, rows, "id", "va", "vb", "cbs")) {
+        val bad = df.select(
+            l2Long(col("va"), col("vb")).as("a1"),
+            l2LongHof(col("va"), col("vb")).as("b1"),
+            pqEncode(col("va"), col("cbs"), m, dsub).as("a2"),
+            pqEncodeHof(col("va"), col("cbs"), m, dsub).as("b2"))
+          .filter(col("a1") =!= col("b1") || !(col("a2") === col("b2")))
+          .count()
+        assert(bad == 0, s"pq $mode round=$round")
+      }
     }
     // adc: per-row distance tables + in-range codes
     val dtabGen = Gen.listOfN(m, Gen.choose(2, 4).flatMap(k =>
@@ -322,12 +395,13 @@ class KernelPropertySpec extends AnyFunSuite {
           (i + j) % r.length }
         (i.toLong, dtab, codes)
       }
-      val df = rows.toDF("id", "dtab", "codes")
-      val bad = df.select(
-          pqAdc(col("dtab"), col("codes")).as("a"),
-          pqAdcHof(col("dtab"), col("codes")).as("b"))
-        .filter(col("a") =!= col("b")).count()
-      assert(bad == 0, s"adc round=$round")
+      for ((mode, df) <- frames(spark, rows, "id", "dtab", "codes")) {
+        val bad = df.select(
+            pqAdc(col("dtab"), col("codes")).as("a"),
+            pqAdcHof(col("dtab"), col("codes")).as("b"))
+          .filter(col("a") =!= col("b")).count()
+        assert(bad == 0, s"adc $mode round=$round")
+      }
     }
     // ld_pair_stats: nullable dosage-like vectors (the kernel's whole
     // point is the both-non-null pairwise-complete rule)
@@ -340,17 +414,22 @@ class KernelPropertySpec extends AnyFunSuite {
         (i.toLong, draw(dvGen, 41000L * round + i).toSeq,
           draw(dvGen, 42000L * round + i).toSeq)
       }
-      val df = rows.toDF("id", "da", "db")
-      val bad = df.select(
-          ldPairStats(col("da"), col("db")).as("a"),
-          ldPairStatsHof(col("da"), col("db")).as("b"))
-        .filter(!(col("a") === col("b"))).count()
-      assert(bad == 0, s"ld round=$round")
+      for ((mode, df) <- frames(spark, rows, "id", "da", "db")) {
+        val bad = df.select(
+            ldPairStats(col("da"), col("db")).as("a"),
+            ldPairStatsHof(col("da"), col("db")).as("b"))
+          .filter(!(col("a") === col("b"))).count()
+        assert(bad == 0, s"ld $mode round=$round")
+      }
     }
   }
 
+  private def byId(df: org.apache.spark.sql.DataFrame,
+      c: org.apache.spark.sql.Column): Map[Long, Seq[Any]] =
+    df.select(col("id"), c).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Any](1)).toMap
+
   test("cdc_chunks kernel agrees with its HOF oracle on random ASCII") {
-    import spark.implicits._
     // same ASCII regime as the winnow test; small d forces many cuts,
     // lengths straddle both the empty-text and the n<k single-chunk edges
     val charGen = Gen.choose(32, 126).map(_.toChar)
@@ -358,19 +437,19 @@ class KernelPropertySpec extends AnyFunSuite {
       .flatMap(n => Gen.listOfN(n, charGen).map(_.mkString))
     for (round <- 1 to 6) {
       val texts = (1 to 80).map(i => draw(textGen, 15000L * round + i))
-      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("id", "text")
-      val bad = df.select(
-          cdcChunks(col("text"), 8, 4).as("a"),
-          cdcChunksHof(col("text"), 8, 4).as("b"))
-        .filter(!(col("a") === col("b")))
-        .count()
-      assert(bad == 0, s"cdc round=$round")
+      val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      val dfs = frames(spark, rows, "id", "text")
+      // the HOF twin re-evaluates its captured arrays inside each lambda
+      // call, so its oracle runs once, over the local frame; the kernel
+      // runs over both
+      val want = byId(dfs.head._2, cdcChunksHof(col("text"), 8, 4))
+      for ((mode, df) <- dfs)
+        assert(byId(df, cdcChunks(col("text"), 8, 4)) == want,
+          s"cdc $mode round=$round")
     }
   }
 
   test("winnow_fps kernel agrees with its HOF oracle on random ASCII") {
-    import spark.implicits._
     // printable ASCII (the HOF twin indexes UTF-16 chars; the kernel walks
     // code points — identical off the supplementary planes, and the corpus
     // is ASCII); lengths straddle the k+w-1 empty-result boundary
@@ -379,14 +458,15 @@ class KernelPropertySpec extends AnyFunSuite {
       .flatMap(n => Gen.listOfN(n, charGen).map(_.mkString))
     for (round <- 1 to 6) {
       val texts = (1 to 80).map(i => draw(textGen, 13000L * round + i))
-      val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-        .toDF("id", "text")
-      val bad = df.select(
-          winnowFps(col("text"), 8, 4).as("a"),
-          winnowFpsHof(col("text"), 8, 4).as("b"))
-        .filter(!(col("a") === col("b")))
-        .count()
-      assert(bad == 0, s"winnow round=$round")
+      val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      val dfs = frames(spark, rows, "id", "text")
+      // the HOF twin re-evaluates its captured arrays inside each lambda
+      // call, so its oracle runs once, over the local frame; the kernel
+      // runs over both
+      val want = byId(dfs.head._2, winnowFpsHof(col("text"), 8, 4))
+      for ((mode, df) <- dfs)
+        assert(byId(df, winnowFps(col("text"), 8, 4)) == want,
+          s"winnow $mode round=$round")
     }
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.SimpleMode
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan-shape regression tests: the scale-critical physical-plan properties
@@ -880,5 +882,77 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("CartesianProduct"), p)
     assert(!p.contains("SortMergeJoin"), p)
     assert("Exchange hashpartitioning\\(__k".r.findAllIn(p).size == 1, p)
+  }
+
+  // ---- genotype stats over the stored 2-bit planes ----------------------
+
+  /** 40 biallelic diploid variants × 6 samples with partial missing
+    * calls, written by GdsWrite; with `extra`, sample 0's call at variant
+    * 3 carries a third allele, which lands in `genotype/extra`. */
+  private def cohortGds(extra: Boolean): String = {
+    import spark.implicits._
+    val rows = (1 to 40).map { v =>
+      (v.toLong, "1", v * 100, "A,G", (0 until 6).map { s =>
+        val call = Seq[java.lang.Long]((v + s) % 2L,
+          if ((v * s) % 7 == 3) null else java.lang.Long.valueOf(1L))
+        if (extra && v == 3 && s == 0) call :+ java.lang.Long.valueOf(0L)
+        else call
+      })
+    }
+    val out = java.nio.file.Files.createTempDirectory("graft_planes")
+      .toString + "/c.gds"
+    graft.sources.gds.GdsWrite.write(
+      rows.toDF("variant_id", "chrom", "pos", "allele", "geno"),
+      (0 until 6).map(i => s"S$i"), out, "ZIP_ra")
+    out
+  }
+  private lazy val planesGds = cohortGds(extra = false)
+
+  private def has(df: DataFrame, p: Expression => Boolean) =
+    df.queryExecution.optimizedPlan.exists(_.expressions.exists(_.exists(p)))
+  private def planesKernel(df: DataFrame) =
+    has(df, _.isInstanceOf[graft.functions.expressions.GenoStatsRaw])
+  private def genoStatsKernel(df: DataFrame) =
+    has(df, _.isInstanceOf[graft.functions.expressions.GenoStats])
+  private def scanColumns(df: DataFrame): Seq[Seq[String]] =
+    df.queryExecution.optimizedPlan.collect {
+      case s: DataSourceV2ScanRelation => s.output.map(_.name)
+    }
+
+  test("gds: alleleFreq, missing and setFilterCond count on the planes " +
+      "column; the scan reads no geno") {
+    import graft.sources.gds.GdsSchema.PlanesCol
+    val sv = graft.api.SeqArray.openGds(spark, planesGds)
+    assert(!sv.variants.columns.contains(PlanesCol))
+    assert(!sv.variants.select("*").columns.contains(PlanesCol))
+    for ((what, df) <- Seq("alleleFreq" -> sv.alleleFreq(0),
+        "missing" -> sv.missing(),
+        "setFilterCond" ->
+          sv.setFilterCond(0.05, 0.5).variants.select("variant_id"))) {
+      assert(planesKernel(df) && !genoStatsKernel(df), what)
+      val scans = scanColumns(df)
+      assert(scans.size == 1 && scans.head.contains(PlanesCol) &&
+        !scans.head.contains("geno"), s"$what: $scans")
+    }
+  }
+
+  test("gds: GenoStats stays on a non-gds frame, a sample-sliced geno, " +
+      "genotype/extra entries and SNP-GDS") {
+    import graft.api.{SeqArray, SeqVarData}
+    val sv = SeqArray.openGds(spark, planesGds)
+    val snp = planesGds.stripSuffix(".gds") + ".snp.gds"
+    SeqArray.seqGDS2SNP(spark, planesGds, snp)
+    for ((what, df) <- Seq(
+        "non-gds frame" -> SeqVarData(spark.createDataFrame(
+          sv.variants.rdd, sv.variants.schema)).alleleFreq(0),
+        "setFilterSamples" -> sv.setFilterSamples(Seq(0, 2, 4)).missing(),
+        "genotype/extra" ->
+          SeqArray.openGds(spark, cohortGds(extra = true)).alleleFreq(0),
+        "SNP-GDS" -> SeqVarData(spark.read.format("gds").load(snp))
+          .alleleFreq(0))) {
+      assert(genoStatsKernel(df) && !planesKernel(df), what)
+      assert(scanColumns(df).forall(!_.contains(
+        graft.sources.gds.GdsSchema.PlanesCol)), what)
+    }
   }
 }

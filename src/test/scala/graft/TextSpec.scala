@@ -62,14 +62,14 @@ class TextSpec extends AnyFunSuite {
   }
 
   test("shingle golden values and edge cases") {
-    import spark.implicits._
-    val df = Seq("a b c d", "a b", "  a   b c  ", "a b a b c")
-      .toDF("text")
-    val r = df.select(shingles(col("text"), 3)).collect()
-    assert(r(0).getSeq[String](0) == Seq("a b c", "b c d"))
-    assert(r(1).getSeq[String](0) == Seq())          // fewer than n tokens
-    assert(r(2).getSeq[String](0) == Seq("a b c"))   // whitespace runs
-    assert(r(3).getSeq[String](0) == Seq("a b a", "b a b", "a b c"))
+    for ((mode, df) <- FrameModes.frames(spark, Seq("a b c d", "a b",
+        "  a   b c  ", "a b a b c").zipWithIndex, "text", "i")) {
+      val r = df.orderBy("i").select(shingles(col("text"), 3)).collect()
+      assert(r(0).getSeq[String](0) == Seq("a b c", "b c d"), mode)
+      assert(r(1).getSeq[String](0) == Seq(), mode) // fewer than n tokens
+      assert(r(2).getSeq[String](0) == Seq("a b c"), mode) // whitespace runs
+      assert(r(3).getSeq[String](0) == Seq("a b a", "b a b", "a b c"), mode)
+    }
   }
 
   test("connected components label chains, cliques, and singletons") {
@@ -297,12 +297,15 @@ class TextSpec extends AnyFunSuite {
       "Question form works too?")        // kept
       .mkString("\n")
     val craftedDf = Seq((0L, crafted)).toDF("doc_id", "text")
-    val kept = craftedDf
-      .select(c4CleanLines(col("text"), 3).as("c"))
-      .head.getString(0).split("\n").toSeq
-    assert(kept == Seq("Plain good sentence here.", "Ends with bang!",
-      "Ends with quote\"", "Trailing spaces still count.   ",
-      "Question form works too?"))
+    for ((mode, df) <- FrameModes.frames(spark, Seq((0L, crafted)),
+        "doc_id", "text")) {
+      val kept = df
+        .select(c4CleanLines(col("text"), 3).as("c"))
+        .head.getString(0).split("\n").toSeq
+      assert(kept == Seq("Plain good sentence here.", "Ends with bang!",
+        "Ends with quote\"", "Trailing spaces still count.   ",
+        "Question form works too?"), mode)
+    }
     for (mode <- Seq("CODEGEN_ONLY", "NO_CODEGEN")) {
       spark.conf.set("spark.sql.codegen.factoryMode", mode)
       try {
