@@ -648,8 +648,9 @@ object SeqArray {
     * write the result as a NEW `annotation/info/<name>` node of a fresh
     * container alongside the data — read back through `Gds.read`, the
     * node surfaces as `info_<name>`. Single-file reference-compat
-    * writer (driver-streamed); the sharded exporter is the scale path
-    * for the same shape. */
+    * writer (rows encode on the executors, the driver compresses and
+    * writes the one file); the sharded exporter is the scale path for
+    * the same shape. */
   def seqApplyToGds(d: SeqVarData, name: String, value: Column,
       gdsPath: String, storage: String = "LZMA_ra"): Unit =
     graft.sources.gds.GdsWrite.write(

@@ -1,6 +1,8 @@
 package graft.sources
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions.col
 
 /** Executor-side sharded single-file-format export — the 100 TB answer
@@ -33,10 +35,25 @@ object Sharded {
       writer: (Iterator[Row], String) => Long,
       shardCols: Seq[String] = Seq("chrom", "pos"),
       sortCol: String = "variant_id", numShards: Int = 0)
-      : Seq[(String, Long)] = {
+      : Seq[(String, Long)] =
+    exportRdd(shardPlan(df, shardCols, sortCol, numShards).rdd, dir, suffix,
+      writer)
+
+  /** [[export]] handing the writer the shard's catalyst rows, for writers
+    * that read them without the external-Row conversion. Rows may be
+    * reused objects: copy a value out before keeping it. */
+  def exportInternal(df: DataFrame, dir: String, suffix: String,
+      writer: (Iterator[InternalRow], String) => Long,
+      shardCols: Seq[String] = Seq("chrom", "pos"),
+      sortCol: String = "variant_id", numShards: Int = 0)
+      : Seq[(String, Long)] =
+    exportRdd(shardPlan(df, shardCols, sortCol, numShards).queryExecution
+      .toRdd, dir, suffix, writer)
+
+  private def exportRdd[T](rows: RDD[T], dir: String, suffix: String,
+      writer: (Iterator[T], String) => Long): Seq[(String, Long)] = {
     new java.io.File(dir).mkdirs()
-    val parts = shardPlan(df, shardCols, sortCol, numShards)
-    val metas = parts.rdd.mapPartitionsWithIndex { (i, it) =>
+    val metas = rows.mapPartitionsWithIndex { (i, it) =>
       if (!it.hasNext) Iterator.empty
       else {
         val f = f"$dir/part-$i%05d$suffix"

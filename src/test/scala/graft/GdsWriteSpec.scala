@@ -632,4 +632,134 @@ print('OK', len(names))
       if (v.isNaN) null else java.lang.Float.valueOf(v))
     assert(back.toSeq == want.toSeq)
   }
+
+  // ---- partition-encoder seams (fixture-free) ---------------------------
+
+  private def bytesOf(path: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+
+  private def md5(path: String): String =
+    java.security.MessageDigest.getInstance("MD5").digest(bytesOf(path))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  /** Most common call length of a row (ties → the shorter). */
+  private def majority(geno: Seq[Seq[java.lang.Long]]): Int =
+    if (geno.isEmpty) 2
+    else geno.groupBy(_.length).maxBy(p => (p._2.size, -p._1))._1
+
+  test("partition count, empty partitions and one-shard export leave the " +
+      "container bytes unchanged") {
+    import SeededGdsFrames._
+    val dir = java.nio.file.Files.createTempDirectory("graft_seams").toString
+    // md5 of these frames' files from the earlier row-streaming writer:
+    // the encoder must not move a byte of the format
+    val pinned = Map(specs(0) -> "a4c53d5aec90b9c77c9b6a9aae0d4bfa",
+      specs(1) -> "1f176cb28e2875c53d16f81429d0589d")
+    var redone = 0
+    for (s <- specs) {
+      val files = Seq(1, 3, 8).map { parts =>
+        val out = s"$dir/f${s.seed}-p$parts.gds"
+        GdsWrite.write(frame(spark, s, parts), s.samples, out,
+          dsType = "packedreal16")
+        // variant_id (= 1-based row number) of each partition's first row
+        val heads = frame(spark, s, parts).rdd
+          .mapPartitions(it => it.take(1).map(_.getLong(0).toInt)).collect()
+        val rs = rows(s)
+        val first = rs.headOption.map(r =>
+          majority(r.getSeq[Seq[java.lang.Long]](7)))
+        redone += heads.count(v => first.exists(_ !=
+          majority(rs(v - 1).getSeq[Seq[java.lang.Long]](7))))
+        out
+      }
+      val one = bytesOf(files.head)
+      files.tail.foreach(f => assert(java.util.Arrays.equals(bytesOf(f), one),
+        s"$f differs from ${files.head}"))
+      val shards = GdsWrite.writeSharded(frame(spark, s, 3), s.samples,
+        s"$dir/sharded-${s.seed}", numShards = 1, dsType = "packedreal16")
+      if (s.nVar == 0) assert(shards.isEmpty) // an empty shard writes no file
+      else {
+        assert(shards.map(_._2) == Seq(s.nVar.toLong))
+        assert(java.util.Arrays.equals(bytesOf(shards.head._1), one),
+          s"one-shard export of seed ${s.seed} differs")
+      }
+      pinned.get(s).foreach(m =>
+        assert(md5(files.head) == m, s"seed ${s.seed}"))
+      // the writer's reader still sees the frame
+      assert(Gds.read(spark, files.head).count() == s.nVar)
+    }
+    // some partition started on a row of another ploidy and was encoded
+    // again at the container's
+    assert(redone > 0)
+  }
+
+  test("the independent python decoder reads a multi-partition write's " +
+      "genotype planes as the input rows' 2-bit codes") {
+    import SeededGdsFrames._
+    val s = specs.head
+    val out = java.nio.file.Files.createTempDirectory("graft_gdspy")
+      .toString + "/seams.gds"
+    GdsWrite.write(frame(spark, s, 8), s.samples, out, storage = "ZIP_ra")
+    val scripts = new java.io.File("scripts").getAbsolutePath
+    // one line per variant: its 2-bit codes, plane-major then sample then
+    // allele slot, read LSB-first from the packed stream
+    val py = new ProcessBuilder("python3", "-c", s"""
+import sys
+sys.path.insert(0, '$scripts')
+from gds_read import streams, node_bytes
+st = streams(open('$out', 'rb').read())
+geno, rec = node_bytes(st, ['genotype', 'data'])
+planes, _ = node_bytes(st, ['genotype', '@data'])
+n_var, n_s, ploidy = rec['dims']
+bit = 0
+for v in range(n_var):
+    codes = []
+    for _ in range(planes[v] * n_s * ploidy):
+        codes.append(str((geno[bit >> 3] >> (bit & 7)) & 3))
+        bit += 2
+    print(''.join(codes))
+assert (bit + 7) // 8 == len(geno), (bit, len(geno))
+""").redirectErrorStream(true).start()
+    val got = scala.io.Source.fromInputStream(py.getInputStream).getLines()
+      .toList
+    assert(py.waitFor() == 0, got.mkString("\n"))
+    val rs = rows(s)
+    val ploidy = majority(rs.head.getSeq[Seq[java.lang.Long]](7))
+    val want = rs.map { r =>
+      val g = r.getSeq[Seq[java.lang.Long]](7)
+      val codes = g.flatMap(_.take(ploidy).filter(_ != null).map(_.intValue))
+      var np = 1
+      while ((1 << (2 * np)) - 1 <= (0 +: codes).max) np += 1
+      val miss = (1 << (2 * np)) - 1
+      (0 until np).flatMap(k => g.flatMap(call => (0 until ploidy).map { a =>
+        val c = if (a >= call.length || call(a) == null) miss
+          else call(a).intValue
+        (c >> (2 * k)) & 3
+      })).mkString
+    }
+    assert(got == want)
+  }
+
+  test("writer defects raised inside an encoding task keep their message") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_gdserr").toString
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+    def failure(df: org.apache.spark.sql.DataFrame, samples: Seq[String]) =
+      messages(intercept[Exception](GdsWrite.write(df.repartition(2),
+        samples, s"$dir/bad.gds")))
+    val call = Seq[java.lang.Long](0L, 1L)
+    val ok = (1 to 4).map(v => (v.toLong, "c1", v, "A,G", Seq(call, call)))
+    val frame = ok.toDF("variant_id", "chrom", "pos", "allele", "geno")
+    assert(failure(frame, Seq("S1")).contains("geno width 2 != 1"))
+    val fmt = ok.map { case (v, c, p, a, g) =>
+      (v, c, p, a, if (v == 3) Seq(7) else Seq(7, 8)) }
+      .toDF("variant_id", "chrom", "pos", "allele", "fmt_DP")
+    assert(failure(fmt, Seq("S1", "S2")).contains("fmt width 1 != 2"))
+    val wide = frame.withColumn("variant_id",
+      when(col("variant_id") === 2, lit(3000000000L))
+        .otherwise(col("variant_id")))
+    assert(failure(wide, Seq("S1", "S2"))
+      .contains("variant_id 3000000000 exceeds dInt32"))
+  }
 }

@@ -141,30 +141,42 @@ object HofTwins {
       .otherwise(array().cast("array<long>"))
   }
 
+  /** `body(x)` with `x` evaluated once: a one-element `transform` binds it
+    * to a lambda variable. Higher-order functions have no common
+    * subexpression elimination, so a column a lambda references is
+    * otherwise evaluated again on every lambda call. */
+  private def let(x: Column)(body: Column => Column): Column =
+    element_at(transform(array(x), body), 1)
+
   /** Declarative twin of `textfns.cdcChunks`: every k-gram hash recomputed in
     * full from the shared powers table; interior cut ends = gram ends
     * whose hash ≡ 0 mod D (a cut at the last codepoint is suppressed);
     * chunks = md5 of the text between consecutive cuts. ASCII-parity like
-    * [[winnowFpsHof]] (`ascii` vs the kernel's codepoints). */
+    * [[winnowFpsHof]] (`ascii` vs the kernel's codepoints). Each array is
+    * bound once through [[let]], so a text of n characters costs O(n·k)
+    * hash steps. */
   def cdcChunksHof(text: Column, k: Int, d: Int): Column = {
     import graft.functions.expressions.WinnowFpExpr.M
     val pows = graft.functions.expressions.WinnowFpExpr.pows(k)
     val n = length(text)
-    val cps = transform(sequence(lit(1), n), i => ascii(text.substr(i, lit(1))))
     val grams = n - (k - 1)
-    val hashes = transform(sequence(lit(1), grams), i =>
-      pows.zipWithIndex.map { case (p, j) =>
-        element_at(cps, i + j).cast("long") * p % M
-      }.reduce(_ + _) % M)
-    val cutEnds = transform(
-      filter(sequence(lit(1), grams), i =>
-        element_at(hashes, i) % d === 0 && (i + lit(k - 1)) < n),
-      i => i + (k - 1))
-    val starts = concat(array(lit(1)), transform(cutEnds, e => e + 1))
-    val ends = concat(cutEnds, array(n))
-    val chunks = transform(sequence(lit(1), size(starts)), j =>
-      md5(encode(text.substr(element_at(starts, j),
-        element_at(ends, j) - element_at(starts, j) + 1), "utf-8")))
+    val chunks =
+      let(transform(sequence(lit(1), n), i => ascii(text.substr(i, lit(1))))) {
+        cps =>
+      let(transform(sequence(lit(1), grams), i =>
+        pows.zipWithIndex.map { case (p, j) =>
+          element_at(cps, i + j).cast("long") * p % M
+        }.reduce(_ + _) % M)) { hashes =>
+      let(transform(
+        filter(sequence(lit(1), grams), i =>
+          element_at(hashes, i) % d === 0 && (i + lit(k - 1)) < n),
+        i => i + (k - 1))) { cutEnds =>
+      let(concat(array(lit(1)), transform(cutEnds, e => e + 1))) { starts =>
+      let(concat(cutEnds, array(n))) { ends =>
+        transform(sequence(lit(1), size(starts)), j =>
+          md5(encode(text.substr(element_at(starts, j),
+            element_at(ends, j) - element_at(starts, j) + 1), "utf-8")))
+      }}}}}
     when(n === 0, array().cast("array<string>"))
       .when(grams < 1, array(md5(encode(text, "utf-8"))))
       .otherwise(chunks)

@@ -438,14 +438,9 @@ class KernelPropertySpec extends AnyFunSuite {
     for (round <- 1 to 6) {
       val texts = (1 to 80).map(i => draw(textGen, 15000L * round + i))
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
-      val dfs = frames(spark, rows, "id", "text")
-      // the HOF twin re-evaluates its captured arrays inside each lambda
-      // call, so its oracle runs once, over the local frame; the kernel
-      // runs over both
-      val want = byId(dfs.head._2, cdcChunksHof(col("text"), 8, 4))
-      for ((mode, df) <- dfs)
-        assert(byId(df, cdcChunks(col("text"), 8, 4)) == want,
-          s"cdc $mode round=$round")
+      for ((mode, df) <- frames(spark, rows, "id", "text"))
+        assert(byId(df, cdcChunks(col("text"), 8, 4)) ==
+          byId(df, cdcChunksHof(col("text"), 8, 4)), s"cdc $mode round=$round")
     }
   }
 
