@@ -540,7 +540,8 @@ object SeqArray {
     SeqVarData(spark.read.parquet(path))
 
   /** seqVCF2GDS + seqOpen in one step: VCF → variants table (+ samples
-    * side table from the header's sample columns). */
+    * side table from the header's sample columns; a shard directory's
+    * files all carry the first file's samples). */
   def openVcf(spark: SparkSession, path: String): SeqVarData = {
     val parsed = Vcf.read(spark, path)
     val (_, _, sampleIds) = Vcf.headerSpecs(

@@ -15,11 +15,13 @@ import graft.functions.genetics.{gtStrings, sampleCells}
   * Spark-first split of responsibilities, mirroring the reference's two
   * passes: the `##` header is parsed on the driver into field specs (the
   * `seqVCF_Header` analog — tiny, schema-defining), and the body is parsed
-  * by pure column expressions over a splittable `spark.read.text` scan — so
-  * a 100 TB VCF parses with ordinary file-split parallelism and no shared
-  * state, exactly where the reference forks worker processes per line range
-  * (ConvVCF2GDS.R:841-907). The reference's ragged `@len` index machinery
-  * dissolves into ArrayType columns.
+  * by pure column expressions ([[parseLines]]) that the DSv2 `vcf` source
+  * ([[graft.sources.v2.VcfDataSource]]) evaluates over line-aligned byte
+  * ranges of plain and bgzf files — so a 100 TB VCF parses with file-split
+  * parallelism and no shared state, exactly where the reference forks
+  * worker processes per line range (ConvVCF2GDS.R:841-907). The
+  * reference's ragged `@len` index machinery dissolves into ArrayType
+  * columns.
   *
   * Output shape (FIXTURES.md): chrom, pos, id, ref, alts, allele, qual,
   * filter, info_* (typed per header), geno ARRAY<ARRAY<LONG>>,
@@ -166,28 +168,11 @@ object Vcf {
       fmtCols: _*)
   }
 
-  /** Read a VCF file: header on the driver (streamed — takeWhile stops
-    * at the first body line instead of filtering the whole file), body
-    * distributed. A DIRECTORY (e.g. a `seqGDS2VCFSharded` export) reads
-    * all its `.vcf`/`.vcf.gz` shards in one text scan — every shard
-    * carries the same header, taken from the first. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val f = new java.io.File(path.stripPrefix("file:"))
-    val (headerPath, textPath) =
-      if (f.isDirectory) {
-        val shards = Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(c => c.isFile && (c.getName.endsWith(".vcf") ||
-            c.getName.endsWith(".vcf.gz")))
-          .map(_.getPath).sorted
-        require(shards.nonEmpty, s"no .vcf/.vcf.gz files under $path")
-        (shards.head, shards.toSeq)
-      } else (path, Seq(path))
-    val header = graft.sources.v2.VcfDataSource.headerLines(headerPath)
-    val (info, fmtSpecs, samples) = headerSpecs(header)
-    val raw = spark.read.text(textPath: _*)
-    parseLines(raw.filter(!col("value").startsWith("#")), info, fmtSpecs,
-      samples.length)
-  }
+  /** Read a VCF (plain, gzip or bgzf), or a directory of shards such as
+    * a `seqGDS2VCFSharded` export, through the DSv2 `vcf` source
+    * ([[graft.sources.v2.VcfDataSource]]). */
+  def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.format("vcf").load(path)
 
   /** Reconstruct a VCF header from field specs + sample ids (seqGDS2VCF's
     * header rebuild, /root/reference/R/Conversion.R:63-175). Inverse of

@@ -1,7 +1,6 @@
 package graft.sources.bcf
 
 import java.io.{ByteArrayOutputStream, DataOutputStream, EOFException, InputStream}
-import java.util.zip.GZIPInputStream
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -14,16 +13,16 @@ import graft.sources.Vcf
   * htslib; here the binary record layout from the public VCF/BCF spec
   * is implemented directly).
   *
-  * Split of responsibilities mirrors the `vcf` source: the header
-  * (ordinary VCF header text embedded in the BCF prologue) is read once
-  * on the driver and fixes schema + dictionaries; each record decodes
-  * to its canonical VCF body LINE, and the existing
-  * [[Vcf.parseLines]] expressions do the typing — one source of truth
-  * for parse semantics, so `Bcf.read` and `Vcf.read` are
-  * row-for-row interchangeable. Scans split into record-aligned byte
-  * ranges via each file's CSI virtual offsets ([[Csi]], round-3 work);
-  * an index-less `.bcf` gets its CSI built on first read, so every
-  * file is range-splittable.
+  * Reading is the `vcf` DSv2 source's binary branch
+  * ([[graft.sources.v2.VcfDataSource]]): the header (ordinary VCF
+  * header text embedded in the BCF prologue) is read once on the driver
+  * and fixes schema + dictionaries; each record decodes to its
+  * canonical VCF body LINE ([[rangeLines]]), and the scan's
+  * [[Vcf.parseLines]] projection does the typing — one source of truth
+  * for parse semantics, so `Bcf.read` and `Vcf.read` are row-for-row
+  * interchangeable. The scan splits into record-aligned byte ranges via
+  * each file's CSI virtual offsets ([[Csi]]); an index-less `.bcf` gets
+  * its CSI built on first read, so every file is range-splittable.
   *
   * Typed-value encoding (spec §6.3.3): descriptor byte = len<<4 | type,
   * len 15 = overflow length as a following typed int; types: 1=int8,
@@ -65,11 +64,13 @@ object Bcf {
 
   // ---- primitive io ---------------------------------------------------------
 
-  private def readFully(in: InputStream, b: Array[Byte]): Unit = {
-    var off = 0
+  /** Fills `b[from..)` from `in`, raising `cut` if the stream ends first. */
+  private def readFully(in: InputStream, b: Array[Byte], from: Int,
+      cut: => EOFException): Unit = {
+    var off = from
     while (off < b.length) {
       val n = in.read(b, off, b.length - off)
-      if (n < 0) throw new EOFException()
+      if (n < 0) throw cut
       off += n
     }
   }
@@ -283,19 +284,21 @@ object Bcf {
 
   // ---- reading ---------------------------------------------------------------
 
-  /** (header lines, decoded body lines iterator) — streaming. */
+  private def truncated(path: String, at: Long): EOFException =
+    new EOFException(s"$path is truncated at virtual offset $at")
+
   /** Header lines + parsed dictionaries, consumed from the stream head
     * (leaves `in` positioned at the first record). */
   private def readHeaderFrom(in: InputStream, path: String)
       : (Seq[String], Header, Map[String, String]) = {
     val magic = new Array[Byte](5)
-    readFully(in, magic)
+    readFully(in, magic, 0, truncated(path, 0))
     require(new String(magic, 0, 3, "ASCII") == "BCF" && magic(3) == 2,
       s"$path is not BCF2")
     val lenB = new Array[Byte](4)
-    readFully(in, lenB)
+    readFully(in, lenB, 0, truncated(path, 0))
     val htext = new Array[Byte](u32(lenB, 0))
-    readFully(in, htext)
+    readFully(in, htext, 0, truncated(path, 0))
     val headerLines = new String(htext, "UTF-8").takeWhile(_ != 0)
       .linesIterator.toSeq.filter(_.nonEmpty)
     val h = headerOf(headerLines)
@@ -307,71 +310,91 @@ object Bcf {
     (headerLines, h, numbers)
   }
 
-  /** Decoded VCF body lines from `in`; `stop` is consulted at each
-    * record boundary (BEFORE reading its first byte). */
-  private def recordIterator(in: InputStream, h: Header,
-      numbers: Map[String, String], stop: () => Boolean)
-      : Iterator[String] = new Iterator[String] {
-    private var nextLine: String = null
-    private var eof = false
-    private def advance(): Unit = {
-      if (eof) return
-      if (stop()) { eof = true; return }
-      val sizes = new Array[Byte](8)
-      val first = in.read()
-      if (first < 0) { eof = true; return }
-      sizes(0) = first.toByte
-      var off = 1
-      while (off < 8) {
-        val n = in.read(sizes, off, 8 - off)
-        if (n < 0) { eof = true; return }
-        off += n
-      }
-      val lShared = u32(sizes, 0)
-      val lIndiv = u32(sizes, 4)
-      val shared = new Array[Byte](lShared)
-      val indiv = new Array[Byte](lIndiv)
-      readFully(in, shared)
-      readFully(in, indiv)
-      nextLine = recordToLine(shared, indiv, h, numbers)
+  private def readHeader(path: String)
+      : (Seq[String], Header, Map[String, String]) = {
+    val in = new Bgzf.BlockStream(path.stripPrefix("file:"), 0L)
+    try readHeaderFrom(in, path) finally in.close()
+  }
+
+  /** The VCF-style header text embedded in a BCF's prologue. */
+  def headerLines(path: String): Seq[String] = readHeader(path)._1
+
+  /** The 8-byte (l_shared, l_indiv) prologue of the record starting at
+    * virtual offset `at`, or null at a clean end of stream. */
+  private def prologue(in: InputStream, path: String, at: Long)
+      : Array[Byte] = {
+    val first = in.read()
+    if (first < 0) return null
+    val sizes = new Array[Byte](8)
+    sizes(0) = first.toByte
+    readFully(in, sizes, 1, truncated(path, at))
+    sizes
+  }
+
+  /** Decoded VCF body lines of the records from `in`'s position (a
+    * record start) up to the first record boundary at or after virtual
+    * offset `end`. A stream that ends inside a record raises an
+    * EOFException naming the file and the record's virtual offset;
+    * `close` closes the stream. */
+  private def records(in: Bgzf.BlockStream, path: String, h: Header,
+      numbers: Map[String, String], end: Long)
+      : Iterator[String] with java.io.Closeable = {
+    def nextLine(): String = {
+      val at = in.virtualPos
+      val sizes = if (at >= end) null else prologue(in, path, at)
+      if (sizes == null) return null
+      val shared = new Array[Byte](u32(sizes, 0))
+      val indiv = new Array[Byte](u32(sizes, 4))
+      readFully(in, shared, 0, truncated(path, at))
+      readFully(in, indiv, 0, truncated(path, at))
+      recordToLine(shared, indiv, h, numbers)
     }
-    override def hasNext: Boolean = {
-      if (nextLine == null && !eof) advance()
-      nextLine != null
-    }
-    override def next(): String = {
-      if (!hasNext) throw new NoSuchElementException
-      val l = nextLine; nextLine = null; l
+    val lines = Iterator.continually(nextLine()).takeWhile(_ != null)
+    new Iterator[String] with java.io.Closeable {
+      override def hasNext: Boolean = lines.hasNext
+      override def next(): String = lines.next()
+      override def close(): Unit = in.close()
     }
   }
 
-  def open(path: String): (Seq[String], Iterator[String]) = {
-    val in = new GZIPInputStream(java.nio.file.Files.newInputStream(
-      java.nio.file.Paths.get(path.stripPrefix("file:"))), 64 * 1024)
-    val (headerLines, h, numbers) = readHeaderFrom(in, path)
-    (headerLines, recordIterator(in, h, numbers, () => false))
+  /** (header lines, every record as a VCF body line) — streaming. */
+  def open(path: String)
+      : (Seq[String], Iterator[String] with java.io.Closeable) = {
+    val in = new Bgzf.BlockStream(path.stripPrefix("file:"), 0L)
+    try {
+      val (headerLines, h, numbers) = readHeaderFrom(in, path)
+      (headerLines, records(in, path, h, numbers, Long.MaxValue))
+    } catch { case e: Throwable => in.close(); throw e }
   }
 
   /** Records whose virtual offset lies in [v0, v1): seeks straight to
     * v0's BGZF member (no upstream decompression) and stops at the first
     * record boundary at/after v1. v0 and v1 MUST be record-aligned
     * virtual offsets (CSI chunk begins are). */
-  def rangeLines(path: String, v0: Long, v1: Long): Iterator[String] = {
-    val p = path.stripPrefix("file:")
-    val (_, h, numbers) = {
-      val in = new GZIPInputStream(java.nio.file.Files.newInputStream(
-        java.nio.file.Paths.get(p)), 64 * 1024)
-      try readHeaderFrom(in, path) finally in.close()
-    }
-    val bs = new Bgzf.BlockStream(p, v0 >> 16)
-    var skip = (v0 & 0xffff).toInt
-    while (skip > 0) {
+  def rangeLines(path: String, v0: Long, v1: Long)
+      : Iterator[String] with java.io.Closeable = {
+    val (_, h, numbers) = readHeader(path)
+    val bs = new Bgzf.BlockStream(path.stripPrefix("file:"), v0 >> 16)
+    try {
+      var skip = (v0 & 0xffff).toInt
       val scratch = new Array[Byte](skip)
-      val n = bs.read(scratch, 0, skip)
-      require(n > 0, s"cannot seek to virtual offset $v0 in $path")
-      skip -= n
-    }
-    recordIterator(bs, h, numbers, () => bs.virtualPos >= v1)
+      while (skip > 0) {
+        val n = bs.read(scratch, 0, skip)
+        require(n > 0, s"cannot seek to virtual offset $v0 in $path")
+        skip -= n
+      }
+      records(bs, path, h, numbers, v1)
+    } catch { case e: Throwable => bs.close(); throw e }
+  }
+
+  /** Every record's start virtual offset: from the `.csi` next to the
+    * file (ours or htslib's chunk begins), else from one [[buildCsi]]
+    * pass — the split points of the `vcf` source's BCF scan. */
+  def recordStarts(path: String): Array[Long] = {
+    val csi = path.stripPrefix("file:") + ".csi"
+    if (java.nio.file.Files.exists(java.nio.file.Paths.get(csi)))
+      Csi.recordStarts(csi)
+    else buildCsi(path)
   }
 
   /** One sequential pass over an index-less `.bcf`: decodes just the
@@ -388,38 +411,28 @@ object Bcf {
       readHeaderFrom(bs, path) // positions the stream at record 0
       val csi = new Csi.Builder()
       val starts = ArrayBuffer.empty[Long]
-      val sizes = new Array[Byte](8)
       val scratch = new Array[Byte](64 * 1024)
-      var eof = false
-      while (!eof) {
-        val vbeg = bs.virtualPos
-        val first = bs.read()
-        if (first < 0) eof = true
-        else {
-          sizes(0) = first.toByte
-          var off = 1
-          while (off < 8) {
-            val n = bs.read(sizes, off, 8 - off)
-            if (n < 0) throw new EOFException(s"$path truncated record")
-            off += n
-          }
-          val lShared = u32(sizes, 0)
-          val lIndiv = u32(sizes, 4)
-          val head = new Array[Byte](math.min(lShared, 12))
-          readFully(bs, head)
-          var toSkip = (lShared - head.length).toLong + lIndiv
-          while (toSkip > 0) {
-            val n = bs.read(scratch, 0,
-              math.min(toSkip, scratch.length.toLong).toInt)
-            if (n < 0) throw new EOFException(s"$path truncated record")
-            toSkip -= n
-          }
-          val rid = u32(head, 0)
-          val pos0 = u32(head, 4).toLong
-          val rlen = math.max(u32(head, 8), 1)
-          csi.add(rid, pos0, pos0 + rlen, vbeg, bs.virtualPos)
-          starts += vbeg
+      var vbeg = bs.virtualPos
+      var sizes = prologue(bs, path, vbeg)
+      while (sizes != null) {
+        val lShared = u32(sizes, 0)
+        val lIndiv = u32(sizes, 4)
+        val head = new Array[Byte](math.min(lShared, 12))
+        readFully(bs, head, 0, truncated(path, vbeg))
+        var toSkip = (lShared - head.length).toLong + lIndiv
+        while (toSkip > 0) {
+          val n = bs.read(scratch, 0,
+            math.min(toSkip, scratch.length.toLong).toInt)
+          if (n < 0) throw truncated(path, vbeg)
+          toSkip -= n
         }
+        val rid = u32(head, 0)
+        val pos0 = u32(head, 4).toLong
+        val rlen = math.max(u32(head, 8), 1)
+        csi.add(rid, pos0, pos0 + rlen, vbeg, bs.virtualPos)
+        starts += vbeg
+        vbeg = bs.virtualPos
+        sizes = prologue(bs, path, vbeg)
       }
       try csi.write(p + ".csi")
       catch { case _: java.io.IOException => () } // read-only dir: in-memory only
@@ -428,51 +441,14 @@ object Bcf {
   }
 
   /** seqBCF2GDS analog: BCF → the engine's canonical variants schema,
-    * identical to [[Vcf.read]] of the equivalent VCF. With a `.csi`
-    * sitting next to the file (ours or htslib's), the scan splits into
-    * record-aligned compressed byte ranges — one task per ~`splitBytes`
-    * of compressed data; an index-less file gets its CSI built by one
-    * sequential prologue pass ([[buildCsi]]) and splits the same way. */
+    * identical to [[Vcf.read]] of the equivalent VCF — the `vcf` source
+    * reading a `.bcf` (or a directory of them), split into record-aligned
+    * ranges of ~`splitBytes` compressed bytes from the file's CSI, which
+    * an index-less file gets built and persisted on first read
+    * ([[recordStarts]]). */
   def read(spark: SparkSession, path: String,
-      splitBytes: Long = 16L * 1024 * 1024): DataFrame = {
-    val dirF = new java.io.File(path.stripPrefix("file:"))
-    if (dirF.isDirectory) {
-      // a seqGDS2BCFSharded export: union the shard scans (each plans
-      // its own csi byte ranges; headers are identical by construction)
-      val shards = Option(dirF.listFiles()).getOrElse(Array.empty)
-        .filter(c => c.isFile && c.getName.endsWith(".bcf"))
-        .map(_.getPath).sorted
-      require(shards.nonEmpty, s"no .bcf files under $path")
-      return shards.map(read(spark, _, splitBytes)).reduce(_ unionAll _)
-    }
-    val (headerLines, _) = open(path)
-    val (info, fmt, samples) = Vcf.headerSpecs(headerLines)
-    import spark.implicits._
-    val csiPath = path.stripPrefix("file:") + ".csi"
-    val starts =
-      if (java.nio.file.Files.exists(java.nio.file.Paths.get(csiPath)))
-        Csi.recordStarts(csiPath)
-      else buildCsi(path)
-    val lines =
-      if (starts.length > 1) {
-        val cuts = ArrayBuffer(starts.head)
-        var lastCoff = starts.head >> 16
-        starts.foreach { v =>
-          if ((v >> 16) - lastCoff >= splitBytes) {
-            cuts += v; lastCoff = v >> 16
-          }
-        }
-        val ranges = cuts.zipAll(cuts.drop(1), 0L, Long.MaxValue).toSeq
-        spark.createDataset(ranges)
-          .flatMap { case (s0, e0) => Bcf.rangeLines(path, s0, e0) }
-          .toDF("value")
-      } else {
-        spark.createDataset(Seq(path))
-          .flatMap(p => Bcf.open(p)._2)
-          .toDF("value")
-      }
-    Vcf.parseLines(lines, info, fmt, samples.length)
-  }
+      splitBytes: Long = 16L * 1024 * 1024): DataFrame =
+    spark.read.format("vcf").option("splitSize", splitBytes).load(path)
 
   // ---- writing ---------------------------------------------------------------
 

@@ -46,30 +46,10 @@ class GdsDataSource extends TableProvider with DataSourceRegister {
 
 object GdsSchema {
 
-  def paths(options: CaseInsensitiveStringMap): Seq[String] = {
-    val single = Option(options.get("path")).toSeq
-    val multi = Option(options.get("paths")).toSeq.flatMap { raw =>
-      val t = raw.trim
-      if (t.startsWith("[")) {
-        val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(t)
-        (0 until node.size()).map(node.get(_).asText())
-      } else t.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-    }
-    val all = single ++ multi
-    require(all.nonEmpty, "gds source requires a path")
-    // a directory (e.g. a GdsWrite.writeSharded export) expands to its
-    // shard containers; each file scans + splits independently
-    all.flatMap { p =>
-      val f = new java.io.File(p.stripPrefix("file:"))
-      if (f.isDirectory) {
-        val shards = Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(c => c.isFile && c.getName.endsWith(".gds"))
-          .map(_.getPath).sorted.toSeq
-        require(shards.nonEmpty, s"no .gds files under directory $p")
-        shards
-      } else Seq(p)
-    }
-  }
+  /** A directory (e.g. a GdsWrite.writeSharded export) expands to its
+    * shard containers; each file scans + splits independently. */
+  def paths(options: CaseInsensitiveStringMap): Seq[String] =
+    graft.sources.SourcePaths(options, "gds", Seq(".gds"))
 
   private def attrStr(n: Node, key: String): Option[String] =
     n.attrs.get(key).collect { case AttrStr(s) => s }

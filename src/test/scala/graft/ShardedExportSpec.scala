@@ -150,4 +150,40 @@ class ShardedExportSpec extends AnyFunSuite {
     val b = ceu.select("chrom", "pos", "allele", "geno", "phased")
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
   }
+
+  test("seqVCF2GDS of a seqGDS2VCFSharded directory keeps the genotypes") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    import graft.api.SeqArray
+    val dir = java.nio.file.Files.createTempDirectory("graft_vcf_dir").toString
+    val rnd = new scala.util.Random(20261019L)
+    val samples = Seq("S1", "S2", "S3", "S4")
+    val rows = (1 to 80).map { v =>
+      Row(v.toLong, s"${1 + (v - 1) / 20}", v * 100, "A,G",
+        Seq.fill(4)(Seq.fill(2)(
+          if (rnd.nextInt(9) == 0) null else Long.box(rnd.nextInt(2).toLong))),
+        Seq.fill(4)(rnd.nextBoolean()))
+    }
+    val schema = StructType(Seq(
+      StructField("variant_id", LongType, nullable = false),
+      StructField("chrom", StringType), StructField("pos", IntegerType),
+      StructField("allele", StringType),
+      StructField("geno", ArrayType(ArrayType(LongType))),
+      StructField("phased", ArrayType(BooleanType))))
+    GdsWrite.write(spark.createDataFrame(
+      spark.sparkContext.parallelize(rows, 2), schema), samples,
+      s"$dir/src.gds")
+    val shards = SeqArray.seqGDS2VCFSharded(spark, s"$dir/src.gds",
+      s"$dir/vcf")
+    assert(shards.length >= 2, shards.toString)
+    // the sample ids come from the directory's first shard
+    SeqArray.seqVCF2GDS(spark, s"$dir/vcf", s"$dir/back.gds")
+    val cols = Seq("chrom", "pos", "allele", "geno", "phased")
+    val a = Gds.read(spark, s"$dir/src.gds").select(cols.map(col): _*)
+    val b = Gds.read(spark, s"$dir/back.gds").select(cols.map(col): _*)
+    assert(b.count() == 80)
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    assert(Gds.samples(spark, s"$dir/back.gds").orderBy("sample_ordinal")
+      .collect().map(_.getString(1)).toSeq == samples)
+  }
 }

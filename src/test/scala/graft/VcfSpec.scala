@@ -78,22 +78,18 @@ class VcfSpec extends AnyFunSuite {
     assert(v2.getAs[collection.Seq[Boolean]]("phased") == Seq(true, false, false))
   }
 
-  test("DSv2 format(\"vcf\") source matches the function-level reader") {
-    val path = writeTemp()
-    val viaDsv2 = spark.read.format("vcf").load(path)
-    val viaFns = Vcf.read(spark, path)
-    assert(viaDsv2.schema == viaFns.schema)
-    val a = viaDsv2.collect().map(_.toSeq).toSet
-    val b = viaFns.collect().map(_.toSeq).toSet
-    assert(a == b && a.size == 2)
-    // gz stream path (VCFs usually ship as .vcf.gz / bgzf)
+  test("plain gzip reads the same rows as plain text") {
+    val text = Vcf.read(spark, writeTemp())
+    // single-member gzip (not bgzf): one whole-file partition
     val gz = java.nio.file.Files.createTempFile("graft_test", ".vcf.gz")
     val os = new java.util.zip.GZIPOutputStream(
       java.nio.file.Files.newOutputStream(gz))
     os.write(vcfText.getBytes("UTF-8")); os.close()
-    val viaGz = spark.read.format("vcf").load(gz.toString)
-      .collect().map(_.toSeq).toSet
-    assert(viaGz == b)
+    assert(!graft.sources.bcf.Bgzf.isBgzfFile(gz.toString))
+    val viaGz = Vcf.read(spark, gz.toString)
+    assert(viaGz.schema == text.schema)
+    assert(viaGz.collect().toSeq == text.collect().toSeq &&
+      viaGz.count() == 2)
   }
 
   test("DSv2 multi-path load and header-mismatch validation") {
@@ -247,5 +243,98 @@ class VcfSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("32-bit"),
       s"expected the range-guard message, got: ${e.getMessage}")
+  }
+
+  // ---- fixture-free bgzf scans ---------------------------------------------
+
+  private val header = vcfText.linesIterator.takeWhile(_.startsWith("#")).toSeq
+
+  /** Seeded body lines in vcfText's layout; ~5,000 make a few hundred KB
+    * of text, several 64 KiB BGZF members. */
+  private def body(n: Int, seed: Long): Seq[String] = {
+    val rnd = new scala.util.Random(seed)
+    (1 to n).map { i =>
+      val cells = Seq.fill(3)(s"${rnd.nextInt(3)}${if (rnd.nextBoolean()) "|"
+        else "/"}${rnd.nextInt(3)}:${rnd.nextInt(50)}")
+      (Seq(s"chr${1 + i % 3}", (i * 10).toString, s"rs$i", "A", "C,G",
+        rnd.nextInt(100).toString, "PASS",
+        s"AC=${rnd.nextInt(9)},${rnd.nextInt(9)};DP=${rnd.nextInt(99)}",
+        "GT:DP") ++ cells).mkString("\t")
+    }
+  }
+
+  private def bgzfVcf(path: java.nio.file.Path, lines: Seq[String]): String = {
+    val w = new graft.sources.bcf.Bgzf.Writer(Files.newOutputStream(path))
+    try w.write((header ++ lines).mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally w.close()
+    path.toString
+  }
+
+  test("bgzf splits equal the whole-file read at several split sizes") {
+    val src = bgzfVcf(Files.createTempFile("graft_bgzf", ".vcf.gz"),
+      body(5000, 91L))
+    val len = Files.size(java.nio.file.Paths.get(src))
+    val firstMember = graft.sources.bcf.Bgzf.findBlock(src, 1L)
+    assert(firstMember * 3 < len, s"want several members: $firstMember/$len")
+    val whole = spark.read.format("vcf").load(src)
+    assert(whole.rdd.getNumPartitions == 1)
+    val rows = whole.collect().toSeq
+    assert(rows.length == 5000)
+    // one row per line, in file order, through every split layout; the
+    // first-member size puts a range end exactly on a member boundary
+    for (splitSize <- Seq(firstMember, firstMember / 3, 17000L, 40000L)) {
+      val split = spark.read.format("vcf")
+        .option("splitSize", splitSize.toString).load(src)
+      assert(split.rdd.getNumPartitions > 2, s"splitSize=$splitSize")
+      val got = split.collect().toSeq
+      val same = got == rows // kept out of the assert: no row dump
+      assert(same, s"splitSize=$splitSize: ${got.length} rows")
+    }
+  }
+
+  test("a directory of .vcf.gz shards reads as its single file") {
+    val lines = body(900, 92L)
+    val dir = Files.createTempDirectory("graft_vcf_shards")
+    lines.grouped(300).zipWithIndex.foreach { case (part, i) =>
+      bgzfVcf(dir.resolve(f"part-$i%05d.vcf.gz"), part)
+    }
+    Files.writeString(dir.resolve("_manifest.json"), "[]")
+    val whole = bgzfVcf(Files.createTempFile("graft_vcf_whole", ".vcf.gz"),
+      lines)
+    val shards = Vcf.read(spark, dir.toString)
+    assert(shards.rdd.getNumPartitions == 3)
+    val same = shards.collect().toSeq == Vcf.read(spark, whole).collect().toSeq
+    assert(same)
+  }
+
+  test("a blank body line yields no row") {
+    // the text-scan reader used to parse each blank line into a
+    // null-padded row; the vcf source skips them
+    val p = Files.createTempFile("graft_blank", ".vcf")
+    Files.writeString(p, vcfText.replace("\n1\t200", "\n\n1\t200") + "\n\n")
+    val rows = Vcf.read(spark, p.toString).collect()
+    assert(rows.length == 2 && rows.forall(_.getAs[Any]("pos") != null))
+  }
+
+  test("a truncated small bgzf VCF raises naming the file and member") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    val whole = Files.readAllBytes(java.nio.file.Paths.get(
+      bgzfVcf(Files.createTempFile("graft_bgzf_full", ".vcf.gz"),
+        body(2000, 93L))))
+    // cut 40 bytes into the second member (the header is in the first)
+    val second =
+      ((whole(16) & 0xff) | ((whole(17) & 0xff) << 8)) + 1
+    assert(second + 40 < whole.length - 28, "want a second member")
+    val cut = Files.createTempFile("graft_bgzf_cut", ".vcf.gz")
+    Files.write(cut, java.util.Arrays.copyOf(whole, second + 40))
+    // far below one split: this used to be a whole-file GZIPInputStream
+    val e = intercept[Exception] {
+      Await.result(Future(Vcf.read(spark, cut.toString).count()), 60.seconds)
+    }
+    val msg = Iterator.iterate[Throwable](e)(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+    assert(msg.contains(cut.toString) && msg.contains(s"offset $second"), msg)
   }
 }
