@@ -79,9 +79,6 @@ object genetics {
       Bridge.expression(d),
       Bridge.expression(typedLit[Seq[Seq[Long]]](masks))))
 
-  /** All allele calls of a variant, ploidy-flattened. */
-  def flatAlleles(geno: Column): Column = flatten(geno)
-
   /** Number of non-missing allele calls (reference `FC_AF_Ref`,
     * `src/Methods.cpp:409-425`). */
   def nCalledAlleles(geno: Column): Column =
@@ -118,10 +115,6 @@ object genetics {
     * reference's sample-major `~data` transpose. */
   def missPerSample(geno: Column): Column =
     Bridge.column(MissAllelesPerSample(Bridge.expression(geno)))
-
-  /** True when a single sample's call has any missing allele. */
-  def sampleMissing(sampleAlleles: Column): Column =
-    exists(sampleAlleles, a => a.isNull)
 
   /** Per-sample count of non-REF alleles; null for samples with a missing
     * allele (reference `$dosage_alt`, `src/GetData.cpp:311-410`). */

@@ -92,13 +92,6 @@ object textfns {
     transform(sequence(lit(0), lit(bands - 1)), b =>
       md5(concat_ws("|", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand)))))
 
-  /** Fraction of equal components between two equal-length signatures —
-    * the MinHash estimate of Jaccard similarity. */
-  def signatureSimilarity(sigA: Column, sigB: Column, k: Int): Column =
-    aggregate(zip_with(sigA, sigB,
-        (x, y) => when(x === y, 1).otherwise(0)),
-      lit(0), (acc, x) => acc + x).cast("double") / k
-
   /** 16-bit SimHash straight from text — fused codegen expression (one md5
     * per token); bit-identical to [[simhash16]]. */
   def simhash16Text(text: Column): Column = {

@@ -190,4 +190,7 @@ object SynthGeno {
         ((l_partkey*31 + l_suppkey*7 + s*13) % 29
          + (l_partkey*17 + l_suppkey*11 + s*19) % 29) % 2 = 0) AS phased
     FROM lineitem"""
+
+  /** Oracle SQL `body` behind `WITH variants AS (<sqlCte>)`. */
+  def withCte(body: String): String = s"WITH variants AS ($sqlCte)\n$body"
 }

@@ -13,8 +13,8 @@ package graft.operators
   *    dimensions/frame counts are oracle-exact, pixel values are
   *    codec-defined and spec-gated (JPEG is lossy).
   *
-  * Parsing follows the fMP4 discipline: every untrusted chunk size is
-  * bounds-checked against the enclosing container BEFORE any
+  * The container is read and written through [[Riff]]: every untrusted
+  * chunk size is bounds-checked against the enclosing list before any
   * allocation; truncated containers reject, unknown chunks skip.
   */
 object Avi {
@@ -26,57 +26,43 @@ object Avi {
     * order). None on non-AVI / truncated / oversized-chunk input. */
   def parse(payload: Array[Byte])
       : Option[(AviMeta, Vector[Array[Byte]])] = {
-    if (payload == null || payload.length < 12) return None
-    def u8(i: Int) = payload(i) & 0xff
-    def fourcc(i: Int) = new String(payload, i, 4, "ISO-8859-1")
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (fourcc(0) != "RIFF" || fourcc(8) != "AVI ") return None
+    if (!Riff.isForm(payload, "AVI ")) return None
+    import Riff.{fourcc, u32}
     var width = 0; var height = 0; var fpsNum = 0; var fpsDen = 0
     var nFrames = 0; var handler = ""
     val frames = Vector.newBuilder[Array[Byte]]
-    // walk(start, end): chunk sequence inside [start, end)
-    def walk(start: Int, end: Int): Boolean = {
-      var pos = start
-      while (pos + 8 <= end) {
-        val id = fourcc(pos)
-        val sz = u32(pos + 4)
-        if (sz < 0 || pos + 8 + sz > end) return false // bounds first
-        val body = pos + 8
-        val bodyEnd = body + sz.toInt
-        id match {
-          case "LIST" =>
-            if (sz < 4) return false
-            // list type occupies the first 4 body bytes
-            if (!walk(body + 4, bodyEnd)) return false
-          case "avih" =>
-            if (sz < 56) return false
-            nFrames = u32(body + 16).toInt
-            width = u32(body + 32).toInt
-            height = u32(body + 36).toInt
-          case "strh" =>
-            if (sz < 48) return false
-            if (fourcc(body) == "vids") {
-              handler = fourcc(body + 4)
-              fpsDen = u32(body + 20).toInt // dwScale
-              fpsNum = u32(body + 24).toInt // dwRate
+    // walk(from, until): the chunk sequence inside [from, until), in
+    // file order, LIST bodies depth first
+    def walk(from: Int, until: Int): Boolean =
+      Riff.chunks(payload, from, until).exists(_.forall { c =>
+        c.id match {
+          // the list type occupies the first 4 body bytes
+          case "LIST" => c.size >= 4 && walk(c.body + 4, c.end)
+          case "avih" => c.size >= 56 && {
+            nFrames = u32(payload, c.body + 16).toInt
+            width = u32(payload, c.body + 32).toInt
+            height = u32(payload, c.body + 36).toInt
+            true
+          }
+          case "strh" => c.size >= 48 && {
+            if (fourcc(payload, c.body) == "vids") {
+              handler = fourcc(payload, c.body + 4)
+              fpsDen = u32(payload, c.body + 20).toInt // dwScale
+              fpsNum = u32(payload, c.body + 24).toInt // dwRate
             }
-          case _ if id.length == 4 &&
+            true
+          }
+          case id if id.take(2) == "00" &&
               // single-video-stream subset: only stream 00's frame
               // chunks count (a second stream's 'NN'db/dc would
               // otherwise mis-attribute toward avih's cross-stream
               // total and trip the count check)
-              id.take(2) == "00" &&
               (id.substring(2) == "db" || id.substring(2) == "dc") =>
-            val f = new Array[Byte](sz.toInt)
-            System.arraycopy(payload, body, f, 0, sz.toInt)
-            frames += f
-          case _ => () // strf/idx1/JUNK/… skipped
+            frames += payload.slice(c.body, c.end)
+            true
+          case _ => true // strf/idx1/JUNK/… skipped
         }
-        pos = bodyEnd + (sz.toInt & 1) // chunks pad to even
-      }
-      true
-    }
+      })
     if (!walk(12, payload.length)) return None
     if (width <= 0 || height <= 0 || nFrames < 0) return None
     val fs = frames.result()
@@ -136,18 +122,6 @@ object Avi {
     * frame chunks (`dib = true` → `00db`, else `00dc`). */
   def write(frames: Seq[Array[Byte]], w: Int, h: Int, fpsNum: Int,
       fpsDen: Int, handler: String, dib: Boolean): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    def tag(s: String): Unit = s.foreach(c => out.write(c))
-    def chunk(id: String, body: Array[Byte]): Unit = {
-      tag(id); w32(body.length.toLong)
-      out.write(body, 0, body.length)
-      if ((body.length & 1) == 1) out.write(0)
-    }
     // avih
     val avih = java.nio.ByteBuffer.allocate(56)
       .order(java.nio.ByteOrder.LITTLE_ENDIAN)
@@ -182,34 +156,12 @@ object Avi {
     else "MJPG".foreach(c => strf.put(c.toByte))
     strf.putInt(rowBytes * h).putInt(0).putInt(0).putInt(0).putInt(0)
     // assemble: RIFF( hdrl(avih, strl(strh, strf)), movi(frames...) )
-    def listBody(tpe: String, parts: Seq[(String, Array[Byte])])
-        : Array[Byte] = {
-      val b = new java.io.ByteArrayOutputStream()
-      tpe.foreach(c => b.write(c))
-      parts.foreach { case (id, body) =>
-        id.foreach(c => b.write(c))
-        val sz = body.length
-        b.write(sz & 0xff); b.write((sz >> 8) & 0xff)
-        b.write((sz >> 16) & 0xff); b.write((sz >> 24) & 0xff)
-        b.write(body, 0, sz)
-        if ((sz & 1) == 1) b.write(0)
-      }
-      b.toByteArray
-    }
-    val strl = listBody("strl",
-      Seq("strh" -> strh.array(), "strf" -> strf.array()))
-    val hdrl = listBody("hdrl",
-      Seq("avih" -> avih.array(), "LIST" -> strl))
     val fid = if (dib) "00db" else "00dc"
-    val movi = listBody("movi", frames.map(f => fid -> f))
-    tag("RIFF")
-    val riffBody = 4 + (8 + hdrl.length + (hdrl.length & 1)) +
-      (8 + movi.length + (movi.length & 1))
-    w32(riffBody.toLong)
-    tag("AVI ")
-    chunk("LIST", hdrl)
-    chunk("LIST", movi)
-    out.toByteArray
+    Riff.write("AVI ", Seq(
+      Riff.list("hdrl", Seq("avih" -> avih.array(),
+        Riff.list("strl", Seq("strh" -> strh.array(),
+          "strf" -> strf.array())))),
+      Riff.list("movi", frames.map(fid -> _))))
   }
 
   /** Solid-fill 24-bit bottom-up DIB frame (rows padded to 4 bytes). */

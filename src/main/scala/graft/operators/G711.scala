@@ -9,10 +9,8 @@ package graft.operators
   *   mag = ((m·8 + 132) << e) − 132;   sample = sign(x) ? −mag : mag
   *
   * Payloads travel as real RIFF/WAVE containers with wFormatTag = 7
-  * (WAVE_FORMAT_MULAW, 8 bits/sample) and are parsed by a bounds-
-  * checked chunk walk (the fMP4 discipline: untrusted sizes verify
-  * against the enclosing container BEFORE any allocation; truncated
-  * or non-µ-law payloads reject).
+  * (WAVE_FORMAT_MULAW, 8 bits/sample), read and written through
+  * [[Riff]] (truncated or non-µ-law payloads reject).
   */
 object G711 {
 
@@ -32,78 +30,62 @@ object G711 {
 
   /** Decode a RIFF/WAVE µ-law (format tag 7, 8-bit) payload. None on
     * anything else — truncation, non-RIFF, PCM/other codecs. */
-  def decodeUlawWav(payload: Array[Byte]): Option[UlawStream] = {
-    if (payload == null || payload.length < 12) return None
-    def u8(i: Int) = payload(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (!(u8(0) == 'R' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == 'F' &&
-        u8(8) == 'W' && u8(9) == 'A' && u8(10) == 'V' && u8(11) == 'E'))
-      return None
-    var pos = 12
+  def decodeUlawWav(payload: Array[Byte]): Option[UlawStream] =
+    decode8(payload, 7, ulawToLinear, keepPcm = false).map(_._1)
+
+  /** Decoded µ-law PCM samples (interleaved) — the waveform-consumer
+    * lane ([[decodeUlawWav]] keeps only the Σs² census). Same
+    * container contract: None on truncation/non-µ-law. */
+  def decodeUlawPcm(payload: Array[Byte]): Option[(Array[Int], Int, Int)] =
+    decode8(payload, 7, ulawToLinear, keepPcm = true).map { case (u, pcm) =>
+      (pcm, u.sampleRate, u.channels)
+    }
+
+  /** The one G.711 walk: a WAVE payload whose `fmt ` has format tag
+    * `tag` at 8 bits, each `data` byte expanded by `expand` (and kept,
+    * in file order, when `keepPcm`). A `data` chunk before a matching
+    * `fmt ` rejects. */
+  private def decode8(payload: Array[Byte], tag: Int, expand: Int => Int,
+      keepPcm: Boolean): Option[(UlawStream, Array[Int])] = {
+    val cs = Riff.read(payload, "WAVE") match {
+      case Some(cs) => cs
+      case None => return None
+    }
+    import Riff.{u16, u32, u8}
     var rate = 0
     var channels = 0
     var ok = false
     var sumSq = 0L
     var n = 0L
     var sawData = false
-    while (pos + 8 <= payload.length) {
-      val id = new String(payload, pos, 4, "ISO-8859-1")
-      val sz = u32(pos + 4)
-      // untrusted size: bounds-check against the container BEFORE use
-      if (sz < 0 || pos + 8 + sz > payload.length) return None
-      val body = pos + 8
-      id match {
+    val pcm = Array.newBuilder[Int]
+    val it = cs.iterator
+    while (it.hasNext) {
+      val c = it.next()
+      c.id match {
         case "fmt " =>
-          if (sz < 16) return None
-          val tag = u16(body)
-          channels = u16(body + 2)
-          rate = u32(body + 4).toInt
-          val bits = u16(body + 14)
-          ok = tag == 7 && bits == 8 && channels >= 1
+          if (c.size < 16) return None
+          channels = u16(payload, c.body + 2)
+          rate = u32(payload, c.body + 4).toInt
+          ok = u16(payload, c.body) == tag &&
+            u16(payload, c.body + 14) == 8 && channels >= 1
         case "data" =>
-          if (!ok) return None // fmt must precede data and be µ-law
+          if (!ok) return None // fmt must precede data and match the tag
           sawData = true
-          var i = 0
-          while (i < sz) {
-            val s = ulawToLinear(u8(body + i))
+          var i = c.body
+          while (i < c.end) {
+            val s = expand(u8(payload, i))
             sumSq += s.toLong * s
+            if (keepPcm) pcm += s
             i += 1
           }
-          n += sz
+          n += c.size
         case _ => () // skip LIST/fact/etc.
       }
-      pos = body + sz.toInt + (sz.toInt & 1) // chunks pad to even
     }
-    if (ok && sawData && rate > 0) Some(UlawStream(n / channels, rate,
-      channels, sumSq))
+    if (ok && sawData && rate > 0)
+      Some((UlawStream(n / channels, rate, channels, sumSq), pcm.result()))
     else None
-  }
-
-  /** Decoded µ-law PCM samples (interleaved) — the waveform-consumer
-    * lane ([[decodeUlawWav]] keeps only the Σs² census). Same
-    * container contract: None on truncation/non-µ-law. */
-  def decodeUlawPcm(payload: Array[Byte]): Option[(Array[Int], Int, Int)] = {
-    decodeUlawWav(payload).map { meta =>
-      // second pass extracts samples; container already validated
-      def u8(i: Int) = payload(i) & 0xff
-      def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-        (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-      val out = Array.newBuilder[Int]
-      var pos = 12
-      while (pos + 8 <= payload.length) {
-        val id = new String(payload, pos, 4, "ISO-8859-1")
-        val sz = u32(pos + 4)
-        val body = pos + 8
-        if (id == "data") {
-          var i = 0
-          while (i < sz) { out += ulawToLinear(u8(body + i)); i += 1 }
-        }
-        pos = body + sz.toInt + (sz.toInt & 1)
-      }
-      (out.result(), meta.sampleRate, meta.channels)
-    }
   }
 
   // ---- A-law (the µ-law sibling: ITU-T G.711 §3, WAVE_FORMAT_ALAW
@@ -130,53 +112,8 @@ object G711 {
   /** Decode a RIFF/WAVE A-law (format tag 6, 8-bit) payload — the
     * [[decodeUlawWav]] walk with the tag-6 expansion. None on
     * truncation, non-RIFF, or any other codec. */
-  def decodeAlawWav(payload: Array[Byte]): Option[UlawStream] = {
-    if (payload == null || payload.length < 12) return None
-    def u8(i: Int) = payload(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (!(u8(0) == 'R' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == 'F' &&
-        u8(8) == 'W' && u8(9) == 'A' && u8(10) == 'V' && u8(11) == 'E'))
-      return None
-    var pos = 12
-    var rate = 0
-    var channels = 0
-    var ok = false
-    var sumSq = 0L
-    var n = 0L
-    var sawData = false
-    while (pos + 8 <= payload.length) {
-      val id = new String(payload, pos, 4, "ISO-8859-1")
-      val sz = u32(pos + 4)
-      if (sz < 0 || pos + 8 + sz > payload.length) return None
-      val body = pos + 8
-      id match {
-        case "fmt " =>
-          if (sz < 16) return None
-          val tag = u16(body)
-          channels = u16(body + 2)
-          rate = u32(body + 4).toInt
-          val bits = u16(body + 14)
-          ok = tag == 6 && bits == 8 && channels >= 1
-        case "data" =>
-          if (!ok) return None // fmt must precede data and be A-law
-          sawData = true
-          var i = 0
-          while (i < sz) {
-            val s = alawToLinear(u8(body + i))
-            sumSq += s.toLong * s
-            i += 1
-          }
-          n += sz
-        case _ => ()
-      }
-      pos = body + sz.toInt + (sz.toInt & 1)
-    }
-    if (ok && sawData && rate > 0) Some(UlawStream(n / channels, rate,
-      channels, sumSq))
-    else None
-  }
+  def decodeAlawWav(payload: Array[Byte]): Option[UlawStream] =
+    decode8(payload, 6, alawToLinear, keepPcm = false).map(_._1)
 
   // ---- the ENCODE direction (16-bit linear → G.711 byte): the
   // telephony-export surface. Both are the published CCITT quantizers
@@ -220,79 +157,22 @@ object G711 {
 
   /** Fixture: a real A-law WAV, byte stream `(id·17 + i·11) mod 256`. */
   def syntheticAlawWav(id: Long, nFrames: Int,
-      sampleRateHz: Int): Array[Byte] = {
-    val data = new Array[Byte](nFrames)
-    var i = 0
-    while (i < nFrames) {
-      data(i) = ((id * 17 + i.toLong * 11) % 256).toByte
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    def w16(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    }
-    out.write('R'); out.write('I'); out.write('F'); out.write('F')
-    val dataSz = nFrames + (nFrames & 1)
-    w32(4 + 8 + 18 + 8 + dataSz)
-    out.write('W'); out.write('A'); out.write('V'); out.write('E')
-    out.write('f'); out.write('m'); out.write('t'); out.write(' ')
-    w32(18)
-    w16(6)          // WAVE_FORMAT_ALAW
-    w16(1)          // mono
-    w32(sampleRateHz.toLong)
-    w32(sampleRateHz.toLong)
-    w16(1)
-    w16(8)
-    w16(0)
-    out.write('d'); out.write('a'); out.write('t'); out.write('a')
-    w32(nFrames.toLong)
-    out.write(data, 0, nFrames)
-    if ((nFrames & 1) == 1) out.write(0)
-    out.toByteArray
-  }
+      sampleRateHz: Int): Array[Byte] =
+    syntheticWav8(6, nFrames, sampleRateHz)(i => id * 17 + i * 11L)
 
   /** Fixture: a real µ-law WAV whose byte stream is the closed form
     * `(id·13 + i·7) mod 256` — every expanded sample replays in SQL
     * through the µ-law formula. */
   def syntheticUlawWav(id: Long, nFrames: Int,
-      sampleRateHz: Int): Array[Byte] = {
-    val data = new Array[Byte](nFrames)
-    var i = 0
-    while (i < nFrames) {
-      data(i) = ((id * 13 + i.toLong * 7) % 256).toByte
-      i += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    def w16(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    }
-    out.write('R'); out.write('I'); out.write('F'); out.write('F')
-    val dataSz = nFrames + (nFrames & 1)
-    w32(4 + 8 + 18 + 8 + dataSz)
-    out.write('W'); out.write('A'); out.write('V'); out.write('E')
-    out.write('f'); out.write('m'); out.write('t'); out.write(' ')
-    w32(18)         // µ-law fmt chunks carry cbSize (= 0)
-    w16(7)          // WAVE_FORMAT_MULAW
-    w16(1)          // mono
-    w32(sampleRateHz.toLong)
-    w32(sampleRateHz.toLong) // byte rate (1 byte/sample)
-    w16(1)          // block align
-    w16(8)          // bits per sample
-    w16(0)          // cbSize
-    out.write('d'); out.write('a'); out.write('t'); out.write('a')
-    w32(nFrames.toLong)
-    out.write(data, 0, nFrames)
-    if ((nFrames & 1) == 1) out.write(0) // even padding
-    out.toByteArray
-  }
+      sampleRateHz: Int): Array[Byte] =
+    syntheticWav8(7, nFrames, sampleRateHz)(i => id * 13 + i * 7L)
+
+  /** Mono 8-bit WAVE of format `tag` whose byte i is `byte(i) mod 256`;
+    * the `fmt ` carries cbSize = 0, as G.711 format chunks do. */
+  private def syntheticWav8(tag: Int, nFrames: Int, sampleRateHz: Int)(
+      byte: Int => Long): Array[Byte] =
+    Riff.write("WAVE", Seq(
+      "fmt " -> Riff.waveFmt(tag, 1, sampleRateHz, sampleRateHz, 1, 8,
+        Some(Nil)),
+      "data" -> Array.tabulate(nFrames)(i => (byte(i) % 256).toByte)))
 }

@@ -96,40 +96,15 @@ object MsAdpcm {
       }
       b += 1
     }
-    val adata = data.toByteArray
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    def w16(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    }
-    out.write('R'); out.write('I'); out.write('F'); out.write('F')
-    w32(4 + 8 + 50 + 8 + 4 + 8 + adata.length + (adata.length & 1))
-    out.write('W'); out.write('A'); out.write('V'); out.write('E')
-    out.write('f'); out.write('m'); out.write('t'); out.write(' ')
-    w32(50)                // 18 + cbSize 32 (2 spb + 2 numcoef + 7×4)
-    w16(0x02)              // WAVE_FORMAT_ADPCM
-    w16(1)                 // mono
-    w32(sampleRateHz.toLong)
-    w32(sampleRateHz.toLong * blockAlign / spb)
-    w16(blockAlign)
-    w16(4)                 // bits per sample
-    w16(32)                // cbSize
-    w16(spb)               // samplesPerBlock
-    w16(7)                 // wNumCoef — the published table
-    var c = 0
-    while (c < 7) { w16(Coef1(c) & 0xffff); w16(Coef2(c) & 0xffff); c += 1 }
-    out.write('f'); out.write('a'); out.write('c'); out.write('t')
-    w32(4)
-    w32(samples.length.toLong)
-    out.write('d'); out.write('a'); out.write('t'); out.write('a')
-    w32(adata.length.toLong)
-    out.write(adata, 0, adata.length)
-    if ((adata.length & 1) == 1) out.write(0)
-    out.toByteArray
+    // fmt tag 0x02 with cbSize = 32: samplesPerBlock, wNumCoef = 7 and
+    // the published coefficient pairs
+    val coefs = (0 until 7).flatMap(c => Seq(Coef1(c), Coef2(c)))
+    Riff.write("WAVE", Seq(
+      "fmt " -> Riff.waveFmt(0x02, 1, sampleRateHz,
+        sampleRateHz.toLong * blockAlign / spb, blockAlign, 4,
+        Some(Seq(spb, 7) ++ coefs)),
+      "fact" -> Riff.le32(samples.length),
+      "data" -> data.toByteArray))
   }
 
   final case class MsAdpcmStream(nFrames: Long, sampleRate: Int,
@@ -138,16 +113,11 @@ object MsAdpcm {
   /** Decode an MS-ADPCM WAV (tag 0x02, mono). The `fact` count trims
     * trailing pad nibbles. None on anything else. */
   def decode(payload: Array[Byte]): Option[MsAdpcmStream] = {
-    if (payload == null || payload.length < 12) return None
-    def u8(i: Int) = payload(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def s16(i: Int) = u16(i).toShort.toInt
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (!(u8(0) == 'R' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == 'F' &&
-        u8(8) == 'W' && u8(9) == 'A' && u8(10) == 'V' && u8(11) == 'E'))
-      return None
-    var pos = 12
+    val cs = Riff.read(payload, "WAVE") match {
+      case Some(cs) => cs
+      case None => return None
+    }
+    import Riff.{s16, u16, u32, u8}
     var ok = false
     var rate = 0
     var blockAlign = 0
@@ -156,43 +126,41 @@ object MsAdpcm {
     val pcmB = Array.newBuilder[Int]
     var emitted = 0L
     var sawData = false
-    while (pos + 8 <= payload.length) {
-      val id = new String(payload, pos, 4, "ISO-8859-1")
-      val sz = u32(pos + 4)
-      if (sz < 0 || pos + 8 + sz > payload.length) return None
-      val body = pos + 8
-      id match {
+    val it = cs.iterator
+    while (it.hasNext) {
+      val c = it.next()
+      val body = c.body
+      c.id match {
         case "fmt " =>
-          if (sz < 22) return None
-          ok = u16(body) == 0x02 && u16(body + 2) == 1 &&
-            u16(body + 14) == 4
-          rate = u32(body + 4).toInt
-          blockAlign = u16(body + 12)
-          spb = u16(body + 18)
+          if (c.size < 22) return None
+          ok = u16(payload, body) == 0x02 && u16(payload, body + 2) == 1 &&
+            u16(payload, body + 14) == 4
+          rate = u32(payload, body + 4).toInt
+          blockAlign = u16(payload, body + 12)
+          spb = u16(payload, body + 18)
           if (ok && (blockAlign < 8 ||
               spb != (blockAlign - 7) * 2 + 2)) return None
         case "fact" =>
-          if (sz < 4) return None
-          total = u32(body)
+          if (c.size < 4) return None
+          total = u32(payload, body)
         case "data" =>
           if (!ok || blockAlign == 0) return None
-          if (sz % blockAlign != 0) return None
+          if (c.size % blockAlign != 0) return None
           sawData = true
           var bp = body
-          val end = body + sz.toInt
-          while (bp < end) {
-            val coefIdx = u8(bp)
+          while (bp < c.end) {
+            val coefIdx = u8(payload, bp)
             if (coefIdx > 6) return None
-            var delta = s16(bp + 1)
+            var delta = s16(payload, bp + 1)
             if (delta < 16) return None
-            var s1 = s16(bp + 3)
-            var s2 = s16(bp + 5)
+            var s1 = s16(payload, bp + 3)
+            var s2 = s16(payload, bp + 5)
             if (total < 0 || emitted < total) { pcmB += s2; emitted += 1 }
             if (total < 0 || emitted < total) { pcmB += s1; emitted += 1 }
             var k = 0
             val nNib = (blockAlign - 7) * 2
             while (k < nNib) {
-              val byte = u8(bp + 7 + k / 2)
+              val byte = u8(payload, bp + 7 + k / 2)
               val un = if (k % 2 == 0) (byte >> 4) & 0xf else byte & 0xf
               val nib = if (un >= 8) un - 16 else un
               val (out, d2) = step(s1, s2, delta, nib, coefIdx)
@@ -206,7 +174,6 @@ object MsAdpcm {
           }
         case _ => ()
       }
-      pos = body + sz.toInt + (sz.toInt & 1)
     }
     if (!ok || !sawData || rate <= 0) return None
     val pcm = pcmB.result()

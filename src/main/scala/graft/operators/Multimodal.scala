@@ -303,11 +303,7 @@ object Multimodal {
     * RIFF/WAVE stream (compressed audio codecs are not in the JDK —
     * those payloads stay on the deterministic stub). */
   def decodeWav(payload: Array[Byte]): Option[(Long, Int, Int, Long)] = {
-    if (payload == null || payload.length < 12) return None
-    def b(i: Int): Int = payload(i) & 0xff
-    if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'))
-      return None
+    if (!Riff.isForm(payload, "WAVE")) return None
     val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(payload))
     catch {
@@ -364,11 +360,7 @@ object Multimodal {
     * bit payloads (same contract as [[decodeWav]]). */
   def decodeWavWindows(payload: Array[Byte], windowFrames: Int)
       : Option[Seq[(Int, Long)]] = {
-    if (payload == null || payload.length < 12) return None
-    def b(i: Int): Int = payload(i) & 0xff
-    if (!(b(0) == 'R' && b(1) == 'I' && b(2) == 'F' && b(3) == 'F' &&
-        b(8) == 'W' && b(9) == 'A' && b(10) == 'V' && b(11) == 'E'))
-      return None
+    if (!Riff.isForm(payload, "WAVE")) return None
     val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
       new java.io.ByteArrayInputStream(payload))
     catch {
@@ -847,21 +839,17 @@ object Multimodal {
       sample_rate: Int, sum_sq: Long)
 
   /** Multi-depth PCM WAV decode (format tag 1 at 8/16/24 bits — the
-    * legacy-audio surface AudioSystem won't cover uniformly): manual
-    * bounds-checked RIFF walk; 8-bit is UNSIGNED (s = b − 128, the WAV
+    * legacy-audio surface AudioSystem won't cover uniformly) over the
+    * [[Riff]] chunk walk; 8-bit is UNSIGNED (s = b − 128, the WAV
     * convention), 16/24-bit signed little-endian. Σs² at NATIVE depth
     * stays BIGINT-exact. None on truncation / non-PCM / other depths. */
   def decodePcmWav(payload: Array[Byte])
       : Option[(Long, Int, Int, Long)] = {
-    if (payload == null || payload.length < 12) return None
-    def u8(i: Int) = payload(i) & 0xff
-    def u16(i: Int) = u8(i) | (u8(i + 1) << 8)
-    def u32(i: Int) = u8(i).toLong | (u8(i + 1).toLong << 8) |
-      (u8(i + 2).toLong << 16) | (u8(i + 3).toLong << 24)
-    if (!(u8(0) == 'R' && u8(1) == 'I' && u8(2) == 'F' && u8(3) == 'F' &&
-        u8(8) == 'W' && u8(9) == 'A' && u8(10) == 'V' && u8(11) == 'E'))
-      return None
-    var pos = 12
+    val cs = Riff.read(payload, "WAVE") match {
+      case Some(cs) => cs
+      case None => return None
+    }
+    import Riff.{u16, u32, u8}
     var ok = false
     var rate = 0
     var channels = 0
@@ -869,39 +857,36 @@ object Multimodal {
     var sumSq = 0L
     var n = 0L
     var sawData = false
-    while (pos + 8 <= payload.length) {
-      val id = new String(payload, pos, 4, "ISO-8859-1")
-      val sz = u32(pos + 4)
-      if (sz < 0 || pos + 8 + sz > payload.length) return None
-      val body = pos + 8
-      id match {
+    val it = cs.iterator
+    while (it.hasNext) {
+      val c = it.next()
+      c.id match {
         case "fmt " =>
-          if (sz < 16) return None
-          channels = u16(body + 2)
-          rate = u32(body + 4).toInt
-          bits = u16(body + 14)
-          ok = u16(body) == 1 && channels >= 1 &&
+          if (c.size < 16) return None
+          channels = u16(payload, c.body + 2)
+          rate = u32(payload, c.body + 4).toInt
+          bits = u16(payload, c.body + 14)
+          ok = u16(payload, c.body) == 1 && channels >= 1 &&
             (bits == 8 || bits == 16 || bits == 24)
         case "data" =>
           if (!ok) return None
           sawData = true
           val bytesPer = bits / 8
-          if (sz % bytesPer != 0) return None
-          var i = 0
-          while (i < sz) {
+          if (c.size % bytesPer != 0) return None
+          var i = c.body
+          while (i < c.end) {
             val s: Long = bits match {
-              case 8 => (u8(body + i) - 128).toLong
-              case 16 => (u8(body + i) | (payload(body + i + 1) << 8)).toLong
-              case _ => (u8(body + i) | (u8(body + i + 1) << 8) |
-                (payload(body + i + 2) << 16)).toLong
+              case 8 => (u8(payload, i) - 128).toLong
+              case 16 => (u8(payload, i) | (payload(i + 1) << 8)).toLong
+              case _ => (u8(payload, i) | (u8(payload, i + 1) << 8) |
+                (payload(i + 2) << 16)).toLong
             }
             sumSq += s * s
             i += bytesPer
           }
-          n += sz / bytesPer
+          n += c.size / bytesPer
         case _ => ()
       }
-      pos = body + sz.toInt + (sz.toInt & 1)
     }
     if (ok && sawData && rate > 0)
       Some((n / channels, rate, bits, sumSq))
@@ -933,32 +918,10 @@ object Multimodal {
       }
       i += 1
     }
-    val out = new java.io.ByteArrayOutputStream()
-    def w32(v: Long): Unit = {
-      out.write((v & 0xff).toInt); out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt)
-    }
-    def w16(v: Int): Unit = {
-      out.write(v & 0xff); out.write((v >> 8) & 0xff)
-    }
-    out.write('R'); out.write('I'); out.write('F'); out.write('F')
-    val dataSz = data.length + (data.length & 1)
-    w32(4 + 8 + 16 + 8 + dataSz)
-    out.write('W'); out.write('A'); out.write('V'); out.write('E')
-    out.write('f'); out.write('m'); out.write('t'); out.write(' ')
-    w32(16)
-    w16(1)           // PCM
-    w16(1)           // mono
-    w32(sampleRateHz.toLong)
-    w32(sampleRateHz.toLong * bytesPer)
-    w16(bytesPer)
-    w16(bits)
-    out.write('d'); out.write('a'); out.write('t'); out.write('a')
-    w32(data.length.toLong)
-    out.write(data, 0, data.length)
-    if ((data.length & 1) == 1) out.write(0)
-    out.toByteArray
+    Riff.write("WAVE", Seq(
+      "fmt " -> Riff.waveFmt(1, 1, sampleRateHz,
+        sampleRateHz.toLong * bytesPer, bytesPer, bits),
+      "data" -> data))
   }
 
   /** Per-document multi-depth PCM table: bits cycle 8/16/24 by
@@ -2268,7 +2231,7 @@ object Multimodal {
     * arrive seq-ordered ACROSS batches (the DASH delivery contract);
     * a segment that skips ahead, repeats, or precedes its init is
     * dropped. Emits the same rows the batch index emits on in-order
-    * delivery (`Round8OpsSpec` pins stream == batch). */
+    * delivery (`FragmentedMp4Spec` pins stream == batch). */
   def segmentFrameIndexStream(segs: Dataset[Mp4SegmentRow])
       : Dataset[Mp4FrameRow] = {
     import segs.sparkSession.implicits._
@@ -3087,15 +3050,10 @@ object Multimodal {
     * (0x2F signature + two 14-bit minus-one dimensions packed LE).
     * Returns None on any magic/sync/size violation. */
   def parseWebp(b: Array[Byte]): Option[WebpMeta] = {
-    def u32le(o: Int): Long = (b(o) & 0xffL) | ((b(o + 1) & 0xffL) << 8) |
-      ((b(o + 2) & 0xffL) << 16) | ((b(o + 3) & 0xffL) << 24)
-    if (b.length < 30) return None
-    if (new String(b, 0, 4, "ISO-8859-1") != "RIFF" ||
-        new String(b, 8, 4, "ISO-8859-1") != "WEBP") return None
-    val riffSize = u32le(4)
+    if (b.length < 30 || !Riff.isForm(b, "WEBP")) return None
+    val riffSize = Riff.u32(b, 4)
     if (riffSize + 8 != b.length) return None
-    val fourcc = new String(b, 12, 4, "ISO-8859-1")
-    try fourcc match {
+    try Riff.fourcc(b, 12) match {
       case "VP8 " =>
         // 20..22 frame tag; 23..25 sync
         if ((b(23) & 0xff) != 0x9d || (b(24) & 0xff) != 0x01 ||
@@ -3105,7 +3063,7 @@ object Multimodal {
         Some(WebpMeta("VP8", w, h, riffSize))
       case "VP8L" =>
         if ((b(20) & 0xff) != 0x2f) return None
-        val bits = u32le(21)
+        val bits = Riff.u32(b, 21)
         val w = (bits & 0x3fff).toInt + 1
         val h = ((bits >> 14) & 0x3fff).toInt + 1
         Some(WebpMeta("VP8L", w, h, riffSize))
@@ -3119,11 +3077,6 @@ object Multimodal {
     * header is deterministic filler so byte lengths are id formulas. */
   def syntheticWebp(width: Int, height: Int, lossless: Boolean,
       fill: Int): Array[Byte] = {
-    val out = new java.io.ByteArrayOutputStream()
-    def w32le(v: Long): Unit = { out.write((v & 0xff).toInt)
-      out.write(((v >> 8) & 0xff).toInt)
-      out.write(((v >> 16) & 0xff).toInt)
-      out.write(((v >> 24) & 0xff).toInt) }
     val payload = new java.io.ByteArrayOutputStream()
     if (lossless) {
       payload.write(0x2f)
@@ -3141,14 +3094,8 @@ object Multimodal {
       payload.write(height & 0xff); payload.write((height >> 8) & 0x3f)
       for (_ <- 0 until 6) payload.write(fill)
     }
-    val p = payload.toByteArray
-    out.write("RIFF".getBytes("ISO-8859-1"))
-    w32le(4L + 8L + p.length) // "WEBP" + chunk header + chunk body
-    out.write("WEBP".getBytes("ISO-8859-1"))
-    out.write((if (lossless) "VP8L" else "VP8 ").getBytes("ISO-8859-1"))
-    w32le(p.length.toLong)
-    out.write(p)
-    out.toByteArray
+    Riff.write("WEBP",
+      Seq((if (lossless) "VP8L" else "VP8 ") -> payload.toByteArray))
   }
 
   /** Typed WebP record for the partition-batched path. */

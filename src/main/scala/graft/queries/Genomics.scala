@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
+import graft.genomics.SynthGeno.withCte
 
 /** Genetics-kernel queries (SURVEY.md §2.5, §2.2): allele frequency/count,
   * missing rate, alt dosage, GT-string formatting, per-sample margins — each
@@ -18,9 +19,6 @@ import graft.genomics.SynthGeno
   * uses in place of the reference's `~data` sample-major transpose.
   */
 object Genomics extends QueryModule {
-
-  private def withCte(body: String): String =
-    s"WITH variants AS (${SynthGeno.sqlCte})\n$body"
 
   // seqAlleleFreq / seqAlleleCount / seqMissing fused in one pass
   // (reference seqGetAF_AC_Missing, src/Methods.cpp:897-979).

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
+import graft.genomics.SynthGeno.withCte
 import graft.operators.PopGen
 
 /** Population-genetics statistics queries (the SNPRelate/GCTA/PLINK
@@ -16,9 +17,6 @@ import graft.operators.PopGen
   * BIGINT sums on a constant common denominator, one final division).
   */
 object PopGenQ extends QueryModule {
-
-  private def withCte(body: String): String =
-    s"WITH variants AS (${SynthGeno.sqlCte})\n$body"
 
   /** DuckDB twin of [[graft.functions.genetics.dosageAlt]]. */
   private val dSql =
@@ -1467,7 +1465,7 @@ object PopGenQ extends QueryModule {
     // unordered pair, so concordance compares one long per side): the
     // S² fan row drops from four nested element_at + least/greatest to
     // two flat element_at + two compares (SynthGeno.dupPackedCodes /
-    // PopGen.sampleSwapScanCodes; Round12OpsSpec pins codes == cube)
+    // PopGen.sampleSwapScanCodes; DupSwapProjectionSpec pins codes == cube)
     (s, dir) => PopGen.sampleSwapScanCodes(
       SynthGeno.dupPackedCodes(s, dir), N),
     Some(s"""WITH variants AS (${SynthGeno.sqlCteDup})

@@ -4,6 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
+import graft.genomics.SynthGeno.withCte
 import graft.operators.SlidingWindows
 
 /** Genomic-window ("unit") operators (SURVEY.md §2.6) plus the digest and
@@ -19,9 +20,6 @@ object Units extends QueryModule {
 
   private val WIN_SIZE = 2000L
   private val WIN_SHIFT = 1000L
-
-  private def withCte(body: String): String =
-    s"WITH variants AS (${SynthGeno.sqlCte})\n$body"
 
   private def withCtes(extra: String, body: String): String =
     s"WITH variants AS (${SynthGeno.sqlCte}),\n$extra\n$body"

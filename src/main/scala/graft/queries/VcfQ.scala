@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Fixtures
 import graft.core.SharedStages
 import graft.functions.genetics._
 import graft.genomics.SynthGeno
@@ -59,7 +60,7 @@ object VcfQ extends QueryModule {
   // `#CHROM` line → skip 16; 9 fixed columns + 90 samples). The oracle
   // recomputes the aggregates straight from the GT strings — an
   // implementation-independent replay of the container decode.
-  private val CeuVcf = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+  private val CeuVcf = s"${Fixtures.ExtData}/CEU_Exon.vcf.gz"
   private val ceuSampleCols =
     (9 until 99).map(i => f"column$i%02d").mkString("[", ", ", "]")
   private def ceuOracle(withMissing: Boolean): String =
@@ -92,7 +93,7 @@ object VcfQ extends QueryModule {
   private val q49 = Q("q49_gds_import",
     (s, _) => {
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
       df.select(col("chrom"),
           genoStats(col("geno"), lit(0)).as("st"))
         .select(col("chrom"),
@@ -113,7 +114,7 @@ object VcfQ extends QueryModule {
   // as q49 (BcfSpec holds the row-for-row equality underneath).
   private val q50 = Q("q50_bcf_import",
     (s, _) => {
-      val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+      val src = Fixtures.path("CEU_Exon.vcf.gz")
       val bcf = java.nio.file.Files.createTempDirectory("graft_bcf")
         .resolve("ceu.bcf").toString
       graft.sources.bcf.Bcf.writeFromVcf(src, bcf)
@@ -267,7 +268,7 @@ object VcfQ extends QueryModule {
   private val q60 = Q("q60_1kg_packed_af",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       df.select(col("variant_id"),
           element_at(st, 2).as("called"),
@@ -298,7 +299,7 @@ object VcfQ extends QueryModule {
   private val q150 = Q("q150_1kg_ld",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
         .filter(col("variant_id") <= LD_CUT)
         .select(col("variant_id").cast("long").as("vid"), col("chrom"),
           col("pos").cast("long").as("pos"),
@@ -350,7 +351,7 @@ object VcfQ extends QueryModule {
   private val q151 = Q("q151_1kg_sample_margin",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
         .filter(col("variant_id") <= LD_CUT)
         .select(unpack2b(col("pg"), lit(1092)).as("d"))
       df.select(posexplode_outer(col("d")).as(Seq("smp", "dos")))
@@ -381,7 +382,7 @@ object VcfQ extends QueryModule {
   private val q152 = Q("q152_gds_info_agg",
     (s, _) => {
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
       val dpCells = filter(flatten(col("fmt_DP")), x => x.isNotNull)
       df.select(col("chrom"),
           col("info_AC").cast("long").as("ac"),
@@ -433,7 +434,7 @@ object VcfQ extends QueryModule {
   private val q153 = Q("q153_1kg_sfs",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       df.select(element_at(st, 2).as("called"),
           element_at(st, 3).as("ac_ref"))
@@ -459,7 +460,7 @@ object VcfQ extends QueryModule {
   private val q157 = Q("q157_imputed_ds",
     (s, _) => {
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/Imputed_dosages.gds")
+        s, Fixtures.path("Imputed_dosages.gds"))
       val cells = filter(flatten(col("fmt_DS")), x => !isnan(x))
       val sumCode = aggregate(cells, lit(0L), (a, x) =>
         a + round(x.cast("double") * 127).cast("long"))
@@ -490,7 +491,7 @@ object VcfQ extends QueryModule {
   private val q171 = Q("q171_ceu_wc_fst",
     (s, _) => {
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
       graft.operators.PopGen.wcFstStrata(
         df.select(col("variant_id").as("vid"), col("geno")),
         0 until 45, 45 until 90)
@@ -600,8 +601,9 @@ object VcfQ extends QueryModule {
   // duplicate-site detection never re-scans, then one chrom rollup. ----
   private val q185 = Q("q185_preimpute_qc",
     (s, _) => {
-      val v = Vcf.read(s, CeuVcf).select(col("chrom"),
-        col("pos").cast("long").as("pos"), col("ref"), col("alts"))
+      val v = Vcf.read(s, Fixtures.path("CEU_Exon.vcf.gz"))
+        .select(col("chrom"), col("pos").cast("long").as("pos"), col("ref"),
+          col("alts"))
       val alt1 = element_at(col("alts"), 1)
       val bi = size(col("alts")) === 1
       val snv = bi && length(col("ref")) === 1 && length(alt1) === 1
@@ -677,7 +679,7 @@ object VcfQ extends QueryModule {
     (s, _) => {
       import org.apache.spark.sql.expressions.Window
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
         .select(col("chrom"), col("pos"), col("id"), col("geno"))
       val calledE = size(col("sa")) === 2 &&
         !exists(col("sa"), a => a.isNull)
@@ -764,7 +766,7 @@ object VcfQ extends QueryModule {
         i <- 0 until 90; j <- (i + 1) until 90
       } yield (i, j)).toDF("i", "j")
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
       val rows = df.select(dosageAlt(col("geno")).as("d"))
         .crossJoin(broadcast(pairs))
         .select(col("i"), col("j"),
@@ -840,7 +842,7 @@ object VcfQ extends QueryModule {
   private val q225 = Q("q225_1kg_tstv_maf",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       val ts = Seq("A,G", "G,A", "C,T", "T,C")
       df.select(col("allele"),
@@ -883,7 +885,7 @@ object VcfQ extends QueryModule {
   private val q226 = Q("q226_1kg_f2",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
         .filter(col("variant_id") <= LD_CUT &&
           length(col("allele")) === 3)
         .select(col("variant_id").cast("long").as("vid"),
@@ -941,7 +943,7 @@ object VcfQ extends QueryModule {
   private def ceuKinPairsPlan(s: SparkSession)
       : org.apache.spark.sql.DataFrame = {
     import s.implicits._
-    val gds = "/root/reference/inst/extdata/CEU_Exon.gds"
+    val gds = Fixtures.path("CEU_Exon.gds")
     val pairs = (for {
       i <- 0 until 90; j <- (i + 1) until 90
     } yield (i, j)).toDF("i", "j")
@@ -1158,7 +1160,7 @@ object VcfQ extends QueryModule {
         .select(col("i").cast("long").as("doc_a"),
           col("j").cast("long").as("doc_b"))
       val fams = graft.sources.gds.Gds.samples(s,
-          "/root/reference/inst/extdata/CEU_Exon.gds")
+          Fixtures.path("CEU_Exon.gds"))
         .select(col("sample_ordinal").cast("long").as("doc_id"),
           col("family"))
       val cc = graft.pipeline.TrainingData
@@ -1261,7 +1263,7 @@ object VcfQ extends QueryModule {
   private val q229 = Q("q229_1kg_ld_decay",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
         .filter(col("variant_id") <= LD_CUT)
         .select(col("variant_id").cast("long").as("vid"),
           lit("22").as("chrom"), col("pos").cast("long").as("pos"),
@@ -1331,7 +1333,7 @@ object VcfQ extends QueryModule {
   private val q233 = Q("q233_1kg_fis",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       df.select(
           element_at(st, 2).as("called"),
@@ -1377,7 +1379,7 @@ object VcfQ extends QueryModule {
   private val q243 = Q("q243_ceu_info_audit",
     (s, _) => {
       val df = graft.sources.gds.Gds.read(
-        s, "/root/reference/inst/extdata/CEU_Exon.gds")
+        s, Fixtures.path("CEU_Exon.gds"))
       val d = dosageAlt(col("geno"))
       val acRec = aggregate(d, lit(0L),
         (a, x) => a + coalesce(x, lit(0L)))
@@ -1449,7 +1451,7 @@ object VcfQ extends QueryModule {
   private val q248 = Q("q248_1kg_tstv_window",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       val ts = Seq("A,G", "G,A", "C,T", "T,C")
       df.select(col("pos"), col("allele"),
@@ -1501,7 +1503,7 @@ object VcfQ extends QueryModule {
   private val q262 = Q("q262_1kg_fuli",
     (s, _) => {
       val df = s.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/1KG_phase1_release_v3_chr22.gds")
+        .load(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
       val st = genoStatsPacked(col("pg"), lit(1092))
       val nAll = 2184
       val (an, uD, vD, _, _) = graft.operators.PopGen.fuLiConstants(nAll)

@@ -394,8 +394,6 @@ object GdsSchema {
         }
       }.getOrElse(Map.empty)
 
-    def scalarNull(vtype: String, v: AnyRef): AnyRef = v
-
     /** Reader over value elements; fixed-stride classes decode only
       * [e0, e1) (pass e1 < 0 for whole-node), variable-stride classes
       * decode whole. Indexes stay GLOBAL. */

@@ -56,21 +56,9 @@ object SnpGds {
 
   private def writeRows(it: Iterator[org.apache.spark.sql.Row],
       sampleIds: Seq[String], path: String): Long = {
-    val vids = ArrayBuffer.empty[Int]
-    val chroms = ArrayBuffer.empty[String]
-    val poss = ArrayBuffer.empty[Int]
-    val rsids = ArrayBuffer.empty[String]
-    val alleles = ArrayBuffer.empty[String]
     val bitsP = new GdsWrite.BitPacker(2)
     val nS = sampleIds.length
-
-    while (it.hasNext) {
-      val r = it.next()
-      vids += r.getLong(0).toInt
-      chroms += r.getString(1)
-      poss += r.getInt(2)
-      rsids += (if (r.isNullAt(3)) "" else r.getString(3))
-      alleles += r.getString(4).replaceFirst(",", "/").takeWhile(_ != ',')
+    writeTree(it, sampleIds, path, "dBit2", bitsP.bytes) { r =>
       val g = r.getSeq[scala.collection.Seq[Any]](5)
       require(g.length == nS, s"geno width ${g.length} != $nS")
       g.foreach { sa =>
@@ -83,6 +71,32 @@ object SnpGds {
         bitsP.add(if (miss || refs > 2) 3 else refs)
       }
     }
+  }
+
+  /** One SNP-GDS container: `sample.id`, the five snp nodes from
+    * columns 0–4 of each row, a `genoCls` genotype node [nSnp, nSample]
+    * whose payload `genoBytes` holds once `addGeno` has seen every row,
+    * and the `SNP_ARRAY` root folder. Returns the snp count. */
+  private def writeTree(it: Iterator[org.apache.spark.sql.Row],
+      sampleIds: Seq[String], path: String, genoCls: String,
+      genoBytes: => Array[Byte])(
+      addGeno: org.apache.spark.sql.Row => Unit): Long = {
+    val vids = ArrayBuffer.empty[Int]
+    val chroms = ArrayBuffer.empty[String]
+    val poss = ArrayBuffer.empty[Int]
+    val rsids = ArrayBuffer.empty[String]
+    val alleles = ArrayBuffer.empty[String]
+    val nS = sampleIds.length
+
+    while (it.hasNext) {
+      val r = it.next()
+      vids += r.getLong(0).toInt
+      chroms += r.getString(1)
+      poss += r.getInt(2)
+      rsids += (if (r.isNullAt(3)) "" else r.getString(3))
+      alleles += r.getString(4).replaceFirst(",", "/").takeWhile(_ != ',')
+      addGeno(r)
+    }
     val nSnp = vids.length
 
     val c = new GdsWrite.Container
@@ -93,19 +107,17 @@ object SnpGds {
     val snpPos = c.node("dInt32", Seq(nSnp), GdsWrite.intPayload(poss))
     val snpChrom = c.node("dStr8", Seq(nSnp), GdsWrite.strPayload(chroms))
     val snpAllele = c.node("dStr8", Seq(nSnp), GdsWrite.strPayload(alleles))
-    val genotype = c.node("dBit2", Seq(nSnp, nS), bitsP.bytes,
+    val genotype = c.node(genoCls, Seq(nSnp, nS), genoBytes,
       new GdsWrite.Attrs().nul("snp.order"))
     c.folderAt(rootId,
       Seq((sampleId, "sample.id", 0), (snpId, "snp.id", 0),
         (rsId, "snp.rs.id", 0), (snpPos, "snp.position", 0),
         (snpChrom, "snp.chromosome", 0), (snpAllele, "snp.allele", 0),
         (genotype, "genotype", 0)),
-      new Attrs().str("FileFormat", "SNP_ARRAY"))
+      new GdsWrite.Attrs().str("FileFormat", "SNP_ARRAY"))
     c.save(path, rootId)
     nSnp.toLong
   }
-
-  private type Attrs = GdsWrite.Attrs
 
   /** Dosage SNP-GDS (the FC_Dosage2GDS source shape): genotype node is
     * dFloat32 REF-allele dosage in [0, 2], NaN = missing. Input column
@@ -129,21 +141,10 @@ object SnpGds {
 
   private def writeDosageRows(it: Iterator[org.apache.spark.sql.Row],
       sampleIds: Seq[String], path: String): Long = {
-    val vids = ArrayBuffer.empty[Int]
-    val chroms = ArrayBuffer.empty[String]
-    val poss = ArrayBuffer.empty[Int]
-    val rsids = ArrayBuffer.empty[String]
-    val alleles = ArrayBuffer.empty[String]
     val values = ArrayBuffer.empty[Float]
     val nS = sampleIds.length
-
-    while (it.hasNext) {
-      val r = it.next()
-      vids += r.getLong(0).toInt
-      chroms += r.getString(1)
-      poss += r.getInt(2)
-      rsids += (if (r.isNullAt(3)) "" else r.getString(3))
-      alleles += r.getString(4).replaceFirst(",", "/").takeWhile(_ != ',')
+    writeTree(it, sampleIds, path, "dFloat32",
+        GdsWrite.floatPayload(values.toSeq)) { r =>
       val ds = r.getSeq[Any](5)
       require(ds.length == nS, s"ds width ${ds.length} != $nS")
       ds.foreach {
@@ -152,27 +153,6 @@ object SnpGds {
         case v: java.lang.Double => values += v.floatValue()
       }
     }
-    val nSnp = vids.length
-
-    val c = new GdsWrite.Container
-    val rootId = c.allocId()
-    val sampleId = c.node("dStr8", Seq(nS), GdsWrite.strPayload(sampleIds))
-    val snpId = c.node("dInt32", Seq(nSnp), GdsWrite.intPayload(vids))
-    val rsId = c.node("dStr8", Seq(nSnp), GdsWrite.strPayload(rsids))
-    val snpPos = c.node("dInt32", Seq(nSnp), GdsWrite.intPayload(poss))
-    val snpChrom = c.node("dStr8", Seq(nSnp), GdsWrite.strPayload(chroms))
-    val snpAllele = c.node("dStr8", Seq(nSnp), GdsWrite.strPayload(alleles))
-    val genotype = c.node("dFloat32", Seq(nSnp, nS),
-      GdsWrite.floatPayload(values.toSeq),
-      new GdsWrite.Attrs().nul("snp.order"))
-    c.folderAt(rootId,
-      Seq((sampleId, "sample.id", 0), (snpId, "snp.id", 0),
-        (rsId, "snp.rs.id", 0), (snpPos, "snp.position", 0),
-        (snpChrom, "snp.chromosome", 0), (snpAllele, "snp.allele", 0),
-        (genotype, "genotype", 0)),
-      new Attrs().str("FileFormat", "SNP_ARRAY"))
-    c.save(path, rootId)
-    nSnp.toLong
   }
 
   /** `seqSNP2GDS`: SNP-GDS → SeqArray GDS container. `majorRef` mirrors

@@ -18,7 +18,7 @@ class BcfSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  private val vcf = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+  private def vcf = Fixtures.path("CEU_Exon.vcf.gz")
 
   test("vcf -> bcf -> read equals the direct vcf parse (CEU fixture)") {
     val bcfPath = java.nio.file.Files

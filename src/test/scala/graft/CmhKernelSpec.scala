@@ -11,7 +11,7 @@ import graft.operators.PopGen
   * posexplode fan conversions — value parity against independent
   * references plus the O(1)-plan-node contract at a 10k-sample width.
   */
-class Round11OpsSpec extends AnyFunSuite {
+class CmhKernelSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

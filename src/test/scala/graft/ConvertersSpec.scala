@@ -14,7 +14,6 @@ import graft.sources.gds.Gds
   * in-memory parse it must preserve. */
 class ConvertersSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
   private val core = Seq("chrom", "pos", "id", "allele", "geno", "phased")
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -28,9 +27,9 @@ class ConvertersSpec extends AnyFunSuite {
 
   test("seqVCF2GDS writes a .gds equal to the VCF parse; seqGDS2VCF inverts") {
     val d = dir()
-    SeqArray.seqVCF2GDS(spark, s"$extdata/CEU_Exon.vcf.gz", s"$d/ceu.gds")
+    SeqArray.seqVCF2GDS(spark, Fixtures.path("CEU_Exon.vcf.gz"), s"$d/ceu.gds")
     val fromGds = SeqArray.openGds(spark, s"$d/ceu.gds")
-    val fromVcf = SeqArray.openVcf(spark, s"$extdata/CEU_Exon.vcf.gz")
+    val fromVcf = SeqArray.openVcf(spark, Fixtures.path("CEU_Exon.vcf.gz"))
     // every info_*/fmt_* column survives the container round trip too
     val full = core ++ fromVcf.variants.columns
       .filter(c => c.startsWith("info_") || c.startsWith("fmt_"))
@@ -112,13 +111,13 @@ class ConvertersSpec extends AnyFunSuite {
 
   test("seqGDS2BCF: direct binary export reads back equal to the gds scan") {
     val d = dir()
-    SeqArray.seqGDS2BCF(spark, s"$extdata/CEU_Exon.gds", s"$d/ceu.bcf")
+    SeqArray.seqGDS2BCF(spark, Fixtures.path("CEU_Exon.gds"), s"$d/ceu.bcf")
     assert(java.nio.file.Files.exists(
       java.nio.file.Paths.get(s"$d/ceu.bcf.csi")))
     val back = graft.sources.bcf.Bcf.read(spark, s"$d/ceu.bcf")
     val cols = Seq("chrom", "pos", "allele", "geno", "phased") ++
       back.columns.filter(_.startsWith("info_"))
-    val orig = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val orig = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
     assert(cols.forall(orig.columns.contains),
       cols.filterNot(orig.columns.contains).mkString(","))
     val a = back.select(cols.map(col): _*)
@@ -129,12 +128,12 @@ class ConvertersSpec extends AnyFunSuite {
 
   test("seqGDS2BED → seqBED2GDS preserves the REF-dosage fold") {
     val d = dir()
-    SeqArray.seqGDS2BED(spark, s"$extdata/CEU_Exon.gds", s"$d/ceu")
+    SeqArray.seqGDS2BED(spark, Fixtures.path("CEU_Exon.gds"), s"$d/ceu")
     SeqArray.seqBED2GDS(spark, s"$d/ceu", s"$d/ceu_back.gds")
     val back = Gds.read(spark, s"$d/ceu_back.gds")
       .select(col("chrom"), col("pos"), col("id"),
         unpack2b(pack2b(col("geno")), lit(90)).as("dos"))
-    val orig = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val orig = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(col("chrom"), col("pos"),
         coalesce(col("id"), concat(lit("v"), col("variant_id"))).as("id"),
         unpack2b(pack2b(col("geno")), lit(90)).as("dos"))
@@ -145,7 +144,7 @@ class ConvertersSpec extends AnyFunSuite {
 
   test("seqGDS2SNP → seqSNP2GDS chain lands back in a SeqArray container") {
     val d = dir()
-    SeqArray.seqGDS2SNP(spark, s"$extdata/CEU_Exon.gds", s"$d/ceu_snp.gds")
+    SeqArray.seqGDS2SNP(spark, Fixtures.path("CEU_Exon.gds"), s"$d/ceu_snp.gds")
     SeqArray.seqSNP2GDS(spark, s"$d/ceu_snp.gds", s"$d/ceu_seq.gds")
     val back = SeqArray.openGds(spark, s"$d/ceu_seq.gds")
     assert(back.variants.count() == 1348)

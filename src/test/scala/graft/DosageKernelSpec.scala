@@ -13,7 +13,7 @@ import graft.operators.PopGen
   * contract at a 10k-sample width (where the unrolled trees blew up the
   * analyzer).
   */
-class Round10OpsSpec extends AnyFunSuite {
+class DosageKernelSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -11,7 +11,7 @@ import graft.operators.PopGen
   * replaced cube-construction consumers must equal the cube-derived
   * originals bit-for-bit (the restructured queries are additionally
   * oracle-gated; these pin the operator pieces in isolation). */
-class Round12OpsSpec extends AnyFunSuite {
+class DupSwapProjectionSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

@@ -10,7 +10,7 @@ import graft.operators.Multimodal
   * tfdt decode-time rebase, truncated-moof rejection, and the
   * count-bounds hardening (a corrupt box declaring 2^31 entries must
   * reject instantly, not allocate). */
-class Round8OpsSpec extends AnyFunSuite {
+class FragmentedMp4Spec extends AnyFunSuite {
 
   private def u32(v: Long) = Array(((v >> 24) & 0xff).toByte,
     ((v >> 16) & 0xff).toByte, ((v >> 8) & 0xff).toByte,

@@ -14,7 +14,6 @@ import graft.sources.gds.GdsCore.{GdsFile, Node}
   * XZ_RA chunks on its own). */
 class GdsRangedSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
 
   private def collectNodes(n: Node): Seq[Node] =
     n +: n.children.flatMap(collectNodes)
@@ -60,15 +59,15 @@ class GdsRangedSpec extends AnyFunSuite {
   }
 
   test("CEU_Exon.gds: ranged == whole for every variable-stride node") {
-    checkFile(s"$extdata/CEU_Exon.gds")
+    checkFile(Fixtures.path("CEU_Exon.gds"))
   }
 
   test("1KG chr22: ranged == whole incl. the multi-chunk indel allele") {
-    checkFile(s"$extdata/1KG_phase1_release_v3_chr22.gds")
+    checkFile(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
   }
 
   test("Imputed_dosages.gds: ranged == whole") {
-    checkFile(s"$extdata/Imputed_dosages.gds")
+    checkFile(Fixtures.path("Imputed_dosages.gds"))
   }
 
   test("written container: ranged == whole for dStr8 and dVL_Int nodes") {
@@ -152,7 +151,7 @@ class GdsRangedSpec extends AnyFunSuite {
     // slice of a big node must NOT read the node's whole compressed
     // stream from the file (one huge node would otherwise OOM or
     // serialize every executor)
-    val f = new GdsFile(s"$extdata/1KG_phase1_release_v3_chr22.gds")
+    val f = new GdsFile(Fixtures.path("1KG_phase1_release_v3_chr22.gds"))
     try {
       val g = f.root("genotype")("data")
       val nS = 1092

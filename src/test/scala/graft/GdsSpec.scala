@@ -16,7 +16,6 @@ import graft.sources.gds.{Gds, GdsCore}
   * lines. */
 class GdsSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -25,8 +24,8 @@ class GdsSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("CEU_Exon.gds scan equals CEU_Exon.vcf.gz parse on every field") {
-    val gds = Gds.read(spark, s"$extdata/CEU_Exon.gds")
-    val vcf = Vcf.read(spark, s"$extdata/CEU_Exon.vcf.gz")
+    val gds = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
+    val vcf = Vcf.read(spark, Fixtures.path("CEU_Exon.vcf.gz"))
     assert(gds.count() == 1348 && vcf.count() == 1348)
     // identical column set (vcf has no variant_id; gds carries the
     // stored variant.id)
@@ -41,14 +40,14 @@ class GdsSpec extends AnyFunSuite {
   }
 
   test("column pruning decodes without the genotype planes") {
-    val df = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val df = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select("chrom", "pos")
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("chrom") && !plan.contains("geno"))
     assert(df.distinct().count() > 0)
     // reader-level check: extractors for a pruned schema never touch
     // the genotype node
-    val f = new GdsCore.GdsFile(s"$extdata/CEU_Exon.gds")
+    val f = new GdsCore.GdsFile(Fixtures.path("CEU_Exon.gds"))
     try {
       val pos = GdsCore.ints(f, f.root("position"))
       assert(pos.length == 1348 && pos(0) == 1105366)
@@ -56,7 +55,7 @@ class GdsSpec extends AnyFunSuite {
   }
 
   test("1KG chr22 fixture: tree, counts and allele frequency sanity") {
-    val path = s"$extdata/1KG_phase1_release_v3_chr22.gds"
+    val path = Fixtures.path("1KG_phase1_release_v3_chr22.gds")
     val f = new GdsCore.GdsFile(path)
     try {
       assert(f.root("sample.id").dims == Seq(1092))
@@ -80,7 +79,7 @@ class GdsSpec extends AnyFunSuite {
   }
 
   test("dosage-only fixture (Imputed_dosages.gds): DS matrix, no genotype") {
-    val df = Gds.read(spark, s"$extdata/Imputed_dosages.gds")
+    val df = Gds.read(spark, Fixtures.path("Imputed_dosages.gds"))
     assert(!df.columns.contains("geno"))
     assert(df.columns.contains("fmt_DS"))
     assert(df.count() == 100)
@@ -105,7 +104,7 @@ class GdsSpec extends AnyFunSuite {
 
   test("samples table + setFilterSampleIds keeps file order, warns, renumbers") {
     import graft.api.SeqArray
-    val gds = SeqArray.openGds(spark, s"$extdata/CEU_Exon.gds")
+    val gds = SeqArray.openGds(spark, Fixtures.path("CEU_Exon.gds"))
     val st = gds.samples.get
     assert(st.count() == 90)
     assert(st.columns.toSeq == Seq("sample_ordinal", "sample_id", "family"))
@@ -127,7 +126,7 @@ class GdsSpec extends AnyFunSuite {
   test("sample-ordinal pushdown decodes only the selected samples") {
     // option("samples"): the scan-level sample bitmap — every per-sample
     // column must equal the full read sliced to those ordinals
-    val p = s"$extdata/CEU_Exon.gds"
+    val p = Fixtures.path("CEU_Exon.gds")
     val sel = Seq(3, 0, 41, 89)
     val pushed = spark.read.format("gds")
       .option("samples", sel.mkString(",")).load(p)
@@ -165,9 +164,9 @@ class GdsSpec extends AnyFunSuite {
     val dsSel = Seq(7, 999, 123)
     val dsPushed = spark.read.format("gds")
       .option("samples", dsSel.mkString(","))
-      .load(s"$extdata/Imputed_dosages.gds")
+      .load(Fixtures.path("Imputed_dosages.gds"))
       .select("variant_id", "fmt_DS")
-    val dsSliced = Gds.read(spark, s"$extdata/Imputed_dosages.gds")
+    val dsSliced = Gds.read(spark, Fixtures.path("Imputed_dosages.gds"))
       .select(col("variant_id"),
         array(dsSel.map(i => element_at(col("fmt_DS"), i + 1)): _*)
           .as("fmt_DS"))
@@ -179,8 +178,8 @@ class GdsSpec extends AnyFunSuite {
     // ranged XZ_RA chunk decode must reproduce the sequential decode
     // byte-for-byte, across both _ra framing versions (CEU=v11, 1KG=v10)
     for ((p, colsOpt) <- Seq(
-        (s"$extdata/CEU_Exon.gds", None), // ALL columns incl. info_*/fmt_*
-        (s"$extdata/1KG_phase1_release_v3_chr22.gds",
+        (Fixtures.path("CEU_Exon.gds"), None), // ALL columns incl. info_*/fmt_*
+        (Fixtures.path("1KG_phase1_release_v3_chr22.gds"),
           Some(Seq("variant_id", "pos", "allele", "geno"))))) {
       val all = spark.read.format("gds").load(p).columns.toSeq
       val cols = colsOpt.getOrElse(all)
@@ -195,7 +194,7 @@ class GdsSpec extends AnyFunSuite {
   }
 
   test("chrom/pos filters prune variant ranges at planning") {
-    val p = s"$extdata/CEU_Exon.gds"
+    val p = Fixtures.path("CEU_Exon.gds")
     def scan(filtered: Boolean) = {
       val df = spark.read.format("gds").option("splitVariants", "64").load(p)
       if (filtered) df.filter(col("chrom") === "1" && col("pos") < 2000000)
@@ -218,9 +217,9 @@ class GdsSpec extends AnyFunSuite {
     // SeqArray tree (CEU): bit-planes → REF-dosage fold must match
     // packing the materialized cube
     val viaPg = spark.read.format("gds").option("packed", "true")
-      .load(s"$extdata/CEU_Exon.gds")
+      .load(Fixtures.path("CEU_Exon.gds"))
       .select(col("variant_id"), col("pg"))
-    val viaCube = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val viaCube = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(col("variant_id"), pack2b(col("geno")).as("pg"))
     assert(viaPg.count() == 1348)
     assert(viaPg.exceptAll(viaCube).count() == 0 &&
@@ -232,7 +231,7 @@ class GdsSpec extends AnyFunSuite {
     import graft.functions.genetics.{genoStats, genoStatsPacked, pack2b}
     // CEU has only fully-missing calls (./.), where packed and unpacked
     // semantics coincide on all five stats
-    val df = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val df = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(col("geno"))
     val both = df.select(
       genoStats(col("geno"), lit(0)).as("a"),
@@ -243,7 +242,7 @@ class GdsSpec extends AnyFunSuite {
   test("reference golden values: seqSummary-style tabulation on CEU") {
     // inst/unitTests replays: per-chromosome counts and the fixture's
     // documented shape (90 samples, 1348 variants, 22 chromosomes)
-    val df = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val df = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
     val perChrom = df.groupBy("chrom").count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(perChrom.keySet.size == 22)

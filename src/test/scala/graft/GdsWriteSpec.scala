@@ -13,7 +13,6 @@ import graft.sources.gds.{Gds, GdsWrite}
   * multi-plane (np=2) genotype encoding. */
 class GdsWriteSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -56,9 +55,9 @@ class GdsWriteSpec extends AnyFunSuite {
   }
 
   test("CEU read → write → read round-trips every core column") {
-    val src = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val src = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(core.map(col): _*)
-    val samples = Gds.samples(spark, s"$extdata/CEU_Exon.gds")
+    val samples = Gds.samples(spark, Fixtures.path("CEU_Exon.gds"))
       .orderBy("sample_ordinal").collect().map(_.getString(1)).toSeq
     val out = java.nio.file.Files
       .createTempDirectory("graft_gdsw").toString + "/ceu.gds"
@@ -76,7 +75,7 @@ class GdsWriteSpec extends AnyFunSuite {
       "annotation/info node and reads back exactly") {
     // the as.is="gdsn" analog: an AC-style derived value computed over
     // the handle streams into annotation/info/MYAC of a fresh container
-    val d = graft.api.SeqArray.openGds(spark, s"$extdata/CEU_Exon.gds")
+    val d = graft.api.SeqArray.openGds(spark, Fixtures.path("CEU_Exon.gds"))
     val out = java.nio.file.Files
       .createTempDirectory("graft_gdsn").toString + "/applied.gds"
     val ac = graft.functions.genetics.alleleCount(
@@ -143,14 +142,14 @@ class GdsWriteSpec extends AnyFunSuite {
     // pairing), and its coder strings must name the requested codec
     import graft.sources.Vcf
     import org.apache.spark.sql.expressions.Window
-    val vcf = Vcf.read(spark, s"$extdata/CEU_Exon.vcf.gz")
+    val vcf = Vcf.read(spark, Fixtures.path("CEU_Exon.vcf.gz"))
     val cols = Seq("chrom", "pos", "id", "allele", "qual", "filter",
       "geno", "phased")
     val src = vcf.select(
       row_number().over(Window.orderBy("chrom", "pos", "allele"))
         .cast("long").as("variant_id") +: cols.map(col): _*)
     // the two CEU fixtures share the same cohort → same sample axis
-    val samples = Gds.samples(spark, s"$extdata/CEU_Exon.gds")
+    val samples = Gds.samples(spark, Fixtures.path("CEU_Exon.gds"))
       .orderBy("sample_ordinal").collect().map(_.getString(1)).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_coders").toString
     for (coder <- Seq("ZIP_ra", "LZ4_ra", "LZMA_ra")) {
@@ -257,8 +256,8 @@ class GdsWriteSpec extends AnyFunSuite {
   }
 
   test("seqCheck audit: every node of the fixtures and of our output decodes") {
-    for (p <- Seq(s"$extdata/CEU_Exon.gds",
-        s"$extdata/Imputed_dosages.gds")) {
+    for (p <- Seq(Fixtures.path("CEU_Exon.gds"),
+        Fixtures.path("Imputed_dosages.gds"))) {
       val audit = Gds.check(spark, p)
       val bad = audit.filter(!col("ok")).collect()
       assert(bad.isEmpty, s"$p: ${bad.mkString(";")}")
@@ -266,9 +265,9 @@ class GdsWriteSpec extends AnyFunSuite {
         col("node") === "sample.id").count() >= 1)
     }
     // our own writer's output passes the same audit
-    val src = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val src = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(core.map(col): _*)
-    val samples = Gds.samples(spark, s"$extdata/CEU_Exon.gds")
+    val samples = Gds.samples(spark, Fixtures.path("CEU_Exon.gds"))
       .orderBy("sample_ordinal").collect().map(_.getString(1)).toSeq
     val out = java.nio.file.Files
       .createTempDirectory("graft_gdsw").toString + "/chk.gds"
@@ -290,8 +289,8 @@ class GdsWriteSpec extends AnyFunSuite {
     import graft.api.SeqArray
     val out = java.nio.file.Files
       .createTempDirectory("graft_recmp").toString + "/ceu_zip.gds"
-    SeqArray.seqRecompress(spark, s"$extdata/CEU_Exon.gds", out, "ZIP")
-    val src = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    SeqArray.seqRecompress(spark, Fixtures.path("CEU_Exon.gds"), out, "ZIP")
+    val src = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
     val back = Gds.read(spark, out)
     val cols = src.columns.toSet.intersect(back.columns.toSet).toSeq.sorted
     assert(cols.contains("geno") && cols.exists(_.startsWith("info_")))
@@ -323,9 +322,9 @@ class GdsWriteSpec extends AnyFunSuite {
   test("written container parses with the independent python decoder") {
     // the scripts/gds_read.py layer decoder recovered the format from
     // the reference fixtures; our containers must satisfy it too
-    val src = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val src = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(core.map(col): _*).limit(10)
-    val samples = Gds.samples(spark, s"$extdata/CEU_Exon.gds")
+    val samples = Gds.samples(spark, Fixtures.path("CEU_Exon.gds"))
       .orderBy("sample_ordinal").collect().map(_.getString(1)).toSeq
     val out = java.nio.file.Files
       .createTempDirectory("graft_gdsw").toString + "/py.gds"

@@ -12,7 +12,7 @@ import graft.operators.Multimodal
   * silently dropped (two identical docs in the doc_id % 5 = 0 sample),
   * and the q279 sub-4-token-document guard (descending-sequence slice
   * throw when the n >= G filter doesn't push below the Generate). */
-class Round7OpsSpec extends AnyFunSuite {
+class Mp4FrameIndexSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -196,7 +196,7 @@ class Round7OpsSpec extends AnyFunSuite {
       "monotone non-increasing in the extension, bounded in [0,1], " +
       "and counts all 2S haplotypes") {
     val v = graft.sources.Vcf
-      .read(spark, "/root/reference/inst/extdata/CEU_Exon.vcf.gz")
+      .read(spark, Fixtures.path("CEU_Exon.vcf.gz"))
       .select(col("pos").cast("long").as("vid"), col("chrom"),
         col("pos").cast("long").as("pos"), col("geno"))
     val nS = 90 // CEU_Exon sample count

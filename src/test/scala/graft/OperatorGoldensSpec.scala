@@ -12,7 +12,7 @@ import graft.pipeline.TrainingData
   * lexical-profile / token-spectrum corpus diagnostics. The sf0.01
   * oracle gate (q181–q188) proves the full formulas against DuckDB;
   * these pin the SEMANTICS on known inputs. */
-class Round6OpsSpec extends AnyFunSuite {
+class OperatorGoldensSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

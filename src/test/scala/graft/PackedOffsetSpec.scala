@@ -14,7 +14,7 @@ class PackedOffsetSpec extends AnyFunSuite {
 
   test("the reference fixture's stored offset parses as exactly 0.0") {
     val f = new GdsCore.GdsFile(
-      "/root/reference/inst/extdata/Imputed_dosages.gds")
+      Fixtures.path("Imputed_dosages.gds"))
     try {
       val n = f.root("annotation")("format")("DS")("data")
       assert(n.cls.contains("dPackedReal8U"))

@@ -10,7 +10,7 @@ import graft.operators.PopGen
   * round-8 verdict's O(S²)-literal plan defect) and their plan-size
   * contract at the guard bound.
   */
-class Round9OpsSpec extends AnyFunSuite {
+class PairFanPlanSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -77,7 +77,7 @@ class Round9OpsSpec extends AnyFunSuite {
     val v = Seq((1L, Seq(0L))).toDF("vid", "d")
     // widths stay inside grmScale's exact-arithmetic domain (nMax ≤ 22
     // — wider now throws LOUDLY instead of silently wrapping the lcm,
-    // Round11OpsSpec pins the boundary)
+    // CmhKernelSpec pins the boundary)
     val n11 = exprNodes(PopGen.grm(v, 11))
     val n22 = exprNodes(PopGen.grm(v, 22))
     // round 9 killed the S² literal pair fan; round 11 killed the O(S)

@@ -10,7 +10,7 @@ import graft.operators.{Graphs, Multimodal, PopGen}
   * the duplicate-locus collapse that makes the islands deterministic),
   * histogram-quantile error bounds, and deterministic label
   * propagation on a known community graph. */
-class Round8bOpsSpec extends AnyFunSuite {
+class PopGenQcSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")

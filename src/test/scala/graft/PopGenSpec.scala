@@ -526,7 +526,7 @@ class PopGenSpec extends AnyFunSuite {
   test("wcFstStrata on CEU: strata rebuild from per-variant counts; " +
       "genome-wide theta near zero for same-population halves") {
     val v = graft.sources.gds.Gds.read(spark,
-        "/root/reference/inst/extdata/CEU_Exon.gds")
+        Fixtures.path("CEU_Exon.gds"))
       .select(col("variant_id").as("vid"), col("geno"))
     val strata = PopGen.wcFstStrata(v, 0 until 45, 45 until 90)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),

@@ -166,7 +166,7 @@ class SeqArraySpec extends AnyFunSuite {
 
   test("seqAsVCF-shaped view matches the CEU fixture's first record") {
     val ceu = SeqArray.openGds(spark,
-      "/root/reference/inst/extdata/CEU_Exon.gds")
+      Fixtures.path("CEU_Exon.gds"))
     val v = ceu.asVcf(chrPrefix = "chr").orderBy("variant_id")
     val f = v.schema("fixed").dataType
       .asInstanceOf[org.apache.spark.sql.types.StructType]

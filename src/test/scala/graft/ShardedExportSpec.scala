@@ -16,7 +16,6 @@ import graft.sources.gds.{Gds, GdsWrite, SnpGds}
   * genuinely fans out. */
 class ShardedExportSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -27,9 +26,9 @@ class ShardedExportSpec extends AnyFunSuite {
   private val core = Seq("variant_id", "chrom", "pos", "id", "allele",
     "qual", "filter", "geno", "phased")
 
-  private def ceu = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+  private def ceu = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
     .select(core.map(col): _*)
-  private def samples = Gds.samples(spark, s"$extdata/CEU_Exon.gds")
+  private def samples = Gds.samples(spark, Fixtures.path("CEU_Exon.gds"))
     .orderBy("sample_ordinal").collect().map(_.getString(1)).toSeq
 
   test("gds: sharded export reads back equal via the directory scan") {
@@ -106,11 +105,11 @@ class ShardedExportSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_v2g_shard").toString + "/ceu"
     val metas = SeqArray.seqVCF2GDSSharded(spark,
-      s"$extdata/CEU_Exon.vcf.gz", dir)
+      Fixtures.path("CEU_Exon.vcf.gz"), dir)
     assert(metas.length > 1 && metas.map(_._2).sum == 1348L)
     val back = Gds.read(spark, dir)
       .select("chrom", "pos", "allele", "geno", "phased")
-    val direct = Vcf.read(spark, s"$extdata/CEU_Exon.vcf.gz")
+    val direct = Vcf.read(spark, Fixtures.path("CEU_Exon.vcf.gz"))
       .select("chrom", "pos", "allele", "geno", "phased")
     assert(back.exceptAll(direct).count() == 0 &&
       direct.exceptAll(back).count() == 0)
@@ -121,7 +120,7 @@ class ShardedExportSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_shard_bcf").toString + "/ceu"
     val metas = SeqArray.seqGDS2BCFSharded(spark,
-      s"$extdata/CEU_Exon.gds", dir)
+      Fixtures.path("CEU_Exon.gds"), dir)
     assert(metas.length > 1 && metas.map(_._2).sum == 1348L)
     metas.foreach { case (f, _) =>
       assert(java.nio.file.Files.exists(
@@ -140,7 +139,7 @@ class ShardedExportSpec extends AnyFunSuite {
     val dir = java.nio.file.Files
       .createTempDirectory("graft_shard_vcf").toString + "/ceu"
     val metas = SeqArray.seqGDS2VCFSharded(spark,
-      s"$extdata/CEU_Exon.gds", dir)
+      Fixtures.path("CEU_Exon.gds"), dir)
     assert(metas.length > 1 && metas.map(_._2).sum == 1348L)
     // the directory reads back directly as one text scan
     val parts = Vcf.read(spark, dir)

@@ -81,4 +81,46 @@ class SnpGdsRoundTripPropertySpec extends AnyFunSuite {
         df.exceptAll(back).count() == 0, s"round=$round nS=$nS nVar=$nVar")
     }
   }
+
+  private def md5(path: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)))
+      .map(b => f"${b & 0xff}%02x").mkString
+
+  test("seeded write and writeDosage containers keep their bytes") {
+    import spark.implicits._
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft_snpgds_pin").toString
+    val nS = 5
+    val nVar = 13
+    val samples = (1 to nS).map(i => s"S$i")
+    val geno = (0 until nVar).map { v =>
+      val calls = (0 until nS).map { s =>
+        draw(Gen.choose(0, 3), 71000L + 97L * v + s) match {
+          case 0 => Seq[java.lang.Long](1L, 1L)
+          case 1 => Seq[java.lang.Long](0L, 1L)
+          case 2 => Seq[java.lang.Long](0L, 0L)
+          case _ => Seq[java.lang.Long](null, null)
+        }
+      }
+      (v.toLong, if (v < 7) "1" else "2", 100 + 3 * v,
+        if (v % 5 == 0) null.asInstanceOf[String] else s"rs$v",
+        "A,C", calls)
+    }.toDF("variant_id", "chrom", "pos", "id", "allele", "geno")
+    val ds = (0 until nVar).map { v =>
+      val d = (0 until nS).map { s =>
+        draw(Gen.choose(0, 9), 72000L + 89L * v + s) match {
+          case 9 => null.asInstanceOf[java.lang.Float]
+          case q => java.lang.Float.valueOf(q * 0.25f)
+        }
+      }
+      (v.toLong, "1", 100 + v, s"rs$v", "G,T", d)
+    }.toDF("variant_id", "chrom", "pos", "id", "allele", "ds")
+    SnpGds.write(geno, samples, s"$dir/geno.gds")
+    SnpGds.writeDosage(ds, samples, s"$dir/ds.gds")
+    // md5 of both files from the writers before their node tree was
+    // shared: the shared assembly must not move a byte
+    assert(md5(s"$dir/geno.gds") == "cbcab1295f37c77bd94f38260f95e306")
+    assert(md5(s"$dir/ds.gds") == "a9d6df3279532ae59aaf51634f4491cd")
+  }
 }

@@ -11,7 +11,6 @@ import graft.sources.gds.{Gds, SnpGds}
   * 3=missing) and both conversion directions against the CEU fixture. */
 class SnpGdsSpec extends AnyFunSuite {
 
-  private val extdata = "/root/reference/inst/extdata"
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -95,14 +94,14 @@ class SnpGdsSpec extends AnyFunSuite {
 
   test("seqGDS2SNP → seqSNP2GDS on CEU folds to REF-dosage codes") {
     val snp = tmp("ceu_snp.gds")
-    SnpGds.fromSeqArray(spark, s"$extdata/CEU_Exon.gds", snp)
+    SnpGds.fromSeqArray(spark, Fixtures.path("CEU_Exon.gds"), snp)
     val back = SnpGds.read(spark, snp)
     assert(back.count() == 1348)
 
     // code invariant: SNP-GDS genotype == pack_2b REF dosage of the
     // original cube (same any-missing fold), checked via unpacked pairs
     import graft.functions.genetics._
-    val orig = Gds.read(spark, s"$extdata/CEU_Exon.gds")
+    val orig = Gds.read(spark, Fixtures.path("CEU_Exon.gds"))
       .select(col("variant_id"),
         unpack2b(pack2b(col("geno")), lit(90)).as("dos"))
     val folded = back.select(col("variant_id"),

@@ -97,7 +97,7 @@ class StreamingSpec extends AnyFunSuite {
 
   test("streaming VCF ingestion == batch parse on the CEU fixture") {
     import spark.implicits._
-    val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+    val src = Fixtures.path("CEU_Exon.vcf.gz")
     val all = {
       val in = new java.util.zip.GZIPInputStream(
         java.nio.file.Files.newInputStream(java.nio.file.Paths.get(src)))
@@ -135,7 +135,7 @@ class StreamingSpec extends AnyFunSuite {
     // against the SAME stats decoded from the native CoreArray
     // container's stored bit-planes (a chain that crosses ingestion,
     // the storage coding, and the aggregate kernel in one gate)
-    val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+    val src = Fixtures.path("CEU_Exon.vcf.gz")
     val all = {
       val in = new java.util.zip.GZIPInputStream(
         java.nio.file.Files.newInputStream(java.nio.file.Paths.get(src)))
@@ -159,7 +159,7 @@ class StreamingSpec extends AnyFunSuite {
       val st = graft.functions.genetics.genoStatsPacked(
         col("pg"), lit(nSamples))
       val batch = spark.read.format("gds").option("packed", "true")
-        .load("/root/reference/inst/extdata/CEU_Exon.gds")
+        .load(Fixtures.path("CEU_Exon.gds"))
         .select(col("chrom"), col("pos"), col("allele"),
           element_at(st, 2).as("n_called"),
           element_at(st, 3).as("ac_ref"),

@@ -113,7 +113,7 @@ class VcfSpec extends AnyFunSuite {
 
   test("splittable scan: byte-range partitions equal the single-partition parse") {
     // a larger plain-text VCF: the real CEU fixture, decompressed
-    val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+    val src = Fixtures.path("CEU_Exon.vcf.gz")
     val tmp = Files.createTempFile("graft_split", ".vcf")
     val in = new java.util.zip.GZIPInputStream(
       java.nio.file.Files.newInputStream(java.nio.file.Paths.get(src)))
@@ -136,7 +136,7 @@ class VcfSpec extends AnyFunSuite {
 
   test("bgzf scan: compressed-range partitions equal the whole-file parse") {
     // CEU_Exon.vcf.gz is real bgzip output (~15 members of ~17 KB)
-    val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+    val src = Fixtures.path("CEU_Exon.vcf.gz")
     assert(graft.sources.bcf.Bgzf.isBgzfFile(src))
     val one = spark.read.format("vcf").load(src)
       .select("chrom", "pos", "allele", "geno").collect().map(_.toSeq).toSet
@@ -179,7 +179,7 @@ class VcfSpec extends AnyFunSuite {
   }
 
   test("DSv2 column pruning reaches the vcf scan (no GT parse for chrom/pos)") {
-    val src = "/root/reference/inst/extdata/CEU_Exon.vcf.gz"
+    val src = Fixtures.path("CEU_Exon.vcf.gz")
     val df = spark.read.format("vcf").load(src).select("chrom", "pos")
     // the scan itself must emit only the pruned columns — the genotype
     // tokenizer and INFO regexes are gone from the physical plan
