@@ -15,7 +15,12 @@ package graft.operators
   * (orders 0–4) / LPC (any order), wasted bits, Rice residual methods
   * 00 (4-bit) and 01 (5-bit) with any partition order incl. escape
   * codes, and stereo decorrelation (independent, left/side, right/side,
-  * mid/side).
+  * mid/side). A frame header's channel count, and its sample rate and
+  * sample size when it states them, must agree with STREAMINFO.
+  * STREAMINFO itself has no CRC, and its MD5 (which this encoder leaves
+  * unset) is not checked: frames with rate code 0 take STREAMINFO's
+  * 20-bit sample rate as is, so a flipped bit there decodes the right
+  * PCM at a wrong rate.
   *
   * The encoder (fixture generator) writes mono 16-bit streams with
   * FIXED-order-2 subframes and Rice partition order 0 — enough to
@@ -33,7 +38,7 @@ object Flac {
   final case class FlacStream(sampleRate: Int, channels: Int,
       bitsPerSample: Int, totalSamples: Long, pcm: Array[Int]) {
     /** Exact Σ sample² — the SQL-replayable audio energy term (the
-      * [[Multimodal.decodeWav]] contract). */
+      * [[Multimodal.decodeWav]] contract, over the same PCM). */
     def sumSq: Long = {
       var s = 0L; var i = 0
       while (i < pcm.length) { s += pcm(i).toLong * pcm(i); i += 1 }
@@ -451,6 +456,10 @@ object Flac {
     }
   }
 
+  /** Sample rates of the frame-header rate codes 1–11 (index 0 unused). */
+  private val FrameRates = Array(0, 88200, 176400, 192000, 8000, 16000,
+    22050, 24000, 32000, 44100, 48000, 96000)
+
   /** One frame at byte `start`; returns (interleaved PCM, next byte). */
   private def decodeFrame(bytes: Array[Byte], start: Int,
       siRate: Int, siChannels: Int, siBps: Int): (Array[Int], Int) = {
@@ -472,12 +481,17 @@ object Flac {
       case 7 => r.readBits(16).toInt + 1
       case c => 256 << (c - 8)
     }
-    srCode match { // value only needed for header completeness
-      case 0 | 1 | 2 | 3 | 4 | 5 | 6 | 7 | 8 | 9 | 10 | 11 => ()
-      case 12 => r.readBits(8); ()
-      case 13 | 14 => r.readBits(16); ()
+    // a frame that states its rate, channel count or sample size must
+    // agree with STREAMINFO; a rate or size code of 0 defers to it
+    val rate = srCode match {
+      case 0 => siRate
+      case c if c <= 11 => FrameRates(c)
+      case 12 => r.readBits(8).toInt * 1000
+      case 13 => r.readBits(16).toInt
+      case 14 => r.readBits(16).toInt * 10
       case _ => throw Corrupt
     }
+    if (rate != siRate) throw Corrupt
     val channels = chanAsn match {
       case c if c <= 7 => c + 1
       case 8 | 9 | 10 => 2
@@ -494,6 +508,7 @@ object Flac {
       case 7 => 32
       case _ => throw Corrupt
     }
+    if (bps != siBps) throw Corrupt
     // header CRC-8 covers sync..just-before-crc byte (reader is byte-
     // aligned here: 32 fixed bits + whole UTF-8 bytes + whole-bit
     // block-size/rate fields)

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * PNG/JPEG/GIF/BMP through `javax.imageio` (JDK-only — no external
   * codec libraries exist in this container) for true width/height and
   * mean-luminance brightness. AUDIO decodes for real twice over: WAV/PCM
-  * through `javax.sound.sampled` (waveform RMS), and compressed MPEG
+  * through the [[Riff]] chunk walk (waveform RMS), and compressed MPEG
   * audio (MP3 family) through [[parseMp3]] — a pure-JVM frame-header
   * walk yielding true frame count / sample rate / channels / duration /
   * mean bitrate (payload-bit decode would need a codec the JDK lacks).
@@ -198,9 +198,9 @@ object Multimodal {
   final case class AudioFeature(doc_id: Long, n_frames: Long,
       sample_rate: Int, channels: Int, sum_sq: Long, rms: Double)
 
-  /** Partition-batched REAL audio decode: WAV payloads through
-    * `javax.sound.sampled`; rows whose payload is not parseable WAV are
-    * dropped (the caller filters media_type upstream). */
+  /** Partition-batched REAL audio decode: 16-bit PCM WAV payloads
+    * through [[decodeWav]]; rows whose payload is not one are dropped
+    * (the caller filters media_type upstream). */
   def decodeAudioAll(media: Dataset[MediaRow]): Dataset[AudioFeature] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap { r =>
@@ -294,133 +294,44 @@ object Multimodal {
     Some(out.toByteArray)
   }
 
-  /** Real WAV (RIFF PCM) decode via `javax.sound.sampled` — the JDK's
-    * own audio stack, headless-safe: (n_frames, sample_rate_hz,
-    * channels, sum of squared 16-bit sample values). The integer
-    * sum-of-squares travels instead of an RMS double so a SQL oracle
-    * replays it EXACTLY; rms = sqrt(sum_sq / (frames·channels)) is one
-    * derived division away. None when the payload is not a parseable
-    * RIFF/WAVE stream (compressed audio codecs are not in the JDK —
-    * those payloads stay on the deterministic stub). */
-  def decodeWav(payload: Array[Byte]): Option[(Long, Int, Int, Long)] = {
-    if (!Riff.isForm(payload, "WAVE")) return None
-    val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException => return None
-      case _: java.io.IOException => return None
-    }
-    try {
-      val fmt = in.getFormat
-      if (fmt.getSampleSizeInBits != 16) return None
-      val ch = fmt.getChannels
-      val bytes = in.readAllBytes()
-      val n = bytes.length / 2
-      var sumSq = 0L
-      var i = 0
-      val be = fmt.isBigEndian
-      while (i < n) {
-        val lo = bytes(2 * i + (if (be) 1 else 0)) & 0xff
-        val hi = bytes(2 * i + (if (be) 0 else 1))
-        val s = (hi << 8) | lo
-        sumSq += s.toLong * s
-        i += 1
-      }
-      Some((n.toLong / ch, fmt.getSampleRate.toInt, ch, sumSq))
-    } finally in.close()
-  }
+  /** 16-bit PCM WAV decode through [[pcmWav]]: (n_frames,
+    * sample_rate_hz, channels, sum of squared sample values). The
+    * integer sum-of-squares travels instead of an RMS double so a SQL
+    * oracle replays it EXACTLY; rms = sqrt(sum_sq / (frames·channels)) is
+    * one derived division away. None when the payload is not a whole
+    * 16-bit PCM WAV (compressed and other-depth payloads fall through the
+    * media router to their own lanes). */
+  def decodeWav(payload: Array[Byte]): Option[(Long, Int, Int, Long)] =
+    pcmWav(payload).filter(_.bits == 16).map(w =>
+      (w.frames, w.rate, w.channels, sumSq(w.samples)))
 
   /** Deterministic 16-bit PCM mono WAV with every sample at `value` —
     * the fixture generator for the real audio path (constant fill makes
     * sum-of-squares = n·value², knowable in advance). */
   def syntheticWav(nFrames: Int, sampleRateHz: Int, value: Short)
-      : Array[Byte] = {
-    val data = new Array[Byte](nFrames * 2)
-    var i = 0
-    while (i < nFrames) {
-      data(2 * i) = (value & 0xff).toByte
-      data(2 * i + 1) = ((value >> 8) & 0xff).toByte
-      i += 1
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(
-      sampleRateHz.toFloat, 16, 1, true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(data), fmt, nFrames.toLong)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
-  }
+      : Array[Byte] =
+    monoPcmWav(nFrames, sampleRateHz, 16)(_ => value)
 
-  /** Per-WINDOW integer energy from a real WAV decode: window w =
+  /** Per-WINDOW integer energy from a 16-bit PCM WAV decode: window w =
     * frames [w·windowFrames, (w+1)·windowFrames), value = Σ s² over
     * every sample (all channels) in the window — the exact-integer
     * feature a VAD/segmentation pass thresholds. A trailing partial
-    * window is emitted with the frames it has. None on non-PCM/non-16-
-    * bit payloads (same contract as [[decodeWav]]). */
+    * window is emitted with the frames it has. None exactly when
+    * [[decodeWav]] is None. */
   def decodeWavWindows(payload: Array[Byte], windowFrames: Int)
-      : Option[Seq[(Int, Long)]] = {
-    if (!Riff.isForm(payload, "WAVE")) return None
-    val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
-      new java.io.ByteArrayInputStream(payload))
-    catch {
-      case _: javax.sound.sampled.UnsupportedAudioFileException =>
-        return None
-      case _: java.io.IOException => return None
-    }
-    try {
-      val fmt = in.getFormat
-      if (fmt.getSampleSizeInBits != 16) return None
-      val ch = fmt.getChannels
-      val bytes = in.readAllBytes()
-      val n = bytes.length / 2
-      val be = fmt.isBigEndian
-      val perWin = windowFrames * ch
-      val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long)]
-      var i = 0
-      var win = 0
-      var acc = 0L
-      while (i < n) {
-        val lo = bytes(2 * i + (if (be) 1 else 0)) & 0xff
-        val hi = bytes(2 * i + (if (be) 0 else 1))
-        val s = (hi << 8) | lo
-        acc += s.toLong * s
-        i += 1
-        if (i % perWin == 0) { out += ((win, acc)); win += 1; acc = 0L }
-      }
-      if (n % perWin != 0) out += ((win, acc))
-      Some(out.toSeq)
-    } finally in.close()
-  }
+      : Option[Seq[(Int, Long)]] =
+    pcmWav(payload).filter(_.bits == 16).map(w =>
+      windowEnergy(w.samples, w.channels, windowFrames)
+        .map { case (win, _, e) => (win, e) })
 
   /** Deterministic segmented-speech WAV fixture: `nWins` windows of
     * 160 mono frames; window w is "speech" iff (w + docId) mod 4 < 2,
     * filled with the constant sample (docId mod 7 + 1)·800 (so its
     * energy is exactly 160·v²), silence windows are all-zero. */
   def syntheticWavSeg(docId: Long, nWins: Int): Array[Byte] = {
-    val v = ((docId % 7 + 1) * 800).toShort
-    val data = new Array[Byte](nWins * 160 * 2)
-    var w = 0
-    while (w < nWins) {
-      if ((w + docId) % 4 < 2) {
-        var j = 0
-        while (j < 160) {
-          val o = (w * 160 + j) * 2
-          data(o) = (v & 0xff).toByte
-          data(o + 1) = ((v >> 8) & 0xff).toByte
-          j += 1
-        }
-      }
-      w += 1
-    }
-    val fmt = new javax.sound.sampled.AudioFormat(16000f, 16, 1,
-      true, false)
-    val ais = new javax.sound.sampled.AudioInputStream(
-      new java.io.ByteArrayInputStream(data), fmt, nWins * 160L)
-    val out = new java.io.ByteArrayOutputStream()
-    javax.sound.sampled.AudioSystem.write(ais,
-      javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-    out.toByteArray
+    val v = ((docId % 7 + 1) * 800).toInt
+    monoPcmWav(nWins * 160, 16000, 16)(i =>
+      if ((i / 160 + docId) % 4 < 2) v else 0)
   }
 
   /** Typed per-window energy record. */
@@ -515,39 +426,29 @@ object Multimodal {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap { r =>
       Flac.decode(r.payload).toSeq.flatMap { d =>
-        d.pcm.grouped(windowFrames).zipWithIndex.map { case (w, i) =>
-          var s = 0L
-          var j = 0
-          while (j < w.length) { s += w(j).toLong * w(j); j += 1 }
-          FlacWindowRow(r.doc_id, i, w.length, s)
+        windowEnergy(d.pcm, d.channels, windowFrames).map {
+          case (w, n, e) => FlacWindowRow(r.doc_id, w, n, e)
         }
       }
     })
   }
 
+  /** Σs² per window of `windowFrames` frames over channel-interleaved
+    * `pcm`: (window, frames, Σs²) in order, a trailing partial window
+    * keeping the frames it has. */
+  private def windowEnergy(pcm: Array[Int], channels: Int,
+      windowFrames: Int): Seq[(Int, Int, Long)] =
+    pcm.grouped(windowFrames * channels).zipWithIndex.map { case (w, i) =>
+      (i, w.length / channels, sumSq(w))
+    }.toSeq
+
   /** REAL transcode: FLAC → RIFF/PCM WAV bytes (decode through
-    * [[Flac.decode]], re-encode through the JDK's own writer) — the
+    * [[Flac.decode]], re-encode through [[monoPcmWav]]) — the
     * decode→re-encode verb of a media pipeline. None when the payload
-    * is not valid FLAC. */
-  def transcodeFlacToWav(payload: Array[Byte]): Option[Array[Byte]] = {
-    Flac.decode(payload).filter(_.channels == 1).map { d =>
-      val data = new Array[Byte](d.pcm.length * 2)
-      var i = 0
-      while (i < d.pcm.length) {
-        data(2 * i) = (d.pcm(i) & 0xff).toByte
-        data(2 * i + 1) = ((d.pcm(i) >> 8) & 0xff).toByte
-        i += 1
-      }
-      val fmt = new javax.sound.sampled.AudioFormat(
-        d.sampleRate.toFloat, 16, 1, true, false)
-      val ais = new javax.sound.sampled.AudioInputStream(
-        new java.io.ByteArrayInputStream(data), fmt, d.pcm.length.toLong)
-      val out = new java.io.ByteArrayOutputStream()
-      javax.sound.sampled.AudioSystem.write(ais,
-        javax.sound.sampled.AudioFileFormat.Type.WAVE, out)
-      out.toByteArray
-    }
-  }
+    * is not valid mono FLAC. */
+  def transcodeFlacToWav(payload: Array[Byte]): Option[Array[Byte]] =
+    Flac.decode(payload).filter(_.channels == 1).map(d =>
+      monoPcmWav(d.pcm.length, d.sampleRate, 16)(d.pcm))
 
   // ---- G.711 µ-law + AVI lanes (round 9): REAL lossy-audio expansion
   // and REAL video-frame pixels — see [[G711]] and [[Avi]] -------------
@@ -838,24 +739,37 @@ object Multimodal {
   final case class PcmDepthRow(doc_id: Long, bits: Int, n_frames: Long,
       sample_rate: Int, sum_sq: Long)
 
-  /** Multi-depth PCM WAV decode (format tag 1 at 8/16/24 bits — the
-    * legacy-audio surface AudioSystem won't cover uniformly) over the
-    * [[Riff]] chunk walk; 8-bit is UNSIGNED (s = b − 128, the WAV
-    * convention), 16/24-bit signed little-endian. Σs² at NATIVE depth
-    * stays BIGINT-exact. None on truncation / non-PCM / other depths. */
+  /** Multi-depth PCM WAV decode through [[pcmWav]]: (n_frames,
+    * sample_rate_hz, bits, Σs²). Σs² at NATIVE depth stays BIGINT-exact.
+    * None on truncation / non-PCM / other depths. */
   def decodePcmWav(payload: Array[Byte])
-      : Option[(Long, Int, Int, Long)] = {
+      : Option[(Long, Int, Int, Long)] =
+    pcmWav(payload).map(w => (w.frames, w.rate, w.bits, sumSq(w.samples)))
+
+  /** A format-tag-1 PCM WAV: the last `fmt `'s rate, channels and bits,
+    * and the samples of every `data` chunk, channel-interleaved in file
+    * order. */
+  private final case class PcmWav(rate: Int, channels: Int, bits: Int,
+      samples: Array[Int]) {
+    def frames: Long = samples.length / channels
+  }
+
+  /** The one PCM WAV reader, over the [[Riff]] chunk walk: format tag 1
+    * at 8/16/24 bits; 8-bit is UNSIGNED (s = b − 128, the WAV
+    * convention), 16/24-bit signed little-endian. None on truncation, a
+    * `data` before any `fmt `, a `data` holding a partial frame, another
+    * tag or depth, no `data`, or rate 0. */
+  private def pcmWav(payload: Array[Byte]): Option[PcmWav] = {
     val cs = Riff.read(payload, "WAVE") match {
       case Some(cs) => cs
       case None => return None
     }
-    import Riff.{u16, u32, u8}
+    import Riff.{s16, u16, u32, u8}
     var ok = false
     var rate = 0
     var channels = 0
     var bits = 0
-    var sumSq = 0L
-    var n = 0L
+    val samples = Array.newBuilder[Int]
     var sawData = false
     val it = cs.iterator
     while (it.hasNext) {
@@ -872,25 +786,54 @@ object Multimodal {
           if (!ok) return None
           sawData = true
           val bytesPer = bits / 8
-          if (c.size % bytesPer != 0) return None
+          if (c.size % (bytesPer * channels) != 0) return None
           var i = c.body
           while (i < c.end) {
-            val s: Long = bits match {
-              case 8 => (u8(payload, i) - 128).toLong
-              case 16 => (u8(payload, i) | (payload(i + 1) << 8)).toLong
-              case _ => (u8(payload, i) | (u8(payload, i + 1) << 8) |
-                (payload(i + 2) << 16)).toLong
-            }
-            sumSq += s * s
+            samples += (bits match {
+              case 8 => u8(payload, i) - 128
+              case 16 => s16(payload, i)
+              case _ => u16(payload, i) | (payload(i + 2) << 16)
+            })
             i += bytesPer
           }
-          n += c.size / bytesPer
         case _ => ()
       }
     }
     if (ok && sawData && rate > 0)
-      Some((n / channels, rate, bits, sumSq))
+      Some(PcmWav(rate, channels, bits, samples.result()))
     else None
+  }
+
+  private def sumSq(s: Array[Int]): Long = {
+    var t = 0L
+    var i = 0
+    while (i < s.length) { t += s(i).toLong * s(i); i += 1 }
+    t
+  }
+
+  /** The one PCM WAV writer: a mono format-tag-1 WAV of `nFrames`
+    * samples at `bits` ∈ {8, 16, 24}, sample i the low `bits` of
+    * `sample(i)`, little-endian, behind the canonical 44-byte header
+    * (`RIFF`, a 16-byte `fmt `, `data`) — the bytes the JDK's
+    * `AudioSystem.write` emits for the same 16-bit PCM. */
+  private def monoPcmWav(nFrames: Int, rate: Int, bits: Int)(
+      sample: Int => Int): Array[Byte] = {
+    val bytesPer = bits / 8
+    val data = new Array[Byte](nFrames * bytesPer)
+    var i = 0
+    while (i < nFrames) {
+      val s = sample(i)
+      var k = 0
+      while (k < bytesPer) {
+        data(i * bytesPer + k) = (s >> (8 * k)).toByte
+        k += 1
+      }
+      i += 1
+    }
+    Riff.write("WAVE", Seq(
+      "fmt " -> Riff.waveFmt(1, 1, rate, rate.toLong * bytesPer, bytesPer,
+        bits),
+      "data" -> data))
   }
 
   /** Fixture: a mono PCM WAV at `bits` ∈ {8, 16, 24} with closed-form
@@ -899,29 +842,11 @@ object Multimodal {
   def syntheticPcmWav(id: Long, nFrames: Int, bits: Int,
       sampleRateHz: Int): Array[Byte] = {
     require(bits == 8 || bits == 16 || bits == 24, s"bits $bits")
-    val bytesPer = bits / 8
-    val data = new Array[Byte](nFrames * bytesPer)
-    var i = 0
-    while (i < nFrames) {
-      bits match {
-        case 8 =>
-          data(i) = ((id * 7 + i.toLong * 3) % 256).toByte
-        case 16 =>
-          val s = Flac.fixtureSample(id, i.toLong)
-          data(2 * i) = (s & 0xff).toByte
-          data(2 * i + 1) = ((s >> 8) & 0xff).toByte
-        case _ =>
-          val s = ((id * 131 + i.toLong * 977) % 1000000L - 500000L).toInt
-          data(3 * i) = (s & 0xff).toByte
-          data(3 * i + 1) = ((s >> 8) & 0xff).toByte
-          data(3 * i + 2) = ((s >> 16) & 0xff).toByte
-      }
-      i += 1
-    }
-    Riff.write("WAVE", Seq(
-      "fmt " -> Riff.waveFmt(1, 1, sampleRateHz,
-        sampleRateHz.toLong * bytesPer, bytesPer, bits),
-      "data" -> data))
+    monoPcmWav(nFrames, sampleRateHz, bits)(i => bits match {
+      case 8 => ((id * 7 + i * 3L) % 256).toInt
+      case 16 => Flac.fixtureSample(id, i.toLong)
+      case _ => ((id * 131 + i * 977L) % 1000000L - 500000L).toInt
+    })
   }
 
   /** Per-document multi-depth PCM table: bits cycle 8/16/24 by

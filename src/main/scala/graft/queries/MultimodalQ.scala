@@ -142,8 +142,8 @@ object MultimodalQ extends QueryModule {
       FROM documents"""))
 
   // REAL audio decode end-to-end: per-document constant-fill 16-bit PCM
-  // WAVs (frames/rate/fill are formulas of doc_id) through the JDK's
-  // javax.sound.sampled stack. The exact integer sum-of-squares is the
+  // WAVs (frames/rate/fill are formulas of doc_id) through the engine's
+  // one PCM WAV reader. The exact integer sum-of-squares is the
   // oracle surface (n·value²); rms derives as one division + sqrt, so
   // DuckDB replays every column bit-for-bit. A broken WAV parse, sample
   // byte order, or RMS sum breaks the hash.
@@ -913,8 +913,8 @@ object MultimodalQ extends QueryModule {
       FROM v GROUP BY doc_id, win"""))
 
   // --- q342: REAL TRANSCODE — FLAC decoded by the pure-JVM codec,
-  // re-encoded as RIFF/PCM WAV by the JDK's own writer, then decoded
-  // AGAIN by the javax.sound WAV path (q104's lane). Losslessness is
+  // re-encoded as RIFF/PCM WAV by the engine's PCM WAV writer, then
+  // decoded AGAIN by the WAV reader (q104's lane). Losslessness is
   // transitive: the final PCM energy must replay from the closed form,
   // so a defect in EITHER codec or the re-encode byte order breaks the
   // hash. Emits the transcoded byte size too (header + 2n bytes —
@@ -986,7 +986,7 @@ object MultimodalQ extends QueryModule {
 
   // --- q349: MIXED-MEDIA CENSUS — ONE pass of the router over a
   // four-lane corpus (PNG images, PCM WAVs, FLAC, MP3 streams split by
-  // doc_id % 4): every lane decodes GENUINELY (ImageIO / javax.sound /
+  // doc_id % 4): every lane decodes GENUINELY (ImageIO / the WAV reader /
   // the pure-JVM FLAC codec / the MPEG header walk) and the oracle
   // replays every per-document feature from the fixture formulas — the
   // end-to-end proof the audio router's fallback chain (WAV → FLAC →

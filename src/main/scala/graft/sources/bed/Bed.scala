@@ -2,7 +2,7 @@ package graft.sources.bed
 
 import java.io.RandomAccessFile
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** PLINK 1.x BED triplet (.bed/.bim/.fam) reader/writer — the file-level
@@ -69,7 +69,9 @@ object Bed {
 
   /** variants(vid, chrom, pos, id, allele, pg) from `prefix`.bed/.bim/.fam.
     * `vid` is the 0-based variant index (bim row = bed row), `allele` is
-    * "REF,ALT" (= A2,A1), `pg` the engine-coded 2-bit matrix. */
+    * "REF,ALT" (= A2,A1), `pg` the engine-coded 2-bit matrix. When the
+    * .bed rows and the .bim lines differ in number, the first action on
+    * the frame raises an error naming the fileset and an unmatched row. */
   def read(spark: SparkSession, prefix: String): DataFrame = {
     val bedPath = prefix + ".bed"
     val fam = readFam(prefix + ".fam")
@@ -139,7 +141,20 @@ object Bed {
         }
       }.toDF("vid", "pg")
 
-    bim.join(matrix, "vid")
+    // every .bim line must meet a .bed row: a full outer join keeps the
+    // unmatched ones, and the filter raises on the first it evaluates
+    // (lazily, with the rows; no extra job)
+    def unmatched(what: Column, why: String): Column =
+      raise_error(concat(lit(s"PLINK fileset $prefix: "), what, lit(why)))
+    bim.join(matrix, Seq("vid"), "full_outer")
+      .filter(
+        when(col("pg").isNull, unmatched(
+          concat(lit(".bim line "), (col("vid") + 1).cast("string")),
+          s" has no .bed row (the .bed holds $nVariants rows)"))
+        .when(col("chrom").isNull, unmatched(
+          concat(lit(".bed row "), (col("vid") + 1).cast("string")),
+          " has no .bim line"))
+        .otherwise(lit(true)))
       .select(col("vid"), col("chrom"), col("pos"), col("id"),
         col("allele"), col("pg"))
   }

@@ -74,6 +74,38 @@ class BedSpec extends AnyFunSuite {
       (0 until SynthGeno.nSamples).map(s => s"S$s"))
   }
 
+  /** A 5-sample fileset of `bedRows` .bed rows and `bimLines` .bim
+    * lines; returns its prefix. */
+  private def fileset(bedRows: Int, bimLines: Int): String = {
+    val p = java.nio.file.Files.createTempDirectory("graft_bed").toString +
+      "/mismatch"
+    val bed = new java.io.FileOutputStream(p + ".bed")
+    bed.write(Array(0x6c, 0x1b, 0x01).map(_.toByte))
+    for (v <- 0 until bedRows) bed.write(Array[Byte](v.toByte, 3))
+    bed.close()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p + ".fam"),
+      (1 to 5).map(i => s"F$i I$i 0 0 1 -9").mkString("\n"))
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(p + ".bim"),
+      (0 until bimLines).map(v => s"1\trs$v\t0\t${100 + v}\tC\tA\n").mkString)
+    p
+  }
+
+  test("a .bed/.bim row-count mismatch raises, naming the fileset and " +
+      "the unmatched row") {
+    assert(Bed.read(spark, fileset(3, 3)).count() == 3)
+    for (((bedRows, bimLines), row) <- Seq(
+        (2, 3) -> ".bim line 3", // the .bed lost its last row
+        (3, 2) -> ".bed row 3", // the .bim lost its last line
+        (3, 4) -> ".bim line 4")) { // the .bim has an extra line
+      val p = fileset(bedRows, bimLines)
+      val df = Bed.read(spark, p) // lazy: the mismatch shows at the action
+      val e = intercept[Exception](df.collect())
+      val msg = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(_.getMessage).mkString("\n")
+      assert(msg.contains(p) && msg.contains(row), msg)
+    }
+  }
+
   test("dup sample ids fall back to family-individual") {
     val fam = Seq(Bed.Fam("F1", "A", "0", "0", "1", "-9"),
       Bed.Fam("F2", "A", "0", "0", "1", "-9"))

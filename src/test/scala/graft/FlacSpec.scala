@@ -137,6 +137,101 @@ class FlacSpec extends AnyFunSuite {
     assert(rejected >= 38, s"only $rejected/40 flips rejected")
   }
 
+  private def same(a: Flac.FlacStream, b: Flac.FlacStream): Boolean =
+    a.sampleRate == b.sampleRate && a.channels == b.channels &&
+      a.bitsPerSample == b.bitsPerSample &&
+      a.totalSamples == b.totalSamples && a.pcm.sameElements(b.pcm)
+
+  // STREAMINFO's 20-bit sample-rate field, as bit offsets (MSB first)
+  // into the stream: "fLaC", the 4-byte block header, then min/max
+  // block size (2×16 bits) and min/max frame size (2×24 bits). Frames
+  // whose rate code is 0 defer to it, and STREAMINFO carries no CRC
+  // (its MD5 is unset and unchecked), so a flip there cannot be seen.
+  private val streamInfoRateBits = (18 * 8) until (18 * 8 + 20)
+
+  test("every cut and every single-bit flip decodes to None or to the " +
+      "clean stream, except flips of STREAMINFO's sample rate") {
+    val flac = Flac.encode(Flac.fixtureWaveform(3, 700), 8000, 128, 1)
+    val clean = Flac.decode(flac).get
+    for (k <- 0 until flac.length)
+      Flac.decode(flac.take(k)).foreach(d =>
+        assert(same(d, clean), s"cut at $k decoded to other PCM"))
+    var rateFlips = 0
+    for (bit <- 0 until flac.length * 8) {
+      val mut = flac.clone()
+      mut(bit / 8) = (mut(bit / 8) ^ (0x80 >> (bit % 8))).toByte
+      Flac.decode(mut).foreach { d =>
+        if (streamInfoRateBits.contains(bit)) {
+          assert(d.sampleRate != clean.sampleRate &&
+            d.pcm.sameElements(clean.pcm))
+          rateFlips += 1
+        } else assert(same(d, clean), s"flip of bit $bit changed the decode")
+      }
+    }
+    assert(rateFlips == 20)
+  }
+
+  /** `flac` with byte `at` of its only frame's header replaced by
+    * `f(byte)`, the header CRC-8 and the frame CRC-16 recomputed. */
+  private def rewriteHeader(flac: Array[Byte], at: Int, f: Int => Int)
+      : Array[Byte] = {
+    def crc(from: Int, until: Int, poly: Int, bits: Int): Int = {
+      val top = 1 << (bits - 1)
+      var c = 0
+      for (i <- from until until) {
+        c ^= (flac(i) & 0xff) << (bits - 8)
+        for (_ <- 0 until 8)
+          c = (if ((c & top) != 0) (c << 1) ^ poly else c << 1) &
+            ((1 << bits) - 1)
+      }
+      c
+    }
+    val start = 42 // "fLaC" + block header + STREAMINFO
+    val crc8At = start + 7 // sync, two code bytes, frame 0, 16-bit size
+    flac(at) = f(flac(at) & 0xff).toByte
+    flac(crc8At) = crc(start, crc8At, 0x07, 8).toByte
+    val c16 = crc(start, flac.length - 2, 0x8005, 16)
+    flac(flac.length - 2) = (c16 >> 8).toByte
+    flac(flac.length - 1) = c16.toByte
+    flac
+  }
+
+  test("a frame whose rate or sample size disagrees with STREAMINFO " +
+      "rejects; one that agrees decodes") {
+    val s = Flac.fixtureWaveform(3, 700)
+    def one() = Flac.encode(s, 8000, blockSize = 700)
+    val clean = Flac.decode(one()).get
+    assert(same(Flac.decode(rewriteHeader(one(), 42, identity)).get, clean))
+    // byte 44 holds the block-size code (high nibble) and the rate code
+    val rate = (code: Int) => rewriteHeader(one(), 44, b => (b & 0xf0) | code)
+    assert(same(Flac.decode(rate(4)).get, clean), "rate code 4 is 8 kHz")
+    for (code <- Seq(1, 5, 9, 11))
+      assert(Flac.decode(rate(code)).isEmpty, s"rate code $code")
+    // byte 45 holds the channel assignment, the sample-size code (bits
+    // 3..1) and a reserved bit
+    val size = (code: Int) =>
+      rewriteHeader(one(), 45, b => (b & 0xf1) | (code << 1))
+    assert(same(Flac.decode(size(0)).get, clean), "code 0 defers")
+    for (code <- Seq(1, 2, 5, 6, 7))
+      assert(Flac.decode(size(code)).isEmpty, s"sample-size code $code")
+  }
+
+  test("FLAC windows count frames on stereo streams") {
+    val spark = org.apache.spark.sql.SparkSession.builder()
+      .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+    import spark.implicits._
+    val s = Flac.fixtureWaveformStereo(5, 400)
+    val rows = Seq(Multimodal.MediaRow(5, "audio",
+        Flac.encode(s, 16000, blockSize = 64, channels = 2))).toDS()
+    val got = Multimodal.decodeFlacWindowsAll(rows).collect()
+      .map(r => (r.win, r.n_frames, r.sum_sq)).toSeq
+    val want = s.grouped(2 * 160).zipWithIndex.map { case (w, i) =>
+      (i, w.length / 2, w.map(v => v.toLong * v).sum)
+    }.toSeq
+    assert(got == want)
+    assert(got.map(_._2) == Seq(160, 160, 80))
+  }
+
   test("the media router genuinely decodes FLAC audio payloads") {
     val s = Flac.fixtureWaveform(9L, 250)
     val flac = Flac.encode(s, 16000)

@@ -4,8 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Multimodal
 
-/** Ground-truth tests for the real JDK media paths — `javax.imageio`
-  * images, `javax.sound.sampled` WAV, and the pure-JVM MPEG-audio
+/** Ground-truth tests for the real media paths — `javax.imageio`
+  * images, the engine's PCM WAV reader, and the pure-JVM MPEG-audio
   * frame-header walk: decoded values must match an independent replay of
   * the same bytes, and everything else must stay on the deterministic
   * stub, whose contract is pinned here so its output can never be

@@ -15,7 +15,9 @@ import graft.operators.{Avi, Flac, G711, ImaAdpcm, MsAdpcm, Multimodal}
   * for AVI, a `LIST` shorter than its 4-byte type. The spec uses only
   * the codecs' public functions, so it checks any container code
   * behind them. MJPG frames are fixed byte strings, not encoder output,
-  * so the pins do not depend on the JDK's JPEG writer.
+  * so the pins do not depend on the JDK's JPEG writer. The JDK's own
+  * WAV reader (`javax.sound.sampled`) is the reference for every clean
+  * 16-bit PCM payload the engine writes.
   */
 class RiffSpec extends AnyFunSuite {
 
@@ -55,8 +57,22 @@ class RiffSpec extends AnyFunSuite {
     "webp_vp8" -> Multimodal.syntheticWebp(100, 50, lossless = false, 7),
     "webp_vp8l" -> Multimodal.syntheticWebp(333, 17, lossless = true, 9))
 
+  /** The 16-bit PCM WAV writers whose bytes oracle tables store. */
+  private val wavWriters: Seq[(String, Array[Byte])] = Seq(
+    "wav_pos" -> Multimodal.syntheticWav(250, 8000, 300),
+    "wav_neg" -> Multimodal.syntheticWav(101, 12000, -1024),
+    "wav_zero" -> Multimodal.syntheticWav(37, 16000, 0),
+    "wavSeg_3" -> Multimodal.syntheticWavSeg(3, 6),
+    "wavSeg_13" -> Multimodal.syntheticWavSeg(13, 7),
+    "transcode_21" -> Multimodal.transcodeFlacToWav(
+      Flac.encode(Flac.fixtureWaveform(21, 333), 8000)).get,
+    "transcode_3" -> Multimodal.transcodeFlacToWav(
+      Flac.encode(Flac.fixtureWaveform(3, 700), 12000, 128)).get)
+
   /** md5 of each writer's output at the commit before the RIFF code was
-    * shared; the shared writer must reproduce every byte. */
+    * shared (the `wav*`/`transcode*` writers: before they moved from
+    * `javax.sound.sampled.AudioSystem.write` to [[graft.operators.Riff]]);
+    * the shared writer must reproduce every byte. */
   private val writerMd5 = Map(
     "ulaw" -> "c7498e64aae767e7873f1bcbf791c395",
     "ulaw_even" -> "3e9e4cfba5bed90b8859cc42cf029594",
@@ -75,10 +91,19 @@ class RiffSpec extends AnyFunSuite {
     "avi_dib" -> "b7b781aec3c0c6ef4a876c209e62b664",
     "avi_mjpg" -> "bc1fcc14520807c81f45ecf722a46321",
     "webp_vp8" -> "488125bc340e565fd3e87a5384a41f02",
-    "webp_vp8l" -> "20632703cc6bd9fff9cc294e554cd605")
+    "webp_vp8l" -> "20632703cc6bd9fff9cc294e554cd605",
+    "wav_pos" -> "cc56346ebc7f4d66efbeecbbf165531a",
+    "wav_neg" -> "af8e32e6d5cf636de0f4d1e3e147d53d",
+    "wav_zero" -> "837b923858c5a8c40a177db95210e7f6",
+    "wavSeg_3" -> "8985fa1e2705496f416071e3e156dd51",
+    "wavSeg_13" -> "cfd6469592261119fff9ec7d62c24cd8",
+    "transcode_21" -> "7821c5e2467e848acc414f9947ea6dcf",
+    "transcode_3" -> "ce5ede46d70912669144e9081e688a9f")
 
-  /** md5 of every decoder's rendered result over each payload's
-    * corruption corpus, recorded at the same commit. */
+  /** md5 of every hand-rolled decoder's rendered result over each
+    * payload's corruption corpus, recorded at the same commit (the
+    * pcm16 digests, which until then also held [[wavDecoders]]'
+    * results, at the commit before the WAV readers were merged). */
   private val corpusMd5 = Map(
     "ulaw" -> "cd800c1789f7b6df664dcc9f547ac261",
     "ulaw_even" -> "2269fbfa1f29b1c2ffb3a8b815c12b8f",
@@ -90,8 +115,8 @@ class RiffSpec extends AnyFunSuite {
     "ms_coef5_odd" -> "954b32f9a127aa89c0642e35ae2a1e54",
     "pcm8_odd" -> "80e03ae500df09f1d37abd475d19c43d",
     "pcm8_even" -> "208099cdc1d115e19969f7173ccd0e5a",
-    "pcm16_odd" -> "e8162c0e85068052b0e29e0e784e19d3",
-    "pcm16_even" -> "23b39ef3e0663720bcff77aedaa2d180",
+    "pcm16_odd" -> "aa1afed6413e3af673eb6447bd747441",
+    "pcm16_even" -> "fee089ac173cf51f5484170e0eb2bd70",
     "pcm24_odd" -> "d698b8ed47f7a85ddd4496fc2c4a7162",
     "pcm24_even" -> "b27e4cd9ed603c1e779f8a4ee043a7aa",
     "avi_dib" -> "abed8a99930413efa84e440ca7e2dd58",
@@ -117,10 +142,47 @@ class RiffSpec extends AnyFunSuite {
       s"$m|${fs.map(md5).mkString(",")}" }.toString),
     "webp" -> (p => Multimodal.parseWebp(p).toString))
 
-  /** The JDK-backed WAVE decoders share only the RIFF form check. */
-  private val javaxDecoders: Seq[(String, Array[Byte] => String)] = Seq(
+  /** The 16-bit PCM decoders of the media router and the VAD windows. */
+  private val wavDecoders: Seq[(String, Array[Byte] => String)] = Seq(
     "wav" -> (p => Multimodal.decodeWav(p).toString),
     "wavWindows" -> (p => Multimodal.decodeWavWindows(p, 7).toString))
+
+  /** md5 of [[wavDecoders]]' rendered results over the corruption corpus
+    * of each 16-bit payload, recorded when both moved from the JDK's
+    * reader to the engine's one PCM WAV reader. */
+  private val wavCorpusMd5 = Map(
+    "pcm16_odd" -> "30a3dcb27b1cb5209353cd44d36a013b",
+    "pcm16_even" -> "6d60b487c0dd9178a5ab52f4ccc8ea4a",
+    "wav_pos" -> "ede881ec0a4c3836d278aa5b7d20d79d",
+    "wav_neg" -> "998e5a58f1037be84cd807d9077eba3a",
+    "wav_zero" -> "9faa67b315ca90e83a30148bd31af183",
+    "wavSeg_3" -> "b42946266126a221c512c46e00fba08c",
+    "wavSeg_13" -> "ea7b3156eae6b5c2cd182dab292b4dd3",
+    "transcode_21" -> "56e5e52d86bc3780a6bc58aeadfbd7db",
+    "transcode_3" -> "63e65c3df09a8f58e80bd52a01a09279")
+
+  /** The JDK's WAV reader: (frames, rate, channels, 16-bit samples in
+    * file order); None when it rejects the payload or reads another
+    * sample size. */
+  private def jdkPcm16(p: Array[Byte])
+      : Option[(Long, Int, Int, Array[Int])] = {
+    val in = try javax.sound.sampled.AudioSystem.getAudioInputStream(
+      new java.io.ByteArrayInputStream(p))
+    catch {
+      case _: javax.sound.sampled.UnsupportedAudioFileException => return None
+      case _: java.io.IOException => return None
+    }
+    try {
+      val fmt = in.getFormat
+      if (fmt.getSampleSizeInBits != 16) return None
+      val bb = java.nio.ByteBuffer.wrap(in.readAllBytes()).order(
+        if (fmt.isBigEndian) java.nio.ByteOrder.BIG_ENDIAN
+        else java.nio.ByteOrder.LITTLE_ENDIAN)
+      val s = Array.fill(bb.remaining / 2)(bb.getShort.toInt)
+      Some((s.length.toLong / fmt.getChannels, fmt.getSampleRate.toInt,
+        fmt.getChannels, s))
+    } finally in.close()
+  }
 
   private def le32(b: Array[Byte], i: Int): Long =
     (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
@@ -211,25 +273,33 @@ class RiffSpec extends AnyFunSuite {
     Seq("clean" -> p) ++ cuts ++ sizes ++ layouts
   }
 
-  private def render(name: String, p: Array[Byte]): String = {
-    val ds = if (name.startsWith("pcm16")) decoders ++ javaxDecoders
-      else decoders
+  private def render(p: Array[Byte],
+      ds: Seq[(String, Array[Byte] => String)]): String =
     corpus(p).map { case (label, c) =>
       label + ":" + ds.map { case (d, f) => s"$d=${f(c)}" }.mkString(";")
     }.mkString("\n")
-  }
 
-  for ((name, p) <- payloads) {
+  private val pcm16 = payloads.filter(_._1.startsWith("pcm16"))
+
+  for ((name, p) <- payloads ++ wavWriters)
     test(s"$name: writer output is byte-identical") {
       assert(md5(p) == writerMd5(name), s"$name writer md5")
     }
+
+  for ((name, p) <- payloads)
     test(s"$name: decoders' corpus results are unchanged") {
-      assert(md5(render(name, p)) == corpusMd5(name), s"$name corpus md5")
+      assert(md5(render(p, decoders)) == corpusMd5(name), s"$name corpus md5")
     }
-  }
+
+  for ((name, p) <- pcm16 ++ wavWriters)
+    test(s"$name: 16-bit WAV decoders' corpus results are pinned") {
+      assert(md5(render(p, wavDecoders)) == wavCorpusMd5(name),
+        s"$name wav corpus md5")
+    }
 
   test("a truncated payload decodes to the clean result or to None") {
-    for ((name, p) <- payloads; (d, f) <- decoders) {
+    for ((name, p) <- payloads ++ wavWriters;
+        (d, f) <- decoders ++ wavDecoders) {
       val clean = f(p)
       for (k <- 0 until p.length) {
         val r = f(p.take(k))
@@ -244,6 +314,21 @@ class RiffSpec extends AnyFunSuite {
     for ((name, p) <- payloads) {
       val d = own(name.takeWhile(_.isLetter))
       assert(decoders.toMap.apply(d)(p) != "None", s"$name by $d")
+    }
+  }
+
+  test("every clean 16-bit payload the engine writes decodes as the " +
+      "JDK reads it") {
+    def sq(s: Array[Int]): Long = s.map(v => v.toLong * v).sum
+    for ((name, p) <- pcm16 ++ wavWriters) {
+      val Some((frames, rate, ch, s)) = jdkPcm16(p)
+      assert(Multimodal.decodeWav(p) == Some((frames, rate, ch, sq(s))),
+        name)
+      for (w <- Seq(7, 160)) {
+        val wins = s.grouped(w * ch).zipWithIndex
+          .map { case (g, i) => (i, sq(g)) }.toSeq
+        assert(Multimodal.decodeWavWindows(p, w) == Some(wins), s"$name/$w")
+      }
     }
   }
 }
