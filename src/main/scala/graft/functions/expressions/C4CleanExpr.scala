@@ -2,9 +2,8 @@ package graft.functions.expressions
 
 import java.util.Locale
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -23,24 +22,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * so kernel, HOF twin, and an RE2-based SQL oracle agree on every
   * input. */
 case class C4CleanExpr(child: Expression, minWords: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"c4_clean_lines(STRING, minWords); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "c4_clean_lines"
-
-  override protected def nullSafeEval(t: Any): Any =
-    C4CleanExpr.clean(t.asInstanceOf[UTF8String], minWords)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.C4CleanExpr$$.MODULE$$
-         |  .clean($t, $minWords);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("clean", minWords)
 
   override protected def withNewChildInternal(c: Expression): C4CleanExpr =
     copy(child = c)

@@ -1,9 +1,8 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,26 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * all derive weights from [[WinnowFpExpr.pows]] or they silently diverge.
   */
 case class CdcChunksExpr(child: Expression, k: Int, d: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   require(k >= 1 && d >= 1, s"cdc_chunks needs k,d >= 1; got k=$k d=$d")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cdc_chunks(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = ArrayType(StringType, containsNull = false)
   override def prettyName: String = "cdc_chunks"
-
-  override protected def nullSafeEval(t: Any): Any =
-    CdcChunksExpr.chunks(t.asInstanceOf[UTF8String], k, d)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.CdcChunksExpr$$.MODULE$$
-         |  .chunks($t, $k, $d);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("chunks", k, d)
 
   override protected def withNewChildInternal(c: Expression): CdcChunksExpr =
     copy(child = c)

@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Longs
 
 /** Fused Cochran–Mantel–Haenszel 2×2×K sufficient statistic over a
   * collapsed-dosage array (`d ARRAY<BIGINT>`, null = missing sample) —
@@ -33,31 +34,12 @@ import org.apache.spark.sql.types._
   * identical arithmetic to the statically-unrolled Column tree this
   * replaces, verified by the differential spec. */
 case class CmhUvExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def longArr(e: Expression) = e.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (longArr(left) && longArr(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"cmh_uv(ARRAY<BIGINT>, ARRAY<BIGINT>); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "cmh_uv"
-
-  override protected def nullSafeEval(dAny: Any, pAny: Any): Any =
-    CmhUvExpr.eval(dAny.asInstanceOf[ArrayData],
-      pAny.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, p) =>
-      s"""${ev.value} = graft.functions.expressions.CmhUvExpr$$
-         |  .MODULE$$.eval($d, $p);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CmhUvExpr = copy(left = l, right = r)

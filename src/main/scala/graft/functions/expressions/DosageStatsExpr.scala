@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.{Geno, Longs}
 
 /** Fused per-variant association kernels over a collapsed-dosage array
   * (`d ARRAY<BIGINT>`, null = missing sample) with per-sample weight
@@ -30,12 +31,6 @@ import org.apache.spark.sql.types._
   * All outputs are exact BIGINTs (the repo's oracle discipline: integer
   * sums, one final division at presentation).
   */
-private[graft] trait DosageWeightInput { self: Expression =>
-  protected def longArrayOk(e: Expression): Boolean = e.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
-}
 
 /** `[n, sx, sxx, sw, swx, sww]` over CALLED samples of dosage `d` with
   * weight vector `w` (one literal ARRAY<BIGINT>, one entry per sample):
@@ -44,27 +39,12 @@ private[graft] trait DosageWeightInput { self: Expression =>
   * beyond min(|d|, |w|) are ignored (the unrolled trees this replaces
   * summed ordinals 0 until |w|). */
 case class DosageWeightedStats(left: Expression, right: Expression)
-    extends BinaryExpression with DosageWeightInput {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (longArrayOk(left) && longArrayOk(right))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dosage_weighted_stats(ARRAY<BIGINT>, ARRAY<BIGINT>); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dosage_weighted_stats"
-
-  override protected def nullSafeEval(d: Any, w: Any): Any =
-    DosageWeightedStats.eval(d.asInstanceOf[ArrayData],
-      w.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, w) =>
-      s"""${ev.value} = graft.functions.expressions.DosageWeightedStats$$
-         |  .MODULE$$.eval($d, $w);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DosageWeightedStats =
@@ -95,27 +75,12 @@ object DosageWeightedStats {
   * s1/s2 sum the weights, sx1/sx2 the cross terms with the dosage,
   * s11/s22 the squares and s12 = Σw1·w2. */
 case class DosageTwoWeightStats(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with DosageWeightInput {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (Seq(first, second, third).forall(longArrayOk))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "dosage_two_weight_stats(ARRAY<BIGINT> ×3); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs, Longs)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dosage_two_weight_stats"
-
-  override protected def nullSafeEval(d: Any, w1: Any, w2: Any): Any =
-    DosageTwoWeightStats.eval(d.asInstanceOf[ArrayData],
-      w1.asInstanceOf[ArrayData], w2.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, w1, w2) =>
-      s"""${ev.value} = graft.functions.expressions.DosageTwoWeightStats$$
-         |  .MODULE$$.eval($d, $w1, $w2);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(f: Expression,
       s: Expression, t: Expression): DosageTwoWeightStats =
@@ -150,31 +115,13 @@ object DosageTwoWeightStats {
   * `masks` is ONE literal ARRAY<ARRAY<BIGINT>>; null dosage contributes
   * 0 to every mask alike (the permutation-invariance contract). */
 case class DosageMaskedSums(left: Expression, right: Expression)
-    extends BinaryExpression with DosageWeightInput {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val masksOk = right.dataType match {
-      case ArrayType(ArrayType(LongType, _), _) => true
-      case _ => false
-    }
-    if (longArrayOk(left) && masksOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dosage_masked_sums(ARRAY<BIGINT>, ARRAY<ARRAY<BIGINT>>); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Longs, ArrayType(ArrayType(LongType)))
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dosage_masked_sums"
-
-  override protected def nullSafeEval(dAny: Any, mAny: Any): Any =
-    DosageMaskedSums.eval(dAny.asInstanceOf[ArrayData],
-      mAny.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (d, masks) =>
-      s"""${ev.value} = graft.functions.expressions.DosageMaskedSums$$
-         |  .MODULE$$.eval($d, $masks);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DosageMaskedSums =
@@ -210,32 +157,13 @@ object DosageMaskedSums {
   * missing/short. Replaces the N·ploidy-term `array(...)` unroll (O(1)
   * plan nodes at any cohort width); `ploidy` is a literal. */
 case class HapAltExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with GenoInput {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val phasedOk = second.dataType match {
-      case ArrayType(BooleanType, _) => true
-      case _ => false
-    }
-    if (genoOk(first) && phasedOk && third.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "hap_alt(ARRAY<ARRAY<BIGINT>>, ARRAY<BOOLEAN>, INT); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, ArrayType(BooleanType), IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "hap_alt"
-
-  override protected def nullSafeEval(gAny: Any, pAny: Any, plAny: Any): Any =
-    HapAltExpr.eval(gAny.asInstanceOf[ArrayData],
-      pAny.asInstanceOf[ArrayData], plAny.asInstanceOf[Int])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, p, pl) =>
-      s"""${ev.value} = graft.functions.expressions.HapAltExpr$$.MODULE$$
-         |  .eval($g, $p, $pl);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(f: Expression,
       s: Expression, t: Expression): HapAltExpr =

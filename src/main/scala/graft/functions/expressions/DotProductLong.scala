@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.Bridge.InputType
+import org.apache.spark.sql.types.{DataType, LongType}
+
+import KernelCall.Longs
 
 /** Codegen'd integer dot product of two `ARRAY<BIGINT>` columns.
   *
@@ -23,31 +24,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * overlap prefix is used.
   */
 case class DotProductLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs)
   override def dataType: DataType = LongType
-
   override def prettyName: String = "dot_i64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DotProductLong.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.DotProductLong$$.MODULE$$
-         |  .eval($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): DotProductLong =

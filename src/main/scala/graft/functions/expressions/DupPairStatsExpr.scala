@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Geno
 
 /** Fused per-variant paired-callset sufficient statistics
   * `[n, sx, sy, sxy, sxx, syy]` over samples fully called in BOTH
@@ -19,26 +20,12 @@ import org.apache.spark.sql.types._
   * sub-array reads as missing. Diploid (2 alleles per call), like the
   * unrolled original. */
 case class DupPairStatsExpr(left: Expression, right: Expression)
-    extends BinaryExpression with GenoInput {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(left) && genoOk(right)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dup_pair_stats(ARRAY<ARRAY<BIGINT>>, ARRAY<ARRAY<BIGINT>>); " +
-        s"got ${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno, Geno)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "dup_pair_stats"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    DupPairStatsExpr.stats(a.asInstanceOf[ArrayData],
-      b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.DupPairStatsExpr$$.MODULE$$
-         |  .stats($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("stats")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): DupPairStatsExpr =

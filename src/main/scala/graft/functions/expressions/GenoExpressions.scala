@@ -1,14 +1,16 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, ExpectsInputTypes, Expression, TernaryExpression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.{Geno, Integral, Longs, Strings}
 
 /** Codegen'd genotype kernels.
   *
@@ -18,9 +20,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * filter / aggregate) are CodegenFallback — interpreted per row with
   * per-lambda variable binding — which made the declarative kernels the
   * bottleneck at bench scale. Each expression here keeps its kernel as one
-  * Scala loop on its companion object, called by both the interpreted
-  * `eval` and the generated code, the same motivation as the reference's
-  * SIMD kernels (src/vectorization.h:304-438,
+  * Scala loop on its companion object, which [[KernelCall]] calls from
+  * both the interpreted `eval` and the generated code, the same motivation
+  * as the reference's SIMD kernels (src/vectorization.h:304-438,
   * src/Methods.cpp:122-801); the declarative versions remain in
   * src/test/scala/graft/HofTwins.scala as `*Hof` reference implementations
   * for differential testing.
@@ -29,44 +31,18 @@ import org.apache.spark.unsafe.types.UTF8String
   * missing call; a null inner array counts as one missing call contributing
   * no allele slots.
   */
-private[graft] trait GenoInput { self: Expression =>
-  protected def genoOk(e: Expression): Boolean = e.dataType match {
-    case ArrayType(ArrayType(LongType, _), _) => true
-    case _ => false
-  }
-}
 
 /** Per-variant counts in one pass: [n_total_slots, n_called, ac_k,
   * n_miss_calls, n_miss_alleles] (fused seqAlleleFreq/seqAlleleCount/
   * seqMissing — the reference's seqGetAF_AC_Missing,
   * src/Methods.cpp:897-979). `k` is the counted allele index. */
 case class GenoStats(left: Expression, right: Expression)
-    extends BinaryExpression with GenoInput {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val kOk = right.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (genoOk(left) && kOk)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"geno_stats(ARRAY<ARRAY<BIGINT>>, integral k); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Geno, Integral)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "geno_stats"
-
-  override protected def nullSafeEval(g: Any, k: Any): Any =
-    GenoStats.eval(g.asInstanceOf[ArrayData],
-      k.asInstanceOf[Number].longValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, k) =>
-      s"""${ev.value} = graft.functions.expressions.GenoStats$$.MODULE$$
-         |  .eval($g, (long) $k);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): GenoStats =
@@ -106,24 +82,12 @@ object GenoStats {
   * per-sample margin kernel (FC_Missing_PerSamp, src/Methods.cpp:122-293)
   * minus the shuffle: explode this and aggregate by ordinal. */
 case class MissAllelesPerSample(child: Expression)
-    extends UnaryExpression with GenoInput {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(child)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"miss_per_sample(ARRAY<ARRAY<BIGINT>>); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "miss_per_sample"
-
-  override protected def nullSafeEval(g: Any): Any =
-    MissAllelesPerSample.eval(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.MissAllelesPerSample$$
-         |  .MODULE$$.eval($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildInternal(c: Expression): MissAllelesPerSample =
     copy(child = c)
@@ -150,24 +114,12 @@ object MissAllelesPerSample {
 /** Per-sample alt-allele dosage: ARRAY<BIGINT> with null for samples having
   * any missing allele ($dosage_alt, src/GetData.cpp:311-410). */
 case class DosageAltExpr(child: Expression)
-    extends UnaryExpression with GenoInput {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(child)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dosage_alt(ARRAY<ARRAY<BIGINT>>); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "dosage_alt"
-
-  override protected def nullSafeEval(g: Any): Any =
-    DosageAltExpr.eval(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.DosageAltExpr$$.MODULE$$
-         |  .eval($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildInternal(c: Expression): DosageAltExpr =
     copy(child = c)
@@ -201,24 +153,12 @@ object DosageAltExpr {
   * allele is missing; a half-missing call contributes its known non-ref
   * alleles. */
 case class DosageAlt2Expr(child: Expression)
-    extends UnaryExpression with GenoInput {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(child)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"dosage_alt2(ARRAY<ARRAY<BIGINT>>); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = ArrayType(LongType, containsNull = true)
   override def prettyName: String = "dosage_alt2"
-
-  override protected def nullSafeEval(g: Any): Any =
-    DosageAlt2Expr.eval(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.DosageAlt2Expr$$.MODULE$$
-         |  .eval($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildInternal(c: Expression): DosageAlt2Expr =
     copy(child = c)
@@ -260,32 +200,13 @@ object DosageAlt2Expr {
   * generated-method limit at 90 CEU samples and dropped the whole
   * stage to interpreted execution). */
 case class GroupGenoCounts(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with GenoInput {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def intOk(e: Expression) = e.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (genoOk(first) && intOk(second) && intOk(third))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "group_geno_counts(ARRAY<ARRAY<BIGINT>>, integral lo, integral hi); " +
-        s"got ${children.map(_.dataType.simpleString).mkString(", ")}")
-  }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, Integral, Integral)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "group_geno_counts"
-
-  override protected def nullSafeEval(g: Any, lo: Any, hi: Any): Any =
-    GroupGenoCounts.eval(g.asInstanceOf[ArrayData],
-      lo.asInstanceOf[Number].intValue(), hi.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, lo, hi) =>
-      s"""${ev.value} = graft.functions.expressions.GroupGenoCounts$$.MODULE$$
-         |  .eval($g, (int) $lo, (int) $hi);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): GroupGenoCounts = copy(first = f, second = s, third = t)
@@ -318,33 +239,13 @@ object GroupGenoCounts {
   * per-group input ([[GroupGenoCounts]]'s allele-level sibling: here
   * every non-null allele slot counts independently, any ploidy). */
 case class GroupAlleleCounts(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with GenoInput {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def intOk(e: Expression) = e.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (genoOk(first) && intOk(second) && intOk(third))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "group_allele_counts(ARRAY<ARRAY<BIGINT>>, integral lo, " +
-        s"integral hi); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, Integral, Integral)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "group_allele_counts"
-
-  override protected def nullSafeEval(g: Any, lo: Any, hi: Any): Any =
-    GroupAlleleCounts.eval(g.asInstanceOf[ArrayData],
-      lo.asInstanceOf[Number].intValue(), hi.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, lo, hi) =>
-      s"""${ev.value} = graft.functions.expressions.GroupAlleleCounts$$
-         |  .MODULE$$.eval($g, (int) $lo, (int) $hi);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): GroupAlleleCounts = copy(first = f, second = s, third = t)
@@ -380,32 +281,13 @@ object GroupAlleleCounts {
   * "."; null/absent phase → "/". [[SampleCellsJoined]] with no FORMAT
   * fields. */
 case class GtStringsJoined(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression with GenoInput {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val phasedOk = second.dataType match {
-      case ArrayType(BooleanType, _) => true
-      case _ => false
-    }
-    if (genoOk(first) && phasedOk && third.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "gt_strings(ARRAY<ARRAY<BIGINT>>, ARRAY<BOOLEAN>, STRING sep); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, ArrayType(BooleanType), StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "gt_strings"
-
-  override protected def nullSafeEval(g: Any, p: Any, s: Any): Any =
-    GtStringsJoined.eval(g.asInstanceOf[ArrayData],
-      p.asInstanceOf[ArrayData], s.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, p, s) =>
-      s"""${ev.value} = graft.functions.expressions.GtStringsJoined$$.MODULE$$
-         |  .eval($g, $p, $s);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): GtStringsJoined = copy(first = f, second = s, third = t)
@@ -427,7 +309,7 @@ object GtStringsJoined {
   * FIELD count, never the sample count — biobank-width safe where
   * per-sample expression unrolling is not. */
 case class SampleCellsJoined(children: Seq[Expression])
-    extends Expression with GenoInput {
+    extends Expression with ExpectsInputTypes {
 
   private def geno = children(0)
   private def phased = children(1)
@@ -437,22 +319,8 @@ case class SampleCellsJoined(children: Seq[Expression])
   override def nullable: Boolean =
     geno.nullable || phased.nullable || sep.nullable
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val phasedOk = phased.dataType match {
-      case ArrayType(BooleanType, _) => true
-      case _ => false
-    }
-    val fieldsOk = fields.forall(_.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    })
-    if (genoOk(geno) && phasedOk && sep.dataType == StringType && fieldsOk)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "sample_cells(ARRAY<ARRAY<BIGINT>>, ARRAY<BOOLEAN>, STRING sep, " +
-        "ARRAY<STRING>...); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, ArrayType(BooleanType), StringType) ++ fields.map(_ => Strings)
 
   override def dataType: DataType = StringType
   override def prettyName: String = "sample_cells"
@@ -543,25 +411,13 @@ object SampleCellsJoined {
   * 1092-sample 1KG doubleton scan (q226) silently fell back to
   * interpreted execution; this loop is O(1) generated code at any cohort
   * width. */
-case class F2Carriers(child: Expression) extends UnaryExpression {
+case class F2Carriers(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"f2_carriers(ARRAY<BIGINT>); got ${t.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "f2_carriers"
-
-  override protected def nullSafeEval(d: Any): Any =
-    F2Carriers.eval(d.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, d =>
-      s"""${ev.value} = graft.functions.expressions.F2Carriers$$.MODULE$$
-         |  .eval($d);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildInternal(c: Expression): F2Carriers =
     copy(child = c)

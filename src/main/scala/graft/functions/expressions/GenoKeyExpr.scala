@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.Geno
 
 /** Canonical genotype-cube serialization `"a|b;a|b;…"` (null allele →
   * `"x"`) — byte-identical to the nested-HOF original
@@ -17,24 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * nulls its inner join, and the outer `array_join` SKIPS null entries
   * entirely (no text, no separator) — replicated below. */
 case class GenoKeyExpr(child: Expression)
-    extends UnaryExpression with GenoInput {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(child)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"geno_key(ARRAY<ARRAY<BIGINT>>); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = StringType
   override def prettyName: String = "geno_key"
-
-  override protected def nullSafeEval(g: Any): Any =
-    GenoKeyExpr.ser(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.GenoKeyExpr$$.MODULE$$
-         |  .ser($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("ser")
 
   override protected def withNewChildInternal(c: Expression): GenoKeyExpr =
     copy(child = c)

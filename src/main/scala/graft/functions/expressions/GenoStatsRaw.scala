@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Integral
 
 /** [[GenoStats]] counted straight from a variant's stored 2-bit genotype
   * planes — the reference's `seqAlleleFreq`/`seqMissing` kernels, which
@@ -20,31 +21,12 @@ import org.apache.spark.sql.types._
   * the all-ones code of the row's plane count is a missing allele, and a
   * call with any missing allele is a missing call. */
 case class GenoStatsRaw(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val kOk = right.dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    if (left.dataType == BinaryType && kOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"geno_stats_raw(BINARY, integral k); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(BinaryType, Integral)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "geno_stats_raw"
-
-  override protected def nullSafeEval(p: Any, k: Any): Any =
-    GenoStatsRaw.eval(p.asInstanceOf[Array[Byte]],
-      k.asInstanceOf[Number].longValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (p, k) =>
-      s"""${ev.value} = graft.functions.expressions.GenoStatsRaw$$.MODULE$$
-         |  .eval($p, (long) $k);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): GenoStatsRaw = copy(left = l, right = r)

@@ -1,10 +1,10 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 
 /** Per-window haplotype multiplicity spectrum for the Garud H scan:
@@ -21,22 +21,18 @@ import org.apache.spark.sql.types._
   * size(filter(haps, y -> y === x))), desc)` because distinct counts
   * are order-free and the final sort is on the counts alone. */
 case class HapCountsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StructType(fs), _), IntegerType)
-          if right.foldable && fs.length == 3 &&
-            (fs(2).dataType == ArrayType(StringType, true) ||
-              fs(2).dataType == ArrayType(StringType, false) ||
-              fs(2).dataType == ArrayType(LongType, true) ||
-              fs(2).dataType == ArrayType(LongType, false)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"hap_counts(ARRAY<STRUCT<_,_,ARRAY<STRING|BIGINT>>>, " +
-          s"INT literal h); got ${left.dataType.simpleString}, " +
-          s"${right.dataType.simpleString}")
-    }
+  override def inputTypes: Seq[InputType] = Seq(
+    Bridge.inputType("ARRAY<STRUCT<_, _, ARRAY<STRING|BIGINT>>>") {
+      case ArrayType(StructType(fs), _) if fs.length == 3 =>
+        fs(2).dataType match {
+          case ArrayType(StringType | LongType, _) => true
+          case _ => false
+        }
+      case _ => false
+    },
+    IntegerType)
 
   /** True when the allele matrix carries LONG tokens (the cheap
     * encoding — the string form allocates h UTF8Strings per variant
@@ -54,15 +50,7 @@ case class HapCountsExpr(left: Expression, right: Expression)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "hap_counts"
 
-  override protected def nullSafeEval(vs: Any, h: Any): Any =
-    HapCountsExpr.counts(vs.asInstanceOf[ArrayData],
-      h.asInstanceOf[Number].intValue(), longTokens)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (vs, h) =>
-      s"""${ev.value} = graft.functions.expressions.HapCountsExpr$$.MODULE$$
-         |  .counts($vs, (int) $h, $longTokens);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("counts", longTokens)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): HapCountsExpr = copy(left = l, right = r)

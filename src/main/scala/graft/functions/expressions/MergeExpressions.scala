@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.Geno
 
 /** Codegen'd seqMerge kernels (SEQ_MergeAllele / SEQ_MergeGeno,
   * /root/reference/src/FileMerge.cpp:56-229): allele-string union and
@@ -17,26 +18,12 @@ import org.apache.spark.unsafe.types.UTF8String
 /** "REF,ALT1,…" ∪ "REF,ALT1,…": left order preserved, right-only alleles
   * appended in right order. */
 case class AlleleUnionExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"allele_union(STRING, STRING); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType, StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "allele_union"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    AlleleUnionExpr.union(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.AlleleUnionExpr$$.MODULE$$
-         |  .union($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("union")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): AlleleUnionExpr = copy(left = l, right = r)
@@ -63,33 +50,15 @@ object AlleleUnionExpr {
   * allele indices; null allele stays null; an allele absent from the new
   * list maps to -1 (cannot happen when newAlleles ⊇ oldAlleles). */
 case class RemapGenoExpr(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
+    third: Expression) extends TernaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val genoOk = first.dataType match {
-      case ArrayType(ArrayType(LongType, _), _) => true
-      case _ => false
-    }
-    if (genoOk && second.dataType == StringType && third.dataType == StringType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"remap_geno(ARRAY<ARRAY<BIGINT>>, STRING, STRING); got " +
-        children.map(_.dataType.simpleString).mkString(", "))
-  }
+  override def inputTypes: Seq[InputType] =
+    Seq(Geno, StringType, StringType)
 
   override def dataType: DataType =
     ArrayType(ArrayType(LongType, containsNull = true), containsNull = true)
   override def prettyName: String = "remap_geno"
-
-  override protected def nullSafeEval(g: Any, o: Any, n: Any): Any =
-    RemapGenoExpr.remap(g.asInstanceOf[ArrayData],
-      o.asInstanceOf[UTF8String], n.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (g, o, n) =>
-      s"""${ev.value} = graft.functions.expressions.RemapGenoExpr$$.MODULE$$
-         |  .remap($g, $o, $n);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("remap")
 
   override protected def withNewChildrenInternal(f: Expression, s: Expression,
       t: Expression): RemapGenoExpr = copy(first = f, second = s, third = t)

@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.Strings
 
 /** Fused MinHash signature over an `ARRAY<STRING>` shingle set: component
   * i (1-based) is `min(md5(i || ":" || shingle))` — exactly the md5-based
@@ -18,26 +19,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * one pass per document — the digest work is identical, the explode and
   * the shuffle disappear. Null array → null; null shingles skip.
   */
-case class MinhashSig(child: Expression, k: Int) extends UnaryExpression {
+case class MinhashSig(child: Expression, k: Int)
+    extends UnaryExpression with KernelCall {
 
   require(k > 0, "k must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<STRING>, got ${t.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Strings)
   override def dataType: DataType = ArrayType(StringType)
   override def prettyName: String = "minhash_sig"
-
-  override protected def nullSafeEval(a: Any): Any =
-    MinhashSig.compute(a.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.expressions.MinhashSig.compute($c, $k);")
+  override protected def kernel: Kernel = Kernel("compute", k)
 
   override protected def withNewChildInternal(newChild: Expression)
       : MinhashSig = copy(child = newChild)

@@ -2,9 +2,8 @@ package graft.functions.expressions
 
 import java.text.Normalizer
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -18,24 +17,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * which is what makes an exact cross-engine oracle possible).
   * Reference-adjacent: SeqArray's string annotations pass through
   * untouched bytes; a Spark-side corpus engine owns this step. */
-case class NfcNormalizeExpr(child: Expression) extends UnaryExpression {
+case class NfcNormalizeExpr(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"nfc_normalize(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = StringType
   override def prettyName: String = "nfc_normalize"
-
-  override protected def nullSafeEval(t: Any): Any =
-    NfcNormalizeExpr.nfc(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.NfcNormalizeExpr$$
-         |  .MODULE$$.nfc($t);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("nfc")
 
   override protected def withNewChildInternal(c: Expression): NfcNormalizeExpr =
     copy(child = c)

@@ -1,11 +1,13 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.Strings
 
 /** Fused per-sample FORMAT-field parser — the fmt_* half of the VCF body
   * parse in ONE generated loop (companion of [[ParseGtCells]], which fused
@@ -26,24 +28,12 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`ParseFmtCellsSpec`). */
 case class ParseFmtCells(left: Expression, right: Expression,
     number: String, vtype: String, nSamples: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   require(nSamples >= 0, "nSamples must be >= 0")
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val cellsOk = left.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    val idxOk = right.dataType match {
-      case IntegerType | LongType => true
-      case _ => false
-    }
-    if (cellsOk && idxOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"parse_fmt_cells(ARRAY<STRING>, integral idx); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] =
+    Seq(Strings, Bridge.anyOf(IntegerType, LongType))
 
   private def scalarDt: DataType = vtype match {
     case "Integer" => IntegerType
@@ -64,15 +54,8 @@ case class ParseFmtCells(left: Expression, right: Expression,
     case _ => 2
   }
 
-  override protected def nullSafeEval(c: Any, k: Any): Any =
-    ParseFmtCells.parse(c.asInstanceOf[ArrayData],
-      k.asInstanceOf[Number].intValue(), number == "1", vcode, nSamples)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, k) =>
-      s"""${ev.value} = graft.functions.expressions.ParseFmtCells$$.MODULE$$
-         |  .parse($c, (int) $k, ${number == "1"}, $vcode, $nSamples);
-       """.stripMargin)
+  override protected def kernel: Kernel =
+    Kernel("parse", number == "1", vcode, nSamples)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ParseFmtCells =

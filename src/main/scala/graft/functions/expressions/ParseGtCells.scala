@@ -1,12 +1,14 @@
 package graft.functions.expressions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Strings
 
 /** Fused VCF genotype-cell parser: all samples' `GT[:...]` cells →
   * struct(geno ARRAY<ARRAY<BIGINT>>, phased ARRAY<BOOLEAN>) in one pass.
@@ -23,24 +25,12 @@ import org.apache.spark.sql.types._
   * null; phased iff the GT string contains '|'.
   */
 case class ParseGtCells(left: Expression, right: Expression,
-    nSamples: Int) extends BinaryExpression {
+    nSamples: Int) extends BinaryExpression with KernelCall {
 
   require(nSamples >= 0, "nSamples must be >= 0")
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val cellsOk = left.dataType match {
-      case ArrayType(StringType, _) => true
-      case _ => false
-    }
-    val idxOk = right.dataType match {
-      case IntegerType | LongType => true
-      case _ => false
-    }
-    if (cellsOk && idxOk) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"parse_gt_cells(ARRAY<STRING>, integral gtIdx); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-  }
+  override def inputTypes: Seq[InputType] =
+    Seq(Strings, Bridge.anyOf(IntegerType, LongType))
 
   override def dataType: DataType = StructType(Seq(
     StructField("geno",
@@ -50,16 +40,7 @@ case class ParseGtCells(left: Expression, right: Expression,
       nullable = false)))
 
   override def prettyName: String = "parse_gt_cells"
-
-  override protected def nullSafeEval(c: Any, k: Any): Any =
-    ParseGtCells.parse(c.asInstanceOf[ArrayData],
-      k.asInstanceOf[Number].intValue(), nSamples)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (c, k) =>
-      s"""${ev.value} = graft.functions.expressions.ParseGtCells$$.MODULE$$
-         |  .parse($c, (int) $k, $nSamples);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("parse", nSamples)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): ParseGtCells =

@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
+
+import KernelCall.Longs
 
 /** Codegen kernels for the product-quantization path (q105) and the
   * windowed-LD path (q108). The declarative HOF twins (kept in
@@ -23,30 +24,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 /** Integer squared-L2 distance of two ARRAY<BIGINT> over their overlap;
   * null elements are skipped (treated as matching — they contribute 0). */
 case class L2DistLong(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs)
   override def dataType: DataType = LongType
   override def prettyName: String = "l2_i64"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    L2DistLong.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.L2DistLong$$.MODULE$$
-         |  .eval($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): L2DistLong =
@@ -77,30 +60,15 @@ object L2DistLong {
   * list_position-of-min). Out-of-range dims contribute 0 (never happens
   * with a well-formed codebook; the guard keeps eval total). */
 case class PqEncode(left: Expression, right: Expression, m: Int, dsub: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
   require(m > 0 && dsub > 0, "m and dsub must be positive")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(ArrayType(LongType, _), _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<BIGINT>, ARRAY<ARRAY<BIGINT>>), got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(Longs, ArrayType(ArrayType(LongType)))
   override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
   override def prettyName: String = "pq_encode"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PqEncode.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData], m, dsub)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.PqEncode$$.MODULE$$
-         |  .eval($a, $b, $m, $dsub);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval", m, dsub)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqEncode =
@@ -144,28 +112,13 @@ object PqEncode {
   * rows) indexed by `codes` (ARRAY<INT>) → Σ_sub dtab[sub][codes[sub]].
   * Out-of-range or null cells contribute 0. */
 case class PqAdcLookup(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(ArrayType(LongType, _), _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (ARRAY<ARRAY<BIGINT>>, ARRAY<INT>), got " +
-          s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-    }
-
+  override def inputTypes: Seq[InputType] =
+    Seq(ArrayType(ArrayType(LongType)), ArrayType(IntegerType))
   override def dataType: DataType = LongType
   override def prettyName: String = "pq_adc"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    PqAdcLookup.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.PqAdcLookup$$.MODULE$$
-         |  .eval($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): PqAdcLookup =
@@ -196,30 +149,12 @@ object PqAdcLookup {
   * Replaces five interpreted `aggregate` HOFs plus a zip_with+filter
   * per variant pair in the q108 hot loop. */
 case class LdPairStats(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
-    if (ok) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<BIGINT> arguments, got " +
-        s"${left.dataType.simpleString} and ${right.dataType.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs, Longs)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "ld_pair_stats"
-
-  override protected def nullSafeEval(a: Any, b: Any): Any =
-    LdPairStats.eval(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"""${ev.value} = graft.functions.expressions.LdPairStats$$.MODULE$$
-         |  .eval($a, $b);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): LdPairStats =

@@ -2,10 +2,9 @@ package graft.functions.expressions
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,24 +26,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * dropped); lengths count CODEPOINTS (Spark's `length`), so the SQL
   * oracle's `length(word)` replays exactly.
   */
-case class RepetitionStatsExpr(child: Expression) extends UnaryExpression {
+case class RepetitionStatsExpr(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"repetition_stats(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "repetition_stats"
-
-  override protected def nullSafeEval(t: Any): Any =
-    RepetitionStatsExpr.stats(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.RepetitionStatsExpr$$.MODULE$$
-         |  .stats($t);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("stats")
 
   override protected def withNewChildInternal(c: Expression)
       : RepetitionStatsExpr = copy(child = c)

@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Geno
 
 /** Fused per-variant sample-QC kernel: for each sample of a genotype
   * cube row (`geno ARRAY<ARRAY<BIGINT>>`) emit one packed BIGINT
@@ -30,24 +31,12 @@ import org.apache.spark.sql.types._
   * nulled the whole singleton set — so any null sub-array forces
   * `sing = 0` for every sample of that row. */
 case class SampleQcExpr(child: Expression)
-    extends UnaryExpression with GenoInput {
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (genoOk(child)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"sample_qc(ARRAY<ARRAY<BIGINT>>); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "sample_qc"
-
-  override protected def nullSafeEval(g: Any): Any =
-    SampleQcExpr.pack(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.SampleQcExpr$$.MODULE$$
-         |  .pack($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("pack")
 
   override protected def withNewChildInternal(c: Expression): SampleQcExpr =
     copy(child = c)

@@ -2,9 +2,8 @@ package graft.functions.expressions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,24 +13,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * majority vote with ties → 1. Bit-identical to
   * [[graft.functions.textfns.simhash16]], which stays as the differential
   * oracle. */
-case class Simhash16Expr(child: Expression) extends UnaryExpression {
+case class Simhash16Expr(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"simhash16(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash16"
-
-  override protected def nullSafeEval(t: Any): Any =
-    Simhash16Expr.sketch(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.Simhash16Expr$$.MODULE$$
-         |  .sketch($t);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("sketch")
 
   override protected def withNewChildInternal(c: Expression): Simhash16Expr =
     copy(child = c)

@@ -1,10 +1,13 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import java.util.concurrent.atomic.AtomicReferenceArray
+
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
+import org.apache.spark.sql.graft.Bridge.InputType
+import org.apache.spark.sql.types.{DataType, LongType}
+
+import KernelCall.Longs
 
 /** Codegen'd signed-random-projection LSH bucket id over `ARRAY<BIGINT>`.
   *
@@ -25,47 +28,22 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * The declarative form runs one interpreted `aggregate(transform(...))`
   * HOF pair PER BIT; this expression computes every bit in one fused
   * loop over the vector, reading the ±1 signs from a sign table built
-  * once per operator and grown only for a longer vector (signs depend
-  * only on (table, bits, i), never on the row). Null array → null; null
-  * elements contribute 0.
+  * once per (table, bits) in the JVM and grown only for a longer vector
+  * (signs depend only on (table, bits, i), never on the row). Null array
+  * → null; null elements contribute 0.
   */
 case class SrpBucket(child: Expression, bits: Int, table: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   require(bits > 0 && bits < 31, "bits must be in [1,30]")
   // keeps (key·131071 + i)·2654435761 inside signed-64 for any realistic
   // dim, so the SQL replay never hits BIGINT overflow
   require(table >= 0 && table <= 128, "table must be in [0,128]")
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires ARRAY<BIGINT>, got ${t.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Longs)
   override def dataType: DataType = LongType
   override def prettyName: String = "srp_bucket"
-
-  // the interpreted path's sign table (codegen keeps its own per operator)
-  @transient private var signs: Array[Byte] = _
-
-  override protected def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val s = SrpBucket.signTable(signs, table, bits, x.numElements())
-    signs = s
-    SrpBucket.eval(x, bits, s)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode)
-      : ExprCode = {
-    val tab = ctx.addMutableState("byte[]", "srpSigns")
-    nullSafeCodeGen(ctx, ev, a =>
-      s"""$tab = graft.functions.expressions.SrpBucket$$.MODULE$$
-         |  .signTable($tab, $table, $bits, $a.numElements());
-         |${ev.value} = graft.functions.expressions.SrpBucket$$.MODULE$$
-         |  .eval($a, $bits, $tab);
-       """.stripMargin)
-  }
+  override protected def kernel: Kernel = Kernel("bucket", table, bits)
 
   override protected def withNewChildInternal(newChild: Expression)
       : SrpBucket = copy(child = newChild)
@@ -91,6 +69,20 @@ object SrpBucket {
     if (cached != null && cached.length >= n * bits) cached
     else Array.tabulate[Byte](n * bits)(k =>
       if (signBit(table, k % bits, k / bits + 1L)) 1 else -1)
+
+  // the sign table of each (table, bits), slot table·31 + bits; a racing
+  // grower may store a shorter table, which the next longer vector
+  // simply rebuilds
+  private val tables = new AtomicReferenceArray[Array[Byte]](129 * 31)
+
+  /** Bucket id of `x` for the hyperplane family (`table`, `bits`). */
+  def bucket(x: ArrayData, table: Int, bits: Int): Long = {
+    val slot = table * 31 + bits
+    val cached = tables.get(slot)
+    val signs = signTable(cached, table, bits, x.numElements())
+    if (signs ne cached) tables.set(slot, signs)
+    eval(x, bits, signs)
+  }
 
   /** Bucket id of `x` over a [[signTable]] that covers its length. */
   def eval(x: ArrayData, bits: Int, signs: Array[Byte]): Long = {

@@ -1,11 +1,12 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+
+import KernelCall.Strings
 
 /** Whitespace tokenizer fused into one generated loop — byte-identical
   * to `filter(split(text, "\\s+"), t -> t <> '')` (the repo-wide
@@ -16,25 +17,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * split+drop-empty composition is simply "maximal runs of
   * non-whitespace", which this emits in one pass over the UTF-8 bytes
   * (all six separators are ASCII, so byte-level scanning is exact). */
-case class TokensExpr(child: Expression) extends UnaryExpression {
+case class TokensExpr(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"tokens(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "tokens"
-
-  override protected def nullSafeEval(t: Any): Any =
-    TokensExpr.tokenize(t.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.TokensExpr$$.MODULE$$
-         |  .tokenize($t);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("tokenize")
 
   override protected def withNewChildInternal(c: Expression): TokensExpr =
     copy(child = c)
@@ -79,30 +69,14 @@ object TokensExpr {
   * `array_join`'s null-skipping only when inputs are non-null — the
   * producing tokenizer never emits nulls. */
 case class SpanGramsExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StringType, _), IntegerType) if right.foldable =>
-        TypeCheckResult.TypeCheckSuccess
-      case _ => TypeCheckResult.TypeCheckFailure(
-        s"span_grams(ARRAY<STRING>, INT literal l); got " +
-          s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-    }
+  override def inputTypes: Seq[InputType] = Seq(Strings, IntegerType)
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "span_grams"
-
-  override protected def nullSafeEval(t: Any, l: Any): Any =
-    SpanGramsExpr.grams(t.asInstanceOf[ArrayData],
-      l.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, l) =>
-      s"""${ev.value} = graft.functions.expressions.SpanGramsExpr$$.MODULE$$
-         |  .grams($t, (int) $l);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("grams")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): SpanGramsExpr = copy(left = l, right = r)

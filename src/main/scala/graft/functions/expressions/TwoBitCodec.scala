@@ -1,10 +1,11 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
+
+import KernelCall.Geno
 
 /** 2-bit packed REF-dosage codec — the reference's `seqGet2bGeno` export
   * (/root/reference/R/Methods.R:1224-1342, C kernel
@@ -14,31 +15,27 @@ import org.apache.spark.sql.types._
   * Packing is the ML-feature/array-interchange path; at 100 TB the packed
   * column is ~8× smaller than the nested allele arrays.
   */
-case class Pack2bRefDosage(child: Expression) extends UnaryExpression {
+case class Pack2bRefDosage(child: Expression)
+    extends UnaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(ArrayType(LongType, _), _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pack_2b(ARRAY<ARRAY<BIGINT>>); got ${t.simpleString}")
-  }
-
+  override def inputTypes: Seq[InputType] = Seq(Geno)
   override def dataType: DataType = BinaryType
   override def prettyName: String = "pack_2b"
-
-  override protected def nullSafeEval(g: Any): Any =
-    Pack2bRefDosage.pack(g.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, g =>
-      s"""${ev.value} = graft.functions.expressions.Pack2bRefDosage$$.MODULE$$
-         |  .pack($g);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("pack")
 
   override protected def withNewChildInternal(c: Expression): Pack2bRefDosage =
     copy(child = c)
 }
 
 object Pack2bRefDosage {
+  /** The packed kernels read ⌈n/4⌉ bytes for `n` samples: a shorter
+    * value is an error that names the function, not an index fault. */
+  private[expressions] def requireBytes(fn: String, packed: Array[Byte],
+      n: Int): Unit =
+    if (((n.toLong + 3) >> 2) > packed.length)
+      throw new IllegalArgumentException(s"$fn: n = $n samples need " +
+        s"${(n.toLong + 3) >> 2} packed bytes; the value has ${packed.length}")
+
   /** missing (any null allele / null call / dosage > 2) packs as 3. */
   def pack(geno: ArrayData): Array[Byte] = {
     val n = geno.numElements()
@@ -68,27 +65,12 @@ object Pack2bRefDosage {
 /** Inverse of [[Pack2bRefDosage]]: packed bytes + sample count →
   * ARRAY<INT> REF dosages, code 3 → null. */
 case class Unpack2bDosage(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"unpack_2b(BINARY, INT); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = ArrayType(IntegerType, containsNull = true)
   override def prettyName: String = "unpack_2b"
-
-  override protected def nullSafeEval(b: Any, n: Any): Any =
-    Unpack2bDosage.unpack(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) =>
-      s"""${ev.value} = graft.functions.expressions.Unpack2bDosage$$.MODULE$$
-         |  .unpack($b, (int) $n);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("unpack")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): Unpack2bDosage = copy(left = l, right = r)
@@ -96,6 +78,7 @@ case class Unpack2bDosage(left: Expression, right: Expression)
 
 object Unpack2bDosage {
   def unpack(bytes: Array[Byte], n: Int): GenericArrayData = {
+    Pack2bRefDosage.requireBytes("unpack_2b", bytes, n)
     val out = new Array[Any](n)
     var i = 0
     while (i < n) {
@@ -116,27 +99,12 @@ object Unpack2bDosage {
   * missing (the packed form cannot represent half-missing calls; pack_2b
   * already folds those to code 3). */
 case class GenoStatsPacked(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"geno_stats_packed(BINARY, INT); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "geno_stats_packed"
-
-  override protected def nullSafeEval(b: Any, n: Any): Any =
-    GenoStatsPacked.eval(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) =>
-      s"""${ev.value} = graft.functions.expressions.GenoStatsPacked$$.MODULE$$
-         |  .eval($b, (int) $n);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): GenoStatsPacked = copy(left = l, right = r)
@@ -152,7 +120,8 @@ object GenoStatsPacked {
     (0 until 4).map(s => (b >> (2 * s)) & 3).filter(_ != 3).sum
   }
 
-  def eval(packed: Array[Byte], n: Int): org.apache.spark.sql.catalyst.expressions.UnsafeArrayData = {
+  def eval(packed: Array[Byte], n: Int): UnsafeArrayData = {
+    Pack2bRefDosage.requireBytes("geno_stats_packed", packed, n)
     var calledSamples = 0L
     var ac = 0L
     val fullBytes = n >> 2
@@ -170,8 +139,7 @@ object GenoStatsPacked {
       s += 1
     }
     val missCalls = n - calledSamples
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(Array(2L * n, 2L * calledSamples, ac,
+    UnsafeArrayData.fromPrimitiveArray(Array(2L * n, 2L * calledSamples, ac,
         missCalls.toLong, 2L * missCalls))
   }
 }
@@ -184,28 +152,13 @@ object GenoStatsPacked {
   * The code argument must be a foldable literal 0..3 (it selects the
   * lookup table at codegen time). */
 case class CodeCountPacked(left: Expression, right: Expression, code: Int)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
   require(code >= 0 && code <= 3, s"code must be 0..3; got $code")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == BinaryType && right.dataType == IntegerType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"code_count_packed(BINARY, INT); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(BinaryType, IntegerType)
   override def dataType: DataType = LongType
   override def prettyName: String = "code_count_packed"
-
-  override protected def nullSafeEval(b: Any, n: Any): Any =
-    CodeCountPacked.eval(b.asInstanceOf[Array[Byte]],
-      n.asInstanceOf[Number].intValue(), code)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (b, n) =>
-      s"""${ev.value} = graft.functions.expressions.CodeCountPacked$$.MODULE$$
-         |  .eval($b, (int) $n, $code);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("eval", code)
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): CodeCountPacked =
@@ -219,6 +172,7 @@ object CodeCountPacked {
   }
 
   def eval(packed: Array[Byte], n: Int, code: Int): Long = {
+    Pack2bRefDosage.requireBytes("code_count_packed", packed, n)
     val tab = CountTab(code)
     var cnt = 0L
     val fullBytes = n >> 2

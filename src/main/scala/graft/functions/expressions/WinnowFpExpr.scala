@@ -1,9 +1,8 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -28,26 +27,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * to the empty set.
   */
 case class WinnowFpExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
+    extends UnaryExpression with KernelCall {
 
   require(k >= 1 && w >= 1, s"winnow_fps needs k,w >= 1; got k=$k w=$w")
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == StringType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"winnow_fps(STRING); got ${child.dataType.simpleString}")
-
+  override def inputTypes: Seq[InputType] = Seq(StringType)
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "winnow_fps"
-
-  override protected def nullSafeEval(t: Any): Any =
-    WinnowFpExpr.fingerprints(t.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, t =>
-      s"""${ev.value} = graft.functions.expressions.WinnowFpExpr$$.MODULE$$
-         |  .fingerprints($t, $k, $w);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("fingerprints", k, w)
 
   override protected def withNewChildInternal(c: Expression): WinnowFpExpr =
     copy(child = c)

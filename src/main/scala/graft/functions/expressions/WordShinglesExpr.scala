@@ -1,9 +1,8 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.graft.Bridge.InputType
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -14,28 +13,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * (CodegenFallback) and was the dominant cost of the MinHash/LSH dedup
   * pipeline (~2 ms/doc, evaluated up to 3× after predicate inlining). */
 case class WordShinglesExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
+    extends BinaryExpression with KernelCall {
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (left.dataType == StringType && right.dataType == IntegerType &&
-        right.foldable) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"word_shingles(STRING, INT literal n); got " +
-        s"${left.dataType.simpleString}, ${right.dataType.simpleString}")
+  override def inputTypes: Seq[InputType] = Seq(StringType, IntegerType)
 
   override def dataType: DataType =
     ArrayType(StringType, containsNull = false)
   override def prettyName: String = "word_shingles"
-
-  override protected def nullSafeEval(t: Any, n: Any): Any =
-    WordShinglesExpr.shingle(t.asInstanceOf[UTF8String],
-      n.asInstanceOf[Number].intValue())
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n) =>
-      s"""${ev.value} = graft.functions.expressions.WordShinglesExpr$$.MODULE$$
-         |  .shingle($t, (int) $n);
-       """.stripMargin)
+  override protected def kernel: Kernel = Kernel("shingle")
 
   override protected def withNewChildrenInternal(
       l: Expression, r: Expression): WordShinglesExpr = copy(left = l, right = r)

@@ -98,12 +98,6 @@ object Flac {
         nAcc -= 8
       }
     }
-    /** FLAC unary: q zero bits then a one bit. */
-    def writeUnary(q: Int): Unit = {
-      var r = q
-      while (r >= 32) { writeBits(0L, 32); r -= 32 }
-      writeBits(1L, r + 1)
-    }
     def alignByte(): Unit = if (nAcc % 8 != 0) writeBits(0L, 8 - nAcc % 8)
     def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
   }

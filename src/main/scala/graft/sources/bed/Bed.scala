@@ -93,10 +93,27 @@ object Bed {
       s".bed size ${fileLen - 3} is not a multiple of rowBytes=$rowBytes")
     val nVariants = (fileLen - 3) / rowBytes
 
-    // .bim: splittable text scan; the line number IS the bed row index
+    // .bim: splittable text scan; the line number IS the bed row index.
+    // monotonically_increasing_id is (input split << 33) + the line's
+    // place in its split, so the line number adds the line count of the
+    // earlier splits — the two-level prefix of SeqArray.numberVariants,
+    // lazy like the rest of the frame (no counting job while it is built)
     import spark.implicits._
-    val bim = spark.read.textFile(prefix + ".bim").rdd
-      .zipWithIndex().map { case (l, i) =>
+    import org.apache.spark.sql.expressions.Window
+    val lines = spark.read.text(prefix + ".bim")
+      .select(monotonically_increasing_id().as("__id"), col("value"))
+      .withColumn("__split", shiftrightunsigned(col("__id"), 33))
+    val offsets = lines.groupBy(col("__split"))
+      .agg(count(lit(1)).as("__n"))
+      .withColumn("__off", sum(col("__n")).over(Window.orderBy(col("__split"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)) -
+        col("__n"))
+      .select(col("__split"), col("__off"))
+    val bim = lines.join(broadcast(offsets), Seq("__split"))
+      .select(
+        (col("__off") + col("__id").bitwiseAND((1L << 33) - 1)).as("vid"),
+        col("value"))
+      .as[(Long, String)].map { case (i, l) =>
         val f = l.trim.split("\\s+")
         require(f.length >= 6, s"bad .bim line: $l")
         (i, f(0), f(3).toInt, f(1), s"${f(5)},${f(4)}") // REF=A2, ALT=A1

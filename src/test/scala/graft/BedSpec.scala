@@ -106,6 +106,44 @@ class BedSpec extends AnyFunSuite {
     }
   }
 
+  test("Bed.read runs no Spark job over a .bim of several input splits") {
+    val p = fileset(400, 400)
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.add(Option(js.properties)
+          .flatMap(ps => Option(ps.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "2048")
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // ~8 KB of .bim lines: four or more input splits of 2 KB
+      assert(spark.read.text(p + ".bim").rdd.getNumPartitions > 1)
+      val df = Bed.read(spark, p)
+      // the listener bus delivers in order: once a sentinel job shows,
+      // every job started before it has shown too
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.sparkContext.parallelize(Seq(1)).count()
+      spark.sparkContext.setJobDescription(null)
+      var waited = 0
+      while (!jobs.contains("sentinel") && waited < 10000) {
+        Thread.sleep(50); waited += 50
+      }
+      assert(jobs.contains("sentinel"), "the listener saw no job at all")
+      assert(jobs.size == 1, s"Bed.read ran jobs: $jobs")
+      // the lines keep their file order across the splits
+      val got = df.select(col("vid"), col("id"), col("pos")).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getInt(2))).sortBy(_._1)
+      assert(got.toSeq == (0 until 400).map(v => (v.toLong, s"rs$v", 100 + v)))
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+  }
+
   test("dup sample ids fall back to family-individual") {
     val fam = Seq(Bed.Fam("F1", "A", "0", "0", "1", "-9"),
       Bed.Fam("F2", "A", "0", "0", "1", "-9"))

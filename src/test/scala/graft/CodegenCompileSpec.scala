@@ -147,6 +147,25 @@ class CodegenCompileSpec extends AnyFunSuite {
     "span_grams" -> SpanGramsExpr(TokensExpr(ref(5, StringType)), Literal(2)),
     "geno_key" -> GenoKeyExpr(ref(0, genoT)))
 
+  test("the list holds every expression class of the kernel package") {
+    // the compiled package directories on the test classpath; a kernel
+    // added later fails here until it joins the list above
+    val pkg = "graft.functions.expressions"
+    val dirs = getClass.getClassLoader.getResources(pkg.replace('.', '/'))
+    val classes = Iterator.continually(dirs).takeWhile(_.hasMoreElements)
+      .map(_.nextElement()).filter(_.getProtocol == "file")
+      .flatMap(u => new java.io.File(u.toURI).list())
+      .filter(f => f.endsWith(".class") && !f.contains("$"))
+      .map(f => Class.forName(s"$pkg.${f.stripSuffix(".class")}"))
+      .filter(c => classOf[Expression].isAssignableFrom(c) &&
+        !java.lang.reflect.Modifier.isAbstract(c.getModifiers))
+      .toSet
+    assert(classes.size >= kernels.map(_._2.getClass).distinct.size,
+      s"found only $classes")
+    val missing = classes -- kernels.map(_._2.getClass)
+    assert(missing.isEmpty, s"not compiled by this spec: $missing")
+  }
+
   for ((name, expr) <- kernels) {
     test(s"$name compiles under Janino and matches interpreted eval") {
       // throws CompileException on unparseable generated code — the

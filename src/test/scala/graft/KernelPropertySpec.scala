@@ -228,6 +228,29 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("packed kernels reject an n that needs more bytes than the value " +
+      "holds") {
+    // 2 bytes carry 8 samples: n = 8 reads them all, n = 9 needs a third
+    val rows = Seq((Array[Byte](0x1b, 0x1b), 8), (Array[Byte](0x1b, 0x1b), 9))
+    val kernels = Seq(
+      "geno_stats_packed" -> genoStatsPacked(col("pg"), col("n")),
+      "code_count_packed" -> codeCountPacked(col("pg"), col("n"), 1),
+      "unpack_2b" -> unpack2b(col("pg"), col("n")))
+    for ((mode, df) <- frames(spark, rows, "pg", "n");
+         (fn, k) <- kernels) {
+      assert(df.filter(col("n") === 8).select(k).collect().length == 1,
+        s"$fn $mode: n covered by the bytes")
+      val e = intercept[Exception](
+        df.filter(col("n") === 9).select(k).collect())
+      val bad = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).collectFirst {
+          case iae: IllegalArgumentException => iae.getMessage
+        }
+      assert(bad.exists(m => m.contains(fn) && m.contains("n = 9") &&
+        m.contains("has 2")), s"$fn $mode: $e")
+    }
+  }
+
   test("round-4 kernels agree with HOF oracles on random inputs") {
     import graft.functions.vectorfns.srpBucket
     // sample_cells: arbitrary ragged cubes + a per-sample field column

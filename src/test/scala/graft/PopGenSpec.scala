@@ -315,53 +315,6 @@ class PopGenSpec extends AnyFunSuite {
     graft.core.SharedStages.ld.clear()
   }
 
-  test("pcaFromGrmDistributed matches the dense driver-side eigenpairs") {
-    import spark.implicits._
-    // same two-cluster GRM as the dense test, plus a third odd sample
-    // group so more than one eigenvalue is nontrivial
-    val rows = (1L to 6L).map(v =>
-      (v, Seq[java.lang.Long](0L, 0L, 2L, 2L, 1L))) ++
-      (7L to 9L).map(v => (v, Seq[java.lang.Long](2L, 0L, 0L, 2L, 1L))) :+
-      (10L, Seq[java.lang.Long](1L, 1L, 1L, 1L, null))
-    val grmDf = PopGen.grm(rows.toDF("vid", "d"), 5)
-      .repartition(4) // force multi-partition partial accumulation
-    val (evD, vD) = PopGen.pcaFromGrm(grmDf, 5, 3)
-    val (evX, vX) = PopGen.pcaFromGrmDistributed(grmDf, 5, 3)
-    for (p <- 0 until 3) {
-      assert(math.abs(evD(p) - evX(p)) < 1e-9,
-        s"eigenvalue $p: ${evD(p)} vs ${evX(p)}")
-      for (s <- 0 until 5)
-        assert(math.abs(vD(p)(s) - vX(p)(s)) < 1e-9,
-          s"loading ($p,$s): ${vD(p)(s)} vs ${vX(p)(s)}")
-    }
-  }
-
-  test("distributed PCA at 10k samples never materializes S×S") {
-    import spark.implicits._
-    // rank-1 GRM G = u uᵀ with u(s) = 1 + (s % 7): top eigenpair is
-    // known analytically (λ1 = ‖u‖², v1 = u/‖u‖), so correctness checks
-    // without ever building the dense matrix anywhere. 10k samples ⇒
-    // ~50M upper-triangle entries, generated lazily from spark.range —
-    // a dense double matrix would be 800 MB; the driver here holds only
-    // S-vectors (80 KB each).
-    val n = 10000
-    // row i explodes to its n−i upper-triangle partners — ~50M entries,
-    // generated lazily on executors, never a driver-side matrix
-    val entries = spark.range(n).repartition(8)
-      .select(col("id").cast("int").as("i"),
-        explode(sequence(col("id").cast("int"), lit(n - 1))).as("j"))
-      .select(col("i"), col("j"),
-        ((col("i") % 7 + 1) * (col("j") % 7 + 1)).cast("double").as("grm"))
-    val u = Array.tabulate(n)(s => (s % 7 + 1).toDouble)
-    val uNorm = math.sqrt(u.map(x => x * x).sum)
-    // rank-1 ⇒ converged after a handful of iterations
-    val (evs, vecs) = PopGen.pcaFromGrmDistributed(entries, n, 1, iters = 8)
-    assert(math.abs(evs(0) - uNorm * uNorm) / (uNorm * uNorm) < 1e-9,
-      s"λ1 ${evs(0)} vs ${uNorm * uNorm}")
-    for (s <- 0 until n)
-      assert(math.abs(vecs(0)(s) - u(s) / uNorm) < 1e-9)
-  }
-
   test("SeqVarData façade surfaces the popgen ops over canonical columns") {
     import spark.implicits._
     val v = graft.api.SeqVarData(Seq(
