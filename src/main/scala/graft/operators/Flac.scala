@@ -84,66 +84,22 @@ object Flac {
     c
   }
 
-  // ---- bit I/O (MSB-first, the FLAC bit order) ------------------------
-  private final class BitWriter {
-    private val out = new java.io.ByteArrayOutputStream()
-    private var acc = 0L
-    private var nAcc = 0
-    def writeBits(v: Long, n: Int): Unit = {
-      require(n >= 0 && n <= 57, s"writeBits n=$n")
-      acc = (acc << n) | (v & ((1L << n) - 1))
-      nAcc += n
-      while (nAcc >= 8) {
-        out.write(((acc >>> (nAcc - 8)) & 0xff).toInt)
-        nAcc -= 8
-      }
+  /** A unary code: the count of 0 bits before the next 1 bit. */
+  private def readUnary(r: Bits.Reader): Int = {
+    var q = 0
+    while (r.readBits(1) == 0L) {
+      q += 1
+      if (q > (1 << 24)) throw Corrupt // runaway unary = corrupt
     }
-    def alignByte(): Unit = if (nAcc % 8 != 0) writeBits(0L, 8 - nAcc % 8)
-    def toBytes: Array[Byte] = { alignByte(); out.toByteArray }
+    q
   }
 
-  private final class BitReader(val bytes: Array[Byte], start: Int) {
-    private var pos = start // byte position
-    private var bit = 0     // bits consumed in current byte
-    def bytePos: Int = pos
-    def bitAligned: Boolean = bit == 0
-    def eof: Boolean = pos >= bytes.length
-    def readBits(n: Int): Long = {
-      var got = 0
-      var v = 0L
-      while (got < n) {
-        if (pos >= bytes.length) throw Truncated
-        val avail = 8 - bit
-        val take = math.min(avail, n - got)
-        val cur = bytes(pos) & 0xff
-        val piece = (cur >>> (avail - take)) & ((1 << take) - 1)
-        v = (v << take) | piece
-        got += take
-        bit += take
-        if (bit == 8) { bit = 0; pos += 1 }
-      }
-      v
-    }
-    def readUnary(): Int = {
-      var q = 0
-      while (readBits(1) == 0L) {
-        q += 1
-        if (q > (1 << 24)) throw Corrupt // runaway unary = corrupt
-      }
-      q
-    }
-    def alignByte(): Unit = if (bit != 0) { bit = 0; pos += 1 }
-  }
-
-  private object Truncated extends RuntimeException("truncated") {
-    override def fillInStackTrace(): Throwable = this
-  }
   private object Corrupt extends RuntimeException("corrupt") {
     override def fillInStackTrace(): Throwable = this
   }
 
   // ---- UTF-8-style frame-number coding (spec §9.1.5, up to 36 bits) --
-  private def writeUtf8Num(w: BitWriter, n: Long): Unit = {
+  private def writeUtf8Num(w: Bits.Writer, n: Long): Unit = {
     if (n < 0x80) w.writeBits(n, 8)
     else {
       // k-byte sequences carry bits(k) payload bits (k = 2..7)
@@ -163,7 +119,7 @@ object Flac {
       }
     }
   }
-  private def readUtf8Num(r: BitReader): Long = {
+  private def readUtf8Num(r: Bits.Reader): Long = {
     val b0 = r.readBits(8).toInt
     if ((b0 & 0x80) == 0) return b0.toLong
     var nBytes = 0
@@ -206,7 +162,7 @@ object Flac {
     val out = new java.io.ByteArrayOutputStream()
     out.write('f'); out.write('L'); out.write('a'); out.write('C')
     // STREAMINFO (last-metadata flag set, type 0, length 34)
-    val si = new BitWriter
+    val si = new Bits.Writer
     si.writeBits(1L, 1); si.writeBits(0L, 7); si.writeBits(34L, 24)
     si.writeBits(blockSize.toLong, 16) // min block size
     si.writeBits(blockSize.toLong, 16) // max block size
@@ -240,7 +196,7 @@ object Flac {
         case 1 => 0x8 // left/side
         case _ => 0xa // mid/side
       }
-    val w = new BitWriter
+    val w = new Bits.Writer
     w.writeBits(0x3ffeL, 14) // sync
     w.writeBits(0L, 1)       // reserved
     w.writeBits(0L, 1)       // fixed-blocksize strategy
@@ -253,7 +209,7 @@ object Flac {
     w.writeBits((n - 1).toLong, 16)
     val headNoCrc = w.toBytes // byte-aligned here by construction
     val h8 = crc8(headNoCrc, 0, headNoCrc.length)
-    val w2 = new BitWriter
+    val w2 = new Bits.Writer
     headNoCrc.foreach(b => w2.writeBits((b & 0xff).toLong, 8))
     w2.writeBits(h8.toLong, 8)
     // channel data (decorrelated for the stereo assignments)
@@ -299,7 +255,7 @@ object Flac {
     outw.toByteArray
   }
 
-  private def writeSubframe(w2: BitWriter, data: Array[Int], bps: Int,
+  private def writeSubframe(w2: Bits.Writer, data: Array[Int], bps: Int,
       useLpc: Boolean): Unit = {
     val n = data.length
     val mask = (1L << bps) - 1
@@ -343,7 +299,7 @@ object Flac {
 
   /** Rice method 00 (4-bit params), partition order 0, one parameter:
     * smallest k minimizing the coded size (cap 14 — 15 is escape). */
-  private def writeRice(w2: BitWriter, res: Array[Int]): Unit = {
+  private def writeRice(w2: Bits.Writer, res: Array[Int]): Unit = {
     var bestK = 0
     var bestBits = Long.MaxValue
     var k = 0
@@ -411,7 +367,7 @@ object Flac {
         if (pos + 4 + blen > payload.length) return None
         if (first) {
           if (btype != 0 || blen != 34) return None
-          val r = new BitReader(payload, pos + 4)
+          val r = new Bits.Reader(payload, pos + 4, pos + 4 + blen)
           r.readBits(16); r.readBits(16) // min/max block size
           r.readBits(24); r.readBits(24) // min/max frame size
           sampleRate = r.readBits(20).toInt
@@ -445,7 +401,7 @@ object Flac {
       }
       Some(FlacStream(sampleRate, channels, bps, got, all))
     } catch {
-      case Truncated | Corrupt => None
+      case Bits.Truncated | Corrupt => None
       case _: ArrayIndexOutOfBoundsException => None
     }
   }
@@ -457,7 +413,7 @@ object Flac {
   /** One frame at byte `start`; returns (interleaved PCM, next byte). */
   private def decodeFrame(bytes: Array[Byte], start: Int,
       siRate: Int, siChannels: Int, siBps: Int): (Array[Int], Int) = {
-    val r = new BitReader(bytes, start)
+    val r = new Bits.Reader(bytes, start, bytes.length)
     if (r.readBits(14) != 0x3ffeL) throw Corrupt
     if (r.readBits(1) != 0L) throw Corrupt
     val variableBlk = r.readBits(1) == 1L
@@ -522,11 +478,8 @@ object Flac {
       ch += 1
     }
     r.alignByte()
-    val c16pos = r.bytePos
-    if (crc16(bytes, start, c16pos) !=
-        (((bytes(c16pos) & 0xff) << 8) | (bytes(c16pos + 1) & 0xff)))
-      throw Corrupt
-    val end = c16pos + 2
+    if (crc16(bytes, start, r.bytePos) != r.readInt(16)) throw Corrupt
+    val end = r.bytePos
     // stereo decorrelation
     chanAsn match {
       case 8 => // left/side: right = left - side
@@ -564,11 +517,11 @@ object Flac {
     (outPcm, end)
   }
 
-  private def decodeSubframe(r: BitReader, n: Int, bps: Int): Array[Int] = {
+  private def decodeSubframe(r: Bits.Reader, n: Int, bps: Int): Array[Int] = {
     if (r.readBits(1) != 0L) throw Corrupt
     val stype = r.readBits(6).toInt
     val wastedFlag = r.readBits(1) == 1L
-    val wasted = if (wastedFlag) r.readUnary() + 1 else 0
+    val wasted = if (wastedFlag) readUnary(r) + 1 else 0
     val effBps = bps - wasted
     val out = new Array[Int](n)
     stype match {
@@ -625,7 +578,7 @@ object Flac {
     out
   }
 
-  private def readResiduals(r: BitReader, blockSize: Int,
+  private def readResiduals(r: Bits.Reader, blockSize: Int,
       predOrder: Int): Array[Int] = {
     val method = r.readBits(2).toInt
     if (method > 1) throw Corrupt
@@ -651,7 +604,7 @@ object Flac {
       } else {
         var i = 0
         while (i < cnt) {
-          val q = r.readUnary().toLong
+          val q = readUnary(r).toLong
           val u = (q << param) | r.readBits(param)
           res(idx) = ((u >>> 1) ^ -(u & 1L)).toInt // un-zigzag
           idx += 1; i += 1

@@ -52,9 +52,143 @@ object MpegAudio {
     SfBase(i % 3) / (1L << (i / 3)).toDouble
   }
 
-  private val KbpsL1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256,
+  // ---- the frame walk (§2.4.1.3; ISO/IEC 13818-3 for MPEG-2 and the
+  // de-facto MPEG-2.5 extension) ------------------------------------------
+
+  // bitrates in kbps by bitrate index, per (version, layer)
+  private val KbpsV1L1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256,
     288, 320, 352, 384, 416, 448)
-  private val Rates = Array(44100, 48000, 32000)
+  private val KbpsV1L2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160,
+    192, 224, 256, 320, 384)
+  private val KbpsV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128,
+    160, 192, 224, 256, 320)
+  private val KbpsV2L1 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144,
+    160, 176, 192, 224, 256)
+  private val KbpsV2L23 = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96,
+    112, 128, 144, 160)
+  /** MPEG-1 sample rates by index; MPEG-2 halves them, MPEG-2.5 quarters
+    * them. */
+  private val RatesV1 = Array(44100, 48000, 32000)
+
+  /** One frame header at byte `off`: `version` is the header's code
+    * (3 = MPEG-1, 2 = MPEG-2, 0 = MPEG-2.5), `layer` is 1, 2 or 3, and
+    * `crc` says a CRC word follows the header. */
+  private[operators] final case class Frame(off: Int, version: Int,
+      layer: Int, crc: Boolean, kbps: Int, rate: Int, pad: Int, mode: Int,
+      modeExt: Int) {
+    def channels: Int = if (mode == 3) 1 else 2
+    /** Samples per channel in the frame. */
+    def samples: Int =
+      if (layer == 1) 384 else if (layer == 2 || version == 3) 1152 else 576
+    /** The whole frame's length in bytes: Layer I counts 4-byte slots. */
+    def len: Int =
+      if (layer == 1) (12 * kbps * 1000 / rate + pad) * 4
+      else samples / 8 * kbps * 1000 / rate + pad
+    def end: Int = off + len
+    /** The first byte after the header and its CRC word. */
+    def body: Int = off + (if (crc) 6 else 4)
+  }
+
+  /** The frame header at `off`; None without a sync word there, or when
+    * a field holds a reserved code or free format (bitrate index 0). */
+  private[operators] def frameAt(b: Array[Byte], off: Int)
+      : Option[Frame] = {
+    if (off + 4 > b.length ||
+        !((b(off) & 0xff) == 0xff && (b(off + 1) & 0xe0) == 0xe0)) return None
+    val h1 = b(off + 1) & 0xff; val h2 = b(off + 2) & 0xff
+    val h3 = b(off + 3) & 0xff
+    val v = (h1 >> 3) & 3
+    val l = (h1 >> 1) & 3
+    val bri = (h2 >> 4) & 15
+    val sri = (h2 >> 2) & 3
+    if (v == 1 || l == 0 || bri == 0 || bri == 15 || sri == 3) return None
+    val layer = 4 - l
+    val rate = RatesV1(sri) / (if (v == 3) 1 else if (v == 2) 2 else 4)
+    val kbps = (if (v == 3) {
+      if (layer == 1) KbpsV1L1 else if (layer == 2) KbpsV1L2 else KbpsV1L3
+    } else {
+      if (layer == 1) KbpsV2L1 else KbpsV2L23
+    })(bri)
+    Some(Frame(off, v, layer, (h1 & 1) == 0, kbps, rate, (h2 >> 1) & 1,
+      (h3 >> 6) & 3, (h3 >> 4) & 3))
+  }
+
+  /** The frames of a walk and the offset where it stopped. */
+  private[operators] final case class Walk(frames: Vector[Frame],
+      stop: Int)
+
+  /** Walks the frames chained from `from`, each starting where the last
+    * one ends. The walk stops at the first offset where no valid header
+    * starts, where the header's (version, layer, sample rate, channel
+    * mode) differ from the first frame's, or where the frame would run
+    * past the end of `b`. Each caller applies its own rule to where the
+    * walk stopped. */
+  private[operators] def walk(b: Array[Byte], from: Int): Walk = {
+    val out = Vector.newBuilder[Frame]
+    var first: Frame = null
+    var off = from
+    var go = true
+    while (go) frameAt(b, off) match {
+      case Some(f) if f.end <= b.length && (first == null ||
+          (f.version, f.layer, f.rate, f.mode) ==
+            ((first.version, first.layer, first.rate, first.mode))) =>
+        if (first == null) first = f
+        out += f
+        off = f.end
+      case _ => go = false
+    }
+    Walk(out.result(), off)
+  }
+
+  /** The 4-byte header of an MPEG-1 frame of `layer` (1–3) at bitrate
+    * index `bri` and sample-rate index `sri`; a CRC word follows when
+    * `crc`. Mode extension, copyright, original and emphasis are 0. */
+  private[operators] def header(layer: Int, crc: Boolean, bri: Int,
+      sri: Int, pad: Int, mode: Int): Array[Byte] =
+    Array(0xff, 0xf8 | ((4 - layer) << 1) | (if (crc) 0 else 1),
+      (bri << 4) | (sri << 2) | (pad << 1), mode << 6).map(_.toByte)
+
+  /** The CRC-16 state after the header bits it covers (bits 16–31). */
+  private def headerCrc(b: Array[Byte], off: Int): Int =
+    crcBits(crcBits(0xffff, b(off + 2) & 0xff, 8), b(off + 3) & 0xff, 8)
+
+  /** The CRC word sent after the header of `h`. */
+  private def sentCrc(b: Array[Byte], h: Frame): Int =
+    ((b(h.off + 4) & 0xff) << 8) | (b(h.off + 5) & 0xff)
+
+  /** The frames of `payload` decoded by `frame`, and the first header.
+    * None unless the payload is ≥ 2 chained MPEG-1 frames of `layer`
+    * and nothing else, every frame decodes, and no frame's fields run
+    * past its end. */
+  private def decodeFrames[F](payload: Array[Byte], layer: Int)(
+      frame: Frame => Option[F]): Option[(Frame, Vector[F])] = {
+    if (payload == null || payload.length < 8 || !frameAt(payload, 0)
+        .exists(h => h.version == 3 && h.layer == layer)) return None
+    val w = walk(payload, 0)
+    if (w.frames.size < 2 || w.stop != payload.length) return None
+    val out = Vector.newBuilder[F]
+    val it = w.frames.iterator
+    try {
+      while (it.hasNext) frame(it.next()) match {
+        case Some(f) => out += f
+        case None => return None
+      }
+    } catch { case Bits.Truncated => return None }
+    Some((w.frames.head, out.result()))
+  }
+
+  /** One fixture frame: the header, the CRC word when the header asks
+    * for one, `body`, and zero fill to the frame's length. */
+  private def putFrame(out: java.io.ByteArrayOutputStream, hdr: Array[Byte],
+      crc: Int, body: Array[Byte]): Unit = {
+    val h = frameAt(hdr, 0).get
+    val used = h.body + body.length
+    require(used <= h.len, s"fixture overflow: $used > ${h.len}")
+    out.write(hdr)
+    if (h.crc) { out.write((crc >> 8) & 0xff); out.write(crc & 0xff) }
+    out.write(body)
+    out.write(new Array[Byte](h.len - used))
+  }
 
   /** One decoded Layer I frame: per-channel 4-bit allocation codes
     * (0 = subband silent, a>0 ⇒ nb = a+1 code bits), per-channel
@@ -68,20 +202,6 @@ object MpegAudio {
     * rate/mode, every frame complete and CRC-clean where protected). */
   final case class Mp1Decoded(sampleRate: Int, channels: Int,
       frames: Vector[Mp1Frame])
-
-  /** MSB-first bit reader over a byte range. */
-  private final class BitReader(buf: Array[Byte], startByte: Int) {
-    private var pos = startByte * 8L
-    def bits(n: Int): Int = {
-      var v = 0; var k = 0
-      while (k < n) {
-        val byte = buf((pos >> 3).toInt) & 0xff
-        v = (v << 1) | ((byte >> (7 - (pos & 7).toInt)) & 1)
-        pos += 1; k += 1
-      }
-      v
-    }
-  }
 
   /** ISO CRC-16 (poly 0x8005, init 0xFFFF), bitwise MSB-first. */
   private def crcBits(init: Int, value: Int, nBits: Int): Int = {
@@ -113,123 +233,81 @@ object MpegAudio {
     sf * ((s3 + 1.0 / half) * c)
   }
 
-  /** Decode an MPEG-1 Layer I stream. None unless ≥ 2 chained,
-    * complete, consistent (rate, mode) Layer I frames start at byte 0
-    * — the [[Multimodal.parseMp3]] chaining discipline, so probing
+  /** Decode an MPEG-1 Layer I stream. None unless the [[walk]] from
+    * byte 0 finds ≥ 2 Layer I frames and stops at the payload's end —
+    * the [[Multimodal.parseMp3]] chaining discipline, so probing
     * arbitrary audio payloads is safe. Any forbidden field (allocation
-    * 15, scalefactor 63, free-format), truncated frame,
-    * or CRC mismatch rejects the WHOLE payload: a corrupt training
-    * shard should surface, not half-decode. */
-  def decodeMp1(payload: Array[Byte]): Option[Mp1Decoded] = {
-    if (payload == null || payload.length < 8) return None
-    def b(i: Int): Int = payload(i) & 0xff
-    var off = 0
-    var rate = -1; var mode = -1
-    val frames = Vector.newBuilder[Mp1Frame]
-    var n = 0
-    while (off + 4 <= payload.length &&
-        b(off) == 0xff && (b(off + 1) & 0xe0) == 0xe0) {
-      val h1 = b(off + 1); val h2 = b(off + 2); val h3 = b(off + 3)
-      val v = (h1 >> 3) & 3
-      val l = (h1 >> 1) & 3
-      val prot = h1 & 1
-      val bri = (h2 >> 4) & 15
-      val sri = (h2 >> 2) & 3
-      val pad = (h2 >> 1) & 1
-      val md = (h3 >> 6) & 3
-      val mdExt = (h3 >> 4) & 3
-      if (v != 3 || l != 3 || bri == 0 || bri == 15 || sri == 3)
-        return None
-      val r = Rates(sri)
-      if (n == 0) { rate = r; mode = md }
-      else if (r != rate || md != mode) return None
-      val kbps = KbpsL1(bri)
-      val frameLen = (12 * kbps * 1000 / r + pad) * 4
-      if (off + frameLen > payload.length) return None
-      val nch = if (md == 3) 1 else 2
-      // intensity-stereo bound (§2.4.2.1): subbands ≥ bound share ONE
-      // allocation and ONE sample code, per-channel scalefactors
-      val bound = if (md == 1) math.min(4 * (mdExt + 1), 32) else 32
-      val rd = new BitReader(payload, off + 4 + (if (prot == 0) 2 else 0))
-      // allocation: sb-major, channel-minor (§2.4.1.5)
-      val alloc = Array.ofDim[Int](nch, 32)
-      var crc = crcBits(crcBits(0xffff, h2, 8), h3, 8)
-      var sb = 0
-      while (sb < 32) {
-        val chTx = if (sb < bound) nch else 1
-        var ch = 0
-        while (ch < chTx) {
-          val a = rd.bits(4)
-          if (a == 15) return None
-          alloc(ch)(sb) = a
-          crc = crcBits(crc, a, 4)
-          ch += 1
+    * 15, scalefactor 63, free-format), a frame whose fields run past
+    * its end, or a CRC mismatch rejects the WHOLE payload: a corrupt
+    * training shard should surface, not half-decode. */
+  def decodeMp1(payload: Array[Byte]): Option[Mp1Decoded] =
+    decodeFrames(payload, 1)(mp1Frame(payload, _)).map { case (h, fs) =>
+      Mp1Decoded(h.rate, h.channels, fs)
+    }
+
+  private def mp1Frame(payload: Array[Byte], h: Frame): Option[Mp1Frame] = {
+    val nch = h.channels
+    // intensity-stereo bound (§2.4.2.1): subbands ≥ bound share ONE
+    // allocation and ONE sample code, per-channel scalefactors
+    val bound = if (h.mode == 1) math.min(4 * (h.modeExt + 1), 32) else 32
+    val rd = new Bits.Reader(payload, h.body, h.end)
+    // allocation: sb-major, channel-minor (§2.4.1.5)
+    val alloc = Array.ofDim[Int](nch, 32)
+    var crc = headerCrc(payload, h.off)
+    var sb = 0
+    while (sb < 32) {
+      val chTx = if (sb < bound) nch else 1
+      var ch = 0
+      while (ch < chTx) {
+        val a = rd.readInt(4)
+        if (a == 15) return None
+        alloc(ch)(sb) = a
+        crc = crcBits(crc, a, 4)
+        ch += 1
+      }
+      if (chTx < nch) alloc(1)(sb) = alloc(0)(sb)
+      sb += 1
+    }
+    if (h.crc && crc != sentCrc(payload, h)) return None
+    val sfIdx = Array.fill(nch, 32)(-1)
+    sb = 0
+    while (sb < 32) {
+      var ch = 0
+      while (ch < nch) {
+        if (alloc(ch)(sb) != 0) {
+          val s = rd.readInt(6)
+          if (s == 63) return None
+          sfIdx(ch)(sb) = s
         }
-        if (chTx < nch) alloc(1)(sb) = alloc(0)(sb)
-        sb += 1
+        ch += 1
       }
-      if (prot == 0) {
-        val sent = (b(off + 4) << 8) | b(off + 5)
-        if (crc != sent) return None
-      }
-      val sfIdx = Array.fill(nch, 32)(-1)
+      sb += 1
+    }
+    val samples = Array.tabulate(nch, 32) { (ch, s) =>
+      if (alloc(ch)(s) == 0) Array.empty[Double]
+      else new Array[Double](12)
+    }
+    var s = 0
+    while (s < 12) {
       sb = 0
       while (sb < 32) {
+        var code = 0
         var ch = 0
         while (ch < nch) {
-          if (alloc(ch)(sb) != 0) {
-            val s = rd.bits(6)
-            if (s == 63) return None
-            sfIdx(ch)(sb) = s
+          val a = alloc(ch)(sb)
+          if (a != 0) {
+            // above the bound channel 1 reuses channel 0's code
+            if (ch == 0 || sb < bound) code = rd.readInt(a + 1)
+            samples(ch)(sb)(s) =
+              dequant(code, a + 1, ScaleFactors(sfIdx(ch)(sb)))
           }
           ch += 1
         }
         sb += 1
       }
-      val samples = Array.tabulate(nch, 32) { (ch, s) =>
-        if (alloc(ch)(s) == 0) Array.empty[Double]
-        else new Array[Double](12)
-      }
-      var s = 0
-      while (s < 12) {
-        sb = 0
-        while (sb < 32) {
-          if (sb >= bound && nch == 2) {
-            val a = alloc(0)(sb)
-            if (a != 0) {
-              val nb = a + 1
-              val code = rd.bits(nb)            // ONE shared code
-              var ch = 0
-              while (ch < 2) {
-                samples(ch)(sb)(s) =
-                  dequant(code, nb, ScaleFactors(sfIdx(ch)(sb)))
-                ch += 1
-              }
-            }
-          } else {
-            var ch = 0
-            while (ch < nch) {
-              val a = alloc(ch)(sb)
-              if (a != 0) {
-                val nb = a + 1
-                val code = rd.bits(nb)
-                samples(ch)(sb)(s) =
-                  dequant(code, nb, ScaleFactors(sfIdx(ch)(sb)))
-              }
-              ch += 1
-            }
-          }
-          sb += 1
-        }
-        s += 1
-      }
-      frames += Mp1Frame(kbps, alloc, sfIdx, samples)
-      n += 1
-      off = off + frameLen
+      s += 1
     }
-    if (n < 2 || off != payload.length) None
-    else Some(Mp1Decoded(rate, if (mode == 3) 1 else 2,
-      frames.result()))
+    Some(Mp1Frame(h.kbps, alloc, sfIdx, samples))
   }
 
   // --- deterministic fixture ------------------------------------------
@@ -246,35 +324,28 @@ object MpegAudio {
   def syntheticMp1(docId: Long, nFrames: Int,
       withCrc: Boolean = false): Array[Byte] = {
     require(nFrames >= 2)
+    // MPEG-1 Layer I, 224 kbps, 32 kHz, mono
+    val hdr = header(1, withCrc, bri = 7, sri = 2, pad = 0, mode = 3)
     val out = new java.io.ByteArrayOutputStream()
     var fr = 0
     while (fr < nFrames) {
-      out.write(0xff)
-      out.write(0xfe | (if (withCrc) 0 else 1)) // MPEG-1, Layer I
-      out.write((7 << 4) | (2 << 2))            // 224 kbps, 32 kHz
-      out.write(0xc0)                           // mono
-      var bitBuf = 0L; var bitCnt = 0
-      val body = new java.io.ByteArrayOutputStream()
-      def put(v: Int, n: Int): Unit = {
-        bitBuf = (bitBuf << n) | (v & ((1L << n) - 1)); bitCnt += n
-        while (bitCnt >= 8) {
-          body.write(((bitBuf >> (bitCnt - 8)) & 0xff).toInt)
-          bitCnt -= 8
-        }
-      }
+      val w = new Bits.Writer
       def allocOf(sb: Int): Int = {
         val a = ((docId * 7 + fr * 5 + sb) % 7).toInt
         if (a < 2) 0 else a
       }
-      var crc = crcBits(crcBits(0xffff, (7 << 4) | (2 << 2), 8), 0xc0, 8)
+      var crc = headerCrc(hdr, 0)
       var sb = 0
       while (sb < 32) {
-        val a = allocOf(sb); put(a, 4); crc = crcBits(crc, a, 4); sb += 1
+        val a = allocOf(sb)
+        w.writeBits(a, 4)
+        crc = crcBits(crc, a, 4)
+        sb += 1
       }
       sb = 0
       while (sb < 32) {
         if (allocOf(sb) != 0)
-          put(((docId * 3 + fr * 11 + sb * 5) % 63).toInt, 6)
+          w.writeBits((docId * 3 + fr * 11 + sb * 5) % 63, 6)
         sb += 1
       }
       var s = 0
@@ -284,20 +355,14 @@ object MpegAudio {
           val a = allocOf(sb)
           if (a != 0) {
             val nb = a + 1
-            put(((docId * 31 + fr * 17 + sb * 13 + s * 7) %
-              ((1 << nb) - 1)).toInt, nb)
+            w.writeBits((docId * 31 + fr * 17 + sb * 13 + s * 7) %
+              ((1 << nb) - 1), nb)
           }
           sb += 1
         }
         s += 1
       }
-      if (bitCnt > 0) put(0, 8 - bitCnt)
-      val bytes = body.toByteArray
-      if (withCrc) { out.write((crc >> 8) & 0xff); out.write(crc & 0xff) }
-      out.write(bytes, 0, bytes.length)
-      // zero ancillary fill to the fixed slot boundary
-      var i = 4 + (if (withCrc) 2 else 0) + bytes.length
-      while (i < 336) { out.write(0); i += 1 }
+      putFrame(out, hdr, crc, w.toBytes)
       fr += 1
     }
     out.toByteArray
@@ -324,35 +389,52 @@ object MpegAudio {
   def decodeMp1Bands(media: Dataset[MediaRow]): Dataset[Mp1Band] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap { r =>
-      decodeMp1(r.payload).iterator.flatMap { d =>
-        val nf = new Array[Int](32)
-        val amp = new Array[Long](32)
-        val eng = new Array[Long](32)
-        d.frames.foreach { f =>
-          var sb = 0
-          while (sb < 32) {
-            var ch = 0
-            while (ch < d.channels) {
-              val xs = f.samples(ch)(sb)
-              if (xs.nonEmpty) {
-                if (ch == 0) nf(sb) += 1
-                var s = 0
-                while (s < 12) {
-                  val x = xs(s)
-                  amp(sb) += math.floor(1e9 * x).toLong
-                  eng(sb) += math.floor(1e12 * (x * x)).toLong
-                  s += 1
-                }
-              }
-              ch += 1
-            }
-            sb += 1
-          }
-        }
-        (0 until 32).iterator.filter(nf(_) > 0)
-          .map(sb => Mp1Band(r.doc_id, sb, nf(sb), amp(sb), eng(sb)))
-      }
+      decodeMp1(r.payload).iterator.flatMap(d =>
+        bands(r.doc_id, d.frames.map(_.samples)))
     })
+  }
+
+  /** The [[Mp1Band]] rows of one stream, given each frame's dequantized
+    * `samples(ch)(sb)`. */
+  private def bands(docId: Long, frames: Seq[Array[Array[Array[Double]]]])
+      : Iterator[Mp1Band] = {
+    val nf = new Array[Int](32)
+    val amp = new Array[Long](32)
+    val eng = new Array[Long](32)
+    frames.foreach { f =>
+      var ch = 0
+      while (ch < f.length) {
+        var sb = 0
+        while (sb < f(ch).length) {
+          val xs = f(ch)(sb)
+          if (xs.nonEmpty && ch == 0) nf(sb) += 1
+          var s = 0
+          while (s < xs.length) {
+            val x = xs(s)
+            amp(sb) += math.floor(1e9 * x).toLong
+            eng(sb) += math.floor(1e12 * (x * x)).toLong
+            s += 1
+          }
+          sb += 1
+        }
+        ch += 1
+      }
+    }
+    (0 until 32).iterator.filter(nf(_) > 0)
+      .map(sb => Mp1Band(docId, sb, nf(sb), amp(sb), eng(sb)))
+  }
+
+  /** Root mean square of every dequantized subband sample of a stream,
+    * summed in frame, channel, subband, sample order (the media router's
+    * brightness for the Layer I and II lanes). */
+  private[operators] def subbandRms(
+      frames: Seq[Array[Array[Array[Double]]]]): Double = {
+    var n = 0L; var ss = 0.0
+    frames.foreach(_.foreach(_.foreach { xs =>
+      var i = 0
+      while (i < xs.length) { ss += xs(i) * xs(i); n += 1; i += 1 }
+    }))
+    if (n == 0) 0.0 else math.sqrt(ss / n)
   }
 
   // === MPEG-1 Audio LAYER II (ISO/IEC 11172-3 §2.4.1.6/§2.4.2.2) ====
@@ -423,9 +505,6 @@ object MpegAudio {
     else if (kbpsPerCh <= 80) 'a'
     else if (rate == 48000) 'a' else 'b'
 
-  private val KbpsL2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160,
-    192, 224, 256, 320, 384)
-
   /** Bits of the ungrouped code for an `nlevels`-step quantizer:
     * 2/3/4 for the grouped 3/5/9, else log₂(nlevels + 1). */
   private def bitsFor(nlevels: Int): Int = nlevels match {
@@ -433,6 +512,17 @@ object MpegAudio {
     case 5 => 3
     case 9 => 4
     case n => java.lang.Integer.numberOfTrailingZeros(n + 1)
+  }
+
+  /** The 3/5/9-step quantizers pack a granule's three codes into one
+    * codeword of [[groupBits]] bits. */
+  private def grouped(nlevels: Int): Boolean =
+    nlevels == 3 || nlevels == 5 || nlevels == 9
+
+  private def groupBits(nlevels: Int): Int = nlevels match {
+    case 3 => 5
+    case 5 => 7
+    case _ => 10
   }
 
   /** Layer II requantization — Table 3-B.4 in closed form (one shared
@@ -463,10 +553,9 @@ object MpegAudio {
   /** One granule's three decoded sub-values for an `nlevels` quantizer
     * (degrouped or three separate codes); null on an illegal pattern
     * (grouped codeword ≥ nlevels³, ungrouped all-ones). */
-  private def readMp2Granule(rd: BitReader, nlv: Int): Array[Int] = {
-    if (nlv == 3 || nlv == 5 || nlv == 9) {
-      val gb = nlv match { case 3 => 5; case 5 => 7; case _ => 10 }
-      var cw = rd.bits(gb)
+  private def readMp2Granule(rd: Bits.Reader, nlv: Int): Array[Int] = {
+    if (grouped(nlv)) {
+      var cw = rd.readInt(groupBits(nlv))
       if (cw >= nlv * nlv * nlv) return null
       val out = new Array[Int](3)
       var k = 0
@@ -477,7 +566,7 @@ object MpegAudio {
       val out = new Array[Int](3)
       var k = 0
       while (k < 3) {
-        val code = rd.bits(nb)
+        val code = rd.readInt(nb)
         if (code == (1 << nb) - 1) return null
         out(k) = code
         k += 1
@@ -487,174 +576,127 @@ object MpegAudio {
   }
 
   /** Decode an MPEG-1 Layer II stream — the [[decodeMp1]] strictness
-    * contract: ≥ 2 chained complete frames from byte 0, consistent
-    * rate/mode, reject on any forbidden field (allocation above the
-    * row, scalefactor 63, all-ones ungrouped code, grouped codeword
-    * ≥ nlevels³, free-format) or CRC mismatch. JOINT (intensity)
+    * contract: ≥ 2 chained frames from byte 0 to the payload's end,
+    * reject on any forbidden field (allocation above the row,
+    * scalefactor 63, all-ones ungrouped code, grouped codeword
+    * ≥ nlevels³, free-format), a frame whose fields run past its end,
+    * or a CRC mismatch. JOINT (intensity)
     * stereo decodes per §2.4.2.2: subbands ≥ bound (= 4·(mode_ext+1))
     * carry ONE allocation and ONE set of sample codes, requantized
     * per channel with that channel's own scalefactors. */
-  def decodeMp2(payload: Array[Byte]): Option[Mp2Decoded] = {
-    if (payload == null || payload.length < 8) return None
-    def b(i: Int): Int = payload(i) & 0xff
-    var off = 0
-    var rate = -1; var mode = -1
-    val frames = Vector.newBuilder[Mp2Frame]
-    var n = 0
-    var sblimitOut = 0
-    while (off + 4 <= payload.length &&
-        b(off) == 0xff && (b(off + 1) & 0xe0) == 0xe0) {
-      val h1 = b(off + 1); val h2 = b(off + 2); val h3 = b(off + 3)
-      val v = (h1 >> 3) & 3
-      val l = (h1 >> 1) & 3
-      val prot = h1 & 1
-      val bri = (h2 >> 4) & 15
-      val sri = (h2 >> 2) & 3
-      val pad = (h2 >> 1) & 1
-      val md = (h3 >> 6) & 3
-      val mdExt = (h3 >> 4) & 3
-      if (v != 3 || l != 2 || bri == 0 || bri == 15 || sri == 3)
-        return None
-      val r = Rates(sri)
-      if (n == 0) { rate = r; mode = md }
-      else if (r != rate || md != mode) return None
-      val kbps = KbpsL2(bri)
-      val frameLen = 144 * kbps * 1000 / r + pad
-      if (off + frameLen > payload.length) return None
-      val nch = if (md == 3) 1 else 2
-      val rows = allocTable(tableFor(r, kbps / nch))
-      val sblimit = rows.length
-      sblimitOut = sblimit
-      // intensity-stereo bound: subbands ≥ bound share allocation and
-      // sample codes across the two channels
-      val bound =
-        if (md == 1) math.min((mdExt + 1) * 4, sblimit) else sblimit
-      val rd = new BitReader(payload, off + 4 + (if (prot == 0) 2 else 0))
-      var crc = crcBits(crcBits(0xffff, h2, 8), h3, 8)
-      val alloc = Array.ofDim[Int](nch, sblimit)
-      var sb = 0
-      while (sb < sblimit) {
-        val chTx = if (sb < bound) nch else 1
-        var ch = 0
-        while (ch < chTx) {
-          val a = rd.bits(rows(sb).nbal)
-          if (a > rows(sb).steps.length) return None
-          alloc(ch)(sb) = a
-          crc = crcBits(crc, a, rows(sb).nbal)
-          ch += 1
-        }
-        if (chTx < nch) alloc(1)(sb) = alloc(0)(sb)
-        sb += 1
-      }
-      val scfsi = Array.fill(nch, sblimit)(0)
-      sb = 0
-      while (sb < sblimit) {
-        var ch = 0
-        while (ch < nch) {
-          if (alloc(ch)(sb) != 0) {
-            val s = rd.bits(2)
-            scfsi(ch)(sb) = s
-            crc = crcBits(crc, s, 2)
-          }
-          ch += 1
-        }
-        sb += 1
-      }
-      if (prot == 0) {
-        val sent = (b(off + 4) << 8) | b(off + 5)
-        if (crc != sent) return None
-      }
-      // scalefactors: 3/2/1/2 six-bit indices per §2.4.2.2 scfsi
-      val sfIdx = Array.fill(nch, sblimit, 3)(-1)
-      var sfTx = 0
-      sb = 0
-      while (sb < sblimit) {
-        var ch = 0
-        while (ch < nch) {
-          if (alloc(ch)(sb) != 0) {
-            def sf(): Int = {
-              val s = rd.bits(6); sfTx += 1
-              if (s == 63) -1 else s
-            }
-            scfsi(ch)(sb) match {
-              case 0 =>
-                val a = sf(); val bb = sf(); val c = sf()
-                sfIdx(ch)(sb) = Array(a, bb, c)
-              case 1 =>
-                val a = sf(); val c = sf()
-                sfIdx(ch)(sb) = Array(a, a, c)
-              case 2 =>
-                val a = sf()
-                sfIdx(ch)(sb) = Array(a, a, a)
-              case _ =>
-                val a = sf(); val c = sf()
-                sfIdx(ch)(sb) = Array(a, c, c)
-            }
-            if (sfIdx(ch)(sb).exists(_ < 0)) return None
-          }
-          ch += 1
-        }
-        sb += 1
-      }
-      val samples = Array.tabulate(nch, sblimit) { (ch, s) =>
-        if (alloc(ch)(s) == 0) Array.empty[Double]
-        else new Array[Double](36)
-      }
-      var grouped = 0
-      var g = 0
-      while (g < 12) {
-        val part = g / 4
-        sb = 0
-        while (sb < sblimit) {
-          val shared = sb >= bound && nch == 2
-          if (shared) {
-            val a = alloc(0)(sb)
-            if (a != 0) {
-              val nlv = rows(sb).steps(a - 1)
-              val vs = readMp2Granule(rd, nlv)
-              if (vs == null) return None
-              if (nlv == 3 || nlv == 5 || nlv == 9) grouped += 2
-              var ch = 0
-              while (ch < 2) {
-                val sfv = ScaleFactors(sfIdx(ch)(sb)(part))
-                var k = 0
-                while (k < 3) {
-                  samples(ch)(sb)(g * 3 + k) = dequant2(vs(k), nlv, sfv)
-                  k += 1
-                }
-                ch += 1
-              }
-            }
-          } else {
-            var ch = 0
-            while (ch < nch) {
-              val a = alloc(ch)(sb)
-              if (a != 0) {
-                val nlv = rows(sb).steps(a - 1)
-                val sfv = ScaleFactors(sfIdx(ch)(sb)(part))
-                if (nlv == 3 || nlv == 5 || nlv == 9) grouped += 1
-                val vs = readMp2Granule(rd, nlv)
-                if (vs == null) return None
-                var k = 0
-                while (k < 3) {
-                  samples(ch)(sb)(g * 3 + k) = dequant2(vs(k), nlv, sfv)
-                  k += 1
-                }
-              }
-              ch += 1
-            }
-          }
-          sb += 1
-        }
-        g += 1
-      }
-      frames += Mp2Frame(kbps, alloc, sfIdx, scfsi, samples, sfTx, grouped)
-      n += 1
-      off = off + frameLen
+  def decodeMp2(payload: Array[Byte]): Option[Mp2Decoded] =
+    decodeFrames(payload, 2)(mp2Frame(payload, _)).map { case (h, fs) =>
+      Mp2Decoded(h.rate, h.channels, fs.last.alloc(0).length, fs)
     }
-    if (n < 2 || off != payload.length) None
-    else Some(Mp2Decoded(rate, if (mode == 3) 1 else 2, sblimitOut,
-      frames.result()))
+
+  private def mp2Frame(payload: Array[Byte], h: Frame): Option[Mp2Frame] = {
+    val nch = h.channels
+    val rows = allocTable(tableFor(h.rate, h.kbps / nch))
+    val sblimit = rows.length
+    // intensity-stereo bound: subbands ≥ bound share allocation and
+    // sample codes across the two channels
+    val bound =
+      if (h.mode == 1) math.min((h.modeExt + 1) * 4, sblimit) else sblimit
+    val rd = new Bits.Reader(payload, h.body, h.end)
+    var crc = headerCrc(payload, h.off)
+    val alloc = Array.ofDim[Int](nch, sblimit)
+    var sb = 0
+    while (sb < sblimit) {
+      val chTx = if (sb < bound) nch else 1
+      var ch = 0
+      while (ch < chTx) {
+        val a = rd.readInt(rows(sb).nbal)
+        if (a > rows(sb).steps.length) return None
+        alloc(ch)(sb) = a
+        crc = crcBits(crc, a, rows(sb).nbal)
+        ch += 1
+      }
+      if (chTx < nch) alloc(1)(sb) = alloc(0)(sb)
+      sb += 1
+    }
+    val scfsi = Array.fill(nch, sblimit)(0)
+    sb = 0
+    while (sb < sblimit) {
+      var ch = 0
+      while (ch < nch) {
+        if (alloc(ch)(sb) != 0) {
+          val s = rd.readInt(2)
+          scfsi(ch)(sb) = s
+          crc = crcBits(crc, s, 2)
+        }
+        ch += 1
+      }
+      sb += 1
+    }
+    if (h.crc && crc != sentCrc(payload, h)) return None
+    // scalefactors: 3/2/1/2 six-bit indices per §2.4.2.2 scfsi
+    val sfIdx = Array.fill(nch, sblimit, 3)(-1)
+    var sfTx = 0
+    sb = 0
+    while (sb < sblimit) {
+      var ch = 0
+      while (ch < nch) {
+        if (alloc(ch)(sb) != 0) {
+          def sf(): Int = {
+            val s = rd.readInt(6); sfTx += 1
+            if (s == 63) -1 else s
+          }
+          scfsi(ch)(sb) match {
+            case 0 =>
+              val a = sf(); val bb = sf(); val c = sf()
+              sfIdx(ch)(sb) = Array(a, bb, c)
+            case 1 =>
+              val a = sf(); val c = sf()
+              sfIdx(ch)(sb) = Array(a, a, c)
+            case 2 =>
+              val a = sf()
+              sfIdx(ch)(sb) = Array(a, a, a)
+            case _ =>
+              val a = sf(); val c = sf()
+              sfIdx(ch)(sb) = Array(a, c, c)
+          }
+          if (sfIdx(ch)(sb).exists(_ < 0)) return None
+        }
+        ch += 1
+      }
+      sb += 1
+    }
+    val samples = Array.tabulate(nch, sblimit) { (ch, s) =>
+      if (alloc(ch)(s) == 0) Array.empty[Double]
+      else new Array[Double](36)
+    }
+    var nGrouped = 0
+    var g = 0
+    while (g < 12) {
+      val part = g / 4
+      sb = 0
+      while (sb < sblimit) {
+        var vs: Array[Int] = null
+        var ch = 0
+        while (ch < nch) {
+          val a = alloc(ch)(sb)
+          if (a != 0) {
+            val nlv = rows(sb).steps(a - 1)
+            // above the bound channel 1 reuses channel 0's codes
+            if (ch == 0 || sb < bound) {
+              vs = readMp2Granule(rd, nlv)
+              if (vs == null) return None
+            }
+            if (grouped(nlv)) nGrouped += 1
+            val sfv = ScaleFactors(sfIdx(ch)(sb)(part))
+            var k = 0
+            while (k < 3) {
+              samples(ch)(sb)(g * 3 + k) = dequant2(vs(k), nlv, sfv)
+              k += 1
+            }
+          }
+          ch += 1
+        }
+        sb += 1
+      }
+      g += 1
+    }
+    Some(Mp2Frame(h.kbps, alloc, sfIdx, scfsi, samples, sfTx, nGrouped))
   }
 
   // --- deterministic Layer II fixture ---------------------------------
@@ -693,36 +735,21 @@ object MpegAudio {
       withCrc: Boolean = false): Array[Byte] = {
     require(nFrames >= 2)
     val even = docId % 2 == 0
-    val rate = if (even) 48000 else 32000
-    val kbps = if (even) 192 else 160
-    val bri = if (even) 10 else 9
-    val sri = if (even) 1 else 2
-    val frameLen = 144 * kbps * 1000 / rate
-    val rows = allocTable(tableFor(rate, kbps))
+    // MPEG-1 Layer II, mono: 192 kbps at 48 kHz, or 160 kbps at 32 kHz
+    val hdr = header(2, withCrc, bri = if (even) 10 else 9,
+      sri = if (even) 1 else 2, pad = 0, mode = 3)
+    val h = frameAt(hdr, 0).get
+    val rows = allocTable(tableFor(h.rate, h.kbps))
     val sblimit = rows.length
     val out = new java.io.ByteArrayOutputStream()
     var fr = 0
     while (fr < nFrames) {
-      out.write(0xff)
-      out.write(0xfc | (if (withCrc) 0 else 1)) // MPEG-1, Layer II
-      val h2 = (bri << 4) | (sri << 2)
-      out.write(h2)
-      out.write(0xc0)                           // mono
-      var bitBuf = 0L; var bitCnt = 0
-      val body = new java.io.ByteArrayOutputStream()
-      def put(v: Int, nBits: Int): Unit = {
-        bitBuf = (bitBuf << nBits) | (v & ((1L << nBits) - 1))
-        bitCnt += nBits
-        while (bitCnt >= 8) {
-          body.write(((bitBuf >> (bitCnt - 8)) & 0xff).toInt)
-          bitCnt -= 8
-        }
-      }
-      var crc = crcBits(crcBits(0xffff, h2, 8), 0xc0, 8)
+      val w = new Bits.Writer
+      var crc = headerCrc(hdr, 0)
       var sb = 0
       while (sb < sblimit) {
         val a = mp2AllocOf(docId, fr, sb, rows(sb).nbal)
-        put(a, rows(sb).nbal)
+        w.writeBits(a, rows(sb).nbal)
         crc = crcBits(crc, a, rows(sb).nbal)
         sb += 1
       }
@@ -730,7 +757,7 @@ object MpegAudio {
       while (sb < sblimit) {
         if (mp2AllocOf(docId, fr, sb, rows(sb).nbal) != 0) {
           val s = mp2Scfsi(docId, fr, sb)
-          put(s, 2)
+          w.writeBits(s, 2)
           crc = crcBits(crc, s, 2)
         }
         sb += 1
@@ -738,20 +765,12 @@ object MpegAudio {
       sb = 0
       while (sb < sblimit) {
         if (mp2AllocOf(docId, fr, sb, rows(sb).nbal) != 0) {
-          mp2Scfsi(docId, fr, sb) match {
-            case 0 =>
-              put(mp2Sf(docId, fr, sb, 0), 6)
-              put(mp2Sf(docId, fr, sb, 1), 6)
-              put(mp2Sf(docId, fr, sb, 2), 6)
-            case 1 =>
-              put(mp2Sf(docId, fr, sb, 0), 6)
-              put(mp2Sf(docId, fr, sb, 2), 6)
-            case 2 =>
-              put(mp2Sf(docId, fr, sb, 0), 6)
-            case _ =>
-              put(mp2Sf(docId, fr, sb, 0), 6)
-              put(mp2Sf(docId, fr, sb, 2), 6)
+          val sent = mp2Scfsi(docId, fr, sb) match {
+            case 0 => Seq(0, 1, 2)
+            case 2 => Seq(0)
+            case _ => Seq(0, 2)
           }
+          sent.foreach(which => w.writeBits(mp2Sf(docId, fr, sb, which), 6))
         }
         sb += 1
       }
@@ -762,17 +781,16 @@ object MpegAudio {
           val a = mp2AllocOf(docId, fr, sb, rows(sb).nbal)
           if (a != 0) {
             val nlv = rows(sb).steps(a - 1)
-            if (nlv == 3 || nlv == 5 || nlv == 9) {
-              val gb = nlv match { case 3 => 5; case 5 => 7; case _ => 10 }
+            if (grouped(nlv)) {
               val cw = mp2Code(docId, fr, sb, g, 0, nlv) +
                 nlv * mp2Code(docId, fr, sb, g, 1, nlv) +
                 nlv * nlv * mp2Code(docId, fr, sb, g, 2, nlv)
-              put(cw, gb)
+              w.writeBits(cw, groupBits(nlv))
             } else {
               val nb = bitsFor(nlv)
               var k = 0
               while (k < 3) {
-                put(mp2Code(docId, fr, sb, g, k, nlv), nb)
+                w.writeBits(mp2Code(docId, fr, sb, g, k, nlv), nb)
                 k += 1
               }
             }
@@ -781,15 +799,7 @@ object MpegAudio {
         }
         g += 1
       }
-      if (bitCnt > 0) put(0, 8 - bitCnt)
-      val bytes = body.toByteArray
-      val used = 4 + (if (withCrc) 2 else 0) + bytes.length
-      require(used <= frameLen,
-        s"fixture overflow: $used > $frameLen (doc $docId fr $fr)")
-      if (withCrc) { out.write((crc >> 8) & 0xff); out.write(crc & 0xff) }
-      out.write(bytes, 0, bytes.length)
-      var i = used
-      while (i < frameLen) { out.write(0); i += 1 }
+      putFrame(out, hdr, crc, w.toBytes)
       fr += 1
     }
     out.toByteArray
@@ -823,34 +833,8 @@ object MpegAudio {
   def decodeMp2Bands(media: Dataset[MediaRow]): Dataset[Mp1Band] = {
     import media.sparkSession.implicits._
     media.mapPartitions(_.flatMap { r =>
-      decodeMp2(r.payload).iterator.flatMap { d =>
-        val nf = new Array[Int](32)
-        val amp = new Array[Long](32)
-        val eng = new Array[Long](32)
-        d.frames.foreach { f =>
-          var sb = 0
-          while (sb < d.sblimit) {
-            var ch = 0
-            while (ch < d.channels) {
-              val xs = f.samples(ch)(sb)
-              if (xs.nonEmpty) {
-                if (ch == 0) nf(sb) += 1
-                var s = 0
-                while (s < 36) {
-                  val x = xs(s)
-                  amp(sb) += math.floor(1e9 * x).toLong
-                  eng(sb) += math.floor(1e12 * (x * x)).toLong
-                  s += 1
-                }
-              }
-              ch += 1
-            }
-            sb += 1
-          }
-        }
-        (0 until 32).iterator.filter(nf(_) > 0)
-          .map(sb => Mp1Band(r.doc_id, sb, nf(sb), amp(sb), eng(sb)))
-      }
+      decodeMp2(r.payload).iterator.flatMap(d =>
+        bands(r.doc_id, d.frames.map(_.samples)))
     })
   }
 

@@ -143,34 +143,21 @@ object Multimodal {
             // not a header statistic (PCM resynthesis needs the
             // Table 3-B.3 window; see MpegAudio's scaladoc)
             case Some(d) =>
-              var n = 0L; var ss = 0.0
-              d.frames.foreach(_.samples.foreach(_.foreach { xs =>
-                var i = 0
-                while (i < xs.length) {
-                  ss += xs(i) * xs(i); n += 1; i += 1
-                }
-              }))
               MediaFeature(r.doc_id, r.media_type, r.payload.length,
                 width = d.sampleRate, height = d.channels,
                 n_frames = math.min(d.frames.size.toLong * 384,
                   Int.MaxValue.toLong).toInt,
-                brightness = if (n == 0) 0.0 else math.sqrt(ss / n))
+                brightness = MpegAudio.subbandRms(d.frames.map(_.samples)))
             case None => MpegAudio.decodeMp2(r.payload) match {
               // Layer II, REALLY decoded too (allocation classes +
               // scfsi + grouped codewords; 3-B.4 via its closed form)
               case Some(d) =>
-                var n = 0L; var ss = 0.0
-                d.frames.foreach(_.samples.foreach(_.foreach { xs =>
-                  var i = 0
-                  while (i < xs.length) {
-                    ss += xs(i) * xs(i); n += 1; i += 1
-                  }
-                }))
                 MediaFeature(r.doc_id, r.media_type, r.payload.length,
                   width = d.sampleRate, height = d.channels,
                   n_frames = math.min(d.frames.size.toLong * 1152,
                     Int.MaxValue.toLong).toInt,
-                  brightness = if (n == 0) 0.0 else math.sqrt(ss / n))
+                  brightness =
+                    MpegAudio.subbandRms(d.frames.map(_.samples)))
               case None => parseMp3(r.payload) match {
                 // Layer III: real header metadata, no waveform —
                 // brightness carries the mean bitrate (kbps), the only
@@ -1069,86 +1056,49 @@ object Multimodal {
   final case class Mp3Meta(n_frames: Long, sample_rate: Int,
       channels: Int, kbps_mean: Double, duration_ms: Double)
 
-  // header-table constants (public spec): bitrate kbps by [version,
-  // layer, index] and sample rate by [version, index]
-  private val KbpsV1L1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256,
-    288, 320, 352, 384, 416, 448)
-  private val KbpsV1L2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160,
-    192, 224, 256, 320, 384)
-  private[operators] val KbpsV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96,
-    112, 128, 160, 192, 224, 256, 320)
-  private val KbpsV2L1 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144,
-    160, 176, 192, 224, 256)
-  private val KbpsV2L23 = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96,
-    112, 128, 144, 160)
-  private val RatesV1 = Array(44100, 48000, 32000)
-
-  /** Walk the MPEG-audio frames of `payload`: None unless ≥ 2 chained
-    * valid frames of one consistent (version, layer, sample-rate,
-    * channel-mode) start at byte 0 (after an optional ID3v2 tag, which
-    * is skipped by its syncsafe length) — chaining each frame to the
-    * next by its COMPUTED length makes a false positive on arbitrary
-    * bytes vanishingly unlikely, which is what lets [[decode]] probe
-    * every audio payload safely. The walk stops cleanly at trailing
-    * non-frame bytes (e.g. an ID3v1 `TAG` block) or a truncated final
-    * frame. Free-format (bitrate index 0) and reserved codes reject. */
+  /** Walk the MPEG-audio frames of `payload` ([[MpegAudio.walk]]): None
+    * unless ≥ 2 chained valid frames of one consistent (version, layer,
+    * sample-rate, channel-mode) start at byte 0 (after an optional ID3v2
+    * tag, which is skipped by its syncsafe length) — chaining each frame
+    * to the next by its COMPUTED length makes a false positive on
+    * arbitrary bytes vanishingly unlikely, which is what lets [[decode]]
+    * probe every audio payload safely. Wherever the walk stops is
+    * accepted: at trailing non-frame bytes (e.g. an ID3v1 `TAG` block)
+    * or a truncated final frame. Free-format (bitrate index 0) and
+    * reserved codes end the walk. */
   def parseMp3(payload: Array[Byte]): Option[Mp3Meta] = {
     if (payload == null || payload.length < 4) return None
-    def b(i: Int): Int = payload(i) & 0xff
-    var off = 0
-    if (payload.length >= 10 && b(0) == 'I' && b(1) == 'D' && b(2) == '3')
-      off = 10 + (((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) |
-        ((b(8) & 0x7f) << 7) | (b(9) & 0x7f))
-    var nFrames = 0L
-    var kbpsSum = 0L
-    var ver = -1; var layer = -1; var rate = -1; var mode = -1
-    var spf = 0
-    var stop = false
-    while (!stop) {
-      if (off + 4 > payload.length ||
-          !(b(off) == 0xff && (b(off + 1) & 0xe0) == 0xe0)) stop = true
-      else {
-        val h1 = b(off + 1); val h2 = b(off + 2); val h3 = b(off + 3)
-        val v = (h1 >> 3) & 3 // 0=MPEG2.5, 1=reserved, 2=MPEG2, 3=MPEG1
-        val l = (h1 >> 1) & 3 // 1=Layer III, 2=Layer II, 3=Layer I
-        val bri = (h2 >> 4) & 15
-        val sri = (h2 >> 2) & 3
-        val pad = (h2 >> 1) & 1
-        val md = (h3 >> 6) & 3
-        if (v == 1 || l == 0 || bri == 0 || bri == 15 || sri == 3)
-          stop = true
-        else {
-          val r = RatesV1(sri) / (if (v == 3) 1 else if (v == 2) 2 else 4)
-          if (nFrames == 0) {
-            ver = v; layer = l; mode = md; rate = r
-            spf = if (l == 3) 384 else if (l == 2) 1152
-                  else if (v == 3) 1152 else 576
-          } else if (v != ver || l != layer || md != mode || r != rate)
-            stop = true
-          if (!stop) {
-            val kbps = (if (ver == 3) {
-              if (layer == 3) KbpsV1L1
-              else if (layer == 2) KbpsV1L2 else KbpsV1L3
-            } else {
-              if (layer == 3) KbpsV2L1 else KbpsV2L23
-            })(bri)
-            val frameLen =
-              if (layer == 3) (12 * kbps * 1000 / rate + pad) * 4
-              else spf / 8 * kbps * 1000 / rate + pad
-            if (off + frameLen > payload.length) stop = true
-            else {
-              nFrames += 1
-              kbpsSum += kbps
-              off += frameLen
-            }
-          }
-        }
-      }
+    val from = if (hasId3(payload)) 10 + syncsafe(payload, 6) else 0
+    val fs = MpegAudio.walk(payload, from).frames
+    if (fs.size < 2) None
+    else {
+      val f = fs.head
+      val n = fs.size.toLong
+      Some(Mp3Meta(n, f.rate, f.channels,
+        fs.map(_.kbps.toLong).sum.toDouble / n,
+        n * f.samples * 1000.0 / f.rate))
     }
-    if (nFrames < 2) None
-    else Some(Mp3Meta(nFrames, rate, if (mode == 3) 1 else 2,
-      kbpsSum.toDouble / nFrames,
-      nFrames * spf * 1000.0 / rate))
+  }
+
+  /** True when `p` opens with an ID3v2 tag header. */
+  private def hasId3(p: Array[Byte]): Boolean =
+    p.length >= 10 && p(0) == 'I' && p(1) == 'D' && p(2) == '3'
+
+  /** The 28-bit ID3v2 syncsafe integer at `i`: four 7-bit bytes, high
+    * byte first. */
+  private def syncsafe(b: Array[Byte], i: Int): Int =
+    ((b(i) & 0x7f) << 21) | ((b(i + 1) & 0x7f) << 14) |
+      ((b(i + 2) & 0x7f) << 7) | (b(i + 3) & 0x7f)
+
+  private def putSyncsafe(out: java.io.ByteArrayOutputStream, n: Int): Unit =
+    Seq(21, 14, 7, 0).foreach(sh => out.write((n >> sh) & 0x7f))
+
+  /** An ID3v2.4 tag header announcing `size` bytes of frames. */
+  private def putId3Header(out: java.io.ByteArrayOutputStream,
+      size: Int): Unit = {
+    out.write('I'); out.write('D'); out.write('3')
+    out.write(4); out.write(0); out.write(0)
+    putSyncsafe(out, size)
   }
 
   /** ID3v2 text-frame extraction — the tag metadata (title / artist /
@@ -1163,13 +1113,10 @@ object Multimodal {
     * no ID3v2 tag leads the payload. A corrupt frame header ends the
     * walk cleanly — never an exception. */
   def parseId3(payload: Array[Byte]): Map[String, String] = {
-    if (payload == null || payload.length < 10) return Map.empty
+    if (payload == null || !hasId3(payload)) return Map.empty
     def b(i: Int): Int = payload(i) & 0xff
-    if (!(b(0) == 'I' && b(1) == 'D' && b(2) == '3')) return Map.empty
     val major = b(3)
-    val tagEnd = math.min(payload.length,
-      10 + (((b(6) & 0x7f) << 21) | ((b(7) & 0x7f) << 14) |
-        ((b(8) & 0x7f) << 7) | (b(9) & 0x7f)))
+    val tagEnd = math.min(payload.length, 10 + syncsafe(payload, 6))
     var off = 10
     val out = scala.collection.mutable.LinkedHashMap.empty[String, String]
     var stop = false
@@ -1178,9 +1125,7 @@ object Multimodal {
       if (!id.forall(c => c.isUpper || c.isDigit)) stop = true
       else {
         val size =
-          if (major >= 4)
-            ((b(off + 4) & 0x7f) << 21) | ((b(off + 5) & 0x7f) << 14) |
-              ((b(off + 6) & 0x7f) << 7) | (b(off + 7) & 0x7f)
+          if (major >= 4) syncsafe(payload, off + 4)
           else (b(off + 4) << 24) | (b(off + 5) << 16) |
             (b(off + 6) << 8) | b(off + 7)
         if (size <= 0 || off + 10 + size > tagEnd) stop = true
@@ -1217,20 +1162,15 @@ object Multimodal {
       val payload = text.getBytes("UTF-8")
       val size = payload.length + 1
       body.write(id.getBytes("ISO-8859-1"))
-      body.write((size >> 21) & 0x7f); body.write((size >> 14) & 0x7f)
-      body.write((size >> 7) & 0x7f); body.write(size & 0x7f)
+      putSyncsafe(body, size)
       body.write(0); body.write(0)
       body.write(3) // UTF-8
       body.write(payload, 0, payload.length)
     }
     val frameBytes = body.toByteArray
     val out = new java.io.ByteArrayOutputStream()
-    out.write('I'); out.write('D'); out.write('3')
-    out.write(4); out.write(0); out.write(0)
-    val n = frameBytes.length
-    out.write((n >> 21) & 0x7f); out.write((n >> 14) & 0x7f)
-    out.write((n >> 7) & 0x7f); out.write(n & 0x7f)
-    out.write(frameBytes, 0, n)
+    putId3Header(out, frameBytes.length)
+    out.write(frameBytes)
     out.toByteArray
   }
 
@@ -1263,24 +1203,18 @@ object Multimodal {
       tagLen: Int = 0): Array[Byte] = {
     require(sri >= 0 && sri < 3 && kbpsIdx >= 1 && kbpsIdx <= 14)
     require(tagLen >= 0 && tagLen < (1 << 21) - 1)
-    val rate = RatesV1(sri)
-    val kbps = KbpsV1L3(kbpsIdx)
     val out = new java.io.ByteArrayOutputStream()
     if (tagLen > 0) {
-      out.write('I'); out.write('D'); out.write('3')
-      out.write(4); out.write(0); out.write(0)
-      out.write((tagLen >> 21) & 0x7f); out.write((tagLen >> 14) & 0x7f)
-      out.write((tagLen >> 7) & 0x7f); out.write(tagLen & 0x7f)
+      putId3Header(out, tagLen)
       var i = 0
       while (i < tagLen) { out.write(i * 37 & 0xff); i += 1 }
     }
     var f = 0
     while (f < nFrames) {
-      val pad = f % 2
-      val len = 144 * kbps * 1000 / rate + pad
-      out.write(0xff); out.write(0xfb) // sync, MPEG1, Layer III, no CRC
-      out.write((kbpsIdx << 4) | (sri << 2) | (pad << 1))
-      out.write(0xc0)                  // mono
+      val hdr = MpegAudio.header(3, crc = false, kbpsIdx, sri, f % 2,
+        mode = 3)
+      val len = MpegAudio.frameAt(hdr, 0).get.len
+      out.write(hdr)
       var i = 4
       while (i < len) { out.write((f * 131 + i * 17) & 0xff); i += 1 }
       f += 1

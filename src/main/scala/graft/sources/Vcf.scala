@@ -56,7 +56,7 @@ object Vcf {
     * that is RuntimeReplaceable (only the optimizer can substitute it)
     * and the DSv2 vcf reader evaluates these parse expressions directly
     * — the raw `ElementAt(failOnError = false)` evals everywhere. */
-  private def tryElem(arr: Column, i: Column): Column =
+  private[graft] def tryElem(arr: Column, i: Column): Column =
     Bridge.column(org.apache.spark.sql.catalyst.expressions.ElementAt(
       Bridge.expression(arr), Bridge.expression(i), None, false))
 
@@ -68,7 +68,7 @@ object Vcf {
     * ("250.0") and both the legacy Spark cast and R's as.integer accept
     * them by truncating toward zero — a strict integer parse would
     * silently NA values that used to import. */
-  private def castScalar(c: Column, vtype: String): Column = {
+  private[graft] def castScalar(c: Column, vtype: String): Column = {
     import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
     import org.apache.spark.sql.types.{DoubleType, FloatType, IntegerType}
     vtype match {
@@ -79,27 +79,6 @@ object Vcf {
         Cast(Bridge.expression(c), FloatType, None, EvalMode.TRY))
       case _ => c
     }
-  }
-
-  /** The unrolled per-sample fmt parser — [[ParseFmtCells]]'s declarative
-    * twin, kept for the differential spec (`ParseFmtCellsSpec`): the
-    * kernel must reproduce these cast-built values exactly. */
-  private[graft] def fmtColUnrolled(fields: Column, fmtArr: Column,
-      spec: FieldSpec, nSamples: Int): Column = {
-    val idx = array_position(fmtArr, spec.id)
-    array((0 until nSamples).map { i =>
-      // null-tolerant element access at BOTH levels: a truncated
-      // trailing FORMAT field (legal VCF) or a truncated body line must
-      // yield null, not an ANSI index error
-      val raw = when(idx > 0,
-        tryElem(split(tryElem(fields, lit(10 + i)), ":"),
-          idx.cast("int")))
-      val nn = when(raw.isNull || raw === "" || raw === ".", lit(null))
-        .otherwise(raw)
-      if (spec.number == "1") castScalar(nn, spec.vtype)
-      else transform(split(nn, ","),
-        x => castScalar(when(x === ".", lit(null)).otherwise(x), spec.vtype))
-    }: _*)
   }
 
   /** Typed INFO column from the raw semicolon-joined string. */
@@ -137,9 +116,10 @@ object Vcf {
       nSamples))
     val genoCol = gp.getField("geno")
     val phasedCol = gp.getField("phased")
-    // Fused fmt_* parser (ParseFmtCells): the unrolled twin below grows
-    // the expression tree O(nSamples) per field — plan-fatal at biobank
-    // width; the kernel is one generated loop at any width.
+    // Fused fmt_* parser (ParseFmtCells): its unrolled twin (kept in
+    // ParseFmtCellsSpec) grows the expression tree O(nSamples) per field
+    // — plan-fatal at biobank width; the kernel is one generated loop at
+    // any width.
     val fmtCols = formatSpecs.filter(_.id != "GT").map { spec =>
       val idx = array_position(fmtArr, spec.id)
       Bridge.column(graft.functions.expressions.ParseFmtCells(

@@ -68,10 +68,6 @@ object GdsCore {
 
   final class GdsFile(val path: String) extends AutoCloseable {
     private val raf = new RandomAccessFile(path.stripPrefix("file:"), "r")
-    private val magic = new Array[Byte](12)
-    raf.readFully(magic)
-    require(new String(magic, "ASCII") == "COREARRAYx0A",
-      s"$path is not a GDS file")
     /** Identity token for the per-JVM decode caches: a file REWRITTEN at
       * the same path (length or mtime changed) must never serve another
       * file's cached chunk tables / element indexes. */
@@ -79,10 +75,15 @@ object GdsCore {
       val f = new java.io.File(path.stripPrefix("file:"))
       s"$path@${f.length}@${f.lastModified}"
     }
-    raf.seek(14)
-    private val entryId = readU32(raf)
-
-    private val frags: Map[Long, Frag] = {
+    // the root stream's id and the block index; a file that fails a
+    // check is closed before the constructor throws
+    private val (entryId, frags) = try {
+      val magic = new Array[Byte](12)
+      raf.readFully(magic)
+      require(new String(magic, "ASCII") == "COREARRAYx0A",
+        s"$path is not a GDS file")
+      raf.seek(14)
+      val entry = readU32(raf)
       val out = ArrayBuffer.empty[Frag]
       var pos = 18L
       val len = raf.length()
@@ -97,8 +98,8 @@ object GdsCore {
         out += Frag(pos, size, next, id, head)
         pos += size
       }
-      out.map(f => f.pos -> f).toMap
-    }
+      (entry, out.map(f => f.pos -> f).toMap)
+    } catch { case t: Throwable => raf.close(); throw t }
     private val heads: Map[Int, Frag] =
       frags.values.filter(_.head).map(f => f.id -> f).toMap
 

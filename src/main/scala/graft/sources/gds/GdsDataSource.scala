@@ -895,7 +895,9 @@ class GdsPartitionReader(path: String, v0: Int, v1: Int,
     required: StructType, sampleSel: Option[Array[Int]] = None)
     extends PartitionReader[InternalRow] {
   private val file = new GdsFile(path)
-  private val cols = GdsSchema.extractors(file, required, v0, v1, sampleSel)
+  private val cols =
+    try GdsSchema.extractors(file, required, v0, v1, sampleSel)
+    catch { case t: Throwable => file.close(); throw t }
   private var v = v0 - 1
 
   override def next(): Boolean = { v += 1; v < v1 }

@@ -250,4 +250,49 @@ class GdsSpec extends AnyFunSuite {
     val nS = df.select(size(col("geno"))).distinct().collect()
     assert(nS.map(_.getInt(0)).toSeq == Seq(90))
   }
+
+  /** How many of this JVM's open file descriptors link to `f`. */
+  private def openFds(f: java.io.File): Int = {
+    val target = f.toPath.toRealPath()
+    Option(new java.io.File("/proc/self/fd").listFiles).getOrElse(
+      Array.empty[java.io.File]).count { fd =>
+      try java.nio.file.Files.readSymbolicLink(fd.toPath) == target
+      catch { case _: java.io.IOException => false }
+    }
+  }
+
+  test("a failed open closes the file: non-GDS bytes, bad block size") {
+    assume(new java.io.File("/proc/self/fd").isDirectory, "needs procfs")
+    val dir = java.nio.file.Files.createTempDirectory("graft_gdsfd")
+    val notGds = dir.resolve("not.gds").toFile
+    java.nio.file.Files.write(notGds.toPath, Array.fill[Byte](64)(7))
+    // the right magic, then a block whose declared size is below 16
+    val badBlock = dir.resolve("bad_block.gds").toFile
+    java.nio.file.Files.write(badBlock.toPath,
+      "COREARRAYx0A".getBytes("ASCII") ++ new Array[Byte](40))
+    for (f <- Seq(notGds, badBlock)) {
+      intercept[IllegalArgumentException](new GdsCore.GdsFile(f.getPath))
+      assert(openFds(f) == 0, f.getName)
+    }
+  }
+
+  test("a partition reader whose column setup fails closes the file") {
+    assume(new java.io.File("/proc/self/fd").isDirectory, "needs procfs")
+    import org.apache.spark.sql.types._
+    import graft.sources.gds.{GdsPartitionReader, GdsWrite}
+    val spec = SeededGdsFrames.Spec(seed = 5L, nS = 3, nVar = 4, ploidy = 2)
+    val out = java.nio.file.Files.createTempDirectory("graft_gdsfd")
+      .resolve("small.gds").toFile
+    GdsWrite.write(SeededGdsFrames.frame(spark, spec, 1), spec.samples,
+      out.getPath)
+    val bogus = StructType(Seq(StructField("no_such_column", IntegerType)))
+    intercept[NoSuchElementException](
+      new GdsPartitionReader(out.getPath, 0, 1, bogus))
+    assert(openFds(out) == 0)
+    val ok = new GdsPartitionReader(out.getPath, 0, 1,
+      StructType(Seq(StructField("variant_id", LongType))))
+    assert(openFds(out) == 1, "the check sees an open reader's file")
+    ok.close()
+    assert(openFds(out) == 0)
+  }
 }

@@ -506,4 +506,38 @@ class MpegAudioSpec extends AnyFunSuite {
     val f3 = Multimodal.decode(mp3)
     assert(f3.n_frames == 5 && f3.width == 32000, "Layer III metadata lane")
   }
+
+  /** Two valid mono Layer I headers (32 kHz, 224 kbps: 336-byte frames)
+    * with every other byte 0xEE: each frame's allocation asks for more
+    * sample bits than the frame holds. */
+  private val overrunMp1: Array[Byte] = {
+    val p = Array.fill[Byte](672)(0xee.toByte)
+    for (off <- Seq(0, 336))
+      Seq(0xff, 0xff, 0x78, 0xc0).zipWithIndex.foreach { case (v, i) =>
+        p(off + i) = v.toByte
+      }
+    p
+  }
+
+  test("a Layer I frame whose bits run past its end is rejected, and " +
+      "the router still returns a row for it") {
+    assert(MpegAudio.decodeMp1(overrunMp1).isEmpty)
+    assert(MpegAudio.decodeMp1(overrunMp1.take(336) ++
+      MpegAudio.syntheticMp1(7, 3)).isEmpty, "bits read into the next frame")
+    // the router falls through to the header walk: 2 frames at 224 kbps
+    val f = Multimodal.decode(Multimodal.MediaRow(9L, "audio", overrunMp1))
+    assert(f.width == 32000 && f.height == 1 && f.n_frames == 2 &&
+      f.brightness == 224.0)
+  }
+
+  test("decodeAll completes over a table holding the overrunning " +
+      "Layer I payload and a clean one") {
+    import spark.implicits._
+    val rows = Seq(Multimodal.MediaRow(1L, "audio", overrunMp1),
+      Multimodal.MediaRow(2L, "audio", MpegAudio.syntheticMp1(2L, 3)))
+    val got = Multimodal.decodeAll(spark.createDataset(rows)).collect()
+      .sortBy(_.doc_id)
+    assert(got.map(_.doc_id).toSeq == Seq(1L, 2L))
+    assert(got(1).n_frames == 3 * 384 && got(1).width == 32000)
+  }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -38,6 +38,27 @@ class ParseFmtCellsSpec extends AnyFunSuite {
     lines.toDF("value")
   }
 
+  /** The unrolled per-sample fmt parser — `ParseFmtCells`'s declarative
+    * twin: the kernel must reproduce these cast-built values exactly. */
+  private def fmtColUnrolled(fields: Column, fmtArr: Column,
+      spec: Vcf.FieldSpec, nSamples: Int): Column = {
+    import Vcf.{castScalar, tryElem}
+    val idx = array_position(fmtArr, spec.id)
+    array((0 until nSamples).map { i =>
+      // null-tolerant element access at BOTH levels: a truncated
+      // trailing FORMAT field (legal VCF) or a truncated body line must
+      // yield null, not an ANSI index error
+      val raw = when(idx > 0,
+        tryElem(split(tryElem(fields, lit(10 + i)), ":"),
+          idx.cast("int")))
+      val nn = when(raw.isNull || raw === "" || raw === ".", lit(null))
+        .otherwise(raw)
+      if (spec.number == "1") castScalar(nn, spec.vtype)
+      else transform(split(nn, ","),
+        x => castScalar(when(x === ".", lit(null)).otherwise(x), spec.vtype))
+    }: _*)
+  }
+
   private val specs = Seq(
     Vcf.FieldSpec("DP", "1", "Integer"),
     Vcf.FieldSpec("AD", ".", "Integer"),
@@ -58,7 +79,7 @@ class ParseFmtCellsSpec extends AnyFunSuite {
               Bridge.expression(
                 array_position(fmtArr, spec.id).cast("int")),
               spec.number, spec.vtype, 2))
-          val twin = Vcf.fmtColUnrolled(f, fmtArr, spec, 2)
+          val twin = fmtColUnrolled(f, fmtArr, spec, 2)
           val got = df.select(kernel.as("k"), twin.as("t")).collect()
           got.zip(lines).foreach { case (r, line) =>
             // stringified: NaN must compare equal to NaN
@@ -105,7 +126,7 @@ class ParseFmtCellsSpec extends AnyFunSuite {
           Bridge.expression(slice(f, 10, 3)),
           Bridge.expression(array_position(fmtArr, spec.id).cast("int")),
           spec.number, spec.vtype, 3))
-      val twin = Vcf.fmtColUnrolled(f, fmtArr, spec, 3)
+      val twin = fmtColUnrolled(f, fmtArr, spec, 3)
       val got = df.select(kernel.as("k"), twin.as("t")).collect()
       got.zip(lines).foreach { case (r, line) =>
         assert(String.valueOf(r.get(0)) == String.valueOf(r.get(1)),
